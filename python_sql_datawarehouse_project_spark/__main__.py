@@ -39,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--mv-mode",
         default="full",
-        choices=("full", "incremental", "incremental_approx"),
+        choices=("full", "incremental"),
         help="MV refresh strategy: 'full' recomputes every MV over "
         "the named batch (reference refresh_mode='FULL'); "
         "'incremental' folds the new gold batch into each "
@@ -48,10 +48,7 @@ def main(argv: list[str] | None = None) -> int:
         "semantics: identical to 'full' on a single-batch "
         "warehouse, full-history once more batches exist "
         "(incremental == full-history recompute is pytest-pinned "
-        "bitwise); 'incremental_approx' additionally swaps CLV's "
-        "order-grain exact state for customer-grain HLL registers "
-        "(order_count estimated, error pytest-bounded; everything "
-        "else exact)",
+        "bitwise).  Both run the same MV definitions (plans/mv.py)",
     )
     ap.add_argument(
         "--gate",

@@ -1,4 +1,5 @@
-"""The nine analytical query shapes of the reference's gold layer.
+"""The nine analytical query shapes of the reference's gold layer, as
+oracle gates over star.py's TPC-H-derived star.
 
 Parity targets (reference files):
   q1  monthly sales by product           exploratory_data_analysis.sql:3-13,  materialized_view.sql:2-14
@@ -11,18 +12,23 @@ Parity targets (reference files):
   q8  ROLLUP product hierarchy           exploratory_data_analysis.sql:134-143, materialized_view.sql:114-122
   (q9 recursive delayed chain lives in operators/recursive.py)
 
-Each Spark implementation has a DuckDB oracle built on the same star
-CTEs (star.STAR_SQL_PRELUDE), with identical aliases so the driver's
-sorted-column value-hash matches.
+q1-q8 hold no query logic of their own: each runs the pipeline's MV
+definition (plans/mv.SHAPES) over the star frames, passing None for a
+frame the shape does not read so its scans are never built.  The
+DuckDB oracles are hand-written SQL: STAR_SQL_PRELUDE (the same star
+in SQL) + a body, with identical aliases so a sorted-column value
+hash matches across the two engines.  The bodies read only fact_sales, dim_customers and
+dim_products, so tests/test_medallion.py also runs them over the
+pipeline's own gold and checks the pipeline's MVs against them.
 
 Determinism notes:
   * Aggregate money math is exact DECIMAL(18,4) (see star.py), cast to
     DOUBLE only in the final projection -> hash-stable under any
     partitioning/parallelism on either engine.
-  * Window ORDER BYs carry a full (order_date, order_number,
-    line_number) tiebreaker: the reference's ORDER BY order_date alone
-    is nondeterministic under ties (SURVEY.md §7 "hard parts"), which
-    an oracle comparison cannot tolerate.
+  * Window ORDER BYs carry the measure as a tiebreaker: the
+    reference's ORDER BY order_date alone is nondeterministic under
+    ties (SURVEY.md §7 "hard parts"), which an oracle comparison
+    cannot tolerate.
   * q6's churn cutoff pins an AS-OF literal instead of the reference's
     CURRENT_DATE so reruns hash identically.
 
@@ -32,18 +38,17 @@ Scale notes (100 TB design point):
     customer under Catalyst's threshold + AQE runtime switch).
   * Grouped aggregates are partial-aggregated map-side by Spark's
     hash-aggregate; rollup adds grouping-set expansion before the
-    shuffle, still one exchange.
-  * q4/q7 window partitions are per-customer: shuffle by customer_key,
-    no global sort. Skewed customers are handled by AQE skew shuffle
-    only on the join side; the window itself is bounded by a
-    customer's own history.
+    shuffle.
+  * q4/q7 window partitions are per-customer: shuffle by customer,
+    no global sort; the window is bounded by a customer's own history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.mv import SHAPES
 from ..star import STAR_SQL_PRELUDE, dim_customers, dim_products, fact_sales
 
 # Fixed as-of for q6 so Spark / oracle / rerun all agree (the
@@ -51,10 +56,14 @@ from ..star import STAR_SQL_PRELUDE, dim_customers, dim_products, fact_sales
 CHURN_AS_OF = "2026-08-01"
 
 
-def _fact_with_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fact_sales(spark, sf_dir).join(
-        dim_customers(spark, sf_dir), "customer_key", "inner"
-    )
+def _with_customer(name: str, spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+    fs, dc = fact_sales(spark, sf_dir), dim_customers(spark, sf_dir)
+    return SHAPES[name](fs, dc, None, **kw)
+
+
+def _with_product(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    fs, dp = fact_sales(spark, sf_dir), dim_products(spark, sf_dir)
+    return SHAPES[name](fs, None, dp)
 
 
 def _fact_with_product(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,21 +74,10 @@ def _fact_with_product(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q1: total sales per month per product ---------------------------
 def q1_monthly_sales_product(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _fact_with_product(spark, sf_dir)
-        .groupBy(
-            F.trunc("order_date", "month").alias("month"),
-            "product_name",
-            "category",
-            "sub_category",
-        )
-        .agg(F.sum("sales").cast("double").alias("total_sales"))
-    )
+    return _with_product("mv_sales_monthly_productline", spark, sf_dir)
 
 
-Q1_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """
+Q1_SQL = """
 SELECT
     CAST(DATE_TRUNC('month', fs.order_date) AS DATE) AS month,
     dp.product_name,
@@ -90,56 +88,31 @@ FROM fact_sales fs
 JOIN dim_products dp ON fs.product_key = dp.product_key
 GROUP BY 1, 2, 3, 4
 """
-)
 
 
 # -- q2: total sales per customer per country ------------------------
 def q2_sales_customer_country(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _fact_with_customer(spark, sf_dir)
-    return (
-        f.groupBy(
-            "country",
-            "customer_id",
-            # reference concatenates first||' '||last; exercised here
-            # as name + market segment (TPC-H has a single name col).
-            F.concat_ws(" ", F.col("customer_name"), F.col("market_segment")).alias(
-                "customer_label"
-            ),
-        )
-        .agg(F.sum("sales").cast("double").alias("total_sales"))
-    )
+    return _with_customer("mv_sales_customer_country", spark, sf_dir)
 
 
-Q2_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """
+Q2_SQL = """
 SELECT
     dc.country,
     dc.customer_id,
-    dc.customer_name || ' ' || dc.market_segment AS customer_label,
+    dc.customer_name,
     CAST(SUM(fs.sales) AS DOUBLE) AS total_sales
 FROM fact_sales fs
 JOIN dim_customers dc ON fs.customer_key = dc.customer_key
 GROUP BY 1, 2, 3
 """
-)
 
 
 # -- q3: customer lifetime value -------------------------------------
 def q3_customer_lifetime_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _fact_with_customer(spark, sf_dir)
-    return (
-        f.groupBy("customer_id", "customer_name")
-        .agg(
-            F.sum("sales").cast("double").alias("lifetime_value"),
-            F.countDistinct("order_number").alias("order_count"),
-        )
-    )
+    return _with_customer("mv_customer_lifetime_value", spark, sf_dir)
 
 
-Q3_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """
+Q3_SQL = """
 SELECT
     dc.customer_id,
     dc.customer_name,
@@ -149,154 +122,79 @@ FROM fact_sales fs
 JOIN dim_customers dc ON fs.customer_key = dc.customer_key
 GROUP BY 1, 2
 """
-)
 
 
 # -- q4: running cumulative sales per customer -----------------------
 def q4_running_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _fact_with_customer(spark, sf_dir)
-    # (order_number, line_number) is NOT unique in the synthetic data
-    # (duplicate pairs with different measures exist), so `sales` joins
-    # the sort key: any rows still tied are fully interchangeable and
-    # the running-sum multiset is deterministic on both engines.
-    w = (
-        Window.partitionBy("customer_id")
-        .orderBy("order_date", "order_number", "line_number", "sales")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return f.select(
-        "customer_id",
-        "order_date",
-        "order_number",
-        "line_number",
-        F.sum("sales").over(w).cast("double").alias("running_sales"),
-    )
+    return _with_customer("mv_running_sales_customer", spark, sf_dir)
 
 
-Q4_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """
+Q4_SQL = """
 SELECT
     dc.customer_id,
     fs.order_date,
-    fs.order_number,
-    fs.line_number,
     CAST(SUM(fs.sales) OVER (
         PARTITION BY dc.customer_id
-        ORDER BY fs.order_date, fs.order_number, fs.line_number, fs.sales
+        ORDER BY fs.order_date, fs.order_number, fs.sales
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
     ) AS DOUBLE) AS running_sales
 FROM fact_sales fs
 JOIN dim_customers dc ON fs.customer_key = dc.customer_key
 """
-)
 
 
 # -- q5: top-3 products per month per country ------------------------
 def q5_top3_products_month_country(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = fact_sales(spark, sf_dir).join(
-        dim_customers(spark, sf_dir), "customer_key"
-    ).join(dim_products(spark, sf_dir), "product_key")
-    per_product = f.groupBy(
-        F.trunc("order_date", "month").alias("month"),
-        "country",
-        "product_name",
-    ).agg(F.sum("sales").alias("total_sales_dec"))
-    w = Window.partitionBy("month", "country").orderBy(F.desc("total_sales_dec"))
-    return (
-        per_product.withColumn("rank_sales", F.rank().over(w))
-        .filter(F.col("rank_sales") <= 3)
-        .select(
-            "month",
-            "country",
-            "product_name",
-            F.col("total_sales_dec").cast("double").alias("total_sales"),
-            "rank_sales",
-        )
-    )
+    fs = fact_sales(spark, sf_dir)
+    dc, dp = dim_customers(spark, sf_dir), dim_products(spark, sf_dir)
+    return SHAPES["mv_top3_products_month_country"](fs, dc, dp)
 
 
-Q5_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """,
-sales_per_product AS (
-    SELECT
-        CAST(DATE_TRUNC('month', fs.order_date) AS DATE) AS month,
-        dc.country,
-        dp.product_name,
-        SUM(fs.sales) AS total_sales_dec
-    FROM fact_sales fs
-    JOIN dim_customers dc ON fs.customer_key = dc.customer_key
-    JOIN dim_products dp  ON fs.product_key = dp.product_key
-    GROUP BY 1, 2, 3
-)
-SELECT month, country, product_name,
-       CAST(total_sales_dec AS DOUBLE) AS total_sales,
-       rank_sales
+Q5_SQL = """
+SELECT month, country, product_name, total_sales, rank_sales
 FROM (
     SELECT s.*,
            RANK() OVER (PARTITION BY month, country
-                        ORDER BY total_sales_dec DESC) AS rank_sales
-    FROM sales_per_product s
+                        ORDER BY total_sales DESC) AS rank_sales
+    FROM (
+        SELECT
+            CAST(DATE_TRUNC('month', fs.order_date) AS DATE) AS month,
+            dc.country,
+            dp.product_name,
+            CAST(SUM(fs.sales) AS DOUBLE) AS total_sales
+        FROM fact_sales fs
+        JOIN dim_customers dc ON fs.customer_key = dc.customer_key
+        JOIN dim_products dp  ON fs.product_key = dp.product_key
+        GROUP BY 1, 2, 3
+    ) s
 ) ranked
 WHERE rank_sales <= 3
 """
-)
 
 
 # -- q6: churn --------------------------------------------------------
 def q6_customer_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _fact_with_customer(spark, sf_dir)
-    return (
-        f.groupBy("customer_id")
-        .agg(
-            F.min("order_date").alias("first_purchase"),
-            F.max("order_date").alias("last_purchase"),
-        )
-        .withColumn(
-            "is_churn",
-            F.col("last_purchase") < F.add_months(F.lit(CHURN_AS_OF).cast("date"), -6),
-        )
-    )
+    return _with_customer("mv_customer_churn", spark, sf_dir, as_of=CHURN_AS_OF)
 
 
-Q6_ORACLE = (
-    STAR_SQL_PRELUDE
-    + f"""
+Q6_SQL = f"""
 SELECT
     dc.customer_id,
     MIN(fs.order_date) AS first_purchase,
     MAX(fs.order_date) AS last_purchase,
-    CASE WHEN MAX(fs.order_date) < DATE '{CHURN_AS_OF}' - INTERVAL 6 MONTH
-         THEN TRUE ELSE FALSE END AS is_churn
+    MAX(fs.order_date) < DATE '{CHURN_AS_OF}' - INTERVAL 6 MONTH AS is_churn
 FROM fact_sales fs
 JOIN dim_customers dc ON fs.customer_key = dc.customer_key
 GROUP BY dc.customer_id
 """
-)
 
 
 # -- q7: average gap between orders ----------------------------------
 def q7_customer_order_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _fact_with_customer(spark, sf_dir)
-    w = Window.partitionBy("customer_id").orderBy(
-        "order_date", "order_number", "line_number"
-    )
-    gaps = f.select(
-        "customer_id",
-        "order_date",
-        F.lag("order_date").over(w).alias("prev_date"),
-    ).withColumn("order_gap", F.datediff("order_date", "prev_date"))
-    return (
-        gaps.filter(F.col("prev_date").isNotNull())
-        .groupBy("customer_id")
-        .agg(F.avg("order_gap").alias("avg_gap_days"))
-    )
+    return _with_customer("mv_customer_order_gap", spark, sf_dir)
 
 
-Q7_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """
+Q7_SQL = """
 SELECT
     customer_id,
     AVG(order_gap) AS avg_gap_days
@@ -306,12 +204,12 @@ FROM (
         fs.order_date,
         LAG(fs.order_date) OVER (
             PARTITION BY dc.customer_id
-            ORDER BY fs.order_date, fs.order_number, fs.line_number
+            ORDER BY fs.order_date, fs.order_number
         ) AS prev_date,
         DATE_DIFF('day',
                   LAG(fs.order_date) OVER (
                       PARTITION BY dc.customer_id
-                      ORDER BY fs.order_date, fs.order_number, fs.line_number
+                      ORDER BY fs.order_date, fs.order_number
                   ),
                   fs.order_date) AS order_gap
     FROM fact_sales fs
@@ -320,21 +218,14 @@ FROM (
 WHERE prev_date IS NOT NULL
 GROUP BY customer_id
 """
-)
 
 
 # -- q8: ROLLUP over the product hierarchy ---------------------------
 def q8_sales_rollup_product(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = _fact_with_product(spark, sf_dir)
-    return (
-        f.rollup("product_line", "category", "sub_category")
-        .agg(F.sum("sales").cast("double").alias("total_sales"))
-    )
+    return _with_product("mv_sales_rollup_product", spark, sf_dir)
 
 
-Q8_ORACLE = (
-    STAR_SQL_PRELUDE
-    + """
+Q8_SQL = """
 SELECT
     dp.product_line,
     dp.category,
@@ -344,7 +235,15 @@ FROM fact_sales fs
 JOIN dim_products dp ON fs.product_key = dp.product_key
 GROUP BY ROLLUP (dp.product_line, dp.category, dp.sub_category)
 """
-)
+
+Q1_ORACLE = STAR_SQL_PRELUDE + Q1_SQL
+Q2_ORACLE = STAR_SQL_PRELUDE + Q2_SQL
+Q3_ORACLE = STAR_SQL_PRELUDE + Q3_SQL
+Q4_ORACLE = STAR_SQL_PRELUDE + Q4_SQL
+Q5_ORACLE = STAR_SQL_PRELUDE + Q5_SQL
+Q6_ORACLE = STAR_SQL_PRELUDE + Q6_SQL
+Q7_ORACLE = STAR_SQL_PRELUDE + Q7_SQL
+Q8_ORACLE = STAR_SQL_PRELUDE + Q8_SQL
 
 
 # -- q10: PIVOT (sales by category x order year) ---------------------

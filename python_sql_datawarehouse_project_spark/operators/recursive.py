@@ -4,7 +4,9 @@ exploratory_data_analysis.sql:148-169 — the WITH RECURSIVE query).
 q9 computes the fixpoint as a driver-side loop of join + filter +
 unionByName over a bounded number of levels (SURVEY.md §4.2) — the
 formulation that controls per-level persistence, bucketed scans and
-checkpoint cadence explicitly.  Spark 4 ALSO executes WITH RECURSIVE
+checkpoint cadence explicitly.  The loop is the pipeline's own
+mv_delayed_orders_chain definition (plans/mv.delayed_orders_chain);
+q9 feeds it order_shipments.  Spark 4 ALSO executes WITH RECURSIVE
 natively; q43_recursive_sql below runs the same query as pasted SQL
 and is hash-matched against the same oracle.  Semantics mirror Postgres/DuckDB UNION ALL
 recursion exactly: each iteration joins the *previous level's* rows
@@ -34,11 +36,9 @@ deep recursions (SURVEY.md §4.2).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..plans.mv import delayed_orders_chain
 from ..star import STAR_SQL_CTES
 
 MAX_LEVEL = 3
@@ -75,7 +75,7 @@ def order_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed path is the difference between a per-run lineitem shuffle
     and none."""
     from ..catalog import load_table
-    from ..plans.bucketing import bucketed_scan
+    from ..plans.bucketing import bucketed_scan, order_shipments_plan
 
     orders = bucketed_scan(spark, sf_dir, "orders")
     if orders is None:
@@ -83,61 +83,15 @@ def order_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = bucketed_scan(spark, sf_dir, "lineitem")
     if lineitem is None:
         lineitem = load_table(spark, sf_dir, "lineitem")
-    order_date = F.col("o_orderdate").cast("date")
-    return (
-        orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"], "inner")
-        .groupBy(
-            F.col("o_orderkey").alias("order_number"),
-            F.col("o_custkey").alias("customer_key"),
-            order_date.alias("order_date"),
-            F.date_add(order_date, 30).alias("due_date"),
-        )
-        .agg(F.max(F.col("l_shipdate").cast("date")).alias("shipping_date"))
-    )
+    return order_shipments_plan(orders, lineitem)
 
 
 def q9_delayed_orders_chain(
     spark: SparkSession, sf_dir: str, max_level: int = MAX_LEVEL
 ) -> DataFrame:
-    out_cols = ["order_number", "customer_key", "shipping_date", "due_date", "level"]
-    ships = order_shipments(spark, sf_dir).persist()
-    seed = (
-        ships.filter(F.col("shipping_date") > F.col("due_date"))
-        .select(
-            "order_number",
-            "customer_key",
-            "shipping_date",
-            "due_date",
-            F.lit(1).alias("level"),
-        )
-        .persist()
-    )
-    levels = [seed]
-    frontier = seed
-    for lvl in range(2, max_level + 1):
-        prev = frontier.select(
-            F.col("customer_key").alias("d_customer_key"),
-            F.col("shipping_date").alias("d_shipping_date"),
-        )
-        frontier = (
-            ships.join(
-                prev,
-                (ships["customer_key"] == prev["d_customer_key"])
-                & (ships["order_date"] > prev["d_shipping_date"]),
-                "inner",
-            )
-            .select(
-                "order_number",
-                "customer_key",
-                "shipping_date",
-                "due_date",
-                F.lit(lvl).alias("level"),
-            )
-            .persist()
-        )
-        levels.append(frontier)
-    union = reduce(lambda a, b: a.unionByName(b), levels).select(*out_cols)
-    return finalize_recursion(union, [ships, *levels])
+    """The pipeline's mv_delayed_orders_chain loop
+    (plans/mv.delayed_orders_chain) over order_shipments."""
+    return delayed_orders_chain(order_shipments(spark, sf_dir), max_level)
 
 
 Q9_ORACLE = (

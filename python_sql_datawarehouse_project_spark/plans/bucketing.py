@@ -89,9 +89,9 @@ def bucketize(
 
 
 def order_shipments_plan(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """The order_shipments shape (operators/recursive.py:44-59) over
-    caller-supplied scans, so bucketed and plain layouts share one
-    definition."""
+    """The order_shipments shape over caller-supplied scans, so
+    bucketed and plain layouts share one definition
+    (operators/recursive.order_shipments resolves the scans for q9)."""
     order_date = F.col("o_orderdate").cast("date")
     return (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"], "inner")

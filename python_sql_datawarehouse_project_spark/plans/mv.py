@@ -1,44 +1,53 @@
-"""Materialized-view registry: the reference's nine MVs
-(sql/gold/materialized_view.sql:2-149) over the warehouse's gold star,
-with FULL-refresh semantics (recompute -> overwrite; reference
-MV Refresh Template.sql:33, refresh_mode='FULL' at
-materialized_view.sql:161-169).  Spark has no MV object, so refresh is
-"run the query, overwrite the output table" — same observable result.
+"""Materialized views: the reference's nine gold MVs
+(sql/gold/materialized_view.sql:2-149), each defined ONCE here as a
+function of the gold star frames (fact_sales, dim_customers,
+dim_products).
 
-These run over the *pipeline-produced* gold tables (CRM-shaped star),
-whereas operators/analytics.py runs the same nine shapes over the
-driver's TPC-H-ish star for the oracle gate.  The shapes are the
-parity target; both layers share semantics, not code paths.
+Three callers run these same definitions:
+  * the pipeline's FULL refresh (`MVS`, `refresh_mv`) over the
+    warehouse's gold (`gold_frames`) — recompute, overwrite; reference
+    MV Refresh Template.sql:33, refresh_mode='FULL' at
+    materialized_view.sql:161-169.  Spark has no MV object, so refresh
+    is "run the query, overwrite the output table";
+  * the incremental refresh (plans/mv_incremental.py), which folds
+    `INCREMENTAL[name].delta` over one new batch into stored state and
+    re-publishes;
+  * the oracle gates q1-q8 (operators/analytics.py) and q9
+    (operators/recursive.py) over star.py's TPC-H-derived star, each
+    checked against hand-written DuckDB SQL.
+
+Six MVs are distributive aggregates, defined by their `IncSpec`: a
+`delta` that aggregates the given frames to the state grain, and a
+`publish` that finalizes the output shape from state.  A full refresh
+is `publish(delta(star))`.  The other three depend on row order across
+the whole history (running window, LAG gaps, recursive chain), so they
+are plain frame functions with no state form.
+
+Money partials route through DECIMAL(18,4) (star.py's policy):
+decimal addition is exact and associative, so the incremental and
+full refreshes agree bitwise, and every output casts to DOUBLE once,
+at publish.  State columns are pinned to DECIMAL(28,4), because Spark
+widens SUM(decimal) per aggregation level (18,4 -> 28,4 -> 38,4) and
+the state table's parquet schema must not drift across batches.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .warehouse import Warehouse
+from .warehouse import BATCH_COL, Warehouse
 
-# Fixed as-of date for churn (reference uses CURRENT_DATE,
-# materialized_view.sql:86); injectable for deterministic tests.
-DEFAULT_CHURN_AS_OF = None  # None -> current_date()
+_DEC = "decimal(18,4)"
+STATE_DEC = "decimal(28,4)"
 
 
-def _money_sum(col: str):
-    """SUM for money columns, routed through the SAME decimal policy as
-    the incremental-MV state (mv_incremental._DEC/_STATE_DEC): cast to
-    decimal(18,4) before the sum so addition is exact and
-    order-independent, re-pin the widened sum to decimal(28,4), cast to
-    DOUBLE only at publish.  This is what makes incremental-vs-full
-    equality bitwise rather than approximate — a FULL path summing
-    doubles directly would differ from the decimal-routed incremental
-    path in low-order bits (ADVICE r2)."""
-    return (
-        F.sum(F.col(col).cast("decimal(18,4)"))
-        .cast("decimal(28,4)")
-        .cast("double")
-    )
+def _money_sum(col: str = "sales"):
+    return F.sum(F.col(col).cast(_DEC)).cast(STATE_DEC)
 
 
 # surrogate-key columns per gold table, for history-mode re-keying
@@ -49,9 +58,12 @@ _SURROGATES = {
 }
 
 
-def _gold(wh: Warehouse, batch_id: str | None):
-    """Gold star for one batch (batch_id given) or ALL history
-    (batch_id=None).
+def gold_frames(wh: Warehouse, batch_id: str | None = None):
+    """The gold star as (fact_sales, dim_customers, dim_products) for
+    one batch (a partition-pruned scan) or, with batch_id=None, for ALL
+    history.  dim_customers gains `customer_name` (first and last name
+    joined by a space, reference materialized_view.sql:20), so pipeline
+    gold presents the same dim columns as star.py.
 
     History mode must respect the warehouse's per-batch dim-snapshot
     model: surrogate keys restart at 1 in every batch (plans/gold.py
@@ -64,31 +76,49 @@ def _gold(wh: Warehouse, batch_id: str | None):
     a star schema should.  The -1 unknown-member sentinel
     (tools.load_fact_sales_v1.sql:65-66 COALESCE) is preserved
     globally: dims carry no -1 row, so inner joins drop those facts in
-    every mode, and mv_delayed_orders_chain's `!= -1` guard keeps
-    working."""
+    every mode, and the delayed chain's `!= -1` filter keeps working."""
 
     def read(name: str) -> DataFrame:
-        df = wh.read_table("gold", name)
         if batch_id is not None:
-            return df.filter(F.col("dwh_batch_id") == batch_id).drop(
-                "dwh_batch_id"
-            )
+            return wh.read_batch("gold", name, batch_id).drop(BATCH_COL)
+        df = wh.read_table("gold", name)
         # batch ids are "BATCH" + 6-digit counter (pipeline.next_batch_id,
         # reference batch_processing.py:49-56): substring beats a per-row
         # regexp over 60M facts
-        bnum = F.substring(F.col("dwh_batch_id"), 6, 10).cast("long")
+        bnum = F.substring(F.col(BATCH_COL), 6, 10).cast("long")
         for c in _SURROGATES[name]:
             k = F.col(c).cast("long")
             df = df.withColumn(
                 c, F.when(k < 0, k).otherwise(bnum * F.lit(1 << 32) + k)
             )
-        return df.drop("dwh_batch_id")
+        return df.drop(BATCH_COL)
 
-    return read("fact_sales"), read("dim_customers"), read("dim_products")
+    dc = read("dim_customers").withColumn(
+        "customer_name",
+        F.concat_ws(" ", F.col("customer_firstname"), F.col("customer_lastname")),
+    )
+    return read("fact_sales"), dc, read("dim_products")
 
 
-def mv_sales_monthly_productline(wh, batch_id=None) -> DataFrame:
-    fs, _, dp = _gold(wh, batch_id)
+@dataclass(frozen=True)
+class IncSpec:
+    """One distributive MV: state grain, how two snapshots' partials
+    merge, the per-batch `delta(fs, dc, dp)` at state grain and the
+    `publish(state, **kw)` that finalizes the output."""
+
+    keys: tuple[str, ...]
+    partials: dict[str, str]  # state column -> merge fn name
+    delta: Callable[[DataFrame, DataFrame, DataFrame], DataFrame]
+    publish: Callable[..., DataFrame]
+
+
+def _publish_double(state: DataFrame) -> DataFrame:
+    # the state grain IS the output grain: only the money type changes
+    return state.withColumn("total_sales", F.col("total_sales").cast("double"))
+
+
+# -- mv_sales_monthly_productline (q1) --------------------------------
+def _delta_monthly_productline(fs, dc, dp) -> DataFrame:
     return (
         fs.join(dp, "product_key")
         .groupBy(
@@ -97,44 +127,154 @@ def mv_sales_monthly_productline(wh, batch_id=None) -> DataFrame:
             "category",
             "sub_category",
         )
-        .agg(_money_sum("sales").alias("total_sales"))
+        .agg(_money_sum().alias("total_sales"))
     )
 
 
-def mv_sales_customer_country(wh, batch_id=None) -> DataFrame:
-    fs, dc, _ = _gold(wh, batch_id)
+# -- mv_sales_customer_country (q2) -----------------------------------
+def _delta_customer_country(fs, dc, dp) -> DataFrame:
     return (
         fs.join(dc, "customer_key")
+        .groupBy("country", "customer_id", "customer_name")
+        .agg(_money_sum().alias("total_sales"))
+    )
+
+
+# -- mv_customer_lifetime_value (q3) ----------------------------------
+def _delta_lifetime(fs, dc, dp) -> DataFrame:
+    # (customer, order) grain keeps COUNT(DISTINCT order_number) exact
+    # across batches: an order split over two batches merges into one
+    # state row
+    return (
+        fs.join(dc, "customer_key")
+        .groupBy("customer_id", "customer_name", "order_number")
+        .agg(_money_sum().alias("order_sales"))
+    )
+
+
+def _publish_lifetime(state: DataFrame) -> DataFrame:
+    # COUNT(order_number) over one-row-per-order state is
+    # COUNT(DISTINCT order_number): a NULL order number forms a state
+    # row of its own, which COUNT skips as COUNT(DISTINCT) does
+    return state.groupBy("customer_id", "customer_name").agg(
+        F.sum("order_sales").cast("double").alias("lifetime_value"),
+        F.count("order_number").alias("order_count"),
+    )
+
+
+# -- mv_top3_products_month_country (q5) ------------------------------
+def _delta_top3(fs, dc, dp) -> DataFrame:
+    return (
+        fs.join(dc, "customer_key")
+        .join(dp, "product_key")
         .groupBy(
+            F.trunc("order_date", "month").alias("month"),
             "country",
-            "customer_id",
-            F.concat_ws(
-                " ", F.col("customer_firstname"), F.col("customer_lastname")
-            ).alias("customer_name"),
+            "product_name",
         )
-        .agg(_money_sum("sales").alias("total_sales"))
+        .agg(_money_sum().alias("total_sales"))
     )
 
 
-def mv_customer_lifetime_value(wh, batch_id=None) -> DataFrame:
-    fs, dc, _ = _gold(wh, batch_id)
+def _publish_top3(state: DataFrame) -> DataFrame:
+    # RANK over total_sales only: ties share a rank, like the
+    # reference's RANK(), and rank() is value-determined for ties, so
+    # no tiebreaker is needed for determinism.  The DOUBLE total is
+    # ranked, so two decimal sums that collapse to one double tie.
+    w = Window.partitionBy("month", "country").orderBy(F.desc("total_sales"))
+    return (
+        _publish_double(state)
+        .withColumn("rank_sales", F.rank().over(w))
+        .filter(F.col("rank_sales") <= 3)
+    )
+
+
+# -- mv_customer_churn (q6) -------------------------------------------
+def _delta_churn(fs, dc, dp) -> DataFrame:
     return (
         fs.join(dc, "customer_key")
-        .groupBy(
-            "customer_id",
-            F.concat_ws(
-                " ", F.col("customer_firstname"), F.col("customer_lastname")
-            ).alias("customer_name"),
-        )
+        .groupBy("customer_id")
         .agg(
-            _money_sum("sales").alias("lifetime_value"),
-            F.countDistinct("order_number").alias("order_count"),
+            F.min("order_date").alias("first_purchase"),
+            F.max("order_date").alias("last_purchase"),
         )
     )
 
 
-def mv_running_sales_customer(wh, batch_id=None) -> DataFrame:
-    fs, dc, _ = _gold(wh, batch_id)
+def _publish_churn(state: DataFrame, as_of=None) -> DataFrame:
+    # as_of=None is the reference's CURRENT_DATE
+    # (materialized_view.sql:86); a fixed date makes reruns agree
+    cutoff = F.add_months(
+        F.current_date() if as_of is None else F.lit(as_of).cast("date"), -6
+    )
+    return state.withColumn("is_churn", F.col("last_purchase") < cutoff)
+
+
+# -- mv_sales_rollup_product (q8) -------------------------------------
+def _delta_rollup(fs, dc, dp) -> DataFrame:
+    return (
+        fs.join(dp, "product_key")
+        .groupBy("product_line", "category", "sub_category")
+        .agg(_money_sum().alias("total_sales"))
+    )
+
+
+def _publish_rollup(state: DataFrame) -> DataFrame:
+    # ROLLUP of sums over base-grain state == ROLLUP over facts (sum is
+    # associative); the grouping-set expansion runs over |groups| rows
+    return state.rollup("product_line", "category", "sub_category").agg(
+        F.sum("total_sales").cast("double").alias("total_sales")
+    )
+
+
+INCREMENTAL: dict[str, IncSpec] = {
+    "mv_sales_monthly_productline": IncSpec(
+        keys=("month", "product_name", "category", "sub_category"),
+        partials={"total_sales": "sum"},
+        delta=_delta_monthly_productline,
+        publish=_publish_double,
+    ),
+    "mv_sales_customer_country": IncSpec(
+        keys=("country", "customer_id", "customer_name"),
+        partials={"total_sales": "sum"},
+        delta=_delta_customer_country,
+        publish=_publish_double,
+    ),
+    "mv_top3_products_month_country": IncSpec(
+        keys=("month", "country", "product_name"),
+        partials={"total_sales": "sum"},
+        delta=_delta_top3,
+        publish=_publish_top3,
+    ),
+    "mv_customer_lifetime_value": IncSpec(
+        keys=("customer_id", "customer_name", "order_number"),
+        partials={"order_sales": "sum"},
+        delta=_delta_lifetime,
+        publish=_publish_lifetime,
+    ),
+    "mv_customer_churn": IncSpec(
+        keys=("customer_id",),
+        partials={"first_purchase": "min", "last_purchase": "max"},
+        delta=_delta_churn,
+        publish=_publish_churn,
+    ),
+    "mv_sales_rollup_product": IncSpec(
+        keys=("product_line", "category", "sub_category"),
+        partials={"total_sales": "sum"},
+        delta=_delta_rollup,
+        publish=_publish_rollup,
+    ),
+}
+
+
+# -- order-dependent MVs: no state form --------------------------------
+# Their outputs depend on orderings across the entire history, so state
+# would have to BE the history; the incremental refresh recomputes them
+# over all batches instead.
+def running_sales_customer(fs, dc, dp) -> DataFrame:
+    """mv_running_sales_customer (q4): running window over history.
+    `sales` completes the sort key: rows still tied are fully
+    interchangeable, so the running-sum multiset is deterministic."""
     w = (
         Window.partitionBy("customer_id")
         .orderBy("order_date", "order_number", "sales")
@@ -143,51 +283,17 @@ def mv_running_sales_customer(wh, batch_id=None) -> DataFrame:
     return fs.join(dc, "customer_key").select(
         "customer_id",
         "order_date",
-        F.sum(F.col("sales").cast("decimal(18,4)")).over(w)
+        F.sum(F.col("sales").cast(_DEC))
+        .over(w)
         .cast("double")
         .alias("running_sales"),
     )
 
 
-def mv_top3_products_month_country(wh, batch_id=None) -> DataFrame:
-    fs, dc, dp = _gold(wh, batch_id)
-    per = (
-        fs.join(dc, "customer_key")
-        .join(dp, "product_key")
-        .groupBy(
-            F.trunc("order_date", "month").alias("month"),
-            "country",
-            "product_name",
-        )
-        .agg(_money_sum("sales").alias("total_sales"))
-    )
-    w = Window.partitionBy("month", "country").orderBy(F.desc("total_sales"))
-    return (
-        per.withColumn("rank_sales", F.rank().over(w))
-        .filter(F.col("rank_sales") <= 3)
-    )
-
-
-def mv_customer_churn(wh, batch_id=None, as_of=DEFAULT_CHURN_AS_OF) -> DataFrame:
-    fs, dc, _ = _gold(wh, batch_id)
-    cutoff = (
-        F.add_months(F.current_date(), -6)
-        if as_of is None
-        else F.add_months(F.lit(as_of).cast("date"), -6)
-    )
-    return (
-        fs.join(dc, "customer_key")
-        .groupBy("customer_id")
-        .agg(
-            F.min("order_date").alias("first_purchase"),
-            F.max("order_date").alias("last_purchase"),
-        )
-        .withColumn("is_churn", F.col("last_purchase") < cutoff)
-    )
-
-
-def mv_customer_order_gap(wh, batch_id=None) -> DataFrame:
-    fs, dc, _ = _gold(wh, batch_id)
+def customer_order_gap(fs, dc, dp) -> DataFrame:
+    """mv_customer_order_gap (q7): LAG gaps depend on neighbouring
+    history rows.  The average depends only on the sorted order_date
+    sequence, so the tiebreakers do not change the output."""
     w = Window.partitionBy("customer_id").orderBy(
         "order_date", "order_number", "sales"
     )
@@ -207,22 +313,51 @@ def mv_customer_order_gap(wh, batch_id=None) -> DataFrame:
     )
 
 
-def mv_sales_rollup_product(wh, batch_id=None) -> DataFrame:
-    fs, _, dp = _gold(wh, batch_id)
-    return (
-        fs.join(dp, "product_key")
-        .rollup("product_line", "category", "sub_category")
-        .agg(_money_sum("sales").alias("total_sales"))
+def delayed_orders_chain(orders: DataFrame, max_level: int = 3) -> DataFrame:
+    """The reference's WITH RECURSIVE delayed chain
+    (materialized_view.sql:127-149) as a driver-side loop over an order
+    frame (order_number, customer_key, order_date, shipping_date,
+    due_date).  Level 1 is every order shipped after its due date;
+    level k+1 is every order of the same customer placed after a
+    level-k order shipped.  Each level joins the PREVIOUS level's rows,
+    like UNION ALL recursion in Postgres/DuckDB, so one order can
+    appear at several levels.  Level-capped: on data where most orders
+    chain, rows grow ~fanout^level.
+
+    The base and every level are persisted so level k reuses level k-1
+    instead of re-deriving the prefix; finalize_recursion materializes
+    the union and releases them."""
+    from ..operators.recursive import finalize_recursion
+
+    cols = ["order_number", "customer_key", "shipping_date", "due_date"]
+    base = orders.persist()
+    seed = (
+        base.filter(F.col("shipping_date") > F.col("due_date"))
+        .select(*cols, F.lit(1).alias("level"))
+        .persist()
     )
+    levels, frontier = [seed], seed
+    for lvl in range(2, max_level + 1):
+        prev = frontier.select(
+            F.col("customer_key").alias("d_customer_key"),
+            F.col("shipping_date").alias("d_shipping_date"),
+        )
+        frontier = (
+            base.join(
+                prev,
+                (base["customer_key"] == prev["d_customer_key"])
+                & (base["order_date"] > prev["d_shipping_date"]),
+            )
+            .select(*cols, F.lit(lvl).alias("level"))
+            .persist()
+        )
+        levels.append(frontier)
+    union = reduce(DataFrame.unionByName, levels)
+    return finalize_recursion(union, [base, *levels])
 
 
-def mv_delayed_orders_chain(wh, batch_id=None, max_level: int = 3) -> DataFrame:
-    """Driver-side recursion (no recursive CTE in Spark); level-capped.
-    Reference materialized_view.sql:127-149."""
-    from functools import reduce
-
-    fs, _, _ = _gold(wh, batch_id)
-    # Exclude the unknown-member sentinel from the chain: the
+def _gold_delayed_orders_chain(fs, dc, dp, max_level: int = 3) -> DataFrame:
+    # The unknown-member sentinel is excluded from the chain: the
     # COALESCE(-1) fallback (load_fact_sales) makes every orphan fact
     # row share customer_key = -1, and a self-join on customer_key
     # turns that shared key into a SUPERHUB — measured at sf1: 6
@@ -231,62 +366,55 @@ def mv_delayed_orders_chain(wh, batch_id=None, max_level: int = 3) -> DataFrame:
     # chaining orders ACROSS unknown customers asserts they belong to
     # the same customer, which is exactly what is not known — so the
     # filter is a correctness refinement, not just a skew guard.
-    base = (
-        fs.filter(F.col("customer_key") != -1)
-        .select(
-            "order_number",
-            "customer_key",
-            "order_date",
-            "shipping_date",
-            "due_date",
-        )
-        .persist()
+    orders = fs.filter(F.col("customer_key") != -1).select(
+        "order_number", "customer_key", "order_date", "shipping_date", "due_date"
     )
-    seed = base.filter(F.col("shipping_date") > F.col("due_date")).select(
-        "order_number",
-        "customer_key",
-        "shipping_date",
-        "due_date",
-        F.lit(1).alias("level"),
+    return delayed_orders_chain(orders, max_level)
+
+
+def _full(spec: IncSpec) -> Callable[..., DataFrame]:
+    def refresh(fs, dc, dp, **kw) -> DataFrame:
+        return spec.publish(spec.delta(fs, dc, dp), **kw)
+
+    return refresh
+
+
+_ORDER_DEPENDENT = {
+    "mv_running_sales_customer": running_sales_customer,
+    "mv_customer_order_gap": customer_order_gap,
+    "mv_delayed_orders_chain": _gold_delayed_orders_chain,
+}
+
+# Every MV as a full recompute over (fact_sales, dim_customers,
+# dim_products), in refresh order.  A caller may pass None for a frame
+# the shape does not read.
+SHAPES: dict[str, Callable[..., DataFrame]] = {
+    name: _full(INCREMENTAL[name]) if name in INCREMENTAL else _ORDER_DEPENDENT[name]
+    for name in (
+        "mv_sales_monthly_productline",
+        "mv_sales_customer_country",
+        "mv_customer_lifetime_value",
+        "mv_running_sales_customer",
+        "mv_top3_products_month_country",
+        "mv_customer_churn",
+        "mv_customer_order_gap",
+        "mv_sales_rollup_product",
+        "mv_delayed_orders_chain",
     )
-    levels, frontier = [seed], seed
-    for lvl in range(2, max_level + 1):
-        prev = frontier.select(
-            F.col("customer_key").alias("d_ck"),
-            F.col("shipping_date").alias("d_ship"),
-        )
-        frontier = (
-            base.join(
-                prev,
-                (base["customer_key"] == prev["d_ck"])
-                & (base["order_date"] > prev["d_ship"]),
-            )
-            .select(
-                "order_number",
-                "customer_key",
-                "shipping_date",
-                "due_date",
-                F.lit(lvl).alias("level"),
-            )
-            .persist()
-        )
-        levels.append(frontier)
-    from ..operators.recursive import finalize_recursion
-
-    union = reduce(lambda a, b: a.unionByName(b), levels)
-    return finalize_recursion(union, [base, *levels])
+}
 
 
+def _over_gold(shape: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    def mv(wh: Warehouse, batch_id: str | None = None, **kw) -> DataFrame:
+        return shape(*gold_frames(wh, batch_id), **kw)
+
+    return mv
+
+
+# Every MV over the warehouse's gold: MVS[name](wh, batch_id, **kw),
+# batch_id=None for all history.
 MVS: dict[str, Callable[..., DataFrame]] = {
-    "mv_sales_monthly_productline": mv_sales_monthly_productline,
-    "mv_sales_customer_country": mv_sales_customer_country,
-    "mv_customer_lifetime_value": mv_customer_lifetime_value,
-    "mv_running_sales_customer": mv_running_sales_customer,
-    "mv_top3_products_month_country": mv_top3_products_month_country,
-    "mv_customer_churn": mv_customer_churn,
-    "mv_customer_order_gap": mv_customer_order_gap,
-    "mv_sales_rollup_product": mv_sales_rollup_product,
-    "mv_delayed_orders_chain": mv_delayed_orders_chain,
+    name: _over_gold(shape) for name, shape in SHAPES.items()
 }
 
 

@@ -1,4 +1,4 @@
-"""Incremental materialized-view refresh.
+"""Incremental materialized-view refresh: the state machinery.
 
 The reference refreshes every MV with refresh_mode='FULL' (reference
 sql/gold/materialized_view.sql:161-169, `MV Refresh Template.sql:33`)
@@ -9,49 +9,28 @@ fold in one.  This module adds the scale path the reference lacks:
   state(b)  = merge(state(b-1), delta(b))
   output(b) = publish(state(b))
 
-* `delta(b)` aggregates ONLY the new gold batch partition — a
+`delta` and `publish` are the MV's own definition
+(plans/mv.INCREMENTAL, the same functions the full refresh composes
+as publish(delta(gold))); this module owns everything around them:
+
+* `delta(b)` runs over ONLY the new gold batch partition — a
   partition-pruned scan (PartitionFilters on dwh_batch_id, pinned by
   tests/test_mv_incremental.py), so the 100 TB fact history is never
   re-read.
-* `state` is a partial-aggregate table at the MV's group grain (or a
-  finer grain when the MV needs exact COUNT(DISTINCT)); its size is
-  bounded by group cardinality, not fact rows.
+* `state` is the delta's partial-aggregate table at the MV's group
+  grain (or a finer grain when the MV needs exact COUNT(DISTINCT));
+  its size is bounded by group cardinality, not fact rows.
 * `merge` is a grouped re-aggregation of two state snapshots — legal
-  exactly because every partial is distributive (SUM/COUNT/MIN/MAX
-  of SUM/COUNT/MIN/MAX).  Snapshots are stored per batch
-  (dwh_batch_id partition), so re-running a batch rebuilds its
-  snapshot from the same inputs — the warehouse's delete-then-insert
-  idempotency extends to MV state.
-* `publish` finalizes the output shape from state only (rank for the
-  top-k MV, ROLLUP re-aggregation, churn flag) — cheap, because state
-  is small.
+  exactly because every partial is distributive (SUM/MIN/MAX of
+  SUM/MIN/MAX).  Snapshots are stored per batch (dwh_batch_id
+  partition), so re-running a batch rebuilds its snapshot from the
+  same inputs — the warehouse's delete-then-insert idempotency
+  extends to MV state.
+* completion markers and per-MV previous-snapshot resolution make an
+  empty snapshot durable and a torn or missing one detectable.
 
-Money partials route through DECIMAL(18,4) (same policy as star.py):
-decimal addition is exact and associative, so incremental-vs-full
-equality is bitwise, not approximate, and the final cast to DOUBLE
-matches the FULL-refresh output type.
-
-Supported MVs and their state grains:
-
-  mv_sales_monthly_productline   (month, product, category, subcat)
-  mv_sales_customer_country      (country, customer, name): plain
-                                 grouped SUM — state IS the output
-  mv_top3_products_month_country (month, country, product) -> rank at
-                                 publish time; top-k is NOT
-                                 incremental but rank-over-state is
-                                 O(|groups|), not O(|facts|)
-  mv_customer_lifetime_value     (customer, order_number): exact
-                                 COUNT(DISTINCT order) = COUNT(*) of
-                                 the finer-grain state rows
-  mv_customer_churn              (customer): MIN/MAX order_date
-  mv_sales_rollup_product        (line, category, subcat) -> ROLLUP
-                                 re-aggregated over state
-
-Not incrementally maintainable (documented FULL fallback): running
-windows over full history (mv_running_sales_customer), inter-row gaps
-(mv_customer_order_gap), and the recursive chain
-(mv_delayed_orders_chain) — their outputs depend on orderings across
-the entire history, so state would have to BE the history.
+The three order-dependent MVs have no state form (see plans/mv.py);
+run_mvs(mode="incremental") recomputes them over full history.
 
 Dimension-attribute drift: a state row keeps the dimension attributes
 (names, category) it was built with.  Type-1 attribute rewrites
@@ -63,13 +42,12 @@ batches in this warehouse carry their own dim snapshots.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
-from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .mv import INCREMENTAL, STATE_DEC, IncSpec, gold_frames
 from .warehouse import BATCH_COL, Warehouse
 
 STATE_LAYER = "mv_state"
@@ -81,407 +59,9 @@ STATE_LAYER = "mv_state"
 # added to INCREMENTAL on an existing warehouse).  The marker makes
 # (a) durable and leaves (b) detectable (ADVICE r9).
 _MARKER_PREFIX = "_state_complete_"
-_DEC = "decimal(18,4)"
-# Canonical state type for money partials: Spark widens SUM(decimal)
-# precision per aggregation (18,4 -> 28,4 -> 38,4), which would drift
-# the state table's parquet schema across batch partitions; every
-# state write re-pins to 28,4 (10^24 capacity — not reachable by
-# summing 18,4 values over any real corpus).
-_STATE_DEC = "decimal(28,4)"
 
 # merge function per partial column: how two snapshots' values combine
 _MERGE_FN = {"sum": F.sum, "min": F.min, "max": F.max}
-
-
-@dataclass(frozen=True)
-class IncSpec:
-    """One incrementally-maintainable MV: state grain + partial merge
-    rules + the delta (per-batch partial aggregation) and publish
-    (state -> output shape) plans."""
-
-    keys: tuple[str, ...]
-    partials: dict[str, str]  # state column -> merge fn name
-    delta: Callable[[Warehouse, str], DataFrame]
-    publish: Callable[..., DataFrame]
-
-
-def _gold_batch(wh: Warehouse, batch_id: str):
-    fs = wh.read_batch("gold", "fact_sales", batch_id).drop(BATCH_COL)
-    dc = wh.read_batch("gold", "dim_customers", batch_id).drop(BATCH_COL)
-    dp = wh.read_batch("gold", "dim_products", batch_id).drop(BATCH_COL)
-    return fs, dc, dp
-
-
-def _dec_sales():
-    return F.col("sales").cast(_DEC)
-
-
-# -- mv_sales_monthly_productline ------------------------------------
-def _delta_monthly_productline(wh: Warehouse, batch_id: str) -> DataFrame:
-    fs, _, dp = _gold_batch(wh, batch_id)
-    return (
-        fs.join(dp, "product_key")
-        .groupBy(
-            F.trunc("order_date", "month").alias("month"),
-            "product_name",
-            "category",
-            "sub_category",
-        )
-        .agg(F.sum(_dec_sales()).cast(_STATE_DEC).alias("total_sales"))
-    )
-
-
-def _publish_monthly_productline(state: DataFrame) -> DataFrame:
-    return state.withColumn("total_sales", F.col("total_sales").cast("double"))
-
-
-# -- mv_sales_customer_country ----------------------------------------
-def _delta_customer_country(wh: Warehouse, batch_id: str) -> DataFrame:
-    fs, dc, _ = _gold_batch(wh, batch_id)
-    return (
-        fs.join(dc, "customer_key")
-        .groupBy(
-            "country",
-            "customer_id",
-            F.concat_ws(
-                " ", F.col("customer_firstname"), F.col("customer_lastname")
-            ).alias("customer_name"),
-        )
-        .agg(F.sum(_dec_sales()).cast(_STATE_DEC).alias("total_sales"))
-    )
-
-
-def _publish_customer_country(state: DataFrame) -> DataFrame:
-    return state.withColumn("total_sales", F.col("total_sales").cast("double"))
-
-
-# -- mv_top3_products_month_country ----------------------------------
-def _delta_top3(wh: Warehouse, batch_id: str) -> DataFrame:
-    fs, dc, dp = _gold_batch(wh, batch_id)
-    return (
-        fs.join(dc, "customer_key")
-        .join(dp, "product_key")
-        .groupBy(
-            F.trunc("order_date", "month").alias("month"),
-            "country",
-            "product_name",
-        )
-        .agg(F.sum(_dec_sales()).cast(_STATE_DEC).alias("total_sales"))
-    )
-
-
-def _publish_top3(state: DataFrame) -> DataFrame:
-    # RANK over total_sales only — ties share a rank, exactly like the
-    # FULL path (mv.mv_top3_products_month_country) and the reference's
-    # RANK(); a product_name tiebreaker here would drop a tied row at
-    # the top-3 boundary that FULL keeps, breaking incremental==full.
-    # rank() is value-determined for ties, so no tiebreaker is needed
-    # for determinism.  Cast to double BEFORE ranking: the FULL path
-    # ranks the already-cast double, so two decimal(28,4) states that
-    # collapse to the same double must tie here too (ADVICE r9 — sums
-    # above ~9e11 would otherwise rank separately only in this path).
-    w = Window.partitionBy("month", "country").orderBy(F.desc("total_sales"))
-    return (
-        state.withColumn("total_sales", F.col("total_sales").cast("double"))
-        .withColumn("rank_sales", F.rank().over(w))
-        .filter(F.col("rank_sales") <= 3)
-    )
-
-
-# -- mv_customer_lifetime_value --------------------------------------
-def _delta_lifetime(wh: Warehouse, batch_id: str) -> DataFrame:
-    fs, dc, _ = _gold_batch(wh, batch_id)
-    return (
-        fs.join(dc, "customer_key")
-        .groupBy(
-            "customer_id",
-            F.concat_ws(
-                " ", F.col("customer_firstname"), F.col("customer_lastname")
-            ).alias("customer_name"),
-            "order_number",
-        )
-        .agg(F.sum(_dec_sales()).cast(_STATE_DEC).alias("order_sales"))
-    )
-
-
-def _publish_lifetime(state: DataFrame) -> DataFrame:
-    # state is one row per (customer, order): COUNT(*) here IS the
-    # exact COUNT(DISTINCT order_number) over all history — an order
-    # split across batches merged into a single state row.
-    return state.groupBy("customer_id", "customer_name").agg(
-        F.sum("order_sales").cast("double").alias("lifetime_value"),
-        F.count(F.lit(1)).alias("order_count"),
-    )
-
-
-# -- mv_customer_churn -----------------------------------------------
-def _delta_churn(wh: Warehouse, batch_id: str) -> DataFrame:
-    fs, dc, _ = _gold_batch(wh, batch_id)
-    return (
-        fs.join(dc, "customer_key")
-        .groupBy("customer_id")
-        .agg(
-            F.min("order_date").alias("first_purchase"),
-            F.max("order_date").alias("last_purchase"),
-        )
-    )
-
-
-def _publish_churn(state: DataFrame, as_of=None) -> DataFrame:
-    cutoff = (
-        F.add_months(F.current_date(), -6)
-        if as_of is None
-        else F.add_months(F.lit(as_of).cast("date"), -6)
-    )
-    return state.withColumn("is_churn", F.col("last_purchase") < cutoff)
-
-
-# -- mv_sales_rollup_product -----------------------------------------
-def _delta_rollup(wh: Warehouse, batch_id: str) -> DataFrame:
-    fs, _, dp = _gold_batch(wh, batch_id)
-    return (
-        fs.join(dp, "product_key")
-        .groupBy("product_line", "category", "sub_category")
-        .agg(F.sum(_dec_sales()).cast(_STATE_DEC).alias("total_sales"))
-    )
-
-
-def _publish_rollup(state: DataFrame) -> DataFrame:
-    # ROLLUP of sums over base-grain state == ROLLUP over facts
-    # (sum is associative); the grouping-set expansion runs over
-    # |groups| state rows instead of the fact table.
-    return (
-        state.rollup("product_line", "category", "sub_category")
-        .agg(F.sum("total_sales").cast("double").alias("total_sales"))
-    )
-
-
-INCREMENTAL: dict[str, IncSpec] = {
-    "mv_sales_monthly_productline": IncSpec(
-        keys=("month", "product_name", "category", "sub_category"),
-        partials={"total_sales": "sum"},
-        delta=_delta_monthly_productline,
-        publish=_publish_monthly_productline,
-    ),
-    "mv_sales_customer_country": IncSpec(
-        keys=("country", "customer_id", "customer_name"),
-        partials={"total_sales": "sum"},
-        delta=_delta_customer_country,
-        publish=_publish_customer_country,
-    ),
-    "mv_top3_products_month_country": IncSpec(
-        keys=("month", "country", "product_name"),
-        partials={"total_sales": "sum"},
-        delta=_delta_top3,
-        publish=_publish_top3,
-    ),
-    "mv_customer_lifetime_value": IncSpec(
-        keys=("customer_id", "customer_name", "order_number"),
-        partials={"order_sales": "sum"},
-        delta=_delta_lifetime,
-        publish=_publish_lifetime,
-    ),
-    "mv_customer_churn": IncSpec(
-        keys=("customer_id",),
-        partials={"first_purchase": "min", "last_purchase": "max"},
-        delta=_delta_churn,
-        publish=_publish_churn,
-    ),
-    "mv_sales_rollup_product": IncSpec(
-        keys=("product_line", "category", "sub_category"),
-        partials={"total_sales": "sum"},
-        delta=_delta_rollup,
-        publish=_publish_rollup,
-    ),
-}
-
-# -- approx CLV: HLL registers at CUSTOMER grain (VERDICT r9 #4) ------
-# The exact CLV state is (customer, order)-grain — COUNT(DISTINCT
-# order_number) forces one state row per order, 14.6M rows at sf10
-# (PERF.md r9 addendum), ~half the incremental total.  The approx
-# mode swaps that for qa22's mergeable HLL form: one row per customer
-# carrying (money partial, 64 HLL registers as an array<int>).  The
-# money sum stays EXACT (same decimal policy); only order_count is
-# estimated.  State size is |customers|, the merge is register-wise
-# MAX (distributive, replay-idempotent like every partial here), and
-# publish is a row-wise fold over each 64-element array — no
-# order-grain shuffle anywhere.  Exact mode is untouched; this is the
-# opt-in `mode="incremental_approx"` path, with the estimate error
-# pytest-bounded (tests/test_mv_incremental_approx.py).
-_HLL_STATE = "mv_customer_lifetime_value_hll"
-_CLV_KEYS = ("customer_id", "customer_name")
-
-
-def _delta_lifetime_hll(wh: Warehouse, batch_id: str) -> DataFrame:
-    from ..functions import hashing as H
-    from ..operators.approx import HLL_M, HLL_P, HLL_RMAX
-
-    fs, dc, _ = _gold_batch(wh, batch_id)
-    h = H.md5_long(F.col("order_number"))
-    rem = F.shiftright(h, HLL_P)
-    rho = F.when(rem == 0, F.lit(HLL_RMAX)).otherwise(
-        F.lit(HLL_RMAX) - F.length(F.bin(rem))
-    )
-    per_reg = (
-        fs.join(dc, "customer_key")
-        .select(
-            "customer_id",
-            F.concat_ws(
-                " ", F.col("customer_firstname"), F.col("customer_lastname")
-            ).alias("customer_name"),
-            _dec_sales().alias("sales"),
-            (h % HLL_M).cast("int").alias("reg"),
-            rho.cast("int").alias("rho"),
-        )
-        .groupBy(*_CLV_KEYS, "reg")
-        .agg(
-            F.sum("sales").cast(_STATE_DEC).alias("s"),
-            F.max("rho").alias("rho"),
-        )
-    )
-    # dense 64-register array per customer: registers this batch never
-    # touched are 0 (the HLL empty-register convention, qa22)
-    m = F.map_from_entries(F.collect_list(F.struct("reg", "rho")))
-    return per_reg.groupBy(*_CLV_KEYS).agg(
-        F.sum("s").cast(_STATE_DEC).alias("order_sales"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(HLL_M - 1)),
-            lambda i: F.coalesce(F.try_element_at(m, i), F.lit(0)),
-        ).alias("regs"),
-    )
-
-
-def _merge_lifetime_hll(parts: list[DataFrame]) -> DataFrame:
-    """Customer-grain merge: money partials SUM, registers element-wise
-    MAX — as a pairwise FULL OUTER join + zip_with(greatest) fold.
-    No explode anywhere: the first cut posexploded every snapshot to
-    (customer, reg) grain and re-collected arrays, which at sf10 was
-    a 192M-row double shuffle and made the approx path SLOWER than
-    the exact one (22.3 s vs 11.1 s, bench_medallion r10).  The join
-    form ships each state row once, arrays intact, and typically
-    broadcasts the delta side (batch-sized) against the streaming
-    state."""
-
-    def merge2(a: DataFrame, b: DataFrame) -> DataFrame:
-        a2 = a.select(
-            *_CLV_KEYS,
-            F.col("order_sales").alias("s_a"),
-            F.col("regs").alias("r_a"),
-        )
-        b2 = b.select(
-            *_CLV_KEYS,
-            F.col("order_sales").alias("s_b"),
-            F.col("regs").alias("r_b"),
-        )
-        return a2.join(b2, list(_CLV_KEYS), "full_outer").select(
-            *_CLV_KEYS,
-            (
-                F.coalesce(F.col("s_a"), F.lit(0))
-                + F.coalesce(F.col("s_b"), F.lit(0))
-            )
-            .cast(_STATE_DEC)
-            .alias("order_sales"),
-            F.when(F.col("r_a").isNull(), F.col("r_b"))
-            .when(F.col("r_b").isNull(), F.col("r_a"))
-            .otherwise(
-                F.zip_with(
-                    F.col("r_a"), F.col("r_b"), lambda x, y: F.greatest(x, y)
-                )
-            )
-            .alias("regs"),
-        )
-
-    return reduce(merge2, parts)
-
-
-def _publish_lifetime_hll(state: DataFrame) -> DataFrame:
-    """CLV output shape from customer-grain HLL state: lifetime_value
-    is the EXACT decimal sum (cast to double like every publish);
-    order_count is the HLL estimate with the standard LinearCounting
-    small-range correction (est <= 2.5m and empty registers exist —
-    ln is fine here, this mode has no bitwise oracle by design).
-    Row-wise folds over 64-element arrays: zero shuffles."""
-    from ..operators.approx import HLL_ALPHA_NUM, HLL_M, HLL_RMAX
-
-    # SQL-expression folds: python F.shiftleft only takes a literal
-    # bit count, the SQL form takes a column
-    z = F.expr(
-        f"aggregate(regs, CAST(0 AS BIGINT), (acc, r) -> acc + "
-        f"shiftleft(CAST(1 AS BIGINT), CAST({HLL_RMAX} - r AS INT)))"
-    )
-    n_zero = F.expr("size(filter(regs, r -> r = 0))")
-    raw = F.lit(HLL_ALPHA_NUM) / z.cast("double")
-    lc = F.lit(float(HLL_M)) * F.log(
-        F.lit(float(HLL_M)) / n_zero.cast("double")
-    )
-    est = F.when((raw <= 2.5 * HLL_M) & (n_zero > 0), lc).otherwise(raw)
-    return state.select(
-        "customer_id",
-        "customer_name",
-        F.col("order_sales").cast("double").alias("lifetime_value"),
-        F.round(est).cast("long").alias("order_count"),
-    )
-
-
-def refresh_mv_incremental_approx(
-    wh: Warehouse,
-    name: str,
-    batch_id: str,
-    prev_batch_id: str | None = None,
-) -> tuple[int, int]:
-    """The approx twin of refresh_mv_incremental for
-    mv_customer_lifetime_value (the only MV whose exact state is
-    forced above group grain).  Same resolution/healing/marker
-    machinery against its OWN state table (the schemas differ), same
-    replay idempotency; output lands under the same mv table name, so
-    downstream readers see the CLV shape with an estimated
-    order_count."""
-    if name not in APPROX:
-        raise KeyError(
-            f"{name} has no approx incremental form; "
-            "use refresh_mv_incremental"
-        )
-    state_table = APPROX[name]
-    if prev_batch_id is None:
-        prev_batch_id, missing = resolve_prev_state(
-            wh, state_table, batch_id
-        )
-    else:
-        missing = sorted(
-            b
-            for b in wh.list_batches("gold", "fact_sales")
-            if prev_batch_id < b < batch_id
-        )
-    parts = [_delta_lifetime_hll(wh, b) for b in [*missing, batch_id]]
-    if prev_batch_id is not None and prev_batch_id in wh.list_batches(
-        STATE_LAYER, state_table
-    ):
-        prev = wh.read_batch(STATE_LAYER, state_table, prev_batch_id).drop(
-            BATCH_COL
-        )
-        parts = [prev, *parts]
-    merged = _merge_lifetime_hll(parts) if len(parts) > 1 else parts[0]
-    n_state = wh.write_batch(merged, STATE_LAYER, state_table, batch_id)
-    _mark_state_complete(wh, state_table, batch_id)
-    state = (
-        wh.read_batch(STATE_LAYER, state_table, batch_id).drop(BATCH_COL)
-        if wh.list_batches(STATE_LAYER, state_table)
-        else merged
-    )
-    out = _publish_lifetime_hll(state)
-    n_out = wh.write_batch(out, "mv", name, batch_id)
-    return n_state, n_out
-
-
-APPROX = {"mv_customer_lifetime_value": _HLL_STATE}
-
-
-# FULL-only MVs and why (order-dependent over unbounded history)
-FULL_ONLY = {
-    "mv_running_sales_customer": "running window over full history",
-    "mv_customer_order_gap": "LAG gaps depend on neighboring history rows",
-    "mv_delayed_orders_chain": "recursive closure over full history",
-}
 
 
 def _mark_state_complete(wh: Warehouse, name: str, batch_id: str) -> None:
@@ -538,7 +118,7 @@ def _merge(spec: IncSpec, snapshots: DataFrame) -> DataFrame:
     # re-pin widened decimal sums to the canonical state type
     merged = snapshots.groupBy(*spec.keys).agg(*aggs)
     pinned = [
-        F.col(c).cast(_STATE_DEC).alias(c) if fn == "sum" and t.startswith("decimal")
+        F.col(c).cast(STATE_DEC).alias(c) if fn == "sum" and t.startswith("decimal")
         else F.col(c)
         for c, fn, t in (
             (c, spec.partials.get(c, ""), dict(merged.dtypes)[c])
@@ -570,13 +150,13 @@ def refresh_mv_incremental(
     pair rebuilds both partitions identically — exactly-once
     semantics match `refresh_mv`.
 
-    Raises KeyError for FULL-only MVs; callers route those through
-    `mv.refresh_mv` (see FULL_ONLY for the reasons).
+    Raises KeyError for the order-dependent MVs, which have no state
+    form; callers route those through `mv.refresh_mv`.
     """
-    if name in FULL_ONLY:
+    if name not in INCREMENTAL:
         raise KeyError(
-            f"{name} is not incrementally maintainable ({FULL_ONLY[name]}); "
-            "use plans.mv.refresh_mv"
+            f"{name} is not incrementally maintainable (its output depends "
+            "on row order across all history); use plans.mv.refresh_mv"
         )
     spec = INCREMENTAL[name]
     if prev_batch_id is None:
@@ -590,7 +170,7 @@ def refresh_mv_incremental(
             for b in wh.list_batches("gold", "fact_sales")
             if prev_batch_id < b < batch_id
         )
-    parts = [spec.delta(wh, b) for b in [*missing, batch_id]]
+    parts = [spec.delta(*gold_frames(wh, b)) for b in [*missing, batch_id]]
     # A marked snapshot with no partition on disk was EMPTY (markers
     # are written only after write_batch returns; dynamic overwrite
     # writes no files for zero rows) — it contributes nothing, so

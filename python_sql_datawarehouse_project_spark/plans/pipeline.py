@@ -98,7 +98,7 @@ def run_mvs(
     the six incrementally-maintainable MVs fold ONLY the new gold
     batch into their partial-aggregate state (cost proportional to the
     batch + group cardinality, never the fact history); the three
-    order-dependent MVs (mv_incremental.FULL_ONLY) are recomputed
+    order-dependent MVs (no state form, see plans/mv.py) are recomputed
     over full history, which is their only correct definition.
     `prev_batch_id` names the state snapshot to build on; when None
     each MV resolves its OWN latest completed snapshot (marker files,
@@ -116,30 +116,15 @@ def run_mvs(
     so the two modes legitimately differ.  The parity pytest
     (tests/test_mv_incremental.py) pins incremental == full-HISTORY
     recompute bitwise, not == mode="full" output.
-
-    mode="incremental_approx" is incremental with ONE substitution:
-    mv_customer_lifetime_value maintains qa22-style HLL registers at
-    customer grain instead of exact (customer, order)-grain state
-    (mv_incremental.refresh_mv_incremental_approx) — order_count
-    becomes an estimate (error pytest-bounded), lifetime_value stays
-    exact, and the dominant incremental state cost drops from order
-    cardinality to customer cardinality.
     """
-    from .mv_incremental import APPROX, refresh_mv_incremental_approx
-
-    incremental = mode in ("incremental", "incremental_approx")
+    incremental = mode == "incremental"
     results = {}
     for name in MVS:
         if incremental and name in INCREMENTAL:
             try:
-                if mode == "incremental_approx" and name in APPROX:
-                    _, n = refresh_mv_incremental_approx(
-                        wh, name, batch_id, prev_batch_id=prev_batch_id
-                    )
-                else:
-                    _, n = refresh_mv_incremental(
-                        wh, name, batch_id, prev_batch_id=prev_batch_id
-                    )
+                _, n = refresh_mv_incremental(
+                    wh, name, batch_id, prev_batch_id=prev_batch_id
+                )
                 ok, err = True, None
             except Exception as e:  # logged like the FULL path's failures
                 ok, err, n = False, str(e), 0

@@ -23,7 +23,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def core_budget() -> int:
+    """Cores this process may use: SPARK_GRAFT_CPUS when set, else the
+    CPUs the process is allowed to run on (its affinity set, which a
+    container or taskset narrows below os.cpu_count())."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def build_session(
@@ -33,9 +43,9 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with scale-aware defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = core_budget()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

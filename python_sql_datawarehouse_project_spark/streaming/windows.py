@@ -43,6 +43,7 @@ from pyspark.sql.types import LongType
 
 from ..catalog import table_path
 from ..operators.events import SESSION_GAP_MIN, VALUE_DEC
+from ..session import core_budget
 
 WATERMARK = "1 hour"
 
@@ -72,8 +73,8 @@ _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 # state partitions, so the count now scales with SOURCE SIZE: the
 # measured elbow as the floor, one more partition per
 # _STATE_PART_BYTES of source beyond it, capped at the session's
-# core budget (SPARK_GRAFT_CPUS, matching session.py's local[N]
-# sizing).  At sf0.1 (2 MB events) every stream gate still runs at
+# core budget (session.core_budget, the count session.py's local[N]
+# uses).  At sf0.1 (2 MB events) every stream gate still runs at
 # exactly 4 — the r7 measurements and cross-round bench
 # comparability are preserved — while sf10 (112 MB) drains across
 # 28.  On a real cluster the same policy holds: state partitions
@@ -84,11 +85,13 @@ _STATE_PART_BYTES = 4 << 20
 
 
 def _source_bytes(src: str) -> int:
+    """Bytes under `src`, walking nested (partitioned) directories."""
     try:
         if os.path.isdir(src):
             return sum(
-                os.path.getsize(os.path.join(src, f))
-                for f in os.listdir(src)
+                os.path.getsize(os.path.join(d, f))
+                for d, _, files in os.walk(src)
+                for f in files
             )
         return os.path.getsize(src)
     except OSError:
@@ -96,7 +99,7 @@ def _source_bytes(src: str) -> int:
 
 
 def _state_partitions(src: str | None) -> int:
-    cap = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
+    cap = core_budget()
     size_parts = _source_bytes(src) // _STATE_PART_BYTES if src else 0
     return max(STREAM_STATE_PARTITIONS, min(cap, size_parts))
 

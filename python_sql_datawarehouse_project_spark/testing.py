@@ -114,18 +114,24 @@ def run_oracle(sql: str, sf_dir: str):
                 con.execute(
                     f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
                 )
-        # Arrow fetch (not fetchall) so the oracle's carried types are
-        # visible: DuckDB's relational fetchall() narrows HUGEINT to a
-        # Python int, which is exactly what made the old harness blind
-        # to the HUGEINT-vs-BIGINT driver hash failures.
-        tbl = con.execute(sql).fetch_arrow_table()
-        cols = list(tbl.schema.names)
-        types = [tbl.schema.field(i).type for i in range(tbl.num_columns)]
-        pycols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-        rows = list(zip(*pycols)) if tbl.num_columns else []
-        return cols, rows, types
+        return fetch_oracle(con, sql)
     finally:
         con.close()
+
+
+def fetch_oracle(con, sql: str):
+    """(columns, rows, arrow types) of `sql` on a DuckDB connection.
+
+    Arrow fetch (not fetchall) so the oracle's carried types are
+    visible: DuckDB's relational fetchall() narrows HUGEINT to a
+    Python int, which is exactly what made the old harness blind to
+    HUGEINT-vs-BIGINT value-hash failures."""
+    tbl = con.execute(sql).fetch_arrow_table()
+    cols = list(tbl.schema.names)
+    types = [tbl.schema.field(i).type for i in range(tbl.num_columns)]
+    pycols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
+    rows = list(zip(*pycols)) if tbl.num_columns else []
+    return cols, rows, types
 
 
 # -- hashed (streaming) compare for big-output gates ------------------
@@ -378,10 +384,19 @@ def compare(
     sf_dir: str,
     max_report: int = 5,
 ) -> ParityResult:
-    sdf: DataFrame = query_fn(spark, sf_dir)
+    return compare_frame(
+        name, query_fn(spark, sf_dir), run_oracle(oracle, sf_dir), max_report
+    )
+
+
+def compare_frame(
+    name: str, sdf: DataFrame, oracle_out, max_report: int = 5
+) -> ParityResult:
+    """Canonical compare of a Spark frame against a fetched oracle
+    result (`run_oracle` / `fetch_oracle` output)."""
     s_cols = list(sdf.columns)
     s_rows = [tuple(r) for r in sdf.collect()]
-    o_cols, o_rows, o_types = run_oracle(oracle, sf_dir)
+    o_cols, o_rows, o_types = oracle_out
 
     res = ParityResult(
         name=name,

@@ -26,7 +26,7 @@ timed BOTH ways on identical inputs:
                      all gold history (cost grows with the corpus)
     mv_incremental_6 the same six MVs folding ONLY the delta batch
                      into their partial-aggregate state
-    mv_history_3     the three order-dependent MVs (FULL_ONLY), which
+    mv_history_3     the three order-dependent MVs (no state form), which
                      recompute over history in either mode
 
 The decade table in PERF.md reads mv_full_6 vs mv_incremental_6.
@@ -283,7 +283,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
-    from python_sql_datawarehouse_project_spark.plans.mv import refresh_mv
+    from python_sql_datawarehouse_project_spark.plans.mv import MVS, refresh_mv
     from python_sql_datawarehouse_project_spark.plans.pipeline import (
         run_gold,
         run_mvs,
@@ -357,7 +357,7 @@ def main() -> None:
                 groups.append({f"full_history:{name}": (ok, err, n)})
         stages["mv_full_6"] = round(time.perf_counter() - t, 1)
         t = time.perf_counter()
-        for name in mi.FULL_ONLY:
+        for name in (n for n in MVS if n not in mi.INCREMENTAL):
             ok, err, n = refresh_mv(wh, name, DELTA, history=True)
             if not ok:
                 groups.append({f"history:{name}": (ok, err, n)})
@@ -371,30 +371,6 @@ def main() -> None:
             )
             per_mv[name] = round(time.perf_counter() - t_mv, 1)
         stages["mv_incremental_6"] = round(time.perf_counter() - t, 1)
-        # approx CLV (VERDICT r9 #4): the HLL customer-grain state's
-        # per-delta cost, measured on the SAME delta.  Builds its own
-        # base state first (cost reported separately, not in the
-        # per-delta number).
-        t = time.perf_counter()
-        mi.refresh_mv_incremental_approx(
-            wh, "mv_customer_lifetime_value", BATCH
-        )
-        stages["mv_clv_approx_state_init"] = round(time.perf_counter() - t, 1)
-        t = time.perf_counter()
-        _, n_approx = mi.refresh_mv_incremental_approx(
-            wh, "mv_customer_lifetime_value", DELTA, prev_batch_id=BATCH
-        )
-        stages["mv_clv_approx_delta"] = round(time.perf_counter() - t, 1)
-        per_mv["mv_customer_lifetime_value_approx"] = stages[
-            "mv_clv_approx_delta"
-        ]
-        extra_approx = {
-            "clv_rows_exact_vs_approx": (
-                rows_inc["mv_customer_lifetime_value"],
-                n_approx,
-            ),
-            "per_mv_incremental_sec": per_mv,
-        }
         mismatch = {
             n: (rows_full[n], rows_inc[n])
             for n in rows_full
@@ -404,7 +380,7 @@ def main() -> None:
             "delta_bronze_rows": delta_counts,
             "delta_mods": mods,
             "mv_rowcount_mismatch": mismatch,
-            **extra_approx,
+            "per_mv_incremental_sec": per_mv,
         }
         if mismatch:
             groups.append(

@@ -7,10 +7,12 @@ SURVEY.md §5) plus idempotency (same batch twice => identical state).
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from python_sql_datawarehouse_project_spark.operators import analytics
 from python_sql_datawarehouse_project_spark.plans.pipeline import next_batch_id, run_batch
 from python_sql_datawarehouse_project_spark.plans.runlog import RunLog
 from python_sql_datawarehouse_project_spark.plans.warehouse import Warehouse
@@ -283,6 +285,56 @@ def test_mvs_materialize(pipeline_run):
     assert all(ok for ok, *_ in results["mv"].values())
     mv = wh.read_batch("mv", "mv_sales_monthly_productline", BATCH)
     assert mv.count() > 0
+
+
+# -- the oracle over the pipeline's own MVs --------------------------
+# The q1-q8 DuckDB oracle bodies read only fact_sales, dim_customers and
+# dim_products, so they run unchanged over views on pipeline gold: money
+# as DECIMAL(18,4) like star.py, and the same derived customer_name.
+_MV_ORACLE_BODIES = {
+    "mv_sales_monthly_productline": analytics.Q1_SQL,
+    "mv_sales_customer_country": analytics.Q2_SQL,
+    "mv_customer_lifetime_value": analytics.Q3_SQL,
+    "mv_running_sales_customer": analytics.Q4_SQL,
+    "mv_top3_products_month_country": analytics.Q5_SQL,
+    "mv_customer_churn": analytics.Q6_SQL,
+    "mv_customer_order_gap": analytics.Q7_SQL,
+    "mv_sales_rollup_product": analytics.Q8_SQL,
+}
+
+
+@pytest.mark.parametrize("name", list(_MV_ORACLE_BODIES))
+def test_pipeline_mv_matches_oracle(pipeline_run, name):
+    import duckdb
+
+    from python_sql_datawarehouse_project_spark.plans.mv import MVS
+    from python_sql_datawarehouse_project_spark.testing import (
+        compare_frame,
+        fetch_oracle,
+    )
+
+    wh, _, _ = pipeline_run
+    con = duckdb.connect()
+    try:
+        for table, cols in {
+            "fact_sales": "* EXCLUDE (sales, dwh_batch_id), "
+            "CAST(sales AS DECIMAL(18,4)) AS sales",
+            "dim_customers": "* EXCLUDE (dwh_batch_id), concat_ws(' ', "
+            "customer_firstname, customer_lastname) AS customer_name",
+            "dim_products": "* EXCLUDE (dwh_batch_id)",
+        }.items():
+            files = os.path.join(wh.path("gold", table), "**", "*.parquet")
+            con.execute(
+                f"CREATE VIEW {table} AS SELECT {cols} FROM read_parquet("
+                f"'{files}', hive_partitioning = true) "
+                f"WHERE dwh_batch_id = '{BATCH}'"
+            )
+        expected = fetch_oracle(con, _MV_ORACLE_BODIES[name])
+    finally:
+        con.close()
+    kw = {"as_of": analytics.CHURN_AS_OF} if name == "mv_customer_churn" else {}
+    res = compare_frame(name, MVS[name](wh, BATCH, **kw), expected)
+    assert res.ok, res.mismatches
 
 
 # -- Idempotency (reference README.md:101-107) -----------------------

@@ -215,7 +215,10 @@ def test_rerun_is_exactly_once(refreshed):
 def test_delta_scan_is_partition_pruned(refreshed):
     # the at-scale contract: folding in batch N reads batch N's gold
     # partition, never the history
-    delta = mi.INCREMENTAL["mv_sales_monthly_productline"].delta(refreshed, B2)
+    from python_sql_datawarehouse_project_spark.plans import mv
+
+    spec = mi.INCREMENTAL["mv_sales_monthly_productline"]
+    delta = spec.delta(*mv.gold_frames(refreshed, B2))
     sc = delta.sparkSession.sparkContext
     plan = sc._jvm.PythonSQLUtils.explainString(
         delta._jdf.queryExecution(), "formatted"
@@ -238,7 +241,6 @@ def test_full_only_mvs_refuse_incremental(refreshed):
 # and cast to double exactly once at the end.
 
 
-@pytest.mark.slow
 def test_incremental_equals_full_history_recompute(refreshed):
     from python_sql_datawarehouse_project_spark.plans import mv
 
@@ -255,13 +257,13 @@ def test_history_mode_rekeys_per_batch_dim_snapshots(refreshed):
     """Surrogate keys restart per batch: B2's fact with customer_key=2
     belongs to Cyd (B2 snapshot), not Bob (B1 snapshot, same surrogate).
     A naive cross-batch join on the bare surrogate would credit Bob
-    with Cyd's 80.0; the batch-qualified re-key (mv._gold history mode)
+    with Cyd's 80.0; the batch-qualified re-key (mv.gold_frames history mode)
     must keep every join inside its own snapshot."""
     from python_sql_datawarehouse_project_spark.plans import mv
 
     got = {
         (r["customer_id"], r["lifetime_value"])
-        for r in mv.mv_customer_lifetime_value(refreshed, None).collect()
+        for r in mv.MVS["mv_customer_lifetime_value"](refreshed, None).collect()
     }
     assert got == {(100, 180.0), (101, 70.0), (102, 80.0)}
 
@@ -273,7 +275,8 @@ def test_history_mode_running_sales_unifies_by_natural_key(refreshed):
     from python_sql_datawarehouse_project_spark.plans import mv
 
     d = dt.date
-    got = {tuple(r) for r in mv.mv_running_sales_customer(refreshed, None).collect()}
+    running = mv.MVS["mv_running_sales_customer"](refreshed, None)
+    got = {tuple(r) for r in running.collect()}
     assert got == {
         (100, d(2024, 1, 5), 50.0),
         (100, d(2024, 1, 5), 150.0),
@@ -335,6 +338,51 @@ def test_run_mvs_incremental_mode_covers_all_nine(spark, tmp_path):
         if row["status"] == "SUCCESS"
     }
     assert modes == {"mode=incremental"}
+
+
+def test_clv_order_count_skips_null_order_in_both_modes(spark, tmp_path):
+    """Silver only trims sls_ord_num, so a NULL order number can reach
+    gold.  COUNT(DISTINCT order_number) does not count it: Ann's orders
+    {SOA, NULL} are ONE order in the full refresh and the incremental
+    one alike, while both keep the NULL order's sales."""
+    from python_sql_datawarehouse_project_spark.plans.pipeline import run_mvs
+    from python_sql_datawarehouse_project_spark.plans.runlog import RunLog
+
+    d = dt.date
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.write_batch(
+        spark.createDataFrame([(1, 100, "Ann", "A", "US")], _CUST_SCHEMA),
+        "gold",
+        "dim_customers",
+        B1,
+    )
+    wh.write_batch(
+        spark.createDataFrame(
+            [(1, "Widget", "R", "Components", "Road Frames")], _PROD_SCHEMA
+        ),
+        "gold",
+        "dim_products",
+        B1,
+    )
+    wh.write_batch(
+        spark.createDataFrame(
+            [
+                ("SOA", 1, 1, d(2024, 1, 5), d(2024, 1, 8), d(2024, 1, 9), 10.0, 1, 10.0),
+                (None, 1, 1, d(2024, 1, 6), d(2024, 1, 8), d(2024, 1, 9), 20.0, 1, 20.0),
+            ],
+            _FACT_SCHEMA,
+        ),
+        "gold",
+        "fact_sales",
+        B1,
+    )
+    log = RunLog(str(tmp_path / "log"))
+    name = "mv_customer_lifetime_value"
+    cols = ["customer_id", "customer_name", "lifetime_value", "order_count"]
+    run_mvs(wh, log, B1, mode="full")
+    full = _rows(wh, name, B1, cols)
+    run_mvs(wh, log, B1, mode="incremental")
+    assert _rows(wh, name, B1, cols) == full == {(100, "Ann A", 30.0, 1)}
 
 
 # -- per-MV prev resolution + torn/empty-state healing (ADVICE r9) ----

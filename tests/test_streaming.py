@@ -530,3 +530,25 @@ def test_state_partitions_scale_with_source_size(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
     assert sw._state_partitions(str(big)) == 8
     assert sw._state_partitions(None) == 4  # no source: the floor
+
+
+def test_state_partitions_walk_partitioned_source(tmp_path, monkeypatch):
+    # a partitioned source keeps its bytes in nested directories; they
+    # count toward the size, so it leaves the 4-partition floor
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    part = tmp_path / "events" / "day=1" / "hour=0"
+    part.mkdir(parents=True)
+    with open(part / "part-0.parquet", "wb") as f:
+        f.truncate(112 << 20)
+    assert sw._state_partitions(str(tmp_path / "events")) == 28
+
+
+def test_core_budget_defaults_to_cpu_affinity(monkeypatch):
+    import os
+
+    from python_sql_datawarehouse_project_spark.session import core_budget
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert core_budget() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert core_budget() == 3
