@@ -74,7 +74,7 @@ class BloomIndex:
     def drop_release(self, batch_id: str) -> None:
         """Retire a benchmark release: partition drop, no rescan of
         anything (see the module note on why subtraction is a drop)."""
-        self.wh._drop_batch_partition(LAYER, TABLE, batch_id)
+        self.wh.drop_batch(LAYER, TABLE, batch_id)
 
     def merged(self, spark: SparkSession) -> DataFrame:
         """(w, word): every persisted release OR-folded — the exact

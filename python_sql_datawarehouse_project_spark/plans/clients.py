@@ -176,9 +176,9 @@ def process_client(
                     )
                 )
     # mv_mode="incremental" is the scale path (plans/pipeline.run_mvs);
-    # the previous-state snapshot resolves from the state layer's own
-    # partition listing, so restart/reprocessing replays stay
-    # exactly-once with no driver memory
+    # each MV resolves its previous state snapshot from the state
+    # layer's own completion markers, so restart/reprocessing replays
+    # stay exactly-once with no in-memory state
     results = run_batch(wh, log, batch_id, mv_mode=mv_mode)
     registry.set_last_batch(client_schema, batch_id)
     return ClientRunResult(client_schema, batch_id, results, ingested)

@@ -28,8 +28,6 @@ from pyspark.sql import functions as F
 from ..functions import cleansing as C
 from .warehouse import Warehouse
 
-IntegrationResult = tuple[bool, str | None, int]
-
 
 def dim_customers_plan(ci: DataFrame, ca: DataFrame, la: DataFrame) -> DataFrame:
     """Pure plan for dim_customers (no warehouse I/O) — exposed so
@@ -60,21 +58,20 @@ def dim_customers_plan(ci: DataFrame, ca: DataFrame, la: DataFrame) -> DataFrame
     )
 
 
-def load_dim_customers(wh: Warehouse, batch_id: str) -> IntegrationResult:
+def load_dim_customers(wh: Warehouse, batch_id: str) -> int:
     """tools.load_dim_customers_v1.sql:55-84 — crm |x| erp enrichment,
     R1 gender integration, row_number surrogate key by cst_id."""
-    try:
-        if wh.batch_is_empty("silver", "crm_cust_info", batch_id):
-            return True, None, 0
-        out = dim_customers_plan(
+    return wh.rebuild_batch(
+        ("silver", "crm_cust_info"),
+        "gold",
+        "dim_customers",
+        batch_id,
+        lambda: dim_customers_plan(
             wh.read_batch("silver", "crm_cust_info", batch_id),
             wh.read_batch("silver", "erp_cust_az12", batch_id),
             wh.read_batch("silver", "erp_loc_a101", batch_id),
-        )
-        n = wh.write_batch(out, "gold", "dim_customers", batch_id)
-        return True, None, n
-    except Exception as e:
-        return False, str(e), 0
+        ),
+    )
 
 
 def dim_products_plan(po: DataFrame, pc: DataFrame) -> DataFrame:
@@ -105,20 +102,19 @@ def dim_products_plan(po: DataFrame, pc: DataFrame) -> DataFrame:
     )
 
 
-def load_dim_products(wh: Warehouse, batch_id: str) -> IntegrationResult:
+def load_dim_products(wh: Warehouse, batch_id: str) -> int:
     """tools.load_dim_products_v1.sql:55-86 — current versions only
     (prd_end_dt IS NULL), category join, row_number surrogate key."""
-    try:
-        if wh.batch_is_empty("silver", "crm_prd_info", batch_id):
-            return True, None, 0
-        out = dim_products_plan(
+    return wh.rebuild_batch(
+        ("silver", "crm_prd_info"),
+        "gold",
+        "dim_products",
+        batch_id,
+        lambda: dim_products_plan(
             wh.read_batch("silver", "crm_prd_info", batch_id),
             wh.read_batch("silver", "erp_px_cat_g1v2", batch_id),
-        )
-        n = wh.write_batch(out, "gold", "dim_products", batch_id)
-        return True, None, n
-    except Exception as e:
-        return False, str(e), 0
+        ),
+    )
 
 
 def fact_sales_plan(sd: DataFrame, pr: DataFrame, cs: DataFrame) -> DataFrame:
@@ -149,13 +145,15 @@ def fact_sales_plan(sd: DataFrame, pr: DataFrame, cs: DataFrame) -> DataFrame:
     )
 
 
-def load_fact_sales(wh: Warehouse, batch_id: str) -> IntegrationResult:
+def load_fact_sales(wh: Warehouse, batch_id: str) -> int:
     """tools.load_fact_sales_v1.sql:55-82 — surrogate-key lookups with
     COALESCE(-1) unknown-member fallback."""
-    try:
-        if wh.batch_is_empty("silver", "crm_sales_details", batch_id):
-            return True, None, 0
-        out = fact_sales_plan(
+    return wh.rebuild_batch(
+        ("silver", "crm_sales_details"),
+        "gold",
+        "fact_sales",
+        batch_id,
+        lambda: fact_sales_plan(
             wh.read_batch("silver", "crm_sales_details", batch_id),
             wh.read_batch("gold", "dim_products", batch_id).select(
                 "product_key", "product_number"
@@ -163,14 +161,11 @@ def load_fact_sales(wh: Warehouse, batch_id: str) -> IntegrationResult:
             wh.read_batch("gold", "dim_customers", batch_id).select(
                 "customer_key", "customer_id"
             ),
-        )
-        n = wh.write_batch(out, "gold", "fact_sales", batch_id)
-        return True, None, n
-    except Exception as e:
-        return False, str(e), 0
+        ),
+    )
 
 
-INTEGRATIONS: dict[str, Callable[[Warehouse, str], IntegrationResult]] = {
+INTEGRATIONS: dict[str, Callable[[Warehouse, str], int]] = {
     "load_dim_customers": load_dim_customers,
     "load_dim_products": load_dim_products,
     "load_fact_sales": load_fact_sales,

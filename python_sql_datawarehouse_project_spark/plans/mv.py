@@ -420,7 +420,7 @@ MVS: dict[str, Callable[..., DataFrame]] = {
 
 def refresh_mv(
     wh: Warehouse, name: str, batch_id: str, history: bool = False
-) -> tuple[bool, str | None, int]:
+) -> int:
     """FULL refresh: recompute and overwrite the MV output table.
 
     `history=False` recomputes over the named batch only (the
@@ -428,10 +428,7 @@ def refresh_mv(
     `history=True` recomputes over EVERY gold batch — the reference's
     REFRESH MATERIALIZED VIEW semantics (MV Refresh Template.sql:33)
     in a multi-batch warehouse, and the corpus-proportional cost the
-    incremental path (plans/mv_incremental.py) exists to avoid."""
-    try:
-        df = MVS[name](wh, None if history else batch_id)
-        n = wh.write_batch(df, "mv", name, batch_id)
-        return True, None, n
-    except Exception as e:
-        return False, str(e), 0
+    incremental path (plans/mv_incremental.py) exists to avoid.
+    Returns the MV's row count."""
+    df = MVS[name](wh, None if history else batch_id)
+    return wh.write_batch(df, "mv", name, batch_id)

@@ -52,11 +52,11 @@ from .warehouse import BATCH_COL, Warehouse
 
 STATE_LAYER = "mv_state"
 # Completion marker written next to the state partitions after every
-# successful snapshot write.  Needed because write_batch's dynamic
-# overwrite writes NO partition for an empty state, so "no partition
-# on disk" is ambiguous between (a) a legitimately-empty snapshot and
-# (b) a snapshot that was never written (torn run, or an MV newly
-# added to INCREMENTAL on an existing warehouse).  The marker makes
+# successful snapshot write.  Needed because write_batch leaves NO
+# partition for an empty state, so "no partition on disk" is
+# ambiguous between (a) a legitimately-empty snapshot and (b) a
+# snapshot that was never written (torn run, or an MV newly added to
+# INCREMENTAL on an existing warehouse).  The marker makes
 # (a) durable and leaves (b) detectable (ADVICE r9).
 _MARKER_PREFIX = "_state_complete_"
 
@@ -95,7 +95,7 @@ def resolve_prev_state(
     intersection across MVs empties when any one MV legitimately
     lacks a snapshot, silently dropping folded history for ALL MVs).
 
-    Returns (prev_batch_id, missing_gold_batches) where `prev` is the
+    Returns (prev, missing_gold_batches) where `prev` is the
     latest completed snapshot strictly below `batch_id` (None if this
     MV has none) and `missing` lists gold fact batches strictly
     between `prev` and `batch_id` that no snapshot has folded — a
@@ -132,23 +132,21 @@ def refresh_mv_incremental(
     wh: Warehouse,
     name: str,
     batch_id: str,
-    prev_batch_id: str | None = None,
     **publish_kwargs,
 ) -> tuple[int, int]:
     """Fold gold batch `batch_id` into MV `name`'s state and publish.
 
-    `prev_batch_id` names the state snapshot to build on; None means
-    resolve it PER-MV from this MV's own completed-snapshot markers
-    (resolve_prev_state).  Either way, gold fact batches strictly
-    between the prev snapshot and `batch_id` that no snapshot folded
-    — a torn earlier run, or an MV newly added to INCREMENTAL on a
-    warehouse with history — are detected and their deltas folded in
-    (a rebuild-from-history degenerates to prev=None + all prior
-    batches), so "no snapshot but prior gold exists" can never
-    silently restart state from one batch (ADVICE r9).  Returns
-    (state rows, output rows).  Re-running the same (batch, prev)
-    pair rebuilds both partitions identically — exactly-once
-    semantics match `refresh_mv`.
+    The state snapshot to build on is resolved PER-MV from this MV's
+    own completed-snapshot markers (resolve_prev_state).  Gold fact
+    batches strictly between that snapshot and `batch_id` that no
+    snapshot folded — a torn earlier run, or an MV newly added to
+    INCREMENTAL on a warehouse with history — are detected and their
+    deltas folded in (a rebuild-from-history degenerates to prev=None
+    + all prior batches), so "no snapshot but prior gold exists" can
+    never silently restart state from one batch (ADVICE r9).  Returns
+    (state rows, output rows).  Re-running the same batch rebuilds
+    both partitions identically — exactly-once semantics match
+    `refresh_mv`.
 
     Raises KeyError for the order-dependent MVs, which have no state
     form; callers route those through `mv.refresh_mv`.
@@ -159,26 +157,13 @@ def refresh_mv_incremental(
             "on row order across all history); use plans.mv.refresh_mv"
         )
     spec = INCREMENTAL[name]
-    if prev_batch_id is None:
-        prev_batch_id, missing = resolve_prev_state(wh, name, batch_id)
-    else:
-        # explicit prev: state(prev) covers gold <= prev by induction,
-        # so every gold batch strictly between prev and batch_id is
-        # un-folded from THIS lineage and must be folded now
-        missing = sorted(
-            b
-            for b in wh.list_batches("gold", "fact_sales")
-            if prev_batch_id < b < batch_id
-        )
+    prev_id, missing = resolve_prev_state(wh, name, batch_id)
     parts = [spec.delta(*gold_frames(wh, b)) for b in [*missing, batch_id]]
-    # A marked snapshot with no partition on disk was EMPTY (markers
-    # are written only after write_batch returns; dynamic overwrite
-    # writes no files for zero rows) — it contributes nothing, so
-    # skip the read rather than fail on a data-less state dir.
-    if prev_batch_id is not None and prev_batch_id in wh.list_batches(
-        STATE_LAYER, name
-    ):
-        prev = wh.read_batch(STATE_LAYER, name, prev_batch_id).drop(BATCH_COL)
+    # A completed snapshot with no partition on disk was EMPTY (markers
+    # are written only after write_batch returns, and write_batch
+    # leaves no partition for zero rows) — it contributes nothing.
+    if prev_id is not None and wh.has_batch(STATE_LAYER, name, prev_id):
+        prev = wh.read_batch(STATE_LAYER, name, prev_id).drop(BATCH_COL)
         parts = [prev, *parts]
     merged = (
         _merge(spec, reduce(DataFrame.unionByName, parts))
@@ -189,13 +174,12 @@ def refresh_mv_incremental(
     _mark_state_complete(wh, name, batch_id)
     # publish from the snapshot just written: truncates the merge
     # lineage (state(b) never re-derives state(b-1) at read time) and
-    # is the partition-pruned small-scan path.  When the state TABLE
-    # holds no partitions at all (every snapshot so far empty), there
-    # is no parquet to infer a schema from — publish straight from
-    # the (zero-row) merged frame instead.
+    # is the partition-pruned small-scan path.  An empty snapshot has
+    # no partition to read, so publish straight from the (zero-row)
+    # merged frame instead.
     state = (
         wh.read_batch(STATE_LAYER, name, batch_id).drop(BATCH_COL)
-        if wh.list_batches(STATE_LAYER, name)
+        if n_state
         else merged
     )
     out = spec.publish(state, **publish_kwargs)

@@ -12,11 +12,20 @@ Lifecycle per batch:
                  for the six maintainable MVs, history recompute for
                  the three order-dependent ones)
 
+Every step runs through `_step`: the step returns its row count or
+raises, and `_step` logs one run-log row and returns the (ok, error,
+rows) triple — the procs' EXCEPTION WHEN OTHERS handler, written once.
+Each step's writes are delete-then-insert of its batch partition
+(Warehouse.write_batch), so re-running a batch gives the same
+warehouse.
+
 Batch IDs follow the reference's "BATCH" + 6-digit counter
 (batch_processing.py:49-56).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from .gold import DEPENDENCIES, INTEGRATIONS
 from .mv import MVS, refresh_mv
@@ -32,20 +41,39 @@ def next_batch_id(last: str | None) -> str:
     return f"BATCH{n + 1:06d}"
 
 
+def _step(
+    log: RunLog,
+    table: str,
+    name: str,
+    batch_id: str,
+    fn: Callable[[], int],
+    message: str | None = None,
+) -> tuple[bool, str | None, int]:
+    """Run one step and append its `table` row: SUCCESS with fn()'s row
+    count, or FAILED with the exception's text.  `message` is logged
+    when there is no error text."""
+    try:
+        ok, err, n = True, None, fn()
+    except Exception as e:  # the procs' EXCEPTION WHEN OTHERS handler
+        ok, err, n = False, str(e), 0
+    log.append(
+        table,
+        proc_name=name,
+        batch_id=batch_id,
+        status="SUCCESS" if ok else "FAILED",
+        record_count=n,
+        message=err or message,
+    )
+    return ok, err, n
+
+
 def run_silver(wh: Warehouse, log: RunLog, batch_id: str) -> dict[str, tuple]:
-    results = {}
-    for name, fn in TRANSFORMS.items():
-        ok, err, n = fn(wh, batch_id)
-        results[name] = (ok, err, n)
-        log.append(
-            "transformation_log",
-            proc_name=name,
-            batch_id=batch_id,
-            status="SUCCESS" if ok else "FAILED",
-            record_count=n,
-            message=err,
+    return {
+        name: _step(
+            log, "transformation_log", name, batch_id, lambda: fn(wh, batch_id)
         )
-    return results
+        for name, fn in TRANSFORMS.items()
+    }
 
 
 def run_gold(wh: Warehouse, log: RunLog, batch_id: str) -> dict[str, tuple]:
@@ -69,25 +97,18 @@ def run_gold(wh: Warehouse, log: RunLog, batch_id: str) -> dict[str, tuple]:
                 message=f"dependencies not satisfied: {missing}",
             )
             continue
-        ok, err, n = INTEGRATIONS[name](wh, batch_id)
-        results[name] = (ok, err, n)
-        log.append(
+        results[name] = _step(
+            log,
             "integration_log",
-            proc_name=name,
-            batch_id=batch_id,
-            status="SUCCESS" if ok else "FAILED",
-            record_count=n,
-            message=err,
+            name,
+            batch_id,
+            lambda: INTEGRATIONS[name](wh, batch_id),
         )
     return results
 
 
 def run_mvs(
-    wh: Warehouse,
-    log: RunLog,
-    batch_id: str,
-    mode: str = "full",
-    prev_batch_id: str | None = None,
+    wh: Warehouse, log: RunLog, batch_id: str, mode: str = "full"
 ) -> dict[str, tuple]:
     """Refresh all nine MVs for `batch_id`.
 
@@ -99,9 +120,8 @@ def run_mvs(
     batch into their partial-aggregate state (cost proportional to the
     batch + group cardinality, never the fact history); the three
     order-dependent MVs (no state form, see plans/mv.py) are recomputed
-    over full history, which is their only correct definition.
-    `prev_batch_id` names the state snapshot to build on; when None
-    each MV resolves its OWN latest completed snapshot (marker files,
+    over full history, which is their only correct definition.  Each
+    MV resolves its OWN latest completed snapshot (marker files,
     mv_incremental.resolve_prev_state) and folds in any gold batches
     no snapshot has covered — so an MV with a legitimately-empty
     first delta, or one newly added to INCREMENTAL on a warehouse
@@ -118,45 +138,34 @@ def run_mvs(
     recompute bitwise, not == mode="full" output.
     """
     incremental = mode == "incremental"
-    results = {}
-    for name in MVS:
+
+    def refresh(name: str) -> int:
         if incremental and name in INCREMENTAL:
-            try:
-                _, n = refresh_mv_incremental(
-                    wh, name, batch_id, prev_batch_id=prev_batch_id
-                )
-                ok, err = True, None
-            except Exception as e:  # logged like the FULL path's failures
-                ok, err, n = False, str(e), 0
-        elif incremental:
-            ok, err, n = refresh_mv(wh, name, batch_id, history=True)
-        else:
-            ok, err, n = refresh_mv(wh, name, batch_id)
-        results[name] = (ok, err, n)
-        log.append(
+            return refresh_mv_incremental(wh, name, batch_id)[1]
+        return refresh_mv(wh, name, batch_id, history=incremental)
+
+    return {
+        name: _step(
+            log,
             "mv_refresh_log",
-            proc_name=name,
-            batch_id=batch_id,
-            status="SUCCESS" if ok else "FAILED",
-            record_count=n,
-            message=err if err else f"mode={mode}",
+            name,
+            batch_id,
+            lambda: refresh(name),
+            message=f"mode={mode}",
         )
-    return results
+        for name in MVS
+    }
 
 
 def run_batch(
-    wh: Warehouse,
-    log: RunLog,
-    batch_id: str,
-    mv_mode: str = "full",
-    prev_batch_id: str | None = None,
+    wh: Warehouse, log: RunLog, batch_id: str, mv_mode: str = "full"
 ) -> dict[str, dict]:
     """Full silver -> gold -> MV pass for one batch (the reference's
     three CLI entry points chained, minus the manifest file dance).
-    `mv_mode`/`prev_batch_id` route the MV stage (see run_mvs)."""
+    `mv_mode` routes the MV stage (see run_mvs)."""
     silver = run_silver(wh, log, batch_id)
     gold = run_gold(wh, log, batch_id)
-    mvs = run_mvs(wh, log, batch_id, mode=mv_mode, prev_batch_id=prev_batch_id)
+    mvs = run_mvs(wh, log, batch_id, mode=mv_mode)
     status = (
         "SUCCESS"
         if all(ok for ok, *_ in [*silver.values(), *gold.values(), *mvs.values()])

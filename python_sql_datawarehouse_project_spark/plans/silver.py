@@ -2,10 +2,12 @@
 stored procedure (SURVEY.md §3.2; reference
 sql/tools/Procedure/client1/tools.load_*_v1.sql).
 
-Each transform is (warehouse, batch_id) -> (success, error, rowcount),
-the Spark analogue of the procs' (OUT is_success, OUT error_message) +
-GET DIAGNOSTICS ROW_COUNT contract, and follows the same lifecycle:
-empty-batch short-circuit -> transform -> idempotent batch overwrite.
+Each transform is (warehouse, batch_id) -> rowcount (the procs' GET
+DIAGNOSTICS ROW_COUNT) and raises on error; the pipeline's step runner
+(plans/pipeline.py `_step`) turns an exception into the procs' (OUT
+is_success, OUT error_message) pair.  The lifecycle is
+Warehouse.rebuild_batch: an absent bronze batch makes the silver batch
+absent, otherwise transform -> delete-then-insert of the batch.
 
 All row logic is built-in column expressions (functions/cleansing.py)
 — no UDFs, fully codegen'd, so a 100 TB bronze partition cleanses at
@@ -23,29 +25,24 @@ from pyspark.sql import functions as F
 from ..functions import cleansing as C
 from .warehouse import Warehouse
 
-TransformResult = tuple[bool, str | None, int]
-
 
 def _run(
     wh: Warehouse,
-    source: str,
-    target: str,
+    table: str,
     batch_id: str,
     transform: Callable[[DataFrame], DataFrame],
-) -> TransformResult:
-    """Shared proc lifecycle (tools.load_crm_cust_info_v1.sql:29-120)."""
-    try:
-        if wh.batch_is_empty("bronze", source, batch_id):
-            return True, None, 0
-        df = wh.read_batch("bronze", source, batch_id).drop("dwh_batch_id")
-        out = transform(df).withColumn("dwh_create_date", F.current_timestamp())
-        n = wh.write_batch(out, "silver", target, batch_id)
-        return True, None, n
-    except Exception as e:  # mirror procs' EXCEPTION WHEN OTHERS handler
-        return False, str(e), 0
+) -> int:
+    """Shared proc lifecycle (tools.load_crm_cust_info_v1.sql:29-120):
+    bronze `table` -> silver `table` for one batch."""
+
+    def build() -> DataFrame:
+        df = wh.read_batch("bronze", table, batch_id).drop("dwh_batch_id")
+        return transform(df).withColumn("dwh_create_date", F.current_timestamp())
+
+    return wh.rebuild_batch(("bronze", table), "silver", table, batch_id, build)
 
 
-def load_crm_cust_info(wh: Warehouse, batch_id: str) -> TransformResult:
+def load_crm_cust_info(wh: Warehouse, batch_id: str) -> int:
     """tools.load_crm_cust_info_v1.sql:58-120 — null-key filter, W1
     keep-latest dedup, trims, marital/gender decode, R6 year clamp.
 
@@ -76,10 +73,10 @@ def load_crm_cust_info(wh: Warehouse, batch_id: str) -> TransformResult:
             )
         )
 
-    return _run(wh, "crm_cust_info", "crm_cust_info", batch_id, t)
+    return _run(wh, "crm_cust_info", batch_id, t)
 
 
-def load_crm_prd_info(wh: Warehouse, batch_id: str) -> TransformResult:
+def load_crm_prd_info(wh: Warehouse, batch_id: str) -> int:
     """tools.load_crm_prd_info_v1.sql:70-100 — R7 key split, cost
     COALESCE 0, product-line decode, W2 LEAD end-dating."""
 
@@ -102,10 +99,10 @@ def load_crm_prd_info(wh: Warehouse, batch_id: str) -> TransformResult:
             ).alias("prd_end_dt"),
         )
 
-    return _run(wh, "crm_prd_info", "crm_prd_info", batch_id, t)
+    return _run(wh, "crm_prd_info", batch_id, t)
 
 
-def load_crm_sales_details(wh: Warehouse, batch_id: str) -> TransformResult:
+def load_crm_sales_details(wh: Warehouse, batch_id: str) -> int:
     """tools.load_crm_sales_details_v1.sql:75-115 — trims, R4 yyyymmdd
     parsing, R2 sales repair, R3 price derivation (from RAW columns)."""
 
@@ -126,10 +123,10 @@ def load_crm_sales_details(wh: Warehouse, batch_id: str) -> TransformResult:
             ).alias("sls_price"),
         )
 
-    return _run(wh, "crm_sales_details", "crm_sales_details", batch_id, t)
+    return _run(wh, "crm_sales_details", batch_id, t)
 
 
-def load_erp_cust_az12(wh: Warehouse, batch_id: str) -> TransformResult:
+def load_erp_cust_az12(wh: Warehouse, batch_id: str) -> int:
     """tools.load_erp_cust_az12_v1.sql:66-86 — NAS strip, R5 future
     bdate -> NULL, gender decode."""
 
@@ -143,10 +140,10 @@ def load_erp_cust_az12(wh: Warehouse, batch_id: str) -> TransformResult:
             C.decode_gender_erp(F.col("gen")).alias("gen"),
         )
 
-    return _run(wh, "erp_cust_az12", "erp_cust_az12", batch_id, t)
+    return _run(wh, "erp_cust_az12", batch_id, t)
 
 
-def load_erp_loc_a101(wh: Warehouse, batch_id: str) -> TransformResult:
+def load_erp_loc_a101(wh: Warehouse, batch_id: str) -> int:
     """tools.load_erp_loc_a101_v1.sql:66-80 — dash strip, country decode."""
 
     def t(df: DataFrame) -> DataFrame:
@@ -155,21 +152,21 @@ def load_erp_loc_a101(wh: Warehouse, batch_id: str) -> TransformResult:
             C.decode_country(F.col("cntry")).alias("cntry"),
         )
 
-    return _run(wh, "erp_loc_a101", "erp_loc_a101", batch_id, t)
+    return _run(wh, "erp_loc_a101", batch_id, t)
 
 
-def load_erp_px_cat_g1v2(wh: Warehouse, batch_id: str) -> TransformResult:
+def load_erp_px_cat_g1v2(wh: Warehouse, batch_id: str) -> int:
     """tools.load_erp_px_cat_g1v2_v1.sql — passthrough projection."""
 
     def t(df: DataFrame) -> DataFrame:
         return df.select("id", "cat", "subcat", "maintenance")
 
-    return _run(wh, "erp_px_cat_g1v2", "erp_px_cat_g1v2", batch_id, t)
+    return _run(wh, "erp_px_cat_g1v2", batch_id, t)
 
 
 # Execution order mirrors tools.transformation_config ordering
 # (reference silver_clean_transform.py:43-58).
-TRANSFORMS: dict[str, Callable[[Warehouse, str], TransformResult]] = {
+TRANSFORMS: dict[str, Callable[[Warehouse, str], int]] = {
     "load_crm_cust_info": load_crm_cust_info,
     "load_crm_prd_info": load_crm_prd_info,
     "load_crm_sales_details": load_crm_sales_details,

@@ -5,14 +5,19 @@ partition overwrite (SURVEY.md §1.5).
 Every bronze/silver/gold table is partitioned by dwh_batch_id; writing
 a batch replaces exactly that partition ("DELETE WHERE dwh_batch_id =
 X; INSERT", reference tools.load_crm_cust_info_v1.sql:58-62 and
-scripts/load_to_bronze.py:590-604) and re-runs are exactly-once.  At
-100 TB this is also the scan-pruning story: every proc-equivalent
-reads one partition, never the table.
+scripts/load_to_bronze.py:590-604) and re-runs are exactly-once.  An
+empty write deletes the partition, so a batch's partition is on disk
+exactly when the batch has rows (`has_batch`, a directory check).  This
+class owns the partition directories: no other module builds or parses
+their paths.  At 100 TB this is also the scan-pruning story: every
+proc-equivalent reads one partition, never the table.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,18 +38,19 @@ class Warehouse:
     def path(self, layer: str, name: str) -> str:
         return os.path.join(self.root, layer, name)
 
-    def exists(self, layer: str, name: str) -> bool:
-        return os.path.isdir(self.path(layer, name))
+    def _batch_dir(self, layer: str, name: str, batch_id: str) -> str:
+        return os.path.join(self.path(layer, name), f"{BATCH_COL}={batch_id}")
 
     def write_batch(self, df: DataFrame, layer: str, name: str, batch_id: str) -> int:
-        """Idempotent overwrite of one batch partition; returns rowcount.
+        """Delete-then-insert of one batch partition; returns rowcount.
 
         The count is observed during the write job itself (F.observe:
         zero extra scans, exact number of rows that landed — the Spark
-        analogue of GET DIAGNOSTICS ROW_COUNT in the procs).  An empty
-        result writes no partition files under dynamic overwrite, so
-        the count must NOT come from a read-back (the table dir may not
-        even exist yet for a first empty batch).
+        analogue of GET DIAGNOSTICS ROW_COUNT in the procs).  Dynamic
+        overwrite writes no partition files for an empty result, which
+        would leave the batch's old rows on disk; a zero count
+        therefore drops the partition, so an empty write leaves the
+        batch absent.
         """
         from pyspark.sql import Observation
 
@@ -58,20 +64,38 @@ class Warehouse:
             .partitionBy(BATCH_COL)
             .parquet(self.path(layer, name))
         )
-        return int(obs.get["rows"])
+        n = int(obs.get["rows"])
+        if n == 0:
+            self.drop_batch(layer, name, batch_id)
+        return n
 
-    def _drop_batch_partition(self, layer: str, name: str, batch_id: str) -> None:
-        """Remove one batch partition directory.  Needed wherever a
-        rewrite may legitimately produce ZERO rows: dynamic overwrite
-        writes no files for an empty result, so the old partition
-        would otherwise survive on disk (delete_keys, merge_upsert,
-        write_batch_with_expectations all route through this)."""
-        import shutil
+    def drop_batch(self, layer: str, name: str, batch_id: str) -> None:
+        """Remove one batch partition directory (a no-op when absent)."""
+        shutil.rmtree(self._batch_dir(layer, name, batch_id), ignore_errors=True)
 
-        shutil.rmtree(
-            os.path.join(self.path(layer, name), f"{BATCH_COL}={batch_id}"),
-            ignore_errors=True,
-        )
+    def rebuild_batch(
+        self,
+        source: tuple[str, str],
+        layer: str,
+        name: str,
+        batch_id: str,
+        build: Callable[[], DataFrame],
+    ) -> int:
+        """One pipeline step's lifecycle: when the `source` (layer,
+        name) batch is absent, the target batch is made absent and the
+        step returns 0 (the procs' COUNT(*) = 0 short-circuit,
+        tools.load_crm_cust_info_v1.sql:29-40); otherwise it returns
+        write_batch(build())."""
+        if not self.has_batch(*source, batch_id):
+            self.drop_batch(layer, name, batch_id)
+            return 0
+        return self.write_batch(build(), layer, name, batch_id)
+
+    def has_batch(self, layer: str, name: str, batch_id: str) -> bool:
+        """Whether the batch partition is on disk: a directory check,
+        no Spark job.  write_batch never leaves an empty partition, so
+        a present batch has rows."""
+        return os.path.isdir(self._batch_dir(layer, name, batch_id))
 
     def write_batch_with_expectations(
         self,
@@ -127,16 +151,6 @@ class Warehouse:
         bad = flagged.where(F.size("_failed_expectations") > 0)
         n_good = self.write_batch(good, layer, name, batch_id)
         n_bad = self.write_batch(bad, layer, f"{name}__quarantine", batch_id)
-        # Dynamic overwrite writes NO files for an empty result, so a
-        # re-run whose pass/fail split changed (all rows now pass where
-        # some were quarantined before, or vice versa) would leave the
-        # STALE partition on disk while the runlog reports the new
-        # counts.  Mirror delete_keys: an empty side explicitly drops
-        # its batch partition (round-6 ADVICE fix).
-        if n_good == 0:
-            self._drop_batch_partition(layer, name, batch_id)
-        if n_bad == 0:
-            self._drop_batch_partition(layer, f"{name}__quarantine", batch_id)
         per_rule = (
             flagged.select(
                 F.explode("_failed_expectations").alias("rule")
@@ -164,14 +178,6 @@ class Warehouse:
     def read_batch(self, layer: str, name: str, batch_id: str) -> DataFrame:
         """Partition-pruned single-batch scan (P4, SURVEY.md §2.2)."""
         return self.read_table(layer, name).filter(F.col(BATCH_COL) == batch_id)
-
-    def batch_is_empty(self, layer: str, name: str, batch_id: str) -> bool:
-        """Empty-batch short-circuit (reference procs' COUNT(*)=0 guard,
-        tools.load_crm_cust_info_v1.sql:29-40) — limit-1 scan, not a
-        full count."""
-        if not self.exists(layer, name):
-            return True
-        return self.read_batch(layer, name, batch_id).isEmpty()
 
     def fingerprint_batches(self, layer: str, name: str) -> DataFrame:
         """Per-batch content fingerprint (row count, BIT_XOR and
@@ -323,9 +329,7 @@ class Warehouse:
         self.write_batch(
             part.coalesce(target_files), layer, name, batch_id
         )
-        part_dir = os.path.join(
-            self.path(layer, name), f"{BATCH_COL}={batch_id}"
-        )
+        part_dir = self._batch_dir(layer, name, batch_id)
         return len(
             [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
         )
@@ -404,8 +408,6 @@ class Warehouse:
             n_matched = matched_ups.count()
             out = kept.select(*cols).unionByName(matched_ups)
             n_after = self.write_batch(out, layer, name, b)
-            if n_after == 0:
-                self._drop_batch_partition(layer, name, b)
             updated += n_matched
             # n_after = kept + n_matched, so the matched rows that
             # vanished (delete-flagged) are exactly n_before - n_after.
@@ -417,12 +419,7 @@ class Warehouse:
         if not inserts.isEmpty():
             existing = (
                 self.read_batch(layer, name, batch_id).drop(BATCH_COL)
-                if self.exists(layer, name)
-                and os.path.isdir(
-                    os.path.join(
-                        self.path(layer, name), f"{BATCH_COL}={batch_id}"
-                    )
-                )
+                if self.has_batch(layer, name, batch_id)
                 else None
             )
             landing = (
@@ -464,10 +461,5 @@ class Warehouse:
             kept = part.join(F.broadcast(keys), key_col, "left_anti")
             n_before = part.count()
             n_after = self.write_batch(kept, layer, name, b)
-            if n_after == 0:
-                # dynamic overwrite writes NO files for an empty
-                # result, which would leave the old partition (and the
-                # supposedly-deleted rows) on disk — drop it explicitly
-                self._drop_batch_partition(layer, name, b)
             deleted += n_before - n_after
         return deleted

@@ -13,8 +13,8 @@ modes).  A real ingest never arrives that way: files land over time,
 each micro-batch advances the watermark, closed sessions are EMITTED
 and EVICTED as the drain walks forward.  This gate stages the events
 table as N_SLICES mtime-ascending time-ordered parquet files and
-drains with maxFilesPerTrigger=1 — measured at sf10 (probe script
-scripts/probe_stream_sessions_sf10.py, 64 slices): max live state
+drains with maxFilesPerTrigger=1 — measured at sf10 (PERF.md, "Round
+8: stream_session_windows sf10 wedge RESOLVED", 64 slices): max live state
 174,500 rows vs 9,528,000 total sessions, completes in 129 s (HDFS) /
 208 s (RocksDB) and hash-matches the batch twin — where the
 single-batch shape wedged past 30 min.  Per-batch live state is

@@ -15,10 +15,11 @@ batch-addressed sink with exactly-once OUTPUT semantics:
     rebuilds the same state snapshot from the same inputs, so the
     published MV is identical — idempotence makes at-least-once
     delivery exactly-once output.
-  * The previous-state pointer is NOT driver memory: it is recovered
-    per batch from the state layer's partition listing (latest
-    snapshot strictly below the incoming id), so a restarted query —
-    or a replayed epoch — resolves the same lineage.  Batch ids are
+  * The previous-state pointer is NOT held in memory: each MV recovers
+    it per batch from its own completed snapshots in the state layer
+    (mv_incremental.resolve_prev_state: the latest snapshot strictly
+    below the incoming id), so a restarted query — or a replayed
+    epoch — resolves the same lineage.  Batch ids are
     lexicographically ordered by the ingest convention
     (BATCH000001 < BATCH000002 ..., the zero-padded format the
     reference's batch tracker assigns — see plans/ingest.py for the
@@ -36,9 +37,6 @@ restart-safe, inspectable and shared with the batch path.
 """
 
 from __future__ import annotations
-
-import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,30 +61,6 @@ class StreamingMVMaintenance:
         self.mv_names = list(mv_names)
         self.publish_kwargs = publish_kwargs or {}
 
-    def _known_state_batches(self) -> list[str]:
-        """Batch ids with a committed state snapshot for EVERY
-        maintained MV (an id missing from any MV is a torn write a
-        replay will redo — building on it would fork lineages)."""
-        sets = []
-        for name in self.mv_names:
-            root = self.wh.path(mi.STATE_LAYER, name)
-            try:
-                parts = os.listdir(root)
-            except OSError:
-                return []
-            sets.append(
-                {
-                    m.group(1)
-                    for p in parts
-                    if (m := re.fullmatch(f"{BATCH_COL}=(.+)", p))
-                }
-            )
-        return sorted(set.intersection(*sets)) if sets else []
-
-    def _prev_of(self, batch_id: str) -> str | None:
-        below = [b for b in self._known_state_batches() if b < batch_id]
-        return max(below) if below else None
-
     def process_batch(self, df: DataFrame, epoch_id: int) -> None:
         """One micro-batch: the arriving fact rows, tagged with their
         ingest batch id.  AvailableNow may coalesce several staged
@@ -99,14 +73,9 @@ class StreamingMVMaintenance:
         for bid in sorted(ids):
             fact = df.filter(F.col(BATCH_COL) == bid).drop(BATCH_COL)
             self.wh.write_batch(fact, "gold", "fact_sales", bid)
-            prev = self._prev_of(bid)
             for name in self.mv_names:
                 mi.refresh_mv_incremental(
-                    self.wh,
-                    name,
-                    bid,
-                    prev_batch_id=prev,
-                    **self.publish_kwargs.get(name, {}),
+                    self.wh, name, bid, **self.publish_kwargs.get(name, {})
                 )
 
     def run_available_now(

@@ -351,24 +351,17 @@ def main() -> None:
         rows_full, rows_inc = {}, {}
         t = time.perf_counter()
         for name in mi.INCREMENTAL:
-            ok, err, n = refresh_mv(wh, name, DELTA, history=True)
-            rows_full[name] = n
-            if not ok:
-                groups.append({f"full_history:{name}": (ok, err, n)})
+            rows_full[name] = refresh_mv(wh, name, DELTA, history=True)
         stages["mv_full_6"] = round(time.perf_counter() - t, 1)
         t = time.perf_counter()
         for name in (n for n in MVS if n not in mi.INCREMENTAL):
-            ok, err, n = refresh_mv(wh, name, DELTA, history=True)
-            if not ok:
-                groups.append({f"history:{name}": (ok, err, n)})
+            refresh_mv(wh, name, DELTA, history=True)
         stages["mv_history_3"] = round(time.perf_counter() - t, 1)
         t = time.perf_counter()
         per_mv = {}
         for name in mi.INCREMENTAL:
             t_mv = time.perf_counter()
-            _, rows_inc[name] = mi.refresh_mv_incremental(
-                wh, name, DELTA, prev_batch_id=BATCH
-            )
+            _, rows_inc[name] = mi.refresh_mv_incremental(wh, name, DELTA)
             per_mv[name] = round(time.perf_counter() - t_mv, 1)
         stages["mv_incremental_6"] = round(time.perf_counter() - t, 1)
         mismatch = {

@@ -155,6 +155,60 @@ def test_file_driven_client_run_and_reprocessing(spark, tmp_path):
         assert ok, f"{name}: {err}"
 
 
+def test_restart_with_emptied_file_leaves_batch_absent(spark, tmp_path):
+    """A `restart` whose landing file became header-only re-runs the
+    batch with zero rows: the bronze and silver partitions the first
+    run wrote must go, not survive as stale rows under a 0-row log."""
+    from python_sql_datawarehouse_project_spark.plans.clients import ClientSources
+    from python_sql_datawarehouse_project_spark.plans.ingest import IngestPlan
+    from python_sql_datawarehouse_project_spark.sources.mapping import ColumnMapping
+    from python_sql_datawarehouse_project_spark.sources.validation import SourceConfig
+
+    header = (
+        "cst_id,cst_key,cst_firstname,cst_lastname,cst_marital_status,"
+        "cst_gndr,cst_create_date\n"
+    )
+    incoming = tmp_path / "raw" / "c4" / "crm" / "incoming"
+    incoming.mkdir(parents=True)
+    landing = incoming / "cust_info_BATCH000001.csv"
+    landing.write_text(
+        header + "1.0,K1,Ann,Lee,M,F,2024-01-01\n2.0,K2,Bob,Ray,S,M,2024-02-02\n"
+    )
+    sources = ClientSources(
+        plan=IngestPlan(
+            configs=[SourceConfig("crm", "csv", "cust_info", "crm_cust_info")],
+            mappings={
+                "crm_cust_info": [
+                    ColumnMapping(c, c, t)
+                    for c, t in [
+                        ("cst_id", "integer"),
+                        ("cst_key", "string"),
+                        ("cst_firstname", "string"),
+                        ("cst_lastname", "string"),
+                        ("cst_marital_status", "string"),
+                        ("cst_gndr", "string"),
+                        ("cst_create_date", "date"),
+                    ]
+                ]
+            },
+        ),
+        incoming={"crm": str(incoming)},
+    )
+    reg = ClientRegistry(str(tmp_path / "wh"))
+    reg.register("c4")
+    r = process_client(spark, reg, "c4", "start", sources)
+    wh = reg.warehouse(spark, "c4")
+    assert r.results["silver"]["load_crm_cust_info"] == (True, None, 2)
+
+    landing.write_text(header)
+    r2 = process_client(spark, reg, "c4", "restart", sources)
+    assert r2.batch_id == r.batch_id
+    assert [(f.status, f.rows) for f in r2.ingested] == [("LOADED", 0)]
+    assert wh.list_batches("bronze", "crm_cust_info") == []
+    assert wh.list_batches("silver", "crm_cust_info") == []
+    assert r2.results["silver"]["load_crm_cust_info"] == (True, None, 0)
+
+
 def test_registry_persists_across_instances(two_client_run):
     root, reg, _ = two_client_run
     reloaded = ClientRegistry(root)

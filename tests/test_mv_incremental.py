@@ -113,8 +113,8 @@ def refreshed(spark, tmp_path_factory):
     _seed_gold(spark, wh)
     for name in mi.INCREMENTAL:
         kw = {"as_of": "2024-06-01"} if name == "mv_customer_churn" else {}
-        mi.refresh_mv_incremental(wh, name, B1, prev_batch_id=None, **kw)
-        mi.refresh_mv_incremental(wh, name, B2, prev_batch_id=B1, **kw)
+        mi.refresh_mv_incremental(wh, name, B1, **kw)
+        mi.refresh_mv_incremental(wh, name, B2, **kw)
     return wh
 
 
@@ -208,7 +208,7 @@ def test_rerun_is_exactly_once(refreshed):
     name = "mv_sales_monthly_productline"
     cols = ["month", "product_name", "category", "sub_category", "total_sales"]
     before = _rows(refreshed, name, B2, cols)
-    mi.refresh_mv_incremental(refreshed, name, B2, prev_batch_id=B1)
+    mi.refresh_mv_incremental(refreshed, name, B2)
     assert _rows(refreshed, name, B2, cols) == before
 
 
@@ -288,8 +288,8 @@ def test_history_mode_running_sales_unifies_by_natural_key(refreshed):
 
 @pytest.mark.slow
 def test_run_mvs_incremental_auto_resolves_prev_state(spark, tmp_path):
-    """With no explicit prev_batch_id, run_mvs resolves the previous
-    state snapshot from the state layer's partition listing — the
+    """run_mvs resolves each MV's previous state snapshot from the
+    state layer's completion markers — the
     restart-safe wiring the CLI's --mv-mode incremental relies on.
     Cross-batch proof: Ann's lifetime value at B2 must include B1."""
     from python_sql_datawarehouse_project_spark.plans.pipeline import run_mvs
@@ -321,8 +321,8 @@ def test_run_mvs_incremental_mode_covers_all_nine(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     _seed_gold(spark, wh)
     log = RunLog(str(tmp_path / "log"))
-    r1 = run_mvs(wh, log, B1, mode="incremental", prev_batch_id=None)
-    r2 = run_mvs(wh, log, B2, mode="incremental", prev_batch_id=B1)
+    r1 = run_mvs(wh, log, B1, mode="incremental")
+    r2 = run_mvs(wh, log, B2, mode="incremental")
     assert set(r1) == set(r2) == set(mv.MVS)
     bad = {n: e for n, (ok, e, _) in {**r1, **r2}.items() if not ok}
     assert not bad
@@ -404,9 +404,9 @@ def test_empty_first_delta_does_not_drop_history(spark, tmp_path):
     d = dt.date
     wh = Warehouse(spark, str(tmp_path / "wh"))
     _seed_gold(spark, wh)
-    # overwrite B1's facts with an empty frame: dynamic overwrite
-    # writes no partition, leaving B1's old files — drop them first
-    wh._drop_batch_partition("gold", "fact_sales", B1)
+    wh.write_batch(
+        spark.createDataFrame([], _FACT_SCHEMA), "gold", "fact_sales", B1
+    )
     name = "mv_customer_lifetime_value"
     mi.refresh_mv_incremental(wh, name, B1)
     assert mi.state_batches(wh, name) == [B1]  # marker survives empty
@@ -437,9 +437,10 @@ def test_new_mv_on_existing_warehouse_rebuilds_from_history(spark, tmp_path):
 
 
 def test_explicit_prev_heals_unfolded_gold_gap(spark, tmp_path):
-    """refresh(B3, prev=B1) with gold B2 on disk folds B2's delta into
-    the merge: state(B1) covers gold <= B1 only, so skipping B2 would
-    silently lose a batch (the torn-run replay scenario)."""
+    """refresh(B3) with state at B1 and gold B2 on disk resolves
+    prev=B1 and folds B2's delta into the merge: state(B1) covers
+    gold <= B1 only, so skipping B2 would silently lose a batch (the
+    torn-run replay scenario)."""
     d = dt.date
     wh = Warehouse(spark, str(tmp_path / "wh"))
     _seed_gold(spark, wh)
@@ -470,7 +471,7 @@ def test_explicit_prev_heals_unfolded_gold_gap(spark, tmp_path):
     )
     name = "mv_customer_lifetime_value"
     mi.refresh_mv_incremental(wh, name, B1)
-    mi.refresh_mv_incremental(wh, name, B3, prev_batch_id=B1)
+    mi.refresh_mv_incremental(wh, name, B3)
     got = {
         (r["customer_id"], r["lifetime_value"])
         for r in wh.read_batch("mv", name, B3).collect()

@@ -313,6 +313,7 @@ def test_streaming_mv_replay_is_idempotent(spark, tmp_path):
     # what upgrades replay to exactly-once output.
     from pyspark.sql import functions as F
 
+    from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
     from python_sql_datawarehouse_project_spark.streaming.mv_maintenance import (
         StreamingMVMaintenance,
     )
@@ -333,7 +334,7 @@ def test_streaming_mv_replay_is_idempotent(spark, tmp_path):
     )
     # lineage resolved from the state layer, not driver memory: B2's
     # snapshot must have been built on B1's both times
-    assert maint._prev_of(B2) == B1
+    assert mi.resolve_prev_state(wh, names[0], B2)[0] == B1
 
 
 def test_streaming_mv_restart_processes_only_new_files(spark, tmp_path):
@@ -343,6 +344,7 @@ def test_streaming_mv_restart_processes_only_new_files(spark, tmp_path):
     # checkpoint's file index) and chain its state on B1's snapshot.
     import shutil
 
+    from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
     from python_sql_datawarehouse_project_spark.streaming.mv_maintenance import (
         StreamingMVMaintenance,
     )
@@ -363,12 +365,12 @@ def test_streaming_mv_restart_processes_only_new_files(spark, tmp_path):
     )
     cp = str(tmp_path / "cp")
     maint.run_available_now(spark, staging, cp, schema)
-    assert maint._known_state_batches() == [B1]
+    assert mi.state_batches(wh, names[0]) == [B1]
 
     shutil.move(str(held / f"{B2}.parquet"), f"{staging}/{B2}.parquet")
     maint.run_available_now(spark, staging, cp, schema)
-    assert maint._known_state_batches() == [B1, B2]
-    assert maint._prev_of(B2) == B1
+    assert mi.state_batches(wh, names[0]) == [B1, B2]
+    assert mi.resolve_prev_state(wh, names[0], B2)[0] == B1
     # and the folded result equals the batch-path literal oracle
     import datetime as dt
 
