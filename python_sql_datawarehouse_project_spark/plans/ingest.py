@@ -9,11 +9,12 @@ the file_audit_log rows and the incoming/success/failed file moves):
   discover -> V1 config match   (no match -> CONFIG_FAILED, quarantine)
   read                          (S1-S4 by configured extension)
   V2 mapping validation         (mismatch -> MAPPING_FAILED, stop file)
+  P1-P2 projection              (computed once, feeds V3 and the write)
   V3 row validation             (failures logged, NON-FATAL — the
                                  reference warns and proceeds,
                                  batch_processing.py:1209-1220)
-  P1-P3 projection + batch stamp
-  bronze write                  (idempotent batch-partition overwrite)
+  bronze write                  (idempotent batch-partition overwrite;
+                                 stamps the batch id, P3)
 
 Batch ids are the reference's BATCH + 6-digit counter.  Re-running a
 batch overwrites exactly its partitions (delete-then-insert
@@ -120,11 +121,11 @@ def ingest_directory(
             )
             continue
 
+        out = apply_mapping(df, mappings)
         req = plan.required.get(cfg.target_table, [])
         if req:
             # required columns are TARGET names; check them post-projection
-            projected = apply_mapping(df, mappings)
-            rv = validate_rows(projected, req)
+            rv = validate_rows(out, req)
             log.append(
                 "row_validation_log",
                 batch_id=batch_id,
@@ -136,7 +137,6 @@ def ingest_directory(
             )
             # non-fatal by contract: continue loading either way
 
-        out = apply_mapping(df, mappings, batch_id=batch_id).drop("dwh_batch_id")
         n = wh.write_batch(out, "bronze", cfg.target_table, batch_id)
         log.append(
             "file_audit_log",

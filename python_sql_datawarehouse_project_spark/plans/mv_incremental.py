@@ -73,19 +73,18 @@ def _mark_state_complete(wh: Warehouse, name: str, batch_id: str) -> None:
 
 def state_batches(wh: Warehouse, name: str) -> list[str]:
     """Batch ids with a COMPLETED state snapshot for `name` (marker
-    files, which survive empty snapshots).  Falls back to the raw
-    partition listing for pre-marker warehouses (round <=9 state
-    tables carry partitions but no markers)."""
+    files, which survive empty snapshots).  A snapshot whose marker
+    was never written is not complete, even if its partition is on
+    disk."""
     try:
         entries = os.listdir(wh.path(STATE_LAYER, name))
     except OSError:
         return []
-    marked = sorted(
+    return sorted(
         e[len(_MARKER_PREFIX):]
         for e in entries
         if e.startswith(_MARKER_PREFIX)
     )
-    return marked if marked else wh.list_batches(STATE_LAYER, name)
 
 
 def resolve_prev_state(
@@ -174,14 +173,8 @@ def refresh_mv_incremental(
     _mark_state_complete(wh, name, batch_id)
     # publish from the snapshot just written: truncates the merge
     # lineage (state(b) never re-derives state(b-1) at read time) and
-    # is the partition-pruned small-scan path.  An empty snapshot has
-    # no partition to read, so publish straight from the (zero-row)
-    # merged frame instead.
-    state = (
-        wh.read_batch(STATE_LAYER, name, batch_id).drop(BATCH_COL)
-        if n_state
-        else merged
-    )
+    # is the partition-pruned small-scan path.
+    state = wh.read_batch(STATE_LAYER, name, batch_id).drop(BATCH_COL)
     out = spec.publish(state, **publish_kwargs)
     n_out = wh.write_batch(out, "mv", name, batch_id)
     return n_state, n_out

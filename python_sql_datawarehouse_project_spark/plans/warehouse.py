@@ -8,21 +8,38 @@ X; INSERT", reference tools.load_crm_cust_info_v1.sql:58-62 and
 scripts/load_to_bronze.py:590-604) and re-runs are exactly-once.  An
 empty write deletes the partition, so a batch's partition is on disk
 exactly when the batch has rows (`has_batch`, a directory check).  This
-class owns the partition directories: no other module builds or parses
-their paths.  At 100 TB this is also the scan-pruning story: every
-proc-equivalent reads one partition, never the table.
+class owns each table's partition directories and its schema file
+`{table}/_schema.json` (written by write_batch, read by read_table, so
+no read re-discovers a schema from parquet footers): no other module
+builds or parses their paths.  At 100 TB this is also the scan-pruning
+story: every proc-equivalent reads one partition, never the table.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 BATCH_COL = "dwh_batch_id"
+
+
+def _replace_file(path: str, text: str) -> None:
+    """Write `text` to `path` atomically: a temp file in the same
+    directory, then os.replace (an atomic rename on POSIX), so a reader
+    sees the old content or the new, never a torn file."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(prefix=f".{os.path.basename(path)}.", dir=d)
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 class Warehouse:
@@ -41,8 +58,35 @@ class Warehouse:
     def _batch_dir(self, layer: str, name: str, batch_id: str) -> str:
         return os.path.join(self.path(layer, name), f"{BATCH_COL}={batch_id}")
 
+    def _schema_path(self, layer: str, name: str) -> str:
+        # Spark's file listing skips names starting with `_` or `.`, so
+        # neither this file nor its temp file is scanned as data.
+        return os.path.join(self.path(layer, name), "_schema.json")
+
+    def _recorded_schema(self, layer: str, name: str) -> StructType:
+        with open(self._schema_path(layer, name)) as f:
+            return StructType.fromJson(json.load(f))
+
+    def _record_schema(self, layer: str, name: str, schema: StructType) -> None:
+        """Record the table schema for a write of `schema`: its data
+        columns, then every column only the previous record had (older
+        batches still hold them); this write's type wins.  The batch
+        column is the partition column, appended on read."""
+        fields = [f for f in schema.fields if f.name != BATCH_COL]
+        if os.path.exists(self._schema_path(layer, name)):
+            have = {f.name for f in fields}
+            fields += [
+                f
+                for f in self._recorded_schema(layer, name).fields
+                if f.name not in have
+            ]
+        _replace_file(self._schema_path(layer, name), StructType(fields).json())
+
     def write_batch(self, df: DataFrame, layer: str, name: str, batch_id: str) -> int:
         """Delete-then-insert of one batch partition; returns rowcount.
+
+        The table schema is recorded first, empty writes included, so
+        a crash in between never hides a written column.
 
         The count is observed during the write job itself (F.observe:
         zero extra scans, exact number of rows that landed — the Spark
@@ -54,6 +98,7 @@ class Warehouse:
         """
         from pyspark.sql import Observation
 
+        self._record_schema(layer, name, df.schema)
         obs = Observation()
         out = df.withColumn(BATCH_COL, F.lit(batch_id)).observe(
             obs, F.count(F.lit(1)).alias("rows")
@@ -173,7 +218,14 @@ class Warehouse:
         return {"passed": n_good, "quarantined": n_bad, "by_rule": by_rule}
 
     def read_table(self, layer: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, name))
+        """The table read with its recorded schema plus the string batch
+        column: no Spark job, and older batches read NULL for columns
+        added later.  Raises FileNotFoundError for a table never
+        written."""
+        schema = self._recorded_schema(layer, name).add(
+            StructField(BATCH_COL, StringType())
+        )
+        return self.spark.read.schema(schema).parquet(self.path(layer, name))
 
     def read_batch(self, layer: str, name: str, batch_id: str) -> DataFrame:
         """Partition-pruned single-batch scan (P4, SURVEY.md §2.2)."""
@@ -229,19 +281,12 @@ class Warehouse:
         The manifest holds the (layer, name) list for auditability;
         re-committing the same batch (a pipeline replay) just
         replaces the manifest — idempotent like the writes."""
-        import json
-        import tempfile
-
-        os.makedirs(self._commits_dir(), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(
-            prefix=f".{batch_id}.", dir=self._commits_dir()
+        _replace_file(
+            os.path.join(self._commits_dir(), f"{batch_id}.json"),
+            json.dumps(
+                {"batch_id": batch_id, "tables": [list(t) for t in tables]}
+            ),
         )
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {"batch_id": batch_id, "tables": [list(t) for t in tables]},
-                f,
-            )
-        os.replace(tmp, os.path.join(self._commits_dir(), f"{batch_id}.json"))
 
     def committed_batches(self) -> list[str]:
         d = self._commits_dir()
@@ -296,19 +341,6 @@ class Warehouse:
         )
 
     # -- storage maintenance (beyond-reference warehouse operations) --
-
-    def read_table_evolved(self, layer: str, name: str) -> DataFrame:
-        """Schema-evolution read: batches written before a column was
-        added still scan cleanly, with NULLs where the column did not
-        exist (parquet mergeSchema — the footer union, computed once
-        at planning time).  The per-batch write path needs no change:
-        schema evolution in a batch-partitioned layout is purely a
-        read-side union of footers, which is why the warehouse can add
-        columns without rewriting history."""
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self.path(layer, name))
-        )
 
     def compact_batch(
         self, layer: str, name: str, batch_id: str, target_files: int
@@ -417,17 +449,9 @@ class Warehouse:
         #    finds an empty insert set and leaves the partition alone).
         n_inserted = 0
         if not inserts.isEmpty():
-            existing = (
-                self.read_batch(layer, name, batch_id).drop(BATCH_COL)
-                if self.has_batch(layer, name, batch_id)
-                else None
-            )
-            landing = (
-                inserts
-                if existing is None
-                else existing.select(*cols).unionByName(inserts)
-            )
-            before = 0 if existing is None else existing.count()
+            existing = self.read_batch(layer, name, batch_id).drop(BATCH_COL)
+            landing = existing.select(*cols).unionByName(inserts)
+            before = existing.count()
             n_inserted = (
                 self.write_batch(landing, layer, name, batch_id) - before
             )

@@ -8,7 +8,8 @@ layer that renames raw source columns to bronze target columns.
       BIGINT) (pandas inference turns int ids with NaNs into
       doubles); numeric targets get a plain numeric cast
       [load_to_bronze.py:246-262,527-553]
-  P3: dwh_batch_id literal injection [load_to_bronze.py:559]
+  P3: dwh_batch_id literal injection [load_to_bronze.py:559] is done
+      by the bronze write (plans/warehouse.py Warehouse.write_batch)
 
 Name normalization (case/space-insensitive matching) mirrors the
 reference's normalize_name [batch_processing.py:59-79].
@@ -60,12 +61,8 @@ def _cast_for_target(col: Column, m: ColumnMapping) -> Column:
     return col
 
 
-def apply_mapping(
-    df: DataFrame,
-    mappings: list[ColumnMapping],
-    batch_id: str | None = None,
-) -> DataFrame:
-    """P1 projection/rename + P2 casts + P3 batch stamp.
+def apply_mapping(df: DataFrame, mappings: list[ColumnMapping]) -> DataFrame:
+    """P1 projection/rename + P2 casts.
 
     Source columns are matched by normalized name, so a CSV header
     ' Cst Gendr ' maps onto source 'cst_gendr' (the reference's real
@@ -79,7 +76,4 @@ def apply_mapping(
                 f"mapping source column {m.source!r} not in {df.columns}"
             )
         cols.append(_cast_for_target(F.col(src), m).alias(m.target))
-    out = df.select(*cols)
-    if batch_id is not None:
-        out = out.withColumn("dwh_batch_id", F.lit(batch_id))
-    return out
+    return df.select(*cols)

@@ -7,7 +7,7 @@ no separate "convert" step because every downstream operator consumes
 the DataFrame directly, and the bronze write (Warehouse.write_batch)
 lands snappy parquet anyway.
 
-  read_csv      S1: header + schema inference (or explicit schema)
+  read_csv      S1: header + schema inference
                 [convert_to_parquet.py:184]
   read_excel    S2: no core Spark reader; driver-side pandas bridge
                 when an engine is available, else the stdlib ZIP+XML
@@ -32,31 +32,20 @@ files are small pre-ingest landing files, never warehouse-scale data
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 class UnsupportedSourceError(RuntimeError):
     """Raised when a source format has no available reader engine."""
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    r = spark.read.option("header", True)
-    if schema is not None:
-        return r.schema(schema).csv(path)
-    return r.option("inferSchema", True).csv(path)
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.option("header", True).option("inferSchema", True).csv(path)
 
 
-def read_json(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
+def read_json(spark: SparkSession, path: str) -> DataFrame:
     """JSONL natively; whole-document arrays via multiLine fallback
     (the reference tries lines=True then falls back the same way)."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    df = r.json(path)
+    df = spark.read.json(path)
     if "_corrupt_record" in df.columns and len(df.columns) == 1:
         df = spark.read.option("multiLine", True).json(path)
     return df
@@ -146,21 +135,13 @@ READERS = {
 }
 
 
-def read_source(
-    spark: SparkSession,
-    path: str,
-    fmt: str,
-    schema: StructType | None = None,
-) -> DataFrame:
+def read_source(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     fmt = fmt.lower().lstrip(".")
     if fmt not in READERS:
         raise UnsupportedSourceError(
             f"unsupported source format {fmt!r}; supported: {sorted(READERS)}"
         )
-    reader = READERS[fmt]
-    if fmt in ("csv", "json"):
-        return reader(spark, path, schema)
-    return reader(spark, path)
+    return READERS[fmt](spark, path)
 
 
 def read_schema(spark: SparkSession, path: str, fmt: str = "parquet") -> list[str]:

@@ -15,11 +15,12 @@
                         registered StructType
                         [load_to_bronze.py:123-137,457-490]
 
-The row checks run as ONE aggregation pass (A9's per-column loop
-collapses into a single agg of conditional counts) plus one distinct
-count — two jobs regardless of column count, versus the reference's
-one DuckDB query per column.  At 100 TB both are map-side partial
-aggregates; the dup check's distinct is the only shuffle.
+The row checks run as ONE aggregation (A9's per-column loop and A8's
+composite-key distinct count collapse into a single agg of conditional
+counts plus one count_distinct) — one scan of the source regardless of
+column count, versus the reference's one DuckDB query per column.  At
+100 TB the counts are map-side partial aggregates; the dup check's
+distinct is the only shuffle.
 """
 
 from __future__ import annotations
@@ -112,29 +113,26 @@ class RowValidation:
 
 def validate_rows(df: DataFrame, required_columns: list[str]) -> RowValidation:
     """V3: one aggregation pass for all per-column null counts (A9)
-    plus one composite-duplicate count (A8).  Non-fatal by contract —
-    the caller logs and proceeds (reference WARNING-and-continue)."""
+    and the composite-duplicate count (A8).  The normalized key is
+    never NULL (NULL parts become a sentinel), so count_distinct
+    counts every distinct key.  Non-fatal by contract — the caller
+    logs and proceeds (reference WARNING-and-continue)."""
     numeric = {
         f.name
         for f in df.schema.fields
         if isinstance(f.dataType, NumericType)
     }
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
+    key = F.concat_ws(SEP, *[_normalized_key(F.col(c)) for c in required_columns])
+    aggs = [
+        F.count(F.lit(1)).alias("__total"),
+        F.count_distinct(key).alias("__distinct"),
+    ] + [
         F.count(F.when(null_blank_nan(F.col(c), c in numeric), 1)).alias(c)
         for c in required_columns
     ]
     row = df.agg(*aggs).collect()[0].asDict()
     total = row.pop("__total")
-    distinct = (
-        df.select(
-            F.concat_ws(
-                SEP, *[_normalized_key(F.col(c)) for c in required_columns]
-            ).alias("__k")
-        )
-        .distinct()
-        .count()
-    )
-    dups = total - distinct
+    dups = total - row.pop("__distinct")
     return RowValidation(
         ok=all(v == 0 for v in row.values()) and dups == 0,
         total_rows=total,

@@ -78,17 +78,15 @@ def test_unknown_format_raises(spark):
         read_source(spark, "/nonexistent", "avro")
 
 
-# -- mapping projection (P1-P3) --------------------------------------
+# -- mapping projection (P1-P2) --------------------------------------
 def test_mapping_rename_and_id_cast(spark, csv_file):
     df = read_source(spark, csv_file, "csv")
-    out = apply_mapping(df, MAPPINGS, batch_id="BATCH000042")
-    assert out.columns == ["cst_id", "cst_key", "cst_gndr", "amount", "dwh_batch_id"]
+    out = apply_mapping(df, MAPPINGS)
+    assert out.columns == ["cst_id", "cst_key", "cst_gndr", "amount"]
     rows = {r.cst_key: r for r in out.collect()}
     # P2: inference-mangled double ids -> clean longs
     assert rows["K1"].cst_id == 1 and isinstance(rows["K1"].cst_id, int)
     assert rows["K3"].cst_id is None
-    # P3: batch stamp on every row
-    assert all(r.dwh_batch_id == "BATCH000042" for r in rows.values())
 
 
 def test_mapping_matches_normalized_headers(spark):

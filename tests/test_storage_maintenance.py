@@ -33,13 +33,44 @@ def test_schema_evolution_read_unions_footers(spark, wh):
     )
     wh.write_batch(old, "bronze", "t", "B1")
     wh.write_batch(new, "bronze", "t", "B2")
-    merged = wh.read_table_evolved("bronze", "t")
+    merged = wh.read_table("bronze", "t")
     assert "score" in merged.columns
     got = {
         (r["id"], r["score"])
         for r in merged.select("id", "score").collect()
     }
     assert got == {(1, None), (2, None), (3, 7.5)}
+    assert "score" in wh.read_batch("bronze", "t", "B2").columns
+    # re-running the older-shaped batch keeps the column B2 still holds
+    wh.write_batch(old, "bronze", "t", "B1")
+    assert wh.read_table("bronze", "t").columns == [
+        "id", "v", "score", BATCH_COL
+    ]
+
+
+def test_reads_start_no_spark_job(spark, wh):
+    wh.write_batch(
+        spark.createDataFrame([(1, "a")], "id int, v string"),
+        "bronze", "t", "B1",
+    )
+    sc = spark.sparkContext
+    group = "test_reads_start_no_spark_job"
+    sc.setJobGroup(group, "warehouse reads")
+    try:
+        table_cols = wh.read_table("bronze", "t").columns
+        batch_cols = wh.read_batch("bronze", "t", "B1").columns
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert table_cols == batch_cols == ["id", "v", BATCH_COL]
+
+
+def test_table_with_only_empty_writes_reads_as_empty_frame(spark, wh):
+    empty = spark.createDataFrame([], "id int, v string")
+    assert wh.write_batch(empty, "bronze", "t", "B1") == 0
+    df = wh.read_table("bronze", "t")
+    assert df.columns == ["id", "v", BATCH_COL]
+    assert df.count() == 0
 
 
 def test_compaction_bounds_files_and_preserves_rows(spark, wh):
@@ -241,6 +272,24 @@ def test_merge_upsert_delete_empties_whole_partition(spark, wh):
         os.path.join(wh.path("silver", "t"), f"{BATCH_COL}=B2")
     )
     assert _rows(wh.read_table("silver", "t").select("uid")) == [(1,), (2,)]
+
+
+def test_merge_upsert_keeps_evolved_column(spark, wh):
+    wh.write_batch(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"),
+        "bronze", "t", "B1",
+    )
+    wh.write_batch(
+        spark.createDataFrame([(3, "c", 7.5)], "id int, v string, score double"),
+        "bronze", "t", "B2",
+    )
+    src = spark.createDataFrame(
+        [(3, "C", 9.0)], "id int, v string, score double"
+    )
+    res = wh.merge_upsert("bronze", "t", src, "id", "B3")
+    assert res == {"updated": 1, "inserted": 0, "deleted": 0}
+    got = _rows(wh.read_table("bronze", "t").select("id", "v", "score"))
+    assert got == [(1, None, "a"), (2, None, "b"), (3, 9.0, "C")]
 
 
 # -- time travel (read_as_of / list_batches) --------------------------
