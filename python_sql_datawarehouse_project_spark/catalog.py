@@ -66,17 +66,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # sub-microsecond precision (1.7e18 needs 61 bits > double's 53)
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return spark.read.parquet(path)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register every registry table as a temp view for spark.sql use."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

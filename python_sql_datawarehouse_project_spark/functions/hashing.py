@@ -242,17 +242,6 @@ def sql_dot(a_expr: str, b_expr: str) -> str:
     return f"list_dot_product({a_expr}, {b_expr})"
 
 
-def sql_cosine(a_expr: str, b_expr: str) -> str:
-    return (
-        f"({sql_dot(a_expr, b_expr)} / "
-        f"(sqrt({sql_dot(a_expr, a_expr)}) * sqrt({sql_dot(b_expr, b_expr)})))"
-    )
-
-
-def sql_int_list(xs: list[int]) -> str:
-    return "[" + ", ".join(str(x) for x in xs) + "]"
-
-
 def sql_rp_bucket(vn_expr: str = "vn") -> str:
     """RP_BITS-bit hyperplane-sign bucket of a normalized DOUBLE[]
     column, emitted for DuckDB — the exact twin of

@@ -84,8 +84,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_active_or_build(**kwargs) -> SparkSession:
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session(**kwargs)

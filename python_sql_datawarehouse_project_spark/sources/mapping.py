@@ -5,11 +5,17 @@ layer that renames raw source columns to bronze target columns.
       [reference scripts/load_to_bronze.py:527-560]
   P2: heuristic id re-cast — if the TARGET name is id-like and the
       target type is integral, CAST(ROUND(CAST(x AS DOUBLE)) AS
-      BIGINT) (pandas inference turns int ids with NaNs into
-      doubles); numeric targets get a plain numeric cast
+      BIGINT) (pandas writes int ids with NaNs as doubles, "1.0")
       [load_to_bronze.py:246-262,527-553]
   P3: dwh_batch_id literal injection [load_to_bronze.py:559] is done
       by the bronze write (plans/warehouse.py Warehouse.write_batch)
+
+Every other mapped column is cast to its declared type, so a bronze
+column's type is the mapping's (the reference's fixed bronze DDL,
+SURVEY.md §1.4), whatever the file holds: CSVs arrive all-string
+(sources/readers.py).  A value that does not parse under its declared
+type lands as NULL, as silver's own casts would make it.  Integral
+targets parse through DECIMAL(38,18), so "3.0" lands as 3.
 
 Name normalization (case/space-insensitive matching) mirrors the
 reference's normalize_name [batch_processing.py:59-79].
@@ -31,7 +37,15 @@ from pyspark.sql import functions as F
 _ID_RE = re.compile(r"(^id$)|(_id$)|(^id_)|(id$)", re.IGNORECASE)
 
 _INT_TYPES = {"int", "integer", "bigint", "long", "smallint", "tinyint"}
-_NUM_TYPES = {"double", "float", "decimal", "numeric", "real"}
+
+# Reference type names Spark reads differently: a bare NUMERIC/DECIMAL
+# is DECIMAL(38,18) there (SURVEY.md §1.2) but decimal(10,0) to Spark,
+# and TEXT is no Spark type at all.
+_SPARK_TYPES = {
+    "numeric": "decimal(38,18)",
+    "decimal": "decimal(38,18)",
+    "text": "string",
+}
 
 
 def normalize_name(name: str) -> str:
@@ -51,18 +65,18 @@ class ColumnMapping:
 
 
 def _cast_for_target(col: Column, m: ColumnMapping) -> Column:
-    base = m.target_type.lower().split("(")[0]
-    if _ID_RE.search(m.target) and base in _INT_TYPES:
-        # P2: round through double first — id columns arrive as
-        # inference-mangled doubles ("1.0") from NaN-bearing sources
-        return F.round(col.cast("double")).cast("long")
-    if base in _NUM_TYPES or base in _INT_TYPES:
-        return col.cast(m.target_type if "(" in m.target_type else base)
-    return col
+    target = m.target_type.strip().lower()
+    target = _SPARK_TYPES.get(target, target)
+    if target.split("(")[0] in _INT_TYPES:
+        if _ID_RE.search(m.target):
+            # P2: round through double first
+            return F.round(col.try_cast("double")).cast("long")
+        return col.try_cast("decimal(38,18)").try_cast(target)
+    return col.try_cast(target)
 
 
 def apply_mapping(df: DataFrame, mappings: list[ColumnMapping]) -> DataFrame:
-    """P1 projection/rename + P2 casts.
+    """P1 projection/rename + P2 and declared-type casts.
 
     Source columns are matched by normalized name, so a CSV header
     ' Cst Gendr ' maps onto source 'cst_gendr' (the reference's real

@@ -7,8 +7,9 @@ no separate "convert" step because every downstream operator consumes
 the DataFrame directly, and the bronze write (Warehouse.write_batch)
 lands snappy parquet anyway.
 
-  read_csv      S1: header + schema inference
-                [convert_to_parquet.py:184]
+  read_csv      S1: header, every column a string; bronze types
+                come from the ingest mapping (sources/mapping.py),
+                not from inference [convert_to_parquet.py:184]
   read_excel    S2: no core Spark reader; driver-side pandas bridge
                 when an engine is available, else the stdlib ZIP+XML
                 xlsx parser (sources/xlsx.py); legacy .xls gets a
@@ -39,7 +40,7 @@ class UnsupportedSourceError(RuntimeError):
 
 
 def read_csv(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.option("header", True).option("inferSchema", True).csv(path)
+    return spark.read.option("header", True).csv(path)
 
 
 def read_json(spark: SparkSession, path: str) -> DataFrame:

@@ -82,49 +82,3 @@ def test_drop_release_restores_prior_membership(spark, grams, idx):
     idx.append_batch(spark, r2, "b1")
     idx.drop_release("b1")
     assert _rows(idx.merged(spark)) == _rows(bloom_words(r1))
-
-
-def test_streaming_maintenance_equals_batch_build(spark, sf_dir, tmp_path, grams):
-    # Releases arriving through the Structured-Streaming drain must
-    # leave the index identical to batch-built partitions, and the
-    # merged view identical to a from-scratch bloom over the union;
-    # replaying an epoch (foreachBatch re-invocation with the same
-    # rows) must change nothing — the family's exactly-once argument.
-    from python_sql_datawarehouse_project_spark.catalog import load_table
-    from python_sql_datawarehouse_project_spark.streaming.bloom_maintenance import (
-        StreamingBloomMaintenance,
-    )
-
-    bench, _ = grams
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") % 100 == 0
-    )
-    staging = tmp_path / "staging"
-    staging.mkdir()
-    splits = {
-        "REL000001": docs.where(F.col("doc_id") <= 200),
-        "REL000002": docs.where(F.col("doc_id") > 200),
-    }
-    for bid, d in splits.items():
-        d.select("doc_id", "text").withColumn(
-            "dwh_batch_id", F.lit(bid)
-        ).toPandas().to_parquet(str(staging / f"{bid}.parquet"), index=False)
-
-    idx = BloomIndex(Warehouse(spark, str(tmp_path / "wh")))
-    maint = StreamingBloomMaintenance(idx)
-    maint.run_available_now(
-        spark,
-        str(staging),
-        str(tmp_path / "cp"),
-        "doc_id bigint, text string, dwh_batch_id string",
-    )
-    assert sorted(idx.wh.list_batches("index", "bloom_words")) == [
-        "REL000001",
-        "REL000002",
-    ]
-    merged = _rows(idx.merged(spark))
-    assert merged == _rows(bloom_words(bench.select("h").distinct()))
-    # epoch replay: re-deliver both releases in one batch
-    replay = spark.read.parquet(str(staging))
-    maint.process_batch(replay, epoch_id=99)
-    assert _rows(idx.merged(spark)) == merged

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -87,6 +88,8 @@ def test_mapping_rename_and_id_cast(spark, csv_file):
     # P2: inference-mangled double ids -> clean longs
     assert rows["K1"].cst_id == 1 and isinstance(rows["K1"].cst_id, int)
     assert rows["K3"].cst_id is None
+    # a bare `numeric` target is DECIMAL(38,18), not Spark's decimal(10,0)
+    assert rows["K1"].amount == Decimal("10.5")
 
 
 def test_mapping_matches_normalized_headers(spark):
@@ -177,6 +180,48 @@ def test_ingest_directory_end_to_end(spark, tmp_path, csv_file):
     assert statuses["cust_info_BATCH000001.csv"]["load_status"] == "SUCCESS"
     rv = log.read("row_validation_log")[0]
     assert rv["status"] == "FAILED" and rv["duplicate_rows"] == 1  # non-fatal
+
+
+def test_bronze_types_come_from_mapping_not_file(spark, tmp_path):
+    # Two batches whose files would infer different types (B1: "AW1"
+    # ids and ISO dates; B2: all-digit ids and one bad date) land with
+    # the mapping's types, so both batches stay readable together.
+    import datetime as dt
+
+    plan = IngestPlan(
+        configs=[SourceConfig("erp", "csv", "CUST_AZ12", "erp_cust_az12")],
+        mappings={
+            "erp_cust_az12": [
+                ColumnMapping("cid", "cid", "string"),
+                ColumnMapping("bdate", "bdate", "date"),
+                ColumnMapping("gen", "gen", "string"),
+            ]
+        },
+    )
+    files = {
+        "B1": "cid,bdate,gen\nAW1,1970-01-02,F\nAW2,1980-03-04,M\n",
+        "B2": "cid,bdate,gen\n11,1990-05-06,F\n12,not-a-date,M\n",
+    }
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    log = RunLog(str(tmp_path / "wh"))
+    for bid, text in files.items():
+        incoming = tmp_path / bid
+        incoming.mkdir()
+        (incoming / f"CUST_AZ12_{bid}.csv").write_text(text)
+        [r] = ingest_directory(spark, wh, log, plan, str(incoming), "erp", bid)
+        assert r.status == "LOADED"
+    table = wh.read_table("bronze", "erp_cust_az12")
+    assert table.schema["cid"].dataType.simpleString() == "string"
+    assert table.schema["bdate"].dataType.simpleString() == "date"
+    rows = {r.cid: r.bdate for r in table.collect()}
+    assert rows == {
+        "AW1": dt.date(1970, 1, 2),
+        "AW2": dt.date(1980, 3, 4),
+        "11": dt.date(1990, 5, 6),
+        "12": None,  # does not parse as a date
+    }
+    fp = wh.fingerprint_batches("bronze", "erp_cust_az12").collect()
+    assert sorted((r.dwh_batch_id, r.n_rows) for r in fp) == [("B1", 2), ("B2", 2)]
 
 
 def _write_minimal_xlsx(path: str) -> None:
@@ -302,41 +347,3 @@ def test_orc_text_binary_readers_roundtrip(spark, tmp_path):
     bin_df = readers.read_source(spark, str(blob), "binary")
     row = bin_df.select("length", "content").first()
     assert row.length == 8 and bytes(row.content) == b"\x00\x01\x02spark"
-
-
-def test_synthetic_docs_datasource_deterministic_and_partitioned(spark):
-    # The Python Data Source API seam: registered format reads run
-    # executor-side, content is a pure function of (seed, row_id) —
-    # same rows for ANY partitioning — and the schema feeds the text
-    # operators directly.
-    from python_sql_datawarehouse_project_spark.sources import pyds
-
-    pyds.register(spark)
-    a = (
-        spark.read.format("synthetic_docs")
-        .option("n_rows", 500)
-        .option("n_parts", 8)
-        .load()
-    )
-    b = (
-        spark.read.format("synthetic_docs")
-        .option("n_rows", 500)
-        .option("n_parts", 3)  # different partitioning, same corpus
-        .load()
-    )
-    assert a.count() == 500
-    assert a.rdd.getNumPartitions() == 8
-    ra, rb = sorted(map(tuple, a.collect())), sorted(map(tuple, b.collect()))
-    assert ra == rb
-    # executor rows match the driver-side pure function
-    assert ra[7] == pyds.doc_row(42, ra[7][0]) or ra[7][0] != 7
-    want = [pyds.doc_row(42, i) for i in range(500)]
-    assert ra == sorted(want)
-    # the generated corpus drives a real text operator end to end
-    from python_sql_datawarehouse_project_spark.operators.text import _tokens
-    from pyspark.sql import functions as F
-
-    toks = a.select(F.size(_tokens(F.col("text"))).alias("n")).agg(
-        F.min("n"), F.max("n")
-    ).first()
-    assert toks[0] >= 20 and toks[1] <= 84

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_sql_datawarehouse_project_spark.plans import scd2
+from python_sql_datawarehouse_project_spark.plans.warehouse import BATCH_COL, Warehouse
 
 KEY, TS, TIE = "cust_id", "change_ts", "change_id"
 
@@ -54,6 +55,12 @@ def _split_by_day(feed, cuts):
 def _canon(df):
     cols = sorted(df.columns)
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _latest(wh):
+    """A streamed dimension: its last snapshot batch."""
+    last = wh.list_batches("gold", "dim")[-1]
+    return wh.read_batch("gold", "dim", last).drop(BATCH_COL)
 
 
 @pytest.mark.parametrize(
@@ -127,9 +134,7 @@ def test_streaming_scd2_equals_full_rebuild(spark, tmp_path):
     import os
     import time
 
-    from python_sql_datawarehouse_project_spark.streaming.scd2_maintenance import (
-        StreamingSCD2Maintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
 
     feed = _feed(spark)
     parts = _split_by_day(
@@ -147,8 +152,10 @@ def test_streaming_scd2_equals_full_rebuild(spark, tmp_path):
         os.rename(d / f, dst)
         t = time.time() - 300 + i * 10
         os.utime(dst, (t, t))
-    handler = StreamingSCD2Maintenance(str(tmp_path / "dim"), KEY, TS, TIE)
-    got = handler.run_available_now(spark, str(stage), feed.schema)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    fold = maintenance.fold_scd2(wh, "gold", "dim", KEY, TS, TIE)
+    maintenance.drain(spark, str(stage), feed.schema, fold, str(tmp_path / "cp"))
+    got = _latest(wh)
     full = scd2.full_rebuild(feed, KEY, TS, TIE)
     assert _canon(got) == _canon(full)
 
@@ -156,16 +163,15 @@ def test_streaming_scd2_equals_full_rebuild(spark, tmp_path):
 def test_streaming_scd2_epoch_replay_is_idempotent(spark, tmp_path):
     # Replaying an epoch (foreachBatch's at-least-once contract) must
     # rewrite the same snapshot, not fork the lineage.
-    from python_sql_datawarehouse_project_spark.streaming.scd2_maintenance import (
-        StreamingSCD2Maintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
 
     feed = _feed(spark)
     init, b1 = _split_by_day(feed, [dt.datetime(2024, 1, 7)])
-    handler = StreamingSCD2Maintenance(str(tmp_path / "dim"), KEY, TS, TIE)
-    handler.process_batch(init, 0)
-    handler.process_batch(b1, 1)
-    once = _canon(handler.latest_snapshot(spark))
-    handler.process_batch(b1, 1)  # replay epoch 1
-    twice = _canon(handler.latest_snapshot(spark))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    fold = maintenance.fold_scd2(wh, "gold", "dim", KEY, TS, TIE)
+    maintenance.fold_epoch(fold, init, 0)
+    maintenance.fold_epoch(fold, b1, 1)
+    once = _canon(_latest(wh))
+    maintenance.fold_epoch(fold, b1, 1)  # replay epoch 1
+    twice = _canon(_latest(wh))
     assert once == twice

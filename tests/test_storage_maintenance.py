@@ -407,9 +407,7 @@ def test_streaming_merge_equals_sequential_batch_merges(spark, wh, tmp_path):
     import os
     import time
 
-    from python_sql_datawarehouse_project_spark.streaming.merge_maintenance import (
-        StreamingMergeMaintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
 
     _merge_fixture(spark, wh)  # B1: 1,2  B2: 3,4
     batches = [
@@ -429,10 +427,9 @@ def test_streaming_merge_equals_sequential_batch_merges(spark, wh, tmp_path):
         t = time.time() - 300 + i * 10
         os.utime(dst, (t, t))
 
-    handler = StreamingMergeMaintenance(
-        wh, "silver", "t", "uid", delete_col="is_deleted"
-    )
-    got = handler.run_available_now(spark, str(stage), _cdc_schema())
+    fold = maintenance.fold_merge(wh, "silver", "t", "uid", delete_col="is_deleted")
+    maintenance.drain(spark, str(stage), _cdc_schema(), fold, str(tmp_path / "cp"))
+    got = wh.read_table("silver", "t")
 
     # parallel warehouse taken through the same merges via the batch API
     wh2 = Warehouse(spark, str(tmp_path / "wh2"))
@@ -443,7 +440,7 @@ def test_streaming_merge_equals_sequential_batch_merges(spark, wh, tmp_path):
             "t",
             spark.createDataFrame(rows, _cdc_schema()),
             "uid",
-            f"M{i:06d}",
+            f"E{i:06d}",
             delete_col="is_deleted",
         )
     assert _rows(got.drop(BATCH_COL)) == _rows(
@@ -453,23 +450,18 @@ def test_streaming_merge_equals_sequential_batch_merges(spark, wh, tmp_path):
     assert _rows(got.select("uid")) == [(1,), (2,), (4,), (5,), (6,)]
 
 
-@pytest.mark.slow
 def test_streaming_merge_last_epoch_replay_converges(spark, wh):
-    from python_sql_datawarehouse_project_spark.streaming.merge_maintenance import (
-        StreamingMergeMaintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
 
     _merge_fixture(spark, wh)
-    handler = StreamingMergeMaintenance(
-        wh, "silver", "t", "uid", delete_col="is_deleted"
-    )
+    fold = maintenance.fold_merge(wh, "silver", "t", "uid", delete_col="is_deleted")
     b0 = spark.createDataFrame(
         [(2, "b2", 21.0, False), (5, "e", 50.0, False), (3, None, None, True)],
         _cdc_schema(),
     )
-    handler.process_batch(b0, 0)
+    maintenance.fold_epoch(fold, b0, 0)
     once = _rows(wh.read_table("silver", "t"))
-    handler.process_batch(b0, 0)  # foreachBatch at-least-once replay
+    maintenance.fold_epoch(fold, b0, 0)  # foreachBatch at-least-once replay
     assert _rows(wh.read_table("silver", "t")) == once
 
 

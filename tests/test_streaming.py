@@ -257,21 +257,22 @@ def _seed_mv_stream(spark, tmp, n_batches=2):
 
 def test_streaming_mv_maintenance_equals_batch_path(spark, tmp_path):
     from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
-    from python_sql_datawarehouse_project_spark.streaming.mv_maintenance import (
-        StreamingMVMaintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
     from tests.test_mv_incremental import B1, B2, _rows
 
     wh, staging = _seed_mv_stream(spark, tmp_path)
     names = ["mv_sales_monthly_productline", "mv_customer_lifetime_value"]
-    maint = StreamingMVMaintenance(wh, names)
     schema = (
         "order_number string, customer_key int, product_key int, "
         "order_date date, shipping_date date, due_date date, "
         "sales double, quantity int, price double, dwh_batch_id string"
     )
-    maint.run_available_now(
-        spark, staging, str(tmp_path / "cp"), schema
+    maintenance.drain(
+        spark,
+        staging,
+        schema,
+        maintenance.fold_mvs(wh, names),
+        str(tmp_path / "cp"),
     )
 
     import datetime as dt
@@ -314,20 +315,18 @@ def test_streaming_mv_replay_is_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
-    from python_sql_datawarehouse_project_spark.streaming.mv_maintenance import (
-        StreamingMVMaintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
     from tests.test_mv_incremental import B1, B2, _rows
 
     wh, staging = _seed_mv_stream(spark, tmp_path)
     names = ["mv_sales_monthly_productline"]
-    maint = StreamingMVMaintenance(wh, names)
+    fold = maintenance.fold_mvs(wh, names)
     arriving = spark.read.parquet(staging)
-    maint.process_batch(arriving, epoch_id=0)
+    maintenance.fold_epoch(fold, arriving, epoch_id=0)
     first = _rows(
         wh, names[0], B2, ["month", "product_name", "total_sales"]
     )
-    maint.process_batch(arriving, epoch_id=0)  # replay
+    maintenance.fold_epoch(fold, arriving, epoch_id=0)  # replay
     assert (
         _rows(wh, names[0], B2, ["month", "product_name", "total_sales"])
         == first
@@ -345,9 +344,7 @@ def test_streaming_mv_restart_processes_only_new_files(spark, tmp_path):
     import shutil
 
     from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
-    from python_sql_datawarehouse_project_spark.streaming.mv_maintenance import (
-        StreamingMVMaintenance,
-    )
+    from python_sql_datawarehouse_project_spark.streaming import maintenance
     from tests.test_mv_incremental import B1, B2, _rows
 
     wh, staging = _seed_mv_stream(spark, tmp_path)
@@ -357,18 +354,18 @@ def test_streaming_mv_restart_processes_only_new_files(spark, tmp_path):
     shutil.move(f"{staging}/{B2}.parquet", str(held / f"{B2}.parquet"))
 
     names = ["mv_sales_monthly_productline"]
-    maint = StreamingMVMaintenance(wh, names)
+    fold = maintenance.fold_mvs(wh, names)
     schema = (
         "order_number string, customer_key int, product_key int, "
         "order_date date, shipping_date date, due_date date, "
         "sales double, quantity int, price double, dwh_batch_id string"
     )
     cp = str(tmp_path / "cp")
-    maint.run_available_now(spark, staging, cp, schema)
+    maintenance.drain(spark, staging, schema, fold, cp)
     assert mi.state_batches(wh, names[0]) == [B1]
 
     shutil.move(str(held / f"{B2}.parquet"), f"{staging}/{B2}.parquet")
-    maint.run_available_now(spark, staging, cp, schema)
+    maintenance.drain(spark, staging, schema, fold, cp)
     assert mi.state_batches(wh, names[0]) == [B1, B2]
     assert mi.resolve_prev_state(wh, names[0], B2)[0] == B1
     # and the folded result equals the batch-path literal oracle
