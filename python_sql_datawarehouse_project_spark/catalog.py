@@ -4,6 +4,12 @@ The reference resolves tables through config tables in a `tools`
 schema (reference sql/tools/ddl_tools.sql:4-233); here the registry is
 a plain name->path mapping over a scale-factor directory, loaded
 lazily so Catalyst sees a parquet scan it can push filters into.
+
+Every table but a nanos-unit `events` reads through
+`sources.readers.read_parquet`, which keeps Spark's inferred schema per
+path and file identity (st_mtime_ns, st_size, st_ino): only the first
+load of a file runs the footer job, every later load plans with no
+Spark job, and a file rewritten in place is inferred again.
 """
 
 from __future__ import annotations
@@ -11,6 +17,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources.readers import read_parquet
 
 # Driver-provided tables (TESTDATA.md).
 TABLES = (
@@ -53,6 +61,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microseconds — exactly what DuckDB's us-resolution TIMESTAMP does,
     so oracle comparisons agree to the microsecond.  Micros-unit data
     needs no workaround and reads natively.
+
+    Every other load takes the schema cached by `read_parquet` (keyed
+    on the path and the file's identity), so a repeat load of an
+    unchanged file starts no Spark job.  The nanos branch keeps its own
+    read: the conf it sets changes the inferred type of `ts`.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; registry has {TABLES}")
@@ -65,4 +78,4 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # integer `div`, NOT `/`: float division of epoch-nanos loses
         # sub-microsecond precision (1.7e18 needs 61 bits > double's 53)
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

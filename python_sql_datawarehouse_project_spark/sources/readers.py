@@ -16,9 +16,16 @@ lands snappy parquet anyway.
                 typed UnsupportedSourceError [convert_to_parquet.py:186]
   read_json     S3: JSONL first, whole-document fallback
                 [convert_to_parquet.py:188-191]
-  read_parquet  S4: native [convert_to_parquet.py:193]
-  read_schema   S5: metadata-only column listing
-                [validate_mapping.py:365-366]
+  read_parquet  S4: native, with the file's schema resolved once
+                [convert_to_parquet.py:193]: the first read of a
+                path runs Spark's own inference (one footer job);
+                later reads of the same file pass that StructType
+                and start no job.  Cached per path under the file's
+                identity (st_mtime_ns, st_size, st_ino; for a
+                directory also each entry of one os.scandir), so a
+                file rewritten in place is inferred again.
+  read_schema   S5: metadata-only column listing; parquet answers
+                from the same cache [validate_mapping.py:365-366]
   read_orc      interchange format beyond the reference surface
   read_text     raw line-corpus ingestion (one row per line)
   read_binary   whole-file binary ingestion (the multimodal
@@ -32,7 +39,11 @@ files are small pre-ingest landing files, never warehouse-scale data
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class UnsupportedSourceError(RuntimeError):
@@ -52,8 +63,43 @@ def read_json(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+# path -> (file identity, Spark's inferred schema).  No lock: two
+# threads that miss on one file together both infer it and store the
+# same schema; the cost is one repeated footer job.
+_PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stat_key(st: os.stat_result) -> tuple:
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+def _identity(path: str) -> tuple:
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return _stat_key(st)
+    with os.scandir(path) as it:
+        entries = tuple(sorted((e.name, _stat_key(e.stat())) for e in it))
+    return (_stat_key(st), entries)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's inferred schema of a parquet file or directory, inferred
+    once per file identity.  A path that cannot be stat'ed goes to Spark
+    uncached, so a missing path raises Spark's own error."""
+    try:
+        ident = _identity(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    hit = _PARQUET_SCHEMAS.get(path)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _PARQUET_SCHEMAS[path] = (ident, schema)
+    return schema
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def read_excel(spark: SparkSession, path: str) -> DataFrame:
@@ -146,5 +192,8 @@ def read_source(spark: SparkSession, path: str, fmt: str) -> DataFrame:
 
 
 def read_schema(spark: SparkSession, path: str, fmt: str = "parquet") -> list[str]:
-    """S5: metadata-only column listing (no data scan for parquet)."""
+    """S5: metadata-only column listing.  Parquet reads the footer once
+    per file identity (parquet_schema); a repeat listing runs no job."""
+    if fmt.lower().lstrip(".") == "parquet":
+        return parquet_schema(spark, path).fieldNames()
     return read_source(spark, path, fmt).columns

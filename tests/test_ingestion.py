@@ -317,12 +317,84 @@ def test_excel_legacy_xls_still_gated(spark, tmp_path):
         read_source(spark, str(p), "xls")
 
 
+def _job_ids(spark, group, fn):
+    """Run fn() under a fresh job group; return (its result, the ids of
+    the Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_schema_only_read_is_metadata(spark, sf_dir):
-    # S5: column listing without a data scan (parquet footer only).
+    # S5: column listing without a data scan (parquet footer only); the
+    # footer is read once per file, so a repeat listing runs no job.
     from python_sql_datawarehouse_project_spark.sources.readers import read_schema
 
-    cols = read_schema(spark, f"{sf_dir}/nation.parquet", "parquet")
+    path = f"{sf_dir}/nation.parquet"
+    cols = read_schema(spark, path, "parquet")
     assert cols == ["n_nationkey", "n_name", "n_regionkey"]
+    again, jobs = _job_ids(
+        spark, "test_schema_only_read_is_metadata",
+        lambda: read_schema(spark, path, "parquet"),
+    )
+    assert jobs == []
+    assert again == cols
+
+
+def test_repeat_table_load_starts_no_spark_job(spark, sf_dir):
+    # S4: the star catalog resolves a table's schema once per file.
+    from python_sql_datawarehouse_project_spark.catalog import (
+        load_table,
+        table_path,
+    )
+
+    def load():
+        df = load_table(spark, sf_dir, "lineitem")
+        return df, df.columns
+
+    load()
+    (df, cols), jobs = _job_ids(
+        spark, "test_repeat_table_load_starts_no_spark_job", load
+    )
+    assert jobs == []
+    assert cols[0] == "l_orderkey"
+    assert df.schema == spark.read.parquet(table_path(sf_dir, "lineitem")).schema
+
+
+def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
+    # The cached schema is keyed on the file's identity, not its path.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_sql_datawarehouse_project_spark.catalog import (
+        load_table,
+        table_path,
+    )
+
+    path = table_path(str(tmp_path), "region")
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]}), path
+    )
+    first = load_table(spark, str(tmp_path), "region")
+    assert sorted(map(tuple, first.collect())) == [(0, "AFRICA"), (1, "ASIA")]
+
+    pq.write_table(
+        pa.table({
+            "r_regionkey": [0, 1],
+            "r_name": ["AFRICA", "ASIA"],
+            "r_comment": ["c0", "c1"],
+        }),
+        path,
+    )
+    second = load_table(spark, str(tmp_path), "region")
+    assert second.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(map(tuple, second.collect())) == [
+        (0, "AFRICA", "c0"), (1, "ASIA", "c1")
+    ]
 
 
 def test_orc_text_binary_readers_roundtrip(spark, tmp_path):
