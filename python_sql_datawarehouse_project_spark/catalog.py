@@ -6,10 +6,8 @@ a plain name->path mapping over a scale-factor directory, loaded
 lazily so Catalyst sees a parquet scan it can push filters into.
 
 Every table but a nanos-unit `events` reads through
-`sources.readers.read_parquet`, which keeps Spark's inferred schema per
-path and file identity (st_mtime_ns, st_size, st_ino): only the first
-load of a file runs the footer job, every later load plans with no
-Spark job, and a file rewritten in place is inferred again.
+`sources.readers.read_parquet`, whose schema cache makes a repeat load
+of an unchanged file start no Spark job.
 """
 
 from __future__ import annotations
@@ -62,10 +60,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     so oracle comparisons agree to the microsecond.  Micros-unit data
     needs no workaround and reads natively.
 
-    Every other load takes the schema cached by `read_parquet` (keyed
-    on the path and the file's identity), so a repeat load of an
-    unchanged file starts no Spark job.  The nanos branch keeps its own
-    read: the conf it sets changes the inferred type of `ts`.
+    Every other load reads through `read_parquet`, whose schema cache
+    makes a repeat load of an unchanged file start no Spark job.  The
+    nanos branch keeps its own read: the conf it sets changes the
+    inferred type of `ts`.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; registry has {TABLES}")

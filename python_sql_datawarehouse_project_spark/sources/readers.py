@@ -16,16 +16,16 @@ lands snappy parquet anyway.
                 typed UnsupportedSourceError [convert_to_parquet.py:186]
   read_json     S3: JSONL first, whole-document fallback
                 [convert_to_parquet.py:188-191]
-  read_parquet  S4: native, with the file's schema resolved once
+  read_parquet  S4: native, with a file's schema resolved once
                 [convert_to_parquet.py:193]: the first read of a
-                path runs Spark's own inference (one footer job);
-                later reads of the same file pass that StructType
-                and start no job.  Cached per path under the file's
-                identity (st_mtime_ns, st_size, st_ino; for a
-                directory also each entry of one os.scandir), so a
-                file rewritten in place is inferred again.
-  read_schema   S5: metadata-only column listing; parquet answers
-                from the same cache [validate_mapping.py:365-366]
+                regular file runs Spark's own inference (one footer
+                job); later reads of the same file pass that
+                StructType and start no job.  Cached per path under
+                the file's identity (st_mtime_ns, st_size, st_ino),
+                so a file rewritten in place is inferred again; a
+                directory dataset is inferred on every read.
+  read_schema   S5: metadata-only column listing
+                [validate_mapping.py:365-366]
   read_orc      interchange format beyond the reference surface
   read_text     raw line-corpus ingestion (one row per line)
   read_binary   whole-file binary ingestion (the multimodal
@@ -65,41 +65,31 @@ def read_json(spark: SparkSession, path: str) -> DataFrame:
 
 # path -> (file identity, Spark's inferred schema).  No lock: two
 # threads that miss on one file together both infer it and store the
-# same schema; the cost is one repeated footer job.
+# same schema; the cost is one repeated footer job.  The cached schema
+# assumes the confs that steer parquet inference (such as
+# spark.sql.legacy.parquet.nanosAsLong) keep one value in the process.
 _PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _stat_key(st: os.stat_result) -> tuple:
-    return (st.st_mtime_ns, st.st_size, st.st_ino)
-
-
-def _identity(path: str) -> tuple:
-    st = os.stat(path)
-    if not stat.S_ISDIR(st.st_mode):
-        return _stat_key(st)
-    with os.scandir(path) as it:
-        entries = tuple(sorted((e.name, _stat_key(e.stat())) for e in it))
-    return (_stat_key(st), entries)
-
-
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """Spark's inferred schema of a parquet file or directory, inferred
-    once per file identity.  A path that cannot be stat'ed goes to Spark
-    uncached, so a missing path raises Spark's own error."""
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan that infers a regular file's schema once per file
+    identity.  A directory, or a path that cannot be stat'ed, goes to
+    Spark uncached: a file rewritten inside a directory leaves the
+    directory's own stat unchanged, and a missing path raises Spark's
+    own error."""
     try:
-        ident = _identity(path)
+        st = os.stat(path)
     except OSError:
-        return spark.read.parquet(path).schema
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    ident = (st.st_mtime_ns, st.st_size, st.st_ino)
     hit = _PARQUET_SCHEMAS.get(path)
     if hit is not None and hit[0] == ident:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _PARQUET_SCHEMAS[path] = (ident, schema)
-    return schema
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMAS[path] = (ident, df.schema)
+    return df
 
 
 def read_excel(spark: SparkSession, path: str) -> DataFrame:
@@ -192,8 +182,5 @@ def read_source(spark: SparkSession, path: str, fmt: str) -> DataFrame:
 
 
 def read_schema(spark: SparkSession, path: str, fmt: str = "parquet") -> list[str]:
-    """S5: metadata-only column listing.  Parquet reads the footer once
-    per file identity (parquet_schema); a repeat listing runs no job."""
-    if fmt.lower().lstrip(".") == "parquet":
-        return parquet_schema(spark, path).fieldNames()
+    """S5: metadata-only column listing (no data scan for parquet)."""
     return read_source(spark, path, fmt).columns

@@ -397,6 +397,26 @@ def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
     ]
 
 
+def test_parquet_directory_sees_a_file_rewritten_inside_it(spark, tmp_path):
+    # Rewriting a file inside a dataset directory leaves the directory's
+    # own stat unchanged, so a directory read must not reuse a schema.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "ds" / "dwh_batch_id=B1"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"k": [1]}), str(part / "part-0.parquet"))
+    first = read_source(spark, str(tmp_path / "ds"), "parquet")
+    assert first.columns == ["k", "dwh_batch_id"]
+
+    pq.write_table(
+        pa.table({"k": [1], "v": ["x"]}), str(part / "part-0.parquet")
+    )
+    second = read_source(spark, str(tmp_path / "ds"), "parquet")
+    assert second.columns == ["k", "v", "dwh_batch_id"]
+    assert [tuple(r) for r in second.collect()] == [(1, "x", "B1")]
+
+
 def test_orc_text_binary_readers_roundtrip(spark, tmp_path):
     # S-family widening: ORC round-trip, line-text scan, whole-file
     # binary ingestion (the multimodal payload path).
