@@ -5,9 +5,8 @@ schema (reference sql/tools/ddl_tools.sql:4-233); here the registry is
 a plain name->path mapping over a scale-factor directory, loaded
 lazily so Catalyst sees a parquet scan it can push filters into.
 
-Every table but a nanos-unit `events` reads through
-`sources.readers.read_parquet`, whose schema cache makes a repeat load
-of an unchanged file start no Spark job.
+Every table reads through `sources.readers.read_parquet`, whose schema
+cache makes a repeat load of an unchanged file start no Spark job.
 """
 
 from __future__ import annotations
@@ -54,26 +53,25 @@ def events_ts_is_nanos(path: str) -> bool:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one registry table.
 
-    `events.ts` stored as TIMESTAMP(NANOS) is read as raw nanos
-    (legacy.parquet.nanosAsLong runtime conf) and truncated to
-    microseconds — exactly what DuckDB's us-resolution TIMESTAMP does,
-    so oracle comparisons agree to the microsecond.  Micros-unit data
-    needs no workaround and reads natively.
-
-    Every other load reads through `read_parquet`, whose schema cache
-    makes a repeat load of an unchanged file start no Spark job.  The
-    nanos branch keeps its own read: the conf it sets changes the
-    inferred type of `ts`.
+    `events.ts` stored as TIMESTAMP(NANOS) reads as raw nanos (the
+    legacy.parquet.nanosAsLong conf `session.build_session` sets) and
+    is truncated to microseconds — exactly what DuckDB's us-resolution
+    TIMESTAMP does, so oracle comparisons agree to the microsecond.
+    Micros-unit data needs no workaround and reads natively.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; registry has {TABLES}")
     path = table_path(sf_dir, name)
-    if name == "events" and events_ts_is_nanos(path):
-        from pyspark.sql import functions as F
-
+    nanos = name == "events" and events_ts_is_nanos(path)
+    if nanos:
+        # A no-op under build_session; a plain SparkSession (as
+        # `__spark_entry__` callers build) cannot read the file without it.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        # integer `div`, NOT `/`: float division of epoch-nanos loses
-        # sub-microsecond precision (1.7e18 needs 61 bits > double's 53)
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return read_parquet(spark, path)
+    df = read_parquet(spark, path)
+    if not nanos:
+        return df
+    from pyspark.sql import functions as F
+
+    # integer `div`, NOT `/`: float division of epoch-nanos loses
+    # sub-microsecond precision (1.7e18 needs 61 bits > double's 53)
+    return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

@@ -557,10 +557,6 @@ FROM binned GROUP BY 1
 EV10_ORACLE = _ev10_oracle()
 
 
-# ev8 leads: it hash-failed the r2 driver gate on a (fixed) oracle
-# typing bug, so it must re-gate inside the driver's 50-entry
-# correctness window (registry._MODULES ordering contract).
-
 # -- ev11: per-user hourly gap fill (time-series densification) ------
 _HOUR_US = 3_600_000_000
 

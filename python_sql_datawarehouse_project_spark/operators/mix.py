@@ -435,7 +435,7 @@ WHERE pr >= {DS5_QUANTILE}
 # -- ds11: bloom-screened clean mix (the 100 TB decontamination) ------
 def ds11_bloom_screened_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ds6's assembly with stage (d) swapped for the Bloom screen
-    (approx.qa23 / plans.bloom_index): a doc ships iff NONE of its
+    (approx.qa23): a doc ships iff NONE of its
     grams probe positive against the benchmark's fixed 2^22-bit
     membership sketch.  This is the shape a 100 TB run actually
     executes — the exact gram join ds6 performs shuffles the corpus

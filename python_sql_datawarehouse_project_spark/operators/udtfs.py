@@ -17,9 +17,6 @@ expression equivalent (a real tokenizer, a model call).  The
 measured gap between the two gates IS the documented cost of
 dropping to Python — arrow batching keeps it a constant factor, not
 the 10-100x of row-pickling UDFs.
-
-Registered at the REGISTRY TAIL (operators/text.py holds first-50
-slots this round; see registry._MODULES).
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
-"""Round-3 tail additions to the window family, registered at the
-REGISTRY TAIL (the driver's correctness gate checks the first 50
-registry keys and operators/windows is position-load-bearing this
-round — w1-w5 must stay at slots 1-5; see registry._MODULES).  Round
-4 folds these into the main module when the window reorders.
+"""Round-3 additions to the window family.
 
   w6_first_last_nth   FIRST_VALUE / LAST_VALUE / NTH_VALUE over a
                       full-partition frame — the navigation functions

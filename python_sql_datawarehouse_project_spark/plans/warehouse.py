@@ -469,8 +469,7 @@ class Warehouse:
         the key semi-join (at scale: a broadcast of the deletion list,
         which GDPR-class requests keep tiny), so a 100 TB table
         rewrites only the partitions a deleted key ever landed in —
-        with dd7-style id lists this is the deletion path a training
-        corpus needs when a takedown arrives."""
+        the deletion path a corpus needs when a takedown arrives."""
         table = self.read_table(layer, name)
         affected = [
             r[0]

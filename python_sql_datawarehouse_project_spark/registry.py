@@ -20,15 +20,8 @@ from .operators import (
     asof,
     bpe,
     corpus,
-    dedup,
-    embquality,
-    evals,
     events,
-    graph,
-    incremental,
-    ingest_verdict,
     layout,
-    kmeans,
     mix,
     multimodal,
     profiling,
@@ -37,20 +30,15 @@ from .operators import (
     reconcile,
     recursive,
     retrieval,
-    semdedup,
     semijoin,
-    similarity,
     skew,
-    spans,
     text,
     tpch,
     tpch2,
     tpch3,
-    embcompress,
     udtfs,
     windows,
     windows_extra,
-    winnow,
 )
 from .streaming import bounded as stream_bounded
 from .streaming import dedup as stream_dedup
@@ -61,34 +49,18 @@ from .streaming import stateful as stream_stateful
 from .streaming import tws as stream_tws
 from .streaming import windows as stream_windows
 
-# Key order is load-bearing: the driver's correctness gate checks the
-# FIRST 50 registry keys in insertion order (observed window size in
-# r1/r2/r5/r6).  After CORRECTNESS_r06 (50/50 green) the recorded
-# driver-green union is 159 of 182 keys, leaving exactly 23
-# never-driver-checked (recompute any time with
-# provenance.never_driver_green(list(queries()))).
-#
-# ROUND-7 ROTATION (executes VERDICT r6 "Next round" #1): ALL 23
-# never-driver-green keys enter the window —
-#   A. the 16 round-5-tail + round-3-straggler keys (w8, w9, rj2,
-#      qa20, qa21, tx17, ux2, ev18-ev21, dd13, sq1, ds7, zo1, dd11);
-#   B. the 7 round-6 additions (dd14, dd15, dd16, dd17, tx18, tx19,
-#      sj1);
-#   C. any round-7 additions (sim8 capped kNN, cs2 composed capped
-#      dedup pipeline) so never_driver_green() reaches AND STAYS
-#      empty after this round's rotation.
-# The window is padded back to 50 with the OLDEST previously-green
-# keys for re-confirmation (the 11 round-1 keys, then round-2 keys in
-# arrival order) per the verdict's prescription.  All 23 backlog keys
-# are green in the local two-SF oracle-parity pytest suite and the
-# committed 182/182 sf0.1 CLI sweep (ORACLECHECK_r06.json); the
-# rotation exists purely to convert builder-side evidence into
-# recorded driver rows.
+# The seven warehouse-parity modules come first: their 50 gates are
+# the keys COVERAGE.md's parity tables map, so a check of the first 50
+# registry keys covers exactly the warehouse-parity gates.
 _MODULES = (
+    analytics,
     windows,
     recursive,
+    reconcile,
+    tpch,
+    tpch2,
+    tpch3,
     rangejoin,
-    similarity,
     skew,
     text,
     stream_windows,
@@ -96,135 +68,24 @@ _MODULES = (
     stream_joins,
     stream_dedup,
     quality,
-    corpus,  # round-3 additions: never driver-checked, must be in window
+    corpus,
     layout,
-    incremental,
-    events,  # ev8 leads its module so it (r2 hash-fail, cast fixed) re-gates
-    analytics,
+    events,
     asof,
-    dedup,
-    kmeans,
     mix,
     multimodal,
-    profiling,  # new r3 tail additions (aj2/cs1/qa13/tx12 live after
-    # the window; round 4 reorders them in once r3 rows land)
-    stream_extras,  # stream_sliding_windows — same tail rule
-    stream_enrich,  # round-4 stream-static join gate — tail rule
-    tpch,  # q13-q15/q17 TPC-H report shapes — same tail rule
-    tpch2,  # q24-q29 round-4 additions: tail now, window next round
-    tpch3,  # q32-q39 round-4 additions (Q2/Q5/Q6/Q9/Q11/Q13/Q16/Q20
-    # shapes): tail now, window next round
-    embquality,  # emb1 centroid outliers — same tail rule
-    embcompress,  # emb3/emb4 round-4 compression audits — tail rule
-    reconcile,  # q40/q41 full-outer diff + set ops — tail rule
-    windows_extra,  # w6/w7 navigation + RANGE frame — same tail rule
-    udtfs,  # tx13 LATERAL Python UDTF — same tail rule
-    stream_tws,  # transformWithState twin — registers only where protobuf exists
-    evals,  # tx14/sim6 component scoreboards — same tail rule
-    spans,  # dd15 repeated-span census (round-6 addition) — tail rule
-    retrieval,  # tx18 BM25 scoring (round-6 addition) — tail rule
-    semijoin,  # sj1 semi-join reduction (round-6 addition) — tail rule
-    bpe,  # tx19 BPE pair census (round-6 addition) — tail rule
-    stream_bounded,  # round-8 bounded-arrival sessionization — window tier B
-    approx,  # round-8 sketch trio completion (qa22 HLL, ds9 priority
-    # sample, hh1 distributed Misra-Gries) — window tier B
-    graph,  # round-8 int64 fixed-point PageRank (gr1) — window tier B
-    ingest_verdict,  # round-9 composed per-ingest verdict (ix1) — window tier A
-    winnow,  # round-10 winnowing span-overlap family (wn1/wn2) — window tier A
-    semdedup,  # round-10 SemDeDup cluster-then-prune verdict — window tier A
+    profiling,
+    stream_extras,
+    stream_enrich,
+    windows_extra,
+    udtfs,
+    stream_tws,
+    retrieval,
+    semijoin,
+    bpe,
+    stream_bounded,
+    approx,
 )
-
-
-# The first len(_WINDOW_PRIORITY) registry keys, in THIS order; every
-# remaining key follows in _MODULES insertion order.  Keys listed here
-# must exist (asserted in queries()) so a renamed gate fails loudly
-# instead of silently dropping out of the window.
-_WINDOW_PRIORITY = (
-    # Round-10 window (VERDICT r9 #5): the driver checks the FIRST 50
-    # keys each round.  After CORRECTNESS_r09 the driver-green
-    # distribution is r9:50, r8:50, r7:45, r6:49, r5:3
-    # (provenance.driver_green_rounds()).
-    # -- tier A: never-driver-checked round-10 additions --------------
-    # wn1/wn2 (winnowing span-overlap family) and ds12 (temperature
-    # mixture allocation) are new this round and MUST be in the
-    # window per the standing rule (never-green keys enter first).
-    "wn1_winnowing_overlap",
-    "wn2_containment",
-    "wn3_span_decontamination",
-    "ds12_temperature_mix",
-    "dd19_semdedup",
-    "dd20_semdedup_capped",
-    # -- tier B: re-confirmation, oldest-first ------------------------
-    # The three r5 stragglers the r9 verdict named lead, then the
-    # r6-green keys in registry order.  With six tier-A inserts the
-    # keys past position 50 are stream_coldstart_purchases,
-    # ux1_pandas_udaf, qa19_ndv_profile, ds8_sequence_packing,
-    # dd12_triangle_census, sim7_knn_graph, ev16_cumulative_users,
-    # ev17_value_histogram — all green in every full self-sweep;
-    # they lead the round-11 rotation together with the r7 cohort.
-    "tx14_langid_confusion",
-    "sim6_ivf_recall",
-    "qa18_blocking_recall",
-    "tx6_decontamination",
-    "tx7_repetition",
-    "tx8_chunks",
-    "tx10_textrank",
-    "tx11_vocab_stats",
-    "qa8_chisq_drift",
-    "qa9_cms_heavy_hitters",
-    "qa10_join_explosion",
-    "qa11_fd_profile",
-    "qa12_corr_profile",
-    "pd1_window_dedup",
-    "eq1_int8_quantize",
-    "pk1_pack_chunks",
-    "ls1_leakage_safe_split",
-    "q24_order_priority_check",
-    "q25_volume_shipping",
-    "q26_market_share",
-    "q27_returned_items",
-    "q28_latency_priority",
-    "q29_promo_revenue",
-    "q30_pivot_priority_revenue",
-    "q31_date_dim",
-    "tx15_pii_redaction",
-    "tx16_bigram_novelty",
-    "emb2_dimension_profile",
-    "stream_enrich_segments",
-    "q32_min_cost_supplier",
-    "q33_local_supplier_volume",
-    "q34_forecast_revenue",
-    "q35_product_profit",
-    "q36_important_parts",
-    "q37_order_count_distribution",
-    "q38_supplier_part_variety",
-    "q39_promotion_candidates",
-    "q40_snapshot_diff",
-    "q41_set_ops",
-    "q42_table_fingerprint",
-    "q43_recursive_sql",
-    "q44_market_basket",
-    "emb3_int8_quant",
-    "emb4_matryoshka",
-    "stream_coldstart_purchases",
-    "ux1_pandas_udaf",
-    "qa19_ndv_profile",
-    "ds8_sequence_packing",
-    "dd12_triangle_census",
-    "sim7_knn_graph",
-    # -- positions 51-52: the r6 remainder, round-11 leads ------------
-    "ev16_cumulative_users",
-    "ev17_value_histogram",
-)
-
-
-def _ordered(raw: dict) -> dict:
-    missing = [k for k in _WINDOW_PRIORITY if k not in raw]
-    if missing:
-        raise ValueError(f"_WINDOW_PRIORITY keys absent from registry: {missing}")
-    out = {k: raw[k] for k in _WINDOW_PRIORITY}
-    out.update((k, v) for k, v in raw.items() if k not in out)
-    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -234,19 +95,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if dupes:
             raise ValueError(f"duplicate query keys: {dupes}")
         out.update(m.QUERIES)
-    return _ordered(out)
+    return out
 
 
 def oracles() -> dict[str, str]:
     out: dict[str, str] = {}
     for m in _MODULES:
         out.update(getattr(m, "ORACLES", {}))
-    # Order only matters for queries(); mirror it anyway so humans
-    # diffing the two dicts see the same leading keys.  Not every
-    # priority key necessarily has an oracle (weaker rows-only checks),
-    # so this tolerates absences instead of asserting like _ordered.
-    lead = [k for k in _WINDOW_PRIORITY if k in out]
-    return {k: out[k] for k in [*lead, *(k for k in out if k not in lead)]}
+    return out
 
 
 # Gates whose row-level output is big enough (millions of rows at
@@ -263,12 +119,11 @@ HASHED_AT_SCALE = frozenset({
     # 0.2-10M rows at sf10), not engine compute, so the hashed path
     # brings them into the sf10 sweep.  The compute-bound exclusions
     # (rj2's interval join, ds2/ds5/ds6/ds7's corpus quantiles,
-    # tx10/tx14's fixed-size-but-heavy oracles, q44's basket pairs,
-    # dd14/dd16's banded-LSH oracles) stay out — hashing cannot help
-    # an oracle whose WHERE/JOIN is the expensive part.
+    # tx10's fixed-size-but-heavy oracle, q44's basket pairs) stay
+    # out — hashing cannot help an oracle whose WHERE/JOIN is the
+    # expensive part.
     "aj1_asof_last_event",
     "ds3_filter_pipeline",
-    "dd15_repeated_spans",
     "ev3_session_windows",
     "mm4_phash_neardup",
     "stream_coldstart_purchases",
@@ -285,9 +140,6 @@ HASHED_AT_SCALE = frozenset({
     "tx5_tfidf_top_terms",
     "tx7_repetition",
     # pre-round-8 members
-    "dd4_simhash",
-    "dd19_semdedup",  # round-10: per-vector verdict, output ∝ corpus
-    "dd20_semdedup_capped",  # round-10: same output grain as dd19
     "ev11_gap_fill",
     "pd1_window_dedup",
     "q1_monthly_sales_product",
@@ -305,52 +157,4 @@ HASHED_AT_SCALE = frozenset({
     "w8_rolling_median",
     "w9_running_distinct",
     "zo1_zorder_code",
-})
-
-
-# Gates whose DUCKDB ORACLE (not the Spark operator) is quadratic or
-# recursive-closure work that does not complete at sf >= 1 in bounded
-# time: the scale sweep skips the oracle replay for these and records
-# the skip in the artifact's __meta__.  All are hash-green at the
-# three driver SFs, and each has either a capped scale-safe twin
-# (dd14/dd16/dd17/sim8/cs2's Spark side) or a declared small-corpus
-# role (dd5).  Kept in sync with measured probe results — a gate
-# leaves this set the round its oracle finishes at sf1 (round 7:
-# every member probed with a 180-300 s timeout; dd10's oracle
-# finished in 1.0 s and moved into the sweep, the rest timed out).
-HEAVY_ORACLE_SF1 = frozenset({
-    "cs1_canonical_selection",
-    "cs2_capped_canonical_pipeline",
-    "dd11_incremental_lsh",
-    # ix1's oracle embeds dd11's band CTE stack (the DuckDB-side
-    # cost) plus the bloom probe; it inherits dd11's policy verbatim.
-    # The Spark side gets its own decade timing in PERF.md round 9,
-    # and scripts/bench_ingest_loop.py measures the persisted-index
-    # form of the same loop across decades.  ix2 is the embedding
-    # modality of the same composition (dd6's band CTEs — same
-    # DuckDB-side cost class as dd6).
-    "ix1_ingest_verdict",
-    "ix2_embedding_ingest_verdict",
-    "dd12_triangle_census",
-    "dd13_ensemble_agreement",
-    "dd17_minhash_capped_pairs",
-    # gr1's oracle embeds dd17's CTE stack (the minhash band-join is
-    # the DuckDB-side cost), so it inherits dd17's policy verbatim;
-    # the Spark side has its own decade timing in PERF.md round 8.
-    "gr1_pagerank_fixedpoint",
-    "dd2_ngram_jaccard_pairs",
-    "dd3_minhash_lsh_pairs",
-    # tx20's oracle is dd3's band self-join plus a mod-split WHERE —
-    # same DuckDB cost class; the Spark side (broadcast asymmetric
-    # probe) has its own decade timing in PERF.md round 8.
-    "tx20_fuzzy_decontamination",
-    "dd5_embedding_neardup",
-    "dd6_embedding_neardup_lsh",
-    "dd7_dup_clusters",
-    "dd8_containment_pairs",
-    "dd9_fuzzy_pairs",
-    "qa15_lsh_recall",
-    "sim7_knn_graph",
-    "sim8_knn_graph_capped",
-    "sim9_knn_recall",
 })

@@ -63,6 +63,10 @@ def build_session(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # -- Arrow for all pandas-UDF extension operators --------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # -- TIMESTAMP(NANOS) parquet reads as raw int64 nanos ---------
+        # Set once: the reader consults it when a frame executes, so it
+        # cannot be scoped around a lazy read (catalog.load_table).
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # -- broadcast: dims in both the reference workload (37-row
         # category table) and TPC-H (region/nation/supplier/part at
         # dim scale) are far below this; 64 MB is safe with 4 GB+

@@ -66,8 +66,8 @@ def read_json(spark: SparkSession, path: str) -> DataFrame:
 # path -> (file identity, Spark's inferred schema).  No lock: two
 # threads that miss on one file together both infer it and store the
 # same schema; the cost is one repeated footer job.  The cached schema
-# assumes the confs that steer parquet inference (such as
-# spark.sql.legacy.parquet.nanosAsLong) keep one value in the process.
+# holds because the confs that steer parquet inference keep one value:
+# session.build_session sets spark.sql.legacy.parquet.nanosAsLong once.
 _PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 

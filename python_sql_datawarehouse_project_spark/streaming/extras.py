@@ -1,11 +1,7 @@
-"""Round-3 streaming additions, registered at the REGISTRY TAIL.
+"""Round-3 streaming additions.
 
 The implementations live beside their siblings (streaming/windows.py);
-only the registration is split out, because the driver's correctness
-gate checks the first 50 registry keys and the in-window stream block
-is position-load-bearing this round (ev8 must re-gate at slot 50 —
-see registry._MODULES).  Round 4 folds these keys back into the main
-stream block when the window reorders.
+only the registration is split out.
 """
 
 from __future__ import annotations

@@ -1,13 +1,13 @@
-"""Capture AQE *final* (post-execution) plans for the same-key
-self-join gates whose exchange-reuse rationale VERDICT r10 #2 flagged
-as asserted-not-shown: dd2, dd3, dd17, rj2.
+"""Capture AQE *final* (post-execution) plans for same-key self-join
+gates, so an exchange-reuse rationale is shown, not asserted (default:
+rj2).
 
 Static `.explain()` shows `AdaptiveSparkPlan isFinalPlan=false` and can
-never contain `ReusedExchange` nodes injected by AQE at runtime.  This
-script executes each gate with the noop sink is NOT enough either —
-the write wraps its own QueryExecution — so it runs `collect()` on the
-gate's own DataFrame (same plan, small results at these SFs) and then
-prints the now-final adaptive plan.
+never contain `ReusedExchange` nodes injected by AQE at runtime.
+Executing the gate into the noop sink does not help either, because
+the write wraps its own QueryExecution.  So the script runs
+`collect()` on the gate's own DataFrame (same plan, small results at
+these SFs) and then prints the now-final adaptive plan.
 
 Usage: python scripts/aqe_final_plans.py [sf_dir] [gate ...]
 Writes plans/r11/<gate>_aqe_final.txt
@@ -21,12 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-GATES = [
-    "dd2_ngram_jaccard_pairs",
-    "dd3_minhash_lsh_pairs",
-    "dd17_minhash_capped_pairs",
-    "rj2_interval_overlap",
-]
+GATES = ["rj2_interval_overlap"]
 
 
 def main() -> None:

@@ -397,6 +397,41 @@ def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
     ]
 
 
+def test_nanos_file_reads_the_same_before_and_after_an_events_load(
+    spark, tmp_path
+):
+    # The nanos reader conf is a session setting, not something an
+    # events load switches on: an unrelated TIMESTAMP(NANOS) file has
+    # one dtype whether or not a nanos events table was loaded first.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_sql_datawarehouse_project_spark.catalog import (
+        load_table,
+        table_path,
+    )
+
+    ts = pa.array(
+        [1_700_000_000_123_456_789, 1_700_000_001_000_000_000],
+        pa.timestamp("ns"),
+    )
+    other = str(tmp_path / "other.parquet")
+    pq.write_table(pa.table({"ts": ts}), other)
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": ts}),
+        table_path(str(tmp_path), "events"),
+    )
+
+    def dtype():
+        return dict(spark.read.parquet(other).dtypes)["ts"]
+
+    before = dtype()
+    events = load_table(spark, str(tmp_path), "events")
+    assert dtype() == before
+    rows = events.orderBy("event_id").collect()
+    assert [r.ts.microsecond for r in rows] == [123_456, 0]
+
+
 def test_parquet_directory_sees_a_file_rewritten_inside_it(spark, tmp_path):
     # Rewriting a file inside a dataset directory leaves the directory's
     # own stat unchanged, so a directory read must not reuse a schema.

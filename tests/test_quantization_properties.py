@@ -1,67 +1,7 @@
-"""Property tests (hypothesis) for the cross-engine determinism
-primitives: the int64 fixed-point mean that makes k-means oracle-able
-(operators/kmeans.py) must agree BITWISE between Python driver math
-and DuckDB SQL over arbitrary inputs — not just the embeddings the
-gate happens to use.  Spark's side uses the same double ops (floor of
-an exact power-of-two scaling), pinned separately by the sim4 oracle
-gate."""
+"""Property test for the xlsx reader's A1-reference column index: the
+letters-to-index map must round-trip over the whole column range."""
 
 from __future__ import annotations
-
-import math
-
-import duckdb
-import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-from python_sql_datawarehouse_project_spark.operators.kmeans import (
-    KM_OFFSET,
-    KM_Q,
-)
-
-components = st.floats(
-    min_value=-1.0, max_value=1.0, allow_nan=False, allow_infinity=False
-)
-
-
-def _py_quant_mean(xs: list[float]) -> float:
-    s = sum(math.floor((x + KM_OFFSET) * KM_Q) for x in xs)
-    return float(s // len(xs)) / KM_Q - KM_OFFSET
-
-
-@pytest.fixture(scope="module")
-def con():
-    return duckdb.connect()
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(components, min_size=1, max_size=64))
-def test_quantized_mean_bitwise_matches_duckdb(xs):
-    con = duckdb.connect()
-    got = con.execute(
-        f"""
-        SELECT CAST(SUM(CAST(floor((x + {KM_OFFSET}) * {KM_Q}) AS BIGINT))
-                    // COUNT(*) AS DOUBLE) / {KM_Q} - {KM_OFFSET}
-        FROM (SELECT unnest(?::DOUBLE[]) AS x)
-        """,
-        [xs],
-    ).fetchone()[0]
-    want = _py_quant_mean(xs)
-    # bitwise: struct-pack equality, not approx
-    import struct
-
-    assert struct.pack("<d", got) == struct.pack("<d", want), (got, want, xs)
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(components, min_size=1, max_size=64))
-def test_quantized_mean_is_close_to_true_mean(xs):
-    # the quantization must never distort clustering-relevant signal:
-    # error is bounded by one quantum plus the floor bias
-    got = _py_quant_mean(xs)
-    true = sum(xs) / len(xs)
-    assert abs(got - true) <= 2.0 / KM_Q + 1e-12
 
 
 def test_xlsx_column_index_roundtrip():
@@ -77,137 +17,3 @@ def test_xlsx_column_index_roundtrip():
 
     for i in [0, 1, 25, 26, 27, 51, 52, 701, 702, 703, 16383]:
         assert _col_index(f"{letters(i)}1") == i
-
-
-# -- emb3/emb4 (operators/embcompress.py) -----------------------------
-# The int8 quantization error bound and the prefix-energy range are
-# MATHEMATICAL invariants of the formulas, so hypothesis gets to try
-# arbitrary vectors, not just the embeddings table's.
-
-
-def _int8_sse(v: list[float]) -> float:
-    from python_sql_datawarehouse_project_spark.operators.embcompress import (
-        EMB3_LEVELS,
-    )
-
-    amax = max(abs(x) for x in v)
-    if amax == 0.0:
-        return 0.0
-    err = [
-        x - math.floor(x / amax * EMB3_LEVELS + 0.5) * amax / EMB3_LEVELS
-        for x in v
-    ]
-    s = 0.0
-    for e in err:
-        s += e * e
-    return s
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.floats(
-            min_value=-10.0,
-            max_value=10.0,
-            allow_nan=False,
-            allow_infinity=False,
-        ),
-        min_size=1,
-        max_size=64,
-    )
-)
-def test_int8_quant_error_within_half_step_bound(v):
-    # Per-component reconstruction error is at most half a quantization
-    # step (amax/127/2 — floor(x+0.5) is round-to-nearest), so
-    # sse <= dim * (amax/254)^2.  This is the headroom claim the emb3
-    # docstring's fixed-point scaling relies on.
-    from python_sql_datawarehouse_project_spark.operators.embcompress import (
-        EMB3_LEVELS,
-    )
-
-    amax = max(abs(x) for x in v)
-    sse = _int8_sse(v)
-    bound = len(v) * (amax / (2 * EMB3_LEVELS)) ** 2
-    assert sse <= bound * (1 + 1e-12) + 1e-300
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.floats(
-            min_value=-10.0,
-            max_value=10.0,
-            allow_nan=False,
-            allow_infinity=False,
-        ),
-        min_size=1,
-        max_size=64,
-    )
-)
-def test_int8_quant_sse_bitwise_matches_duckdb(v):
-    # The same single-argument transform evaluated by DuckDB must give
-    # the exact sequential-fold sse — the cross-engine identity emb3's
-    # oracle depends on, over arbitrary vectors.
-    from python_sql_datawarehouse_project_spark.operators.embcompress import (
-        EMB3_LEVELS,
-    )
-
-    if max(abs(x) for x in v) == 0.0:
-        return
-    # amax is computed IN-ENGINE from the same doubles, exactly like
-    # the emb3 oracle — injecting it as a repr'd literal would let
-    # DuckDB parse it as DECIMAL and re-round the arithmetic.
-    got = duckdb.connect().execute(
-        f"""
-        WITH s AS (
-            SELECT ?::DOUBLE[] AS v,
-                   list_max(list_transform(?::DOUBLE[], x -> abs(x))) AS amax
-        ),
-        e AS (
-            SELECT list_transform(
-                v,
-                x -> x - floor(x / amax * {EMB3_LEVELS!r} + 0.5)
-                         * amax / {EMB3_LEVELS!r}
-            ) AS err
-            FROM s
-        )
-        SELECT list_dot_product(err, err) FROM e
-        """,
-        [v, v],
-    ).fetchone()[0]
-    assert got == _int8_sse(v)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.floats(
-            min_value=-10.0,
-            max_value=10.0,
-            allow_nan=False,
-            allow_infinity=False,
-        ),
-        min_size=1,
-        max_size=64,
-    ).filter(lambda v: any(x != 0.0 for x in v))
-)
-def test_matryoshka_retained_energy_in_unit_interval(v):
-    from python_sql_datawarehouse_project_spark.operators.embcompress import (
-        EMB4_PREFIX,
-    )
-
-    head = v[:EMB4_PREFIX]
-    full = 0.0
-    for x in v:
-        full += x * x
-    h = 0.0
-    for x in head:
-        h += x * x
-    if full == 0.0:
-        # subnormal components square to 0.0 — the gate's full > 0.0
-        # filter excludes exactly these rows
-        return
-    retained = h / full
-    assert 0.0 <= retained <= 1.0 + 1e-12
-    if len(v) <= EMB4_PREFIX:
-        assert retained == pytest.approx(1.0, abs=1e-9)

@@ -206,34 +206,6 @@ def test_mg_frequent_items_partition_invariant_and_exact(spark, sf_dir):
         assert qualifying <= cands, (parts, qualifying - cands)
 
 
-def test_pagerank_fixedpoint_invariants(spark, sf_dir):
-    # gr1: int64 fixed-point PageRank over the dd17 pair graph.
-    # Invariants that pin the arithmetic (not just oracle agreement):
-    #   * an isolated node (degree 0, receives nothing) holds EXACTLY
-    #     the teleport rank after every iteration;
-    #   * every rank >= teleport;
-    #   * total rank mass never exceeds the initial mass (truncating
-    #     division only leaks mass downward; dangling nodes leak
-    #     their damped mass by declared design).
-    from python_sql_datawarehouse_project_spark.operators.graph import (
-        GR1_SCALE,
-        gr1_pagerank_fixedpoint,
-    )
-
-    rows = gr1_pagerank_fixedpoint(spark, sf_dir).collect()
-    n = len(rows)
-    assert n > 0
-    teleport = (3 * GR1_SCALE) // (20 * n)
-    isolated = [r for r in rows if r.degree == 0]
-    connected = [r for r in rows if r.degree > 0]
-    assert isolated and connected, "graph should mix both node kinds"
-    for r in isolated:
-        assert r.rank == teleport, (r.doc_id, r.rank, teleport)
-    for r in rows:
-        assert r.rank >= teleport
-    assert sum(r.rank for r in rows) <= GR1_SCALE
-
-
 @settings(max_examples=200, deadline=None)
 @given(hashes, hashes)
 def test_bloom_no_false_negatives_and_merge_law(bench: set[int], probe: set[int]):
@@ -298,28 +270,3 @@ def test_bloom_gate_brackets_exact_overlap(spark, sf_dir):
         assert r.n_exact_hits <= r.n_bloom_hits
         exact = tx[doc_id].n_overlap if doc_id in tx else 0
         assert r.n_exact_hits == exact, (doc_id, r.n_exact_hits, exact)
-
-
-def test_fuzzy_decontamination_verdict_invariants(spark, sf_dir):
-    # tx20's structural pins: only non-benchmark docs are flagged,
-    # estimates live on the MinHash agreement grid [EST_T, 1] with
-    # granularity 1/K, and every flagged doc genuinely shares a band
-    # bucket with some benchmark doc (no flag without a candidate).
-    from python_sql_datawarehouse_project_spark.functions.hashing import (
-        MINHASH_K,
-    )
-    from python_sql_datawarehouse_project_spark.operators.dedup import (
-        EST_T,
-        tx20_fuzzy_decontamination,
-    )
-    from python_sql_datawarehouse_project_spark.operators.text import BENCH_MOD
-
-    rows = tx20_fuzzy_decontamination(spark, sf_dir).collect()
-    assert rows, "fixture corpus should contain fuzzy contamination"
-    for r in rows:
-        assert r.doc_id % BENCH_MOD != 0
-        assert EST_T <= r.max_jaccard_est <= 1.0
-        # agreement is (# matching slots)/K — an exact grid point
-        assert abs(r.max_jaccard_est * MINHASH_K
-                   - round(r.max_jaccard_est * MINHASH_K)) < 1e-9
-        assert r.n_bench_matches >= 1

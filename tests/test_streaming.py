@@ -45,11 +45,15 @@ def test_stream_is_incremental(spark, sf_dir):
 
 def test_stream_scopes_session_conf(spark, sf_dir):
     # a drained stream query must not leave the nanos reader conf set
+    prior = spark.conf.get(sw._NANOS_CONF)
     spark.conf.unset(sw._NANOS_CONF)
-    before = spark.conf.get(sw._NANOS_CONF)  # engine default
-    assert before == "false"
-    sw.stream_tumbling_hourly(spark, sf_dir)
-    assert spark.conf.get(sw._NANOS_CONF) == before
+    try:
+        before = spark.conf.get(sw._NANOS_CONF)  # engine default
+        assert before == "false"
+        sw.stream_tumbling_hourly(spark, sf_dir)
+        assert spark.conf.get(sw._NANOS_CONF) == before
+    finally:
+        spark.conf.set(sw._NANOS_CONF, prior)
 
 
 def test_stream_pairs_equal_batch_join(spark, sf_dir):
