@@ -12,7 +12,7 @@ Layout:
   star        Gold star schema (dim_customers/dim_products/fact_sales)
               expressed over the TPC-H-ish test tables.
   operators/  Analytical query shapes (MV/EDA parity), recursive chain,
-              window ops, text/corpus/event extensions.
+              window ops, dedup/similarity extensions.
   functions/  Scalar cleansing kit (R1-R8), text analysis, fingerprints.
   sources/    Readers (csv/json/parquet/excel), mapping projection,
               validation operators (V1-V5).

@@ -1,2 +1,2 @@
 """Scalar/column function kits: reference cleansing rules (R1-R8) and
-the hashing kit the extension operators share."""
+the text/similarity extension functions."""

@@ -215,8 +215,7 @@ def _lsh_candidates(sk: DataFrame) -> DataFrame:
 
 def _sql_band_ctes() -> str:
     """shingled -> sketches -> bands CTE chain (no pairing policy) —
-    shared by the self-join oracles below and the asymmetric
-    new-vs-corpus probe in operators/incremental.py."""
+    shared by the self-join oracles below."""
     sig_items = ", ".join(
         f"list_min(list_transform(hs, x -> mod({H.MINHASH_A[i]} * x + "
         f"{H.MINHASH_B[i]}, {H.MINHASH_P})))"
@@ -693,10 +692,8 @@ DD6_BAND_BITS = H.RP_BITS // DD6_BANDS
 
 
 def _rp_bands(n: DataFrame) -> DataFrame:
-    """(vec_id, band_key): dd6's banded hyperplane-LSH keys as a frame
-    — factored out so asymmetric probes (ix2's new-vs-eval and
-    new-vs-corpus joins) can band each ROLE separately instead of
-    self-joining the whole table."""
+    """(vec_id, band_key): dd6's banded hyperplane-LSH keys as a
+    frame."""
     from .similarity import _bucket_col
 
     mask = (1 << DD6_BAND_BITS) - 1
@@ -855,8 +852,7 @@ def _auto_band_candidates(n: DataFrame, bits: int) -> DataFrame:
     # broadcast, one hash) — Catalyst does not share the subplan and
     # exchange reuse cannot fire across exchange kinds, so the
     # corpus-wide banding kernel executed twice per gate (initial
-    # plan: 2 ArrowEvalPython nodes -> 1 Scan ExistingRDD; ix1's
-    # ingest_verdict.py:330 established the same pattern).  The
+    # plan: 2 ArrowEvalPython nodes -> 1 Scan ExistingRDD).  The
     # checkpointed frame is (vec_id, band_key) longs — the id-only
     # discipline keeps it small at any scale.
     bands = _auto_bands(n, bits).localCheckpoint(eager=True)
@@ -907,8 +903,8 @@ def dd14_lsh_autosized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_auto_band_ctes(bands_count: int = AUTO_BANDS) -> str:
     """normalized -> meta (SQL-derived bits) -> bands CTE chain for
-    the auto-sized hyperplane banding — shared by dd14's oracle and
-    the asymmetric embedding-probe oracles (ix2).  The meta CTE
+    the auto-sized hyperplane banding — dd14's oracle, which dd16
+    and sim8 build on.  The meta CTE
     derives bits-per-band from COUNT(*) exactly like the Spark side's
     `_auto_bits(n.count())`."""
     # Plane index for band k, local bit t: i = k*bits + t; component
@@ -1125,10 +1121,9 @@ def _propagate_clusters(
     spark: SparkSession, docs: DataFrame, pairs: DataFrame
 ) -> DataFrame:
     """dd7's pointer-jumping min-label propagation over an ARBITRARY
-    (doc_a, doc_b) pair frame — shared by the inline dd7 gate (pairs
-    recomputed from documents) and the Warehouse-backed DedupIndex
-    (pairs read from the persisted candidate index), so the two paths
-    are bit-identical by construction."""
+    (doc_a, doc_b) pair frame — the inline dd7 gate feeds it pairs
+    recomputed from documents; a persisted pair table can feed it the
+    same way."""
     from .recursive import finalize_recursion
 
     edges = (
@@ -1591,10 +1586,8 @@ def cs1_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The gate recomputes dd7's full closure inline (a pure function of
     the input tables, as the oracle contract requires); a production
-    pipeline reads the persisted cluster labels instead — see
-    plans/dedup_index.DedupIndex.cs1_canonical_selection, which feeds
-    the SAME composition below from the Warehouse-backed index
-    (bit-identical by construction, pytest-pinned)."""
+    pipeline would read persisted cluster labels into the SAME
+    composition below."""
     labels = dd7_dup_clusters(spark, sf_dir).select(
         "doc_id", "cluster_id", "cluster_size"
     )
@@ -1605,8 +1598,7 @@ def _canonical_from_labels(
     spark: SparkSession, sf_dir: str, labels: DataFrame
 ) -> DataFrame:
     """cs1's scoring+argmax composition over an arbitrary label frame
-    (doc_id, cluster_id, cluster_size) — shared by the inline gate and
-    the DedupIndex variant."""
+    (doc_id, cluster_id, cluster_size) — shared by cs1 and cs2."""
     from pyspark.sql import Window
 
     from .text import tx2_quality_score
@@ -1670,8 +1662,7 @@ def cs2_capped_canonical_pipeline(
     (`_propagate_clusters` + `_canonical_from_labels`, shared
     verbatim), differing ONLY in the edge generator — dd17's capped
     candidates instead of dd3's uncapped ones.  Below the cap dd17 ==
-    dd3 bit-for-bit, so cs2 == cs1 there (pytest-pinned, and the
-    DedupIndex-fed cs1 variant is pinned to BOTH).  Above the cap,
+    dd3 bit-for-bit, so cs2 == cs1 there.  Above the cap,
     dense buckets contribute hub-star edges whose estimated Jaccard
     still must clear EST_T, trading a documented sliver of recall
     (dd17's contract) for the measured 7x sf10 completion.
@@ -1747,10 +1738,8 @@ def dd13_ensemble_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a 1-row scalar (audited SinglePartition).
 
     Like cs1, the gate recomputes BOTH candidate pipelines inline; a
-    production pipeline reads the persisted pair tables instead —
-    plans/dedup_index.DedupIndex.dd13_ensemble_agreement feeds the
-    SAME set algebra below from the index (bit-identical,
-    pytest-pinned)."""
+    production pipeline would read persisted pair tables into the
+    SAME set algebra below."""
     tp = dd3_minhash_lsh_pairs(spark, sf_dir)
     ep = dd6_embedding_neardup_lsh(spark, sf_dir)
     return _agreement_from_pairs(tp, ep)
@@ -1758,8 +1747,7 @@ def dd13_ensemble_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _agreement_from_pairs(tp: DataFrame, ep: DataFrame) -> DataFrame:
     """dd13's set algebra over arbitrary text-pair (doc_a, doc_b, ...)
-    and embedding-pair (vec_a, vec_b, ...) frames — shared by the
-    inline gate and the DedupIndex variant."""
+    and embedding-pair (vec_a, vec_b, ...) frames."""
     tp = tp.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b"),
         F.lit(1).alias("_t"),
@@ -1834,7 +1822,7 @@ def tx20_fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact join, qa23 bloom) structurally miss, the third rung of the
     decontamination ladder.
 
-    Scale shape is dd11's asymmetric probe pointed at the eval suite:
+    Scale shape is an asymmetric band probe of the eval suite:
     the benchmark side's band assignments AND signatures are both
     BROADCAST (bounded by the suite, 4 band rows + 16 longs per
     bench doc), so the corpus never shuffles — band-bucket match and

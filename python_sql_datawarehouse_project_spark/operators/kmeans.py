@@ -179,8 +179,7 @@ def _ivf_probe(
     (dot DESC, cid ASC on ties), probe the NPROBE best lists, exact
     fold cosine inside those lists only, top-k rank.  Shared by the
     sim4 gate (lists assigned inline from freshly-trained centroids)
-    and plans/ann_index.AnnIndex (lists read from the persisted
-    index) — bit-identical by construction."""
+    and any persisted-list reader — bit-identical by construction."""
     # per-query centroid ranking: sort (dot, -cid) ascending, reverse
     # -> dot DESC with cid ASC on ties, take NPROBE
     rank_arr = F.array(

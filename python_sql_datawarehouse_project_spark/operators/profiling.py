@@ -267,6 +267,99 @@ FROM msk, bo, tu, ti
 """
 
 
+# -- qa15: sample-based LSH recall audit ------------------------------
+QA15_SAMPLE = 200
+
+
+def qa15_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Measured recall of the MinHash-LSH banding (dd2/dd3's candidate
+    generator) against exact all-pairs Jaccard — on a BOUNDED sample.
+
+    The honest way to monitor an approximate dedup path in
+    production: exact ground truth over the full corpus is O(n^2) and
+    dies at scale, so the audit runs all-pairs on a fixed-size sample
+    (constant work regardless of corpus size) and reports
+    found/truth.  Banding candidacy for a pair depends only on the
+    two docs' signatures, so sample-restricted candidacy equals
+    full-corpus candidacy restricted to the sample — the sampled
+    recall is an unbiased read on the banding, not an artifact.
+
+    NULLIF guards the no-true-pairs degenerate sample (qa8 lesson:
+    Spark's non-ANSI / returns NULL where DuckDB yields inf)."""
+    from .dedup import JACCARD_T, _doc_sketches, _lsh_candidates
+
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") < QA15_SAMPLE
+    )
+    sk = _doc_sketches(docs)
+
+    def _jac(ni, na, nb):
+        return ni.cast("double") / (na + nb - ni)
+
+    a = sk.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
+    b = sk.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
+    allp = (
+        a.crossJoin(F.broadcast(b))
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select(
+            _jac(
+                F.size(F.array_intersect("hs_a", "hs_b")),
+                F.size("hs_a"),
+                F.size("hs_b"),
+            ).alias("j")
+        )
+    )
+    truth_n = allp.where(F.col("j") >= JACCARD_T).agg(
+        F.count(F.lit(1)).alias("n_truth")
+    )
+    found = _lsh_candidates(sk).select(
+        _jac(
+            F.size(F.array_intersect("hs_a", "hs_b")),
+            F.size("hs_a"),
+            F.size("hs_b"),
+        ).alias("j")
+    )
+    found_n = found.where(F.col("j") >= JACCARD_T).agg(
+        F.count(F.lit(1)).alias("n_found")
+    )
+    return truth_n.crossJoin(F.broadcast(found_n)).select(
+        "n_truth",
+        "n_found",
+        (
+            F.col("n_found").cast("double")
+            / F.nullif(F.col("n_truth").cast("double"), F.lit(0.0))
+        ).alias("recall"),
+    )
+
+
+def _qa15_oracle() -> str:
+    from .dedup import JACCARD_T, _sql_sketch_ctes
+
+    jac = (
+        "CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+        " / (len({a}) + len({b}) - len(list_intersect({a}, {b})))"
+    )
+    return f"""
+WITH {_sql_sketch_ctes()},
+sample AS (SELECT doc_id, hs FROM sketches WHERE doc_id < {QA15_SAMPLE}),
+truth AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM sample a JOIN sample b ON a.doc_id < b.doc_id
+    WHERE {jac.format(a='a.hs', b='b.hs')} >= {JACCARD_T}
+),
+found AS (
+    SELECT doc_a, doc_b FROM cand
+    WHERE doc_a < {QA15_SAMPLE} AND doc_b < {QA15_SAMPLE}
+      AND {jac.format(a='hs_a', b='hs_b')} >= {JACCARD_T}
+)
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM truth) AS n_truth,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM found) AS n_found,
+       CAST((SELECT COUNT(*) FROM found) AS DOUBLE)
+           / NULLIF(CAST((SELECT COUNT(*) FROM truth) AS DOUBLE), 0.0)
+           AS recall
+"""
+
+
 # -- qa16: robust MAD outlier screen ----------------------------------
 QA16_K = 5.0
 
@@ -470,6 +563,7 @@ QUERIES = {
     "qa13_benford_digits": qa13_benford_digits,
     "tx12_commonness": tx12_commonness,
     "qa14_kmv_set_ops": qa14_kmv_set_ops,
+    "qa15_lsh_recall": qa15_lsh_recall,
     "qa16_mad_outliers": qa16_mad_outliers,
     "qa17_null_drift": qa17_null_drift,
     "qa19_ndv_profile": qa19_ndv_profile,
@@ -478,6 +572,7 @@ ORACLES = {
     "qa13_benford_digits": _qa13_oracle(),
     "tx12_commonness": TX12_ORACLE,
     "qa14_kmv_set_ops": _qa14_oracle(),
+    "qa15_lsh_recall": _qa15_oracle(),
     "qa16_mad_outliers": _qa16_oracle(),
     "qa17_null_drift": QA17_ORACLE,
     "qa19_ndv_profile": QA19_ORACLE,

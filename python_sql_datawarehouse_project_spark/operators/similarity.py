@@ -316,8 +316,8 @@ def sim7_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential-fold cosine then ranks within each source vector.
 
     Approximation contract, stated not hidden: vectors whose true
-    neighbors share no LSH band are missing those edges (sim6's
-    recall scoreboard quantifies the same banding); vectors with
+    neighbors share no LSH band are missing those edges (sim9
+    measures that recall); vectors with
     fewer than K candidates emit fewer than K rows.  Ranking ties
     break by neighbor id — a total order on both engines since the
     fold cosine is bitwise identical.
@@ -612,14 +612,14 @@ SELECT src, dst, cosine, rank FROM ranked WHERE rank <= {SIM7_K}
 
 
 # -- sim9: measured recall of the capped kNN graph --------------------
-SIM9_SAMPLE = 500  # bounded source sample (qa18's audit pattern)
+SIM9_SAMPLE = 500  # bounded source sample (qa15's audit pattern)
 
 
 def sim9_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source recall of sim8's capped-ring kNN edges against the
     EXACT top-K — the quantified approximation contract for the ring
-    trade (sim6 plays this role for the IVF path, qa18 for fuzzy-ER
-    blocking): a banding/cap change that silently tanks graph recall
+    trade (qa15 plays this role for the MinHash banding): a
+    banding/cap change that silently tanks graph recall
     now fails a correctness gate instead of a prose promise.
 
     Truth side is LINEAR in the corpus at any scale: SIM9_SAMPLE

@@ -1,6 +1,6 @@
 """Capture AQE *final* (post-execution) plans for same-key self-join
 gates, so an exchange-reuse rationale is shown, not asserted (default:
-rj2).
+dd2, dd3, dd17, rj2).
 
 Static `.explain()` shows `AdaptiveSparkPlan isFinalPlan=false` and can
 never contain `ReusedExchange` nodes injected by AQE at runtime.
@@ -21,7 +21,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-GATES = ["rj2_interval_overlap"]
+GATES = [
+    "dd2_ngram_jaccard_pairs",
+    "dd3_minhash_lsh_pairs",
+    "dd17_minhash_capped_pairs",
+    "rj2_interval_overlap",
+]
 
 
 def main() -> None:

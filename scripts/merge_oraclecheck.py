@@ -39,6 +39,7 @@ def main() -> None:
         "n_ok": sum(1 for r in records.values() if not r.get("err")),
         "n_total": len(records),
         "hashed_gates": hashed,
+        "skipped_heavy_oracle": segments[-1].get("skipped_heavy_oracle", []),
         "skipped_spark_engine_cap": segments[-1].get(
             "skipped_spark_engine_cap", {}
         ),

@@ -1,7 +1,12 @@
 """Scale-factor parity sweep: replay the registry against DuckDB at
-an arbitrary SF directory, with the declared scale policy applied
-automatically: registry.HASHED_AT_SCALE -> testing.compare_hashed
-(in-engine count + md5 hash-sum on both sides; no driver-side rows).
+an arbitrary SF directory, with the two declared scale policies
+applied automatically:
+
+  * registry.HASHED_AT_SCALE  -> testing.compare_hashed (in-engine
+    count + md5 hash-sum on both sides; no driver-side rows)
+  * registry.HEAVY_ORACLE_SF1 -> skipped (the DuckDB oracle, not the
+    Spark operator, is the thing that does not scale; every member
+    was probed with an explicit timeout — see the registry comment)
 
 Round-10 harness upgrades (VERDICT r9 #1/#2 — the hours-long sf10
 sweeps needed the health instrumentation bench.py already had, plus
@@ -203,6 +208,11 @@ def main() -> None:
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--json-out")
     ap.add_argument(
+        "--include-heavy",
+        action="store_true",
+        help="also replay HEAVY_ORACLE_SF1 gates (bring patience)",
+    )
+    ap.add_argument(
         "--only",
         help="comma-separated gate subset (operational reruns)",
     )
@@ -241,6 +251,9 @@ def main() -> None:
     spark = build_session(app_name="oraclecheck-sf", extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
     gates, oracles = registry.queries(), registry.oracles()
+    skipped = [] if args.include_heavy else sorted(
+        k for k in gates if k in registry.HEAVY_ORACLE_SF1
+    )
     capped = sorted(k for k in gates if k in SKIP_SPARK_CAP_SF1)
     extra = sorted(
         k for k in (args.exclude or "").split(",") if k and k in gates
@@ -248,7 +261,7 @@ def main() -> None:
     names = [
         k
         for k in sorted(gates)
-        if k not in capped and k not in extra
+        if k not in skipped and k not in capped and k not in extra
     ]
     if args.only:
         only = {k for k in args.only.split(",") if k}
@@ -256,11 +269,11 @@ def main() -> None:
         if unknown:
             ap.error(f"unknown gates in --only: {sorted(unknown)}")
         # --only is an explicit operator request: it overrides the
-        # policy skip lists (engine caps / --exclude) instead of
-        # intersecting with their survivors — otherwise an --only of a
-        # skipped gate silently runs zero gates and exits 0 looking
-        # green (ADVICE r7).
-        overridden = sorted(only & set(capped + extra))
+        # policy skip lists (HEAVY_ORACLE_SF1 / engine caps / --exclude)
+        # instead of intersecting with their survivors — otherwise
+        # `--only dd7_dup_clusters` without --include-heavy silently
+        # runs zero gates and exits 0 looking green (ADVICE r7).
+        overridden = sorted(only & set(skipped + capped + extra))
         if overridden:
             print(
                 f"oracle-check: --only overrides skip lists for {overridden}",
@@ -301,6 +314,7 @@ def main() -> None:
             "hashed_gates": sorted(
                 k for k in names if k in registry.HASHED_AT_SCALE
             ),
+            "skipped_heavy_oracle": skipped,
             "skipped_spark_engine_cap": {
                 k: SKIP_SPARK_CAP_SF1[k] for k in capped
             },
@@ -311,7 +325,9 @@ def main() -> None:
             "gc_summary": _gc_summary(args.gc_log) if args.gc_log else None,
             "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
             "note": "hashed gates compared via in-engine count+md5 "
-            "hash-sum (testing.compare_hashed); suspect_gates = probe-bracketed noise attribution "
+            "hash-sum (testing.compare_hashed); heavy skips are "
+            "oracle-side cost only — see registry.HEAVY_ORACLE_SF1; "
+            "suspect_gates = probe-bracketed noise attribution "
             "(bench._suspect_gates), rss_peak_mb = peak java RSS "
             "during the gate",
         }

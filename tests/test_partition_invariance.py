@@ -38,6 +38,8 @@ _FLOAT_GATES = (
     "tx2_quality_score",  # fixed per-row expression tree
     "ds1_training_mix",  # hash-gate membership
     "qa4_kmv_distinct",  # single-division estimate
+    "dd19_semdedup",  # fixed-point centroids + fold cosines
+    "dd20_semdedup_capped",  # csim-rank window must not drift
 )
 
 _QUERIES = registry.queries()

@@ -17,7 +17,9 @@ backstop that no gate — present or future — ships with:
 
 Streaming gates are excluded: calling them drains a real stream (the
 plan shapes of their stateful operators are pinned separately in
-test_streaming.py / test_plans.py).
+test_streaming.py / test_plans.py).  Even dd5 — the declared-role
+exact O(n^2) verifier — passes this bar: its block-pair stage is a
+bucketed equi-join, never a CartesianProduct node.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ _QUERIES = {
 # (audited one by one, round 5).  Every entry is one of:
 #   (a) a scalar/summary FINAL aggregate — the whole result is one (or
 #       a handful of) rows, so the last merge step is single-partition
-#       by definition (qa1, qa4, qa8, qa11-qa14, qa16, qa19, qa21
+#       by definition (qa1, qa4, qa8, qa11-qa16, qa19, qa21
 #       totals, q15/q17/q19/q22/q29/q31/q34/q36/q44 scalar probes,
 #       ev17/ev19 data-derived bounds/NOW frames, tx5/tx9 corpus totals,
 #       ds2/ds7/pk1 budget cutoffs, zo1's min/max normalization frame);
@@ -70,6 +72,7 @@ _SINGLE_PARTITION_OK = {
     "ev17_value_histogram",
     "ev19_decayed_engagement",  # 1-row data-derived NOW frame
     "ev20_growth_accounting",  # 1-row global max-day frame
+    "dd13_ensemble_agreement",  # 1-row agreement scalar
     "ev21_rolling_correlation",  # |days| rolling window, calendar-bounded
     "pk1_pack_chunks",
     "q15_top_supplier",
@@ -85,6 +88,7 @@ _SINGLE_PARTITION_OK = {
     "qa12_corr_profile",
     "qa13_benford_digits",
     "qa14_kmv_set_ops",
+    "qa15_lsh_recall",
     "qa16_mad_outliers",
     "qa19_ndv_profile",
     "qa1_null_profile",

@@ -270,3 +270,28 @@ def test_bloom_gate_brackets_exact_overlap(spark, sf_dir):
         assert r.n_exact_hits <= r.n_bloom_hits
         exact = tx[doc_id].n_overlap if doc_id in tx else 0
         assert r.n_exact_hits == exact, (doc_id, r.n_exact_hits, exact)
+
+
+def test_fuzzy_decontamination_verdict_invariants(spark, sf_dir):
+    # tx20's structural pins: only non-benchmark docs are flagged,
+    # estimates live on the MinHash agreement grid [EST_T, 1] with
+    # granularity 1/K, and every flagged doc genuinely shares a band
+    # bucket with some benchmark doc (no flag without a candidate).
+    from python_sql_datawarehouse_project_spark.functions.hashing import (
+        MINHASH_K,
+    )
+    from python_sql_datawarehouse_project_spark.operators.dedup import (
+        EST_T,
+        tx20_fuzzy_decontamination,
+    )
+    from python_sql_datawarehouse_project_spark.operators.text import BENCH_MOD
+
+    rows = tx20_fuzzy_decontamination(spark, sf_dir).collect()
+    assert rows, "fixture corpus should contain fuzzy contamination"
+    for r in rows:
+        assert r.doc_id % BENCH_MOD != 0
+        assert EST_T <= r.max_jaccard_est <= 1.0
+        # agreement is (# matching slots)/K — an exact grid point
+        assert abs(r.max_jaccard_est * MINHASH_K
+                   - round(r.max_jaccard_est * MINHASH_K)) < 1e-9
+        assert r.n_bench_matches >= 1

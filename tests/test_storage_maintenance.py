@@ -144,6 +144,48 @@ def test_delete_keys_is_idempotent(spark, wh):
     assert _rows(wh.read_table("bronze", "t").select("uid")) == [(1,), (3,)]
 
 
+def test_cluster_takedown_deletes_near_dups(spark, wh, sf_dir):
+    # The compliance pipeline end to end: a takedown on one document
+    # expands through dd7's near-dup clusters (removing one copy while
+    # its near-duplicates remain would not satisfy the takedown), then
+    # delete_keys purges every member from the warehouse copy.
+    from python_sql_datawarehouse_project_spark.catalog import load_table
+    from python_sql_datawarehouse_project_spark.operators.dedup import (
+        dd7_dup_clusters,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    wh.write_batch(
+        docs.where(F.col("doc_id") % 2 == 0), "bronze", "documents", "B1"
+    )
+    wh.write_batch(
+        docs.where(F.col("doc_id") % 2 == 1), "bronze", "documents", "B2"
+    )
+    labels = dd7_dup_clusters(spark, sf_dir)
+    top = (
+        labels.where(F.col("cluster_size") > 1)
+        .orderBy(F.desc("cluster_size"), F.asc("cluster_id"))
+        .first()
+    )
+    assert top is not None, "test data has no non-singleton cluster"
+    members = labels.where(
+        F.col("cluster_id") == top["cluster_id"]
+    ).select("doc_id")
+    n_members = members.count()
+    assert n_members == top["cluster_size"] > 1
+    deleted = wh.delete_keys("bronze", "documents", "doc_id", members)
+    assert deleted == n_members
+    left = (
+        wh.read_table("bronze", "documents")
+        .join(F.broadcast(members), "doc_id", "left_semi")
+        .count()
+    )
+    assert left == 0
+
+
+# -- MERGE INTO semantics (merge_upsert) ------------------------------
+
+
 def _merge_fixture(spark, wh):
     b1 = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], "uid int, v string, score double"
