@@ -3,8 +3,8 @@ exploratory_data_analysis.sql:148-169 — the WITH RECURSIVE query).
 
 q9 computes the fixpoint as a driver-side loop of join + filter +
 unionByName over a bounded number of levels (SURVEY.md §4.2) — the
-formulation that controls per-level persistence, bucketed scans and
-checkpoint cadence explicitly.  The loop is the pipeline's own
+formulation that controls what is stored, bucketed scans and lineage
+depth explicitly.  The loop is the pipeline's own
 mv_delayed_orders_chain definition (plans/mv.delayed_orders_chain);
 q9 feeds it order_shipments.  Spark 4 ALSO executes WITH RECURSIVE
 natively; q43_recursive_sql below runs the same query as pasted SQL
@@ -26,12 +26,18 @@ geometrically (~fanout^level); a cap keeps both the Spark run and the
 DuckDB oracle identical AND tractable, and the cap is part of the
 declared semantics here (the oracle SQL carries the same cap).
 
-Scale notes: each iteration is one shuffle join on customer_key; the
-frontier is persisted per level to stop Spark re-deriving level k-1
-while building level k, and lineage stays shallow because every level
-re-reads the persisted frontier, not the whole recursion tree.  On a
-real cluster, checkpointing every ~5 levels would bound lineage for
-deep recursions (SURVEY.md §4.2).
+Scale notes: each iteration is one shuffle join on customer_key.  The
+order frame is stored once, as a lazy localCheckpoint that every level
+scans, so one execution computes order_shipments (the orders x
+lineitem aggregate) once; the levels themselves are not stored, so
+level k's plan repeats levels 1..k-1 as joins over that checkpoint.
+At the cap of 3 that is 6 scans of the stored frame per execution.
+Building q9 runs only the shuffle stages adaptive execution needs to
+plan the checkpoint of order_shipments (2 jobs at sf0.01; an eager
+checkpoint of the union, with a persist per level, ran 11).  A deep
+recursion would instead checkpoint the frontier every few levels to
+bound the plan (SURVEY.md §4.2); `finalize_recursion` below is that
+pattern, kept for the k-means and dedup fixpoints.
 """
 
 from __future__ import annotations
@@ -167,12 +173,14 @@ def q43_recursive_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     thereby against q9 itself — proving the two formulations are the
     same query.
 
-    q9 remains the production path: the loop controls per-level
-    persistence, bucketed scans and checkpoint cadence explicitly,
-    where the native operator manages its own working-table state.
-    MEASURED PENALTY (r5 bench, sf0.1): q43 4.28s vs q9 1.65s — the
-    native operator's working-table management is ~2.6x slower than
-    the driver loop on the same query and oracle.  Do NOT promote
+    q9 remains the production path: the loop stores exactly one
+    frame (a lazy checkpoint of order_shipments, computed once per
+    execution) and can scan the bucketed tables, where the native
+    operator manages its own working-table state.  MEASURED PENALTY
+    (sf0.1, warm, median of 3 noop writes, shared 4-vCPU host): q43
+    5.8 s wall / 9.9 CPU-s vs q9 3.3 s / 6.3 CPU-s — the native
+    operator is ~1.7x slower than the driver loop on the same query
+    and oracle.  Do NOT promote
     q43 into the MV/production path; it exists to pin the SQL
     SURFACE (an analyst can paste the reference's query verbatim
     modulo table names) — the strongest §2.10 parity statement

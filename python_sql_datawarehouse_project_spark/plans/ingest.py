@@ -9,12 +9,19 @@ the file_audit_log rows and the incoming/success/failed file moves):
   discover -> V1 config match   (no match -> CONFIG_FAILED, quarantine)
   read                          (S1-S4 by configured extension)
   V2 mapping validation         (mismatch -> MAPPING_FAILED, stop file)
-  P1-P2 projection              (computed once, feeds V3 and the write)
+  P1-P2 projection
+  bronze write                  (idempotent batch-partition overwrite;
+                                 stamps the batch id, P3)
   V3 row validation             (failures logged, NON-FATAL — the
                                  reference warns and proceeds,
                                  batch_processing.py:1209-1220)
-  bronze write                  (idempotent batch-partition overwrite;
-                                 stamps the batch id, P3)
+
+V3 reads the written bronze batches, not the landing files: one
+aggregation per ingest call counts every loaded file's rows, nulls and
+duplicate keys from parquet, after the last write.  A file whose table
+a later file of the same call also loads is counted just before that
+write replaces its partition.  The row_validation_log rows keep file
+order.
 
 Batch ids are the reference's BATCH + 6-digit counter.  Re-running a
 batch overwrites exactly its partitions (delete-then-insert
@@ -71,6 +78,25 @@ def ingest_directory(
     batch_id: str,
 ) -> list[FileResult]:
     results: list[FileResult] = []
+    # loaded files whose V3 counts are still owed: (file, table, required)
+    pending: list[tuple[str, str, list[str]]] = []
+
+    def log_row_validation() -> None:
+        checks = validate_rows(
+            [(wh.read_batch("bronze", t, batch_id), req) for _, t, req in pending]
+        )
+        for (fname, _, _), rv in zip(pending, checks):
+            log.append(
+                "row_validation_log",
+                batch_id=batch_id,
+                physical_file_name=fname,
+                status="SUCCESS" if rv.ok else "FAILED",
+                total_rows=rv.total_rows,
+                null_counts=rv.null_counts,
+                duplicate_rows=rv.duplicate_rows,
+            )
+        pending.clear()
+
     for fname in sorted(os.listdir(incoming_dir)):
         path = os.path.join(incoming_dir, fname)
         if not os.path.isfile(path):
@@ -121,23 +147,12 @@ def ingest_directory(
             )
             continue
 
-        out = apply_mapping(df, mappings)
-        req = plan.required.get(cfg.target_table, [])
-        if req:
-            # required columns are TARGET names; check them post-projection
-            rv = validate_rows(out, req)
-            log.append(
-                "row_validation_log",
-                batch_id=batch_id,
-                physical_file_name=fname,
-                status="SUCCESS" if rv.ok else "FAILED",
-                total_rows=rv.total_rows,
-                null_counts=rv.null_counts,
-                duplicate_rows=rv.duplicate_rows,
-            )
-            # non-fatal by contract: continue loading either way
-
-        n = wh.write_batch(out, "bronze", cfg.target_table, batch_id)
+        if any(t == cfg.target_table for _, t, _ in pending):
+            # this write replaces the batch partition the owed counts read
+            log_row_validation()
+        n = wh.write_batch(
+            apply_mapping(df, mappings), "bronze", cfg.target_table, batch_id
+        )
         log.append(
             "file_audit_log",
             batch_id=batch_id,
@@ -147,4 +162,10 @@ def ingest_directory(
             total_rows=n,
         )
         results.append(FileResult(fname, "LOADED", cfg.target_table, n))
+        # required columns are TARGET names: checked on the bronze batch
+        req = plan.required.get(cfg.target_table, [])
+        if req:
+            pending.append((fname, cfg.target_table, req))
+    if pending:
+        log_row_validation()
     return results

@@ -324,36 +324,32 @@ def delayed_orders_chain(orders: DataFrame, max_level: int = 3) -> DataFrame:
     appear at several levels.  Level-capped: on data where most orders
     chain, rows grow ~fanout^level.
 
-    The base and every level are persisted so level k reuses level k-1
-    instead of re-deriving the prefix; finalize_recursion materializes
-    the union and releases them."""
-    from ..operators.recursive import finalize_recursion
-
+    The order frame is computed once per execution: it is wrapped in
+    one lazy localCheckpoint that every level scans, so the first scan
+    stores its partitions and the others read them.  The levels are
+    plain joins and the result is their union: building it starts no
+    Spark job, except the shuffle stages adaptive execution runs to
+    plan the checkpoint when `orders` itself shuffles (q9's
+    order_shipments).  Spark frees the stored partitions when the
+    returned frame is garbage-collected."""
     cols = ["order_number", "customer_key", "shipping_date", "due_date"]
-    base = orders.persist()
-    seed = (
-        base.filter(F.col("shipping_date") > F.col("due_date"))
-        .select(*cols, F.lit(1).alias("level"))
-        .persist()
+    base = orders.localCheckpoint(eager=False)
+    frontier = base.filter(F.col("shipping_date") > F.col("due_date")).select(
+        *cols, F.lit(1).alias("level")
     )
-    levels, frontier = [seed], seed
+    levels = [frontier]
     for lvl in range(2, max_level + 1):
         prev = frontier.select(
             F.col("customer_key").alias("d_customer_key"),
             F.col("shipping_date").alias("d_shipping_date"),
         )
-        frontier = (
-            base.join(
-                prev,
-                (base["customer_key"] == prev["d_customer_key"])
-                & (base["order_date"] > prev["d_shipping_date"]),
-            )
-            .select(*cols, F.lit(lvl).alias("level"))
-            .persist()
-        )
+        frontier = base.join(
+            prev,
+            (base["customer_key"] == prev["d_customer_key"])
+            & (base["order_date"] > prev["d_shipping_date"]),
+        ).select(*cols, F.lit(lvl).alias("level"))
         levels.append(frontier)
-    union = reduce(DataFrame.unionByName, levels)
-    return finalize_recursion(union, [base, *levels])
+    return reduce(DataFrame.unionByName, levels)
 
 
 def _gold_delayed_orders_chain(fs, dc, dp, max_level: int = 3) -> DataFrame:

@@ -9,7 +9,12 @@ lands snappy parquet anyway.
 
   read_csv      S1: header, every column a string; bronze types
                 come from the ingest mapping (sources/mapping.py),
-                not from inference [convert_to_parquet.py:184]
+                not from inference [convert_to_parquet.py:184].  The
+                header line is read in Python, with Spark's renaming
+                of empty and duplicate names, so the read starts no
+                Spark job; a header Python might split differently
+                (non-UTF-8 bytes, control characters, backslashes,
+                quotes inside a field) goes to Spark's inference.
   read_excel    S2: no core Spark reader; driver-side pandas bridge
                 when an engine is available, else the stdlib ZIP+XML
                 xlsx parser (sources/xlsx.py); legacy .xls gets a
@@ -39,19 +44,84 @@ files are small pre-ingest landing files, never warehouse-scale data
 
 from __future__ import annotations
 
+import csv
 import os
+import re
 import stat
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 class UnsupportedSourceError(RuntimeError):
     """Raised when a source format has no available reader engine."""
 
 
+# A header field that is unquoted, or quoted with no quote inside it:
+# the fields on which Python's csv module and Spark's parser agree.
+_PLAIN_QUOTED = re.compile(r'(?:^|(?<=,))"[^"]*"(?=,|$)')
+_LINE_END = re.compile(rb"\r\n|\r|\n")
+_HEADER_BYTES = 1 << 16
+
+
+def _csv_header(path: str) -> list[str] | None:
+    """The raw header fields of a CSV file, read in Python as Spark
+    reads them: a UTF-8 BOM dropped, empty and spaces-only lines
+    skipped, the first other line split on commas.  None where the
+    file might parse differently in Spark: no header line in the first
+    64 KiB, bytes that are not UTF-8, a control character, a backslash,
+    or a quote that does not wrap a whole field."""
+    try:
+        with open(path, "rb") as f:
+            head = f.read(_HEADER_BYTES)
+    except OSError:
+        return None
+    lines = _LINE_END.split(head.removeprefix(b"\xef\xbb\xbf"))
+    if len(head) == _HEADER_BYTES:
+        lines.pop()  # may be cut short
+    line = next((ln for ln in lines if ln.strip(b" ")), None)
+    if line is None:
+        return None
+    try:
+        text = line.decode("utf-8")
+    except UnicodeDecodeError:
+        return None
+    if min(text) < " " or "\\" in text or '"' in _PLAIN_QUOTED.sub("", text):
+        return None
+    return next(csv.reader([text]))
+
+
+def _safe_header(names: list[str], case_sensitive: bool) -> list[str]:
+    """Spark's own renaming of a CSV header: an empty name becomes
+    `_c<i>`, and every name that occurs twice (ignoring case unless
+    case_sensitive) gets its index as a suffix."""
+    key = (lambda n: n) if case_sensitive else str.lower
+    seen = Counter(key(n) for n in names if n)
+    return [
+        f"{n}{i}" if n and seen[key(n)] > 1 else n or f"_c{i}"
+        for i, n in enumerate(names)
+    ]
+
+
 def read_csv(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.option("header", True).csv(path)
+    """CSV with a header, every column a string.  The header line is
+    read in Python and the data with that schema, so the read starts
+    no Spark job; a file whose header Python might read differently
+    from Spark goes to Spark's own header inference."""
+    names = _csv_header(path) if os.path.isfile(path) else None
+    reader = spark.read.option("header", True)
+    if names is not None:
+        case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+        reader = reader.schema(
+            StructType(
+                [
+                    StructField(n, StringType())
+                    for n in _safe_header(names, case_sensitive)
+                ]
+            )
+        )
+    return reader.csv(path)
 
 
 def read_json(spark: SparkSession, path: str) -> DataFrame:

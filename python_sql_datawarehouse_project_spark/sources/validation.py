@@ -15,17 +15,20 @@
                         registered StructType
                         [load_to_bronze.py:123-137,457-490]
 
-The row checks run as ONE aggregation (A9's per-column loop and A8's
-composite-key distinct count collapse into a single agg of conditional
-counts plus one count_distinct) — one scan of the source regardless of
-column count, versus the reference's one DuckDB query per column.  At
-100 TB the counts are map-side partial aggregates; the dup check's
-distinct is the only shuffle.
+The row checks run as ONE aggregation per ingest call (A9's per-column
+loop and A8's composite-key distinct count collapse into conditional
+counts plus one count_distinct, grouped by file) over the bronze
+batches the call wrote — one scan of each file's required columns from
+parquet regardless of column count or file count, versus the
+reference's one DuckDB query per column.  At 100 TB the counts are
+map-side partial aggregates; the dup check's distinct is the only
+shuffle.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -111,34 +114,62 @@ class RowValidation:
     duplicate_rows: int
 
 
-def validate_rows(df: DataFrame, required_columns: list[str]) -> RowValidation:
-    """V3: one aggregation pass for all per-column null counts (A9)
-    and the composite-duplicate count (A8).  The normalized key is
-    never NULL (NULL parts become a sentinel), so count_distinct
+def validate_rows(
+    frames: list[tuple[DataFrame, list[str]]],
+) -> list[RowValidation]:
+    """V3 for several frames in ONE aggregation: per frame, the row
+    count, every required column's null count (A9) and the
+    composite-duplicate count (A8).  The frames are tagged with their
+    index and unioned, so one shuffle grouped by index computes every
+    count; a frame with no rows gets zero counts.  The normalized key
+    is never NULL (NULL parts become a sentinel), so count_distinct
     counts every distinct key.  Non-fatal by contract — the caller
     logs and proceeds (reference WARNING-and-continue)."""
-    numeric = {
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, NumericType)
+    width = max(len(req) for _, req in frames)
+    tagged = []
+    for i, (df, req) in enumerate(frames):
+        numeric = {
+            f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)
+        }
+        key = F.concat_ws(SEP, *[_normalized_key(F.col(c)) for c in req])
+        nulls = [null_blank_nan(F.col(c), c in numeric) for c in req]
+        nulls += [F.lit(False)] * (width - len(req))
+        tagged.append(
+            df.select(
+                F.lit(i).alias("__frame"),
+                key.alias("__key"),
+                *[n.alias(f"__null{j}") for j, n in enumerate(nulls)],
+            )
+        )
+    rows = {
+        r["__frame"]: r
+        for r in reduce(DataFrame.unionByName, tagged)
+        .groupBy("__frame")
+        .agg(
+            F.count(F.lit(1)).alias("__total"),
+            F.count_distinct("__key").alias("__distinct"),
+            *[
+                F.count(F.when(F.col(f"__null{j}"), 1)).alias(f"__null{j}")
+                for j in range(width)
+            ],
+        )
+        .collect()
     }
-    key = F.concat_ws(SEP, *[_normalized_key(F.col(c)) for c in required_columns])
-    aggs = [
-        F.count(F.lit(1)).alias("__total"),
-        F.count_distinct(key).alias("__distinct"),
-    ] + [
-        F.count(F.when(null_blank_nan(F.col(c), c in numeric), 1)).alias(c)
-        for c in required_columns
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    total = row.pop("__total")
-    dups = total - row.pop("__distinct")
-    return RowValidation(
-        ok=all(v == 0 for v in row.values()) and dups == 0,
-        total_rows=total,
-        null_counts=row,
-        duplicate_rows=dups,
-    )
+    empty = {"__total": 0, "__distinct": 0} | {f"__null{j}": 0 for j in range(width)}
+    out = []
+    for i, (_, req) in enumerate(frames):
+        r = rows.get(i, empty)
+        dups = r["__total"] - r["__distinct"]
+        nulls = {c: r[f"__null{j}"] for j, c in enumerate(req)}
+        out.append(
+            RowValidation(
+                ok=dups == 0 and not any(nulls.values()),
+                total_rows=r["__total"],
+                null_counts=nulls,
+                duplicate_rows=dups,
+            )
+        )
+    return out
 
 
 # -- V4: target schema validation ------------------------------------

@@ -18,3 +18,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def job_ids(spark):
+    """job_ids(group, fn): run fn() under a fresh Spark job group and
+    return (its result, the ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -129,7 +129,7 @@ def test_mapping_validation_reports_missing_and_extra(spark):
 def test_row_validation_nulls_and_dups(spark, csv_file):
     df = read_source(spark, csv_file, "csv")
     out = apply_mapping(df, MAPPINGS)
-    rv = validate_rows(out, ["cst_id", "cst_gndr"])
+    [rv] = validate_rows([(out, ["cst_id", "cst_gndr"])])
     assert not rv.ok
     assert rv.total_rows == 4
     assert rv.null_counts == {"cst_id": 1, "cst_gndr": 1}
@@ -138,7 +138,7 @@ def test_row_validation_nulls_and_dups(spark, csv_file):
 
 def test_row_validation_nan_detected(spark):
     df = spark.createDataFrame([(float("nan"),), (1.0,)], "x double")
-    rv = validate_rows(df, ["x"])
+    [rv] = validate_rows([(df, ["x"])])
     assert rv.null_counts == {"x": 1}
 
 
@@ -317,19 +317,7 @@ def test_excel_legacy_xls_still_gated(spark, tmp_path):
         read_source(spark, str(p), "xls")
 
 
-def _job_ids(spark, group, fn):
-    """Run fn() under a fresh job group; return (its result, the ids of
-    the Spark jobs it started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_schema_only_read_is_metadata(spark, sf_dir):
+def test_schema_only_read_is_metadata(spark, sf_dir, job_ids):
     # S5: column listing without a data scan (parquet footer only); the
     # footer is read once per file, so a repeat listing runs no job.
     from python_sql_datawarehouse_project_spark.sources.readers import read_schema
@@ -337,15 +325,15 @@ def test_schema_only_read_is_metadata(spark, sf_dir):
     path = f"{sf_dir}/nation.parquet"
     cols = read_schema(spark, path, "parquet")
     assert cols == ["n_nationkey", "n_name", "n_regionkey"]
-    again, jobs = _job_ids(
-        spark, "test_schema_only_read_is_metadata",
+    again, jobs = job_ids(
+        "test_schema_only_read_is_metadata",
         lambda: read_schema(spark, path, "parquet"),
     )
     assert jobs == []
     assert again == cols
 
 
-def test_repeat_table_load_starts_no_spark_job(spark, sf_dir):
+def test_repeat_table_load_starts_no_spark_job(spark, sf_dir, job_ids):
     # S4: the star catalog resolves a table's schema once per file.
     from python_sql_datawarehouse_project_spark.catalog import (
         load_table,
@@ -357,9 +345,7 @@ def test_repeat_table_load_starts_no_spark_job(spark, sf_dir):
         return df, df.columns
 
     load()
-    (df, cols), jobs = _job_ids(
-        spark, "test_repeat_table_load_starts_no_spark_job", load
-    )
+    (df, cols), jobs = job_ids("test_repeat_table_load_starts_no_spark_job", load)
     assert jobs == []
     assert cols[0] == "l_orderkey"
     assert df.schema == spark.read.parquet(table_path(sf_dir, "lineitem")).schema
@@ -474,3 +460,122 @@ def test_orc_text_binary_readers_roundtrip(spark, tmp_path):
     bin_df = readers.read_source(spark, str(blob), "binary")
     row = bin_df.select("length", "content").first()
     assert row.length == 8 and bytes(row.content) == b"\x00\x01\x02spark"
+
+
+# -- S1: the CSV header is read in Python ------------------------------
+# Each case's bytes and the mapping the file is meant to match; the
+# expected columns, rows and ingest status come from Spark's own header
+# inference over the same file.
+_EDGE_CSVS = {
+    "quoted_comma": (b'id,"name, full"\n1,"a, b"\n', ["id", "name, full"]),
+    "duplicate_names": (b"id,Id,x,x\n1,2,3,4\n", ["id", "x"]),
+    "empty_name": (b"id,,x\n1,2,3\n", ["id", "_c1", "x"]),
+    "utf8_bom": (b"\xef\xbb\xbfid,name\n1,a\n", ["id", "name"]),
+    "crlf": (b"id,name\r\n1,a\r\n2,b\r\n", ["id", "name"]),
+    "header_only": (b"id,name\n", ["id", "name"]),
+    "empty_file": (b"", ["id", "name"]),
+    "binary_garbage": (bytes(range(256)) * 4, ["id", "name"]),
+    "blank_lines_first": (b"\n  \nid,name\n1,a\n", ["id", "name"]),
+    "doubled_quote": (b'id,"na""me"\n1,a\n', ["id", 'na"me']),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_CSVS))
+def test_csv_header_matches_spark_inference(spark, tmp_path, case):
+    data, sources = _EDGE_CSVS[case]
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    path = incoming / "edge.csv"
+    path.write_bytes(data)
+
+    want = spark.read.option("header", True).csv(str(path))
+    got = read_source(spark, str(path), "csv")
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    want_status = "LOADED" if validate_mapping(want, sources).ok else "MAPPING_FAILED"
+    plan = IngestPlan(
+        configs=[SourceConfig("crm", "csv", "edge", "edge")],
+        mappings={"edge": [ColumnMapping(c, f"c{i}") for i, c in enumerate(sources)]},
+    )
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    [r] = ingest_directory(
+        spark, wh, RunLog(str(tmp_path / "wh")), plan, str(incoming), "crm", "B1"
+    )
+    assert r.status == want_status
+
+
+def test_csv_header_read_starts_no_spark_job(spark, csv_file, job_ids):
+    cols, jobs = job_ids(
+        "test_csv_header_read_starts_no_spark_job",
+        lambda: read_source(spark, csv_file, "csv").columns,
+    )
+    assert jobs == []
+    assert cols == ["cst_id", "cst_key", "cst_gendr", "amount"]
+
+
+# -- V3 over the batches one ingest call wrote -------------------------
+def test_row_validation_log_rows_per_file(spark, tmp_path, csv_file):
+    # Three files load crm_cust_info in one call, so each later write
+    # replaces the partition the earlier file's counts are read from;
+    # a second table's file shares the aggregate; a MAPPING_FAILED file
+    # gets no V3 row.
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    os.link(csv_file, incoming / "cust_info_A.csv")  # 1 null id, 1 dup key
+    (incoming / "cust_info_B.csv").write_text(
+        "cst_id,cst_key,cst_gendr,amount\n7,K7,M,1\n8,K8,F,2\n"
+    )
+    (incoming / "cust_info_C.csv").write_text("cst_id,cst_key,cst_gendr,amount\n")
+    (incoming / "cust_info_D.csv").write_text("cst_id,wrong\n1,2\n")
+    (incoming / "loc_a101_E.csv").write_text("cid,cntry\nA, \nA,DE\na ,DE\n")
+
+    plan = IngestPlan(
+        configs=CONFIGS,
+        mappings={
+            "crm_cust_info": MAPPINGS,
+            "erp_loc_a101": [
+                ColumnMapping("cid", "cid"),
+                ColumnMapping("cntry", "cntry"),
+            ],
+        },
+        required={"crm_cust_info": ["cst_id", "cst_gndr"], "erp_loc_a101": ["cid"]},
+    )
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    log = RunLog(str(tmp_path / "wh"))
+    results = ingest_directory(spark, wh, log, plan, str(incoming), "crm", "B1")
+    results += ingest_directory(spark, wh, log, plan, str(incoming), "erp", "B1")
+    assert [(r.file, r.status) for r in results] == [
+        ("cust_info_A.csv", "LOADED"),
+        ("cust_info_B.csv", "LOADED"),
+        ("cust_info_C.csv", "LOADED"),
+        ("cust_info_D.csv", "MAPPING_FAILED"),
+        ("loc_a101_E.csv", "CONFIG_FAILED"),
+        ("cust_info_A.csv", "CONFIG_FAILED"),
+        ("cust_info_B.csv", "CONFIG_FAILED"),
+        ("cust_info_C.csv", "CONFIG_FAILED"),
+        ("cust_info_D.csv", "CONFIG_FAILED"),
+        ("loc_a101_E.csv", "LOADED"),
+    ]
+    rows = [
+        {k: v for k, v in r.items() if k != "logged_at"}
+        for r in log.read("row_validation_log")
+    ]
+
+    def row(fname, status, total, nulls, dups):
+        return {
+            "batch_id": "B1",
+            "physical_file_name": fname,
+            "status": status,
+            "total_rows": total,
+            "null_counts": nulls,
+            "duplicate_rows": dups,
+        }
+
+    assert rows == [
+        row("cust_info_A.csv", "FAILED", 4, {"cst_id": 1, "cst_gndr": 1}, 1),
+        row("cust_info_B.csv", "SUCCESS", 2, {"cst_id": 0, "cst_gndr": 0}, 0),
+        row("cust_info_C.csv", "SUCCESS", 0, {"cst_id": 0, "cst_gndr": 0}, 0),
+        # "A", "A" and "a " share one normalized key
+        row("loc_a101_E.csv", "FAILED", 3, {"cid": 0}, 2),
+    ]

@@ -228,6 +228,19 @@ def test_delta_scan_is_partition_pruned(refreshed):
     assert plan.count("PartitionFilters: []") == 0, plan
 
 
+def test_delayed_chain_mv_builds_without_a_spark_job(refreshed, job_ids):
+    from python_sql_datawarehouse_project_spark.plans import mv
+
+    for batch in (B2, None):
+        df, jobs = job_ids(
+            "chain_mv_build", lambda: mv.MVS["mv_delayed_orders_chain"](refreshed, batch)
+        )
+        assert jobs == []
+        assert df.columns == [
+            "order_number", "customer_key", "shipping_date", "due_date", "level"
+        ]
+
+
 def test_full_only_mvs_refuse_incremental(refreshed):
     with pytest.raises(KeyError, match="not incrementally maintainable"):
         mi.refresh_mv_incremental(refreshed, "mv_customer_order_gap", B2)

@@ -10,6 +10,8 @@ paths stay inside whole-stage codegen.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,6 +202,31 @@ def test_gold_small_dims_auto_broadcast(spark):
     p = plan_of(df)
     assert "isFinalPlan=true" in p
     assert "BroadcastHashJoin" in p, p
+
+
+def test_delayed_chain_reads_its_orders_once(spark, sf_dir, job_ids):
+    # Building q9 starts no job of the chain's own: the only jobs are
+    # the shuffle stages adaptive execution runs to plan the
+    # checkpointed order_shipments.  Every level then scans that one
+    # checkpoint, so the executed plan reads no parquet file.
+    from python_sql_datawarehouse_project_spark.operators.recursive import (
+        order_shipments,
+        q9_delayed_orders_chain,
+    )
+
+    order_shipments(spark, sf_dir)  # the tables' footer reads
+    _, planning = job_ids(
+        "chain_planning",
+        lambda: order_shipments(spark, sf_dir).localCheckpoint(eager=False),
+    )
+    q9, build = job_ids(
+        "chain_build", lambda: q9_delayed_orders_chain(spark, sf_dir)
+    )
+    assert len(build) == len(planning)
+    p = plan_of(q9)
+    assert "FileScan" not in p, p
+    assert p.count("Scan ExistingRDD (") == 6, p  # the seed, 2 + 3 levels
+    assert len(set(re.findall(r"RDD\[\d+\] at localCheckpoint", p))) == 1, p
 
 
 @pytest.mark.slow
