@@ -1,2 +1,2 @@
 """Scalar/column function kits: reference cleansing rules (R1-R8) and
-the text/similarity extension functions."""
+the text/dedup extension functions."""

@@ -10,7 +10,7 @@ element, and the auto-banding stage walks bands*bits of them per row
 (24 bands x 5 bits at the sf0.1 multi-probe signature = ~7.7k
 tree-walks per row).  Replacing THAT stage with one Arrow kernel is a
 measured 2.5-3x on every auto-banded gate (dd14 7.15->2.70 s,
-dd16 7.35->2.32 s, sim2 5.94->2.32 s; OPTIMIZATION_r10.md).
+dd16 7.35->2.32 s; OPTIMIZATION_r10.md).
 
 Scope is deliberately narrow (r10, measured): kernels for the
 SINGLE-fold sites — dot_fold itself, normalization, the k-means
@@ -19,9 +19,9 @@ site, and REJECTED: each ArrowEvalPython node carries a per-stage
 Python round-trip that one 64-element fold never amortizes, a Python
 UDF inside a join filter forces the pair frame to materialize through
 Arrow instead of fusing into the join, and plan reuse re-evaluates
-the node per subtree — dd19 regressed 15x, sim5 12x, sim4 3.2x at
+the node per subtree — the single-fold sites regressed 3.2-15x at
 sf0.1.  Only the >100-folds-per-row sites keep the kernel:
-``dedup._auto_bands`` (band_keys_np) and ``similarity._bucket_col``
+``dedup._auto_bands`` (band_keys_np) and ``dedup._bucket_col``
 (bucket_np).  hashing.dot_fold stays the Catalyst fold.
 
 The kernels perform the IDENTICAL IEEE-754 operation sequence as the
@@ -63,14 +63,13 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 # Explicit DataType objects, never DDL strings: a string returnType is
 # parsed lazily via the ACTIVE SparkContext, which does not exist when
 # the Python worker re-imports this module to deserialize the UDF.
 _LONG = LongType()
 _LONG_ARR = ArrayType(LongType())
-_DOUBLE_ARR = ArrayType(DoubleType())
 
 
 def _as_matrix(a: pa.Array) -> np.ndarray | None:
@@ -153,31 +152,10 @@ def band_keys_np(
     return _keys
 
 
-def dots_np(vecs: list[list[float]]) -> Callable[[Column], Column]:
-    """UDF factory: vn -> array<double> of fold_dot(vn, vecs[i]) for
-    every literal vector, in order — bit-identical to the Catalyst
-    F.array(*[dot_fold(vn, lit(v)) for v in vecs]) (each (row, vec)
-    lane accumulates over j sequentially).  Same >100-folds-per-row
-    qualification bar as the band kernels: deployed only where a row
-    scores against a large fixed panel (sim9's 500-query exact-truth
-    side), never for single dots."""
-    Q = np.asarray(vecs, dtype=np.float64)
-
-    @arrow_udf(_DOUBLE_ARR)
-    def _dots(vn: pa.Array) -> pa.Array:
-        V = _matrix_or_raise(vn, "dots_np")
-        if V is None:
-            return pa.array([], type=pa.list_(pa.float64()))
-        D = _project(V, Q)
-        return _list_array(D, V.shape[0], Q.shape[0], pa.float64())
-
-    return _dots
-
-
 def bucket_np(planes: list[list[float]]) -> Callable[[Column], Column]:
     """UDF factory: vn -> long sign-of-projection bucket, bit i =
     (vn . plane_i) > 0 — bit-identical to the pre-r10
-    similarity._bucket_col interpreted folds."""
+    dedup._bucket_col interpreted folds."""
     P = np.asarray(planes, dtype=np.float64)
 
     @arrow_udf(_LONG)

@@ -1,5 +1,5 @@
 """Engine-portable hashing primitives for the LLM-data-pipeline
-operators (dedup / similarity / fingerprinting — BASELINE.json north
+operators (dedup / fingerprinting — BASELINE.json north
 star, beyond the reference's own surface; the reference has no hashing
 beyond Postgres internals).
 
@@ -174,16 +174,12 @@ def dot_fold(a: Column, b: Column) -> Column:
     frame to materialize through Arrow instead of fusing into the
     join's generated code.  The kernels survive only where ONE node
     replaces >100 folds per row (dedup._auto_bands banding,
-    similarity._bucket_col) — see OPTIMIZATION_r10.md."""
+    dedup._bucket_col) — see OPTIMIZATION_r10.md."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot_fold(a, b) / (F.sqrt(dot_fold(a, a)) * F.sqrt(dot_fold(b, b)))
 
 
 # NOTE (measured, do not "optimize"): unrolling the dot product to
@@ -237,7 +233,7 @@ def sql_dot(a_expr: str, b_expr: str) -> str:
 def sql_rp_bucket(vn_expr: str = "vn") -> str:
     """RP_BITS-bit hyperplane-sign bucket of a normalized DOUBLE[]
     column, emitted for DuckDB — the exact twin of
-    similarity._bucket_col: each projection is the same sequential
+    dedup._bucket_col: each projection is the same sequential
     fold over vn[j] * r(i, j), so bucket assignment is bitwise
     identical across engines."""
     proj = (

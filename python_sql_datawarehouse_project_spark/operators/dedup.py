@@ -36,13 +36,13 @@ banded-LSH candidate join materializes 25K.  So:
     recall loss), at ~2% of the all-pairs cost on clustered data.
   * dd5 pre-normalizes each vector once (no per-pair norm
     recomputation), so a pair costs one 64-wide fused dot product.
-    Brute force is the verify stage; sim2's hyperplane buckets
-    (operators/similarity.py) are the recall path at corpus scale.
+    Brute force is the verify stage; dd6's hyperplane buckets
+    (dedup._bucket_col) are the recall path at corpus scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -668,7 +668,7 @@ WHERE {H.sql_dot('a.vn', 'b.vn')} >= {COSINE_T}
 
 
 # -- dd6: embedding near-dup, banded hyperplane-LSH candidates --------
-# The RP_BITS-bit sign signature (shared with sim2 — bitwise identical
+# The RP_BITS-bit sign signature (_bucket_col — bitwise identical
 # on both engines) is cut into DD6_BANDS bands of DD6_BAND_BITS bits;
 # two vectors are candidates iff they agree on ALL bits of at least
 # one band.  At p = 1 - theta/pi per-bit agreement this gives recall
@@ -691,11 +691,23 @@ DD6_BANDS = 4
 DD6_BAND_BITS = H.RP_BITS // DD6_BANDS
 
 
+def _bucket_col(v: str) -> Column:
+    """Sign-of-projection bucket: bit i = (v . r_i) > 0, bucket =
+    sum(bit_i * 2^i), over the RP_BITS shared LCG hyperplanes
+    (hashing.RP_PLANES — bitwise identical to the formula the oracle
+    evaluates inline).  r10: one Arrow/numpy kernel computes all
+    RP_BITS fold-order projections and assembles the bucket —
+    bit-identical to the previous per-projection interpreted Catalyst
+    folds (probe + test_foldkernels), ~100x cheaper per row
+    (guide §4.2)."""
+    from ..functions.foldkernels import bucket_np
+
+    return bucket_np(H.RP_PLANES[: H.RP_BITS])(F.col(v))
+
+
 def _rp_bands(n: DataFrame) -> DataFrame:
     """(vec_id, band_key): dd6's banded hyperplane-LSH keys as a
     frame."""
-    from .similarity import _bucket_col
-
     mask = (1 << DD6_BAND_BITS) - 1
     sig = n.withColumn("bucket", _bucket_col("vn")).select("vec_id", "bucket")
     band_keys = F.array(
@@ -714,8 +726,8 @@ def _rp_bands(n: DataFrame) -> DataFrame:
 
 def _lsh_band_candidates(n: DataFrame) -> DataFrame:
     # r10: checkpointed for the same two-exchange duplication as
-    # _auto_band_candidates (dd6's and sim7's banding stage ran
-    # twice; see that function's comment).
+    # _auto_band_candidates (dd6's banding stage ran twice; see that
+    # function's comment).
     bands = _rp_bands(n).localCheckpoint(eager=True)
     a, c = bands.alias("a"), bands.alias("c")
     return (
@@ -821,7 +833,7 @@ def _auto_bands(
     signature, offset by k << bits so band keyspaces never collide.
     Id-only discipline: the frame carries two longs, never vectors.
 
-    bands_count > AUTO_BANDS is the MULTI-PROBE extension (sim8):
+    bands_count > AUTO_BANDS is the MULTI-PROBE extension:
     the shared LCG plane family is prefix-stable (hashing.rp_planes —
     plane i is the same row for every caller), so bands [8, 16) draw
     FRESH planes [8*bits, 16*bits) and form a second independent
@@ -901,10 +913,10 @@ def dd14_lsh_autosized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_rescore(n, _auto_band_candidates(n, bits))
 
 
-def _sql_auto_band_ctes(bands_count: int = AUTO_BANDS) -> str:
+def _sql_auto_band_ctes() -> str:
     """normalized -> meta (SQL-derived bits) -> bands CTE chain for
     the auto-sized hyperplane banding — dd14's oracle, which dd16
-    and sim8 build on.  The meta CTE
+    builds on.  The meta CTE
     derives bits-per-band from COUNT(*) exactly like the Spark side's
     `_auto_bits(n.count())`."""
     # Plane index for band k, local bit t: i = k*bits + t; component
@@ -932,15 +944,15 @@ meta AS (
 ),
 bands AS (
     SELECT vec_id,
-           unnest(list_transform(range(0, {bands_count}), k ->
+           unnest(list_transform(range(0, {AUTO_BANDS}), k ->
                (CAST(k AS BIGINT) << b) + {local})) AS band_key
     FROM normalized, meta
 )"""
 
 
-def _dd14_oracle(bands_count: int = AUTO_BANDS) -> str:
+def _dd14_oracle() -> str:
     return f"""
-WITH {_sql_auto_band_ctes(bands_count)},
+WITH {_sql_auto_band_ctes()},
 cand AS (
     SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
     FROM bands a JOIN bands c

@@ -698,7 +698,7 @@ def tx10_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     any document), TR_ITERS fixed Jacobi iterations with damping
     0.85 — the classic graph keyword scorer.
 
-    Determinism (the sim4 k-means trick applied to PageRank): scores
+    Determinism (fixed-point integer state): scores
     are int64 micro-units and every update is integer arithmetic —
     contribution = pr div deg, update = BASE + (85 * sum) div 100 —
     so an inherently iterative float algorithm becomes bitwise

@@ -22,7 +22,6 @@ from .operators import (
     corpus,
     dedup,
     events,
-    kmeans,
     layout,
     mix,
     multimodal,
@@ -32,9 +31,7 @@ from .operators import (
     reconcile,
     recursive,
     retrieval,
-    semdedup,
     semijoin,
-    similarity,
     skew,
     text,
     tpch,
@@ -65,7 +62,6 @@ _MODULES = (
     tpch2,
     tpch3,
     rangejoin,
-    similarity,
     skew,
     text,
     stream_windows,
@@ -78,7 +74,6 @@ _MODULES = (
     events,
     asof,
     dedup,
-    kmeans,
     mix,
     multimodal,
     profiling,
@@ -92,7 +87,6 @@ _MODULES = (
     bpe,
     stream_bounded,
     approx,
-    semdedup,
 )
 
 
@@ -149,8 +143,6 @@ HASHED_AT_SCALE = frozenset({
     "tx7_repetition",
     # pre-round-8 members
     "dd4_simhash",
-    "dd19_semdedup",  # round-10: per-vector verdict, output ∝ corpus
-    "dd20_semdedup_capped",  # round-10: same output grain as dd19
     "ev11_gap_fill",
     "pd1_window_dedup",
     "q1_monthly_sales_product",
@@ -176,7 +168,7 @@ HASHED_AT_SCALE = frozenset({
 # time: the scale sweep skips the oracle replay for these and records
 # the skip in the artifact's __meta__.  All are hash-green at the
 # three driver SFs, and each has either a capped scale-safe twin
-# (dd14/dd16/dd17/sim8/cs2's Spark side) or a declared small-corpus
+# (dd14/dd16/dd17/cs2's Spark side) or a declared small-corpus
 # role (dd5).  Kept in sync with measured probe results — a gate
 # leaves this set the round its oracle finishes at sf1 (round 7:
 # every member probed with a 180-300 s timeout; dd10's oracle
@@ -199,7 +191,4 @@ HEAVY_ORACLE_SF1 = frozenset({
     "dd8_containment_pairs",
     "dd9_fuzzy_pairs",
     "qa15_lsh_recall",
-    "sim7_knn_graph",
-    "sim8_knn_graph_capped",
-    "sim9_knn_recall",
 })

@@ -13,8 +13,12 @@ rewritten after every run, so an interrupted set keeps what it ran.
 
 For each workload and end-to-end metric of BENCHMARK.json the summary
 gives each side's median and quartiles, the change's relative
-difference, the pairs the change won (ties count for neither) and the
+difference, the pairs the change won out of every pair run (a tie, or
+a pair where either side printed no value, is not a win) and the
 parent's own spread, with a verdict:
+  runs_failed   some run of the workload exited non-zero, printed no
+                result line or reported `failed` > 0; this verdict
+                goes to every metric of the workload;
   gain          the change won at least 9 of 10 pairs and the medians
                 differ, in its favour, by more than the parent's
                 interquartile distance;
@@ -80,29 +84,47 @@ def _quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def _run_failed(r: dict) -> bool:
+    """Non-zero exit, no result line, or a failed operation."""
+    return r["rc"] != 0 or "failed" not in r or r["failed"] > 0
+
+
 def summarize(runs: list[dict], metrics: list[dict]) -> dict:
     """Per metric: medians, quartiles, pair wins, spread and verdict."""
-    out = {}
-    pairs = sorted({r["pair"] for r in runs})
+    out = {"failed": [r.get("failed") for r in runs]}
+    # a pair counts once both of its runs exist, whatever they printed
+    ran = [
+        p for p in sorted({r["pair"] for r in runs})
+        if {r["side"] for r in runs if r["pair"] == p} == {"parent", "change"}
+    ]
+    if not ran:
+        return out
+    any_failed = any(_run_failed(r) for r in runs)
     for m in metrics:
         name, bound, lower = m["name"], m["bound"], m["better"] == "lower"
         side = {
             s: {r["pair"]: r[name] for r in runs if r["side"] == s and name in r}
             for s in ("parent", "change")
         }
-        both = [p for p in pairs if p in side["parent"] and p in side["change"]]
-        if not both:
+        par = [side["parent"][p] for p in ran if p in side["parent"]]
+        chg = [side["change"][p] for p in ran if p in side["change"]]
+        if not par or not chg:
+            out[name] = {"bound": bound, "verdict": "runs_failed"}
             continue
-        par = [side["parent"][p] for p in both]
-        chg = [side["change"][p] for p in both]
         pq1, pmed, pq3 = _quartiles(par)
         cq1, cmed, cq3 = _quartiles(chg)
         sign = -1 if lower else 1  # positive = the change is better
         rel = (cmed - pmed) / pmed
-        wins = sum(sign * (side["change"][p] - side["parent"][p]) > 0 for p in both)
+        wins = sum(
+            p in side["parent"] and p in side["change"]
+            and sign * (side["change"][p] - side["parent"][p]) > 0
+            for p in ran
+        )
         spread = (max(par) - min(par)) / pmed
         dominates = (max(chg) < min(par)) if lower else (min(chg) > max(par))
-        if wins >= 0.9 * len(both) and sign * (cmed - pmed) > pq3 - pq1:
+        if any_failed:
+            verdict = "runs_failed"
+        elif wins >= 0.9 * len(ran) and sign * (cmed - pmed) > pq3 - pq1:
             verdict = "gain"
         elif -sign * rel > bound:
             verdict = "regression"
@@ -119,12 +141,11 @@ def summarize(runs: list[dict], metrics: list[dict]) -> dict:
             "change_q3": round(cq3, 3),
             "change_vs_parent": round(rel, 4),
             "bound": bound,
-            "change_better_pairs": f"{wins}/{len(both)}",
+            "change_better_pairs": f"{wins}/{len(ran)}",
             "parent_spread_maxmin": round(spread, 3),
             "parent_iqr_rel": round((pq3 - pq1) / pmed, 3),
             "verdict": verdict,
         }
-    out["failed"] = [r.get("failed") for r in runs]
     return out
 
 
@@ -159,6 +180,9 @@ def main() -> int:
         print(f"{w}: failed per run {summary['failed']}")
         for name, s in summary.items():
             if name == "failed":
+                continue
+            if "parent_median" not in s:
+                print(f"  {name}: -> {s['verdict']}")
                 continue
             print(
                 f"  {name}: parent {s['parent_median']} "

@@ -8,8 +8,9 @@ aggregate emits one all-NULL row where a grouped one emits none, an
 empty literal array fails to type — and none of that is visible at any
 populated scale factor.  The round-5 first run of this sweep found
 three real bugs (qa14's unguarded sketch division, qa21's
-global-vs-grouped final aggregate asymmetry, sim4's empty-centroid
-literal array), all fixed; this suite keeps the boundary pinned.
+global-vs-grouped final aggregate asymmetry, and an empty-centroid
+literal array in a since-deleted k-means gate), all fixed; this suite
+keeps the boundary pinned.
 
 Known, documented divergence (excluded below): on EMPTY input Spark's
 ROLLUP/CUBE emit no rows at all, while DuckDB follows the SQL standard

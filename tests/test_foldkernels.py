@@ -2,7 +2,7 @@
 
 functions/foldkernels.py replaces the interpreted Catalyst folds of
 the multi-projection banding stages (dedup._auto_bands,
-similarity._bucket_col).  The optimization contract is BITWISE
+dedup._bucket_col).  The optimization contract is BITWISE
 equality — the driver hash-compares gate outputs against the DuckDB
 oracle, so "close" is a regression.  These tests compare each
 deployed kernel against a hand-built evaluation of the exact
@@ -60,12 +60,12 @@ def test_band_keys_np_matches_catalyst(spark, sf_dir):
 
 
 def test_bucket_np_matches_catalyst(spark, sf_dir):
-    # bucket_np against the pre-r10 similarity._bucket_col body.
-    from python_sql_datawarehouse_project_spark.operators.similarity import (
-        _emb_normalized,
+    # bucket_np against the pre-r10 dedup._bucket_col body.
+    from python_sql_datawarehouse_project_spark.operators.dedup import (
+        _load_normalized,
     )
 
-    n = _emb_normalized(spark, sf_dir)
+    n = _load_normalized(spark, sf_dir)
     planes = H.RP_PLANES[: H.RP_BITS]
     bucket = F.lit(0).cast("long")
     for i in range(H.RP_BITS):
@@ -79,43 +79,6 @@ def test_bucket_np_matches_catalyst(spark, sf_dir):
     cat_rows = sorted(map(tuple, cat.collect()))
     assert cat_rows, "fixture table empty"
     assert sorted(map(tuple, got.collect())) == cat_rows
-
-
-def test_dots_np_bitwise_equals_catalyst_panel(spark, sf_dir):
-    # dots_np against the Catalyst array-of-folds it replaced on
-    # sim9's truth side, on real normalized vectors — every bit.
-    import struct
-
-    from python_sql_datawarehouse_project_spark.operators.similarity import (
-        _emb_normalized,
-    )
-
-    def _bits(x):
-        return struct.unpack("<q", struct.pack("<d", x))[0]
-
-    n = _emb_normalized(spark, sf_dir)
-    panel = [
-        list(map(float, r.vn))
-        for r in sorted(
-            n.filter(F.col("vec_id") < 7).collect(), key=lambda r: r.vec_id
-        )
-    ]
-    assert panel, "fixture table empty"
-    cat = n.select(
-        "vec_id",
-        F.array(
-            *[
-                H.dot_fold(F.col("vn"), F.array(*[F.lit(x) for x in v]))
-                for v in panel
-            ]
-        ).alias("d"),
-    )
-    got = n.select("vec_id", K.dots_np(panel)(F.col("vn")).alias("d"))
-    ref = {r.vec_id: r.d for r in cat.collect()}
-    out = {r.vec_id: r.d for r in got.collect()}
-    assert out.keys() == ref.keys()
-    for k in ref:
-        assert [_bits(x) for x in out[k]] == [_bits(x) for x in ref[k]], k
 
 
 def test_kernels_on_empty_frame(spark):

@@ -61,6 +61,13 @@ def test_every_query_has_entry_or_documented_gap():
     assert missing == allowed_gaps, f"queries without oracle: {missing - allowed_gaps}"
 
 
+def test_named_gate_sets_name_live_gates():
+    # A family deletion must take its keys out of these sets too: a
+    # stale name only surfaces later as a KeyError in a slow sweep.
+    stale = (registry.HASHED_AT_SCALE | registry.HEAVY_ORACLE_SF1) - set(_QUERIES)
+    assert not stale, f"named gate sets list unknown keys: {sorted(stale)}"
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -409,3 +409,18 @@ def test_truncated_biff_raises_typed(tmp_path):
         f.write(bytes(cut))
     with pytest.raises(XlsFormatError):
         read_first_sheet_xls(p)
+
+
+def test_xlsx_column_index_roundtrip():
+    from python_sql_datawarehouse_project_spark.sources.xlsx import _col_index
+
+    def letters(n: int) -> str:
+        out = ""
+        n += 1
+        while n:
+            n, r = divmod(n - 1, 26)
+            out = chr(ord("A") + r) + out
+        return out
+
+    for i in [0, 1, 25, 26, 27, 51, 52, 701, 702, 703, 16383]:
+        assert _col_index(f"{letters(i)}1") == i
