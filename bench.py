@@ -19,22 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _smallest_sibling_sf(sf_dir: str) -> str:
-    """Smallest sf* directory next to the bench data root — the
-    cheapest data that still exercises every codegen path."""
-    parent = os.path.dirname(os.path.abspath(sf_dir.rstrip("/")))
-    best, best_sf = sf_dir, float("inf")
-    try:
-        for name in os.listdir(parent):
-            m = re.fullmatch(r"sf([0-9.]+)", name)
-            p = os.path.join(parent, name)
-            if m and os.path.isdir(p) and float(m.group(1)) < best_sf:
-                best, best_sf = p, float(m.group(1))
-    except OSError:
-        pass
-    return best
-
-
 def _host_calibration(spark) -> dict[str, float]:
     """Fixed, data-independent micro-benchmarks that measure THIS
     box, not this repo: a codegen/CPU probe (hash-fold over a
@@ -209,22 +193,6 @@ def main() -> None:
     next(iter(queries.values()))(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    # JIT/codegen warm-up for the two expression families whose first
-    # session use pays a one-off 3-5 s (interpreted higher-order
-    # folds + the sketch agg pipeline): run one tiny-SF query from
-    # each so per-query timings below measure steady-state execution,
-    # not whichever query alphabetically trips session init (PERF.md
-    # §4).  The warm-up dir is the smallest sibling SF of the bench
-    # data root (not a hardcoded path, which would silently no-op on
-    # other checkouts); fall back to the bench dir itself.
-    warm_sf = os.environ.get("SPARK_GRAFT_WARM_DIR") or _smallest_sibling_sf(sf_dir)
-    if os.path.isdir(warm_sf):
-        for wname in ("dd3_minhash_lsh_pairs", "dd5_embedding_neardup"):
-            if wname in queries:
-                queries[wname](spark, warm_sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-
     # Calibrate AFTER the warm-up block: measured cold (right after
     # session build) the probes carry first-noop-commit + codegen
     # compile noise and swing 3x between sessions; hot they anchor.

@@ -52,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--gate",
-        help="run ONE registry gate (analytics/dedup/text/... query) "
+        help="run ONE registry gate (analytics/tpch/text/... query) "
         "against --sf-dir instead of the client pipeline",
     )
     ap.add_argument(

@@ -1,2 +1,2 @@
 """Scalar/column function kits: reference cleansing rules (R1-R8) and
-the text/dedup extension functions."""
+the text and fingerprint extension functions."""

@@ -38,7 +38,7 @@ Scale design (100 TB):
   * pk1's only wide dependency is a global running token count —
     a range-partitioned sort at cluster scale (same W5/ds2 frame);
     everything downstream is per-row integer arithmetic.
-  * ls1 is dd1's content key plus one window over it; the audit
+  * ls1 is an md5 content key plus one window over it; the audit
     min/max rides the same shuffle.  Split membership depends only
     on content bytes, so it is stable under re-partitioning,
     re-ingestion and re-runs — the property that makes it safe.
@@ -69,10 +69,9 @@ def pd1_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The token array is projected into a column before the window
     transform (interpreted higher-order lambdas re-evaluate captured
-    expression trees per element — same measured pitfall as
-    dedup._shingles).  Windows leave the doc as 60-bit md5 slices;
-    the distinct + window-count + per-doc rollup exchanges only
-    (doc_id, whash) pairs."""
+    expression trees per element — a measured pitfall).  Windows leave
+    the doc as 60-bit md5 slices; the distinct + window-count + per-doc
+    rollup exchanges only (doc_id, whash) pairs."""
     docs = load_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     # Tokenize ONCE before the exchange (pushing the filter to the
@@ -307,7 +306,7 @@ FROM cum
 # -- ls1: leakage-safe train/val split --------------------------------
 def ls1_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val assignment keyed on the md5 of NORMALIZED CONTENT
-    (dd1's content key), so byte-identical duplicates always land in
+    (an exact-duplicate key), so byte-identical duplicates always land in
     the same split; plus the audit column a naive doc_id-keyed split
     needs: group_leaky is true iff the doc's exact-duplicate group
     would have straddled the naive split."""

@@ -373,9 +373,9 @@ _DHASH_EXPR = (
 
 def mm4_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup pairs by perceptual-hash banding: dHash each
-    image payload, band the signature 2x16 bits (dd4's pigeonhole —
+    image payload, band the signature 2x16 bits (the pigeonhole rule —
     exact for Hamming distance <= 1), verify candidates with the
-    exact bit_count(xor).  The multimodal twin of dd4: byte-identical
+    exact bit_count(xor).  Byte-identical
     re-uploads AND (with a real decoder) re-encoded/resized copies
     land at distance 0-1 while distinct images scatter.
 

@@ -36,8 +36,7 @@ Building q9 runs only the shuffle stages adaptive execution needs to
 plan the checkpoint of order_shipments (2 jobs at sf0.01; an eager
 checkpoint of the union, with a persist per level, ran 11).  A deep
 recursion would instead checkpoint the frontier every few levels to
-bound the plan (SURVEY.md §4.2); `finalize_recursion` below is that
-pattern, kept for the k-means and dedup fixpoints.
+bound the plan (SURVEY.md §4.2).
 """
 
 from __future__ import annotations
@@ -48,27 +47,6 @@ from ..plans.mv import delayed_orders_chain
 from ..star import STAR_SQL_CTES
 
 MAX_LEVEL = 3
-
-
-def finalize_recursion(union: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Materialize a recursion result off its cached levels, then
-    release them.
-
-    The per-level persists are load-bearing only WHILE the union
-    computes (level k reuses the cached level k-1 instead of
-    re-deriving the whole prefix).  An eager localCheckpoint runs that
-    computation once and stores just the final partitions — whose
-    lifetime is tied to the returned DataFrame (ContextCleaner frees
-    the blocks on GC) — so the frontier caches can be dropped
-    immediately and repeated invocations hold no residual storage.
-    This also truncates the per-level lineage chain, which is the
-    checkpoint cadence a deep recursion needs on a real cluster
-    anyway (SURVEY.md §4.2).
-    """
-    out = union.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist(blocking=False)
-    return out
 
 
 def order_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:

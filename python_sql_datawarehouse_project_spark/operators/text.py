@@ -524,8 +524,7 @@ def tx8_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial chunk is kept (a doc never loses its tail); slice()
     truncates the last chunk at the token count.  Output carries the
     chunk token count and an md5 of the re-joined text, which is what
-    a downstream exact-dedup at chunk grain consumes (dd1 at chunk
-    level).
+    a downstream exact-dedup at chunk grain consumes.
 
     Scale: per-row array expressions + one explode — no shuffle, no
     UDF; explode multiplies rows ~n/stride x but each output row is a
@@ -711,8 +710,8 @@ def tx10_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     each iteration is one hash join (ranks are re-keyed by word) and
     one map-side-combinable SUM — the standard distributed PageRank
     round.  Per-round eager localCheckpoints keep the plan
-    constant-size (dd7's lesson: Catalyst analysis itself blows up on
-    an unrolled 5-deep self-referencing plan) and release via
+    constant-size (measured: Catalyst analysis itself blows up on an
+    unrolled 5-deep self-referencing plan) and release via
     ContextCleaner."""
     toks = load_table(spark, sf_dir, "documents").select(
         _tokens(F.col("text")).alias("tk")
@@ -755,8 +754,8 @@ def tx10_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The rounds join/aggregate VOCABULARY-sized frames (the corpus
     # tokenize behind nodes/ev already materialized above, under the
     # session partitioning); right-size the loop's shuffles to that
-    # cardinality — dd7's measured lesson that near-empty tasks cost
-    # more than graph rounds this small.  No-op once the graph is
+    # cardinality — measured: near-empty tasks cost more than graph
+    # rounds this small.  No-op once the graph is
     # big enough for the session setting.
     shuffle_conf = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(shuffle_conf)

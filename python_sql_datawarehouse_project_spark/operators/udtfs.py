@@ -78,8 +78,8 @@ def tx13_chunk_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ux1_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GROUPED_AGG pandas UDF seam — the third and last Python
-    extension surface (§2.10) after mapInPandas (mm2), applyInPandas
-    (dd5) and the LATERAL UDTF (tx13): a user-defined AGGREGATE
+    extension surface (§2.10) after mapInPandas (mm2) and the LATERAL
+    UDTF (tx13): a user-defined AGGREGATE
     invocable inside a normal groupBy, arrow-batched per group.
 
     The UDAF computes the per-language character total over int64
@@ -125,7 +125,7 @@ def ux2_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FUNCTION ... RETURN <expr>) carrying the reference's R2/R3
     sales-consistency repair (tools.load_crm_sales_details_v1.sql:
     96-109 — if sales is null/<=0/inconsistent, recompute as
-    qty * abs(price)).  Unlike every Python seam (mm2/dd5/tx13/ux1),
+    qty * abs(price)).  Unlike every Python seam (mm2/tx13/ux1),
     a SQL UDF inlines into the plan as a plain expression tree:
     whole-stage codegen, predicate pushdown and CSE all still apply —
     it is the zero-overhead way to package a business rule, and the

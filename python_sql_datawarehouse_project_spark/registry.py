@@ -20,7 +20,6 @@ from .operators import (
     asof,
     bpe,
     corpus,
-    dedup,
     events,
     layout,
     mix,
@@ -73,7 +72,6 @@ _MODULES = (
     layout,
     events,
     asof,
-    dedup,
     mix,
     multimodal,
     profiling,
@@ -121,9 +119,9 @@ HASHED_AT_SCALE = frozenset({
     # 0.2-10M rows at sf10), not engine compute, so the hashed path
     # brings them into the sf10 sweep.  The compute-bound exclusions
     # (rj2's interval join, ds2/ds5/ds6/ds7's corpus quantiles,
-    # tx10's fixed-size-but-heavy oracle, q44's basket pairs,
-    # dd14/dd16's banded-LSH oracles) stay out — hashing cannot help
-    # an oracle whose WHERE/JOIN is the expensive part.
+    # tx10's fixed-size-but-heavy oracle, q44's basket pairs) stay
+    # out — hashing cannot help an oracle whose WHERE/JOIN is the
+    # expensive part.
     "aj1_asof_last_event",
     "ds3_filter_pipeline",
     "ev3_session_windows",
@@ -142,7 +140,6 @@ HASHED_AT_SCALE = frozenset({
     "tx5_tfidf_top_terms",
     "tx7_repetition",
     # pre-round-8 members
-    "dd4_simhash",
     "ev11_gap_fill",
     "pd1_window_dedup",
     "q1_monthly_sales_product",
@@ -160,35 +157,4 @@ HASHED_AT_SCALE = frozenset({
     "w8_rolling_median",
     "w9_running_distinct",
     "zo1_zorder_code",
-})
-
-
-# Gates whose DUCKDB ORACLE (not the Spark operator) is quadratic or
-# recursive-closure work that does not complete at sf >= 1 in bounded
-# time: the scale sweep skips the oracle replay for these and records
-# the skip in the artifact's __meta__.  All are hash-green at the
-# three driver SFs, and each has either a capped scale-safe twin
-# (dd14/dd16/dd17/cs2's Spark side) or a declared small-corpus
-# role (dd5).  Kept in sync with measured probe results — a gate
-# leaves this set the round its oracle finishes at sf1 (round 7:
-# every member probed with a 180-300 s timeout; dd10's oracle
-# finished in 1.0 s and moved into the sweep, the rest timed out).
-HEAVY_ORACLE_SF1 = frozenset({
-    "cs1_canonical_selection",
-    "cs2_capped_canonical_pipeline",
-    "dd12_triangle_census",
-    "dd13_ensemble_agreement",
-    "dd17_minhash_capped_pairs",
-    "dd2_ngram_jaccard_pairs",
-    "dd3_minhash_lsh_pairs",
-    # tx20's oracle is dd3's band self-join plus a mod-split WHERE —
-    # same DuckDB cost class; the Spark side (broadcast asymmetric
-    # probe) has its own decade timing in PERF.md round 8.
-    "tx20_fuzzy_decontamination",
-    "dd5_embedding_neardup",
-    "dd6_embedding_neardup_lsh",
-    "dd7_dup_clusters",
-    "dd8_containment_pairs",
-    "dd9_fuzzy_pairs",
-    "qa15_lsh_recall",
 })

@@ -1,5 +1,5 @@
 """Streaming exact dedup via ``dropDuplicatesWithinWatermark`` —
-the streaming twin of dd1's batch exact dedup (SURVEY.md §2.9
+the streaming twin of a batch exact dedup (SURVEY.md §2.9
 extension), completing the streaming family: windowed aggs
 (windows.py), arbitrary state (stateful.py), stream-stream join
 (joins.py), and now keyed dedup.

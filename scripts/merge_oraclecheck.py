@@ -39,10 +39,6 @@ def main() -> None:
         "n_ok": sum(1 for r in records.values() if not r.get("err")),
         "n_total": len(records),
         "hashed_gates": hashed,
-        "skipped_heavy_oracle": segments[-1].get("skipped_heavy_oracle", []),
-        "skipped_spark_engine_cap": segments[-1].get(
-            "skipped_spark_engine_cap", {}
-        ),
         "suspect_gates": sorted(
             {g for s in segments for g in s.get("suspect_gates", [])}
         ),

@@ -1,12 +1,8 @@
 """Scale-factor parity sweep: replay the registry against DuckDB at
-an arbitrary SF directory, with the two declared scale policies
-applied automatically:
-
-  * registry.HASHED_AT_SCALE  -> testing.compare_hashed (in-engine
-    count + md5 hash-sum on both sides; no driver-side rows)
-  * registry.HEAVY_ORACLE_SF1 -> skipped (the DuckDB oracle, not the
-    Spark operator, is the thing that does not scale; every member
-    was probed with an explicit timeout — see the registry comment)
+an arbitrary SF directory, with the declared scale policy applied
+automatically: registry.HASHED_AT_SCALE gates go through
+testing.compare_hashed (in-engine count + md5 hash-sum on both sides;
+no driver-side rows).
 
 Round-10 harness upgrades (VERDICT r9 #1/#2 — the hours-long sf10
 sweeps needed the health instrumentation bench.py already had, plus
@@ -57,23 +53,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-# Spark-side engine caps that abort AT SCALE by documented design —
-# the sweep skips these and records the reason.  EMPTY since round 9:
-# q43's former entry was retired when VERDICT r8 #6 was executed —
-# spark.sql.cteRecursionRowLimit is a conf, not a wall.  Measured at
-# sf1 (round 9): default 1,000,000 reproduces the documented abort;
-# raised, the native recursion completes 7,064,790 chain rows in
-# 9.3 s / 3.5 GB JVM heap and the full DuckDB oracle hash-matches.
-# The sweep now raises the conf around q43 via GATE_CONF_OVERRIDES.
-SKIP_SPARK_CAP_SF1: dict[str, str] = {}
-
 # Per-gate session-conf overrides, set before the gate and restored
 # after — for gates whose AT-SCALE run needs a non-default engine
 # knob that must not leak into the rest of the sweep.
 GATE_CONF_OVERRIDES = {
-    # ~7M chain rows at sf1, ~70M at sf10: give the working-table
-    # 200M headroom (the limit is a row-count guardrail, not memory —
-    # 3.5 GB heap measured at sf1's 7M rows).
+    # ~7M chain rows at sf1, ~70M at sf10 (the 1,000,000 default
+    # aborts at sf1): give the working-table 200M headroom (the limit
+    # is a row-count guardrail, not memory — 3.5 GB heap measured at
+    # sf1's 7M rows).
     "q43_recursive_sql": {"spark.sql.cteRecursionRowLimit": "200000000"},
 }
 
@@ -208,11 +195,6 @@ def main() -> None:
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--json-out")
     ap.add_argument(
-        "--include-heavy",
-        action="store_true",
-        help="also replay HEAVY_ORACLE_SF1 gates (bring patience)",
-    )
-    ap.add_argument(
         "--only",
         help="comma-separated gate subset (operational reruns)",
     )
@@ -251,32 +233,23 @@ def main() -> None:
     spark = build_session(app_name="oraclecheck-sf", extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
     gates, oracles = registry.queries(), registry.oracles()
-    skipped = [] if args.include_heavy else sorted(
-        k for k in gates if k in registry.HEAVY_ORACLE_SF1
-    )
-    capped = sorted(k for k in gates if k in SKIP_SPARK_CAP_SF1)
     extra = sorted(
         k for k in (args.exclude or "").split(",") if k and k in gates
     )
-    names = [
-        k
-        for k in sorted(gates)
-        if k not in skipped and k not in capped and k not in extra
-    ]
+    names = [k for k in sorted(gates) if k not in extra]
     if args.only:
         only = {k for k in args.only.split(",") if k}
         unknown = only - set(gates)
         if unknown:
             ap.error(f"unknown gates in --only: {sorted(unknown)}")
-        # --only is an explicit operator request: it overrides the
-        # policy skip lists (HEAVY_ORACLE_SF1 / engine caps / --exclude)
-        # instead of intersecting with their survivors — otherwise
-        # `--only dd7_dup_clusters` without --include-heavy silently
-        # runs zero gates and exits 0 looking green (ADVICE r7).
-        overridden = sorted(only & set(skipped + capped + extra))
+        # --only is an explicit operator request: it overrides
+        # --exclude instead of intersecting with its survivors —
+        # otherwise `--only X --exclude X` silently runs zero gates and
+        # exits 0 looking green (ADVICE r7).
+        overridden = sorted(only & set(extra))
         if overridden:
             print(
-                f"oracle-check: --only overrides skip lists for {overridden}",
+                f"oracle-check: --only overrides --exclude for {overridden}",
                 file=sys.stderr,
             )
         names = sorted(only)
@@ -314,10 +287,6 @@ def main() -> None:
             "hashed_gates": sorted(
                 k for k in names if k in registry.HASHED_AT_SCALE
             ),
-            "skipped_heavy_oracle": skipped,
-            "skipped_spark_engine_cap": {
-                k: SKIP_SPARK_CAP_SF1[k] for k in capped
-            },
             "skipped_operator": extra,
             "calib_timeline": timeline,
             "suspect_gates": _attribution(names, timeline),
@@ -325,8 +294,7 @@ def main() -> None:
             "gc_summary": _gc_summary(args.gc_log) if args.gc_log else None,
             "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
             "note": "hashed gates compared via in-engine count+md5 "
-            "hash-sum (testing.compare_hashed); heavy skips are "
-            "oracle-side cost only — see registry.HEAVY_ORACLE_SF1; "
+            "hash-sum (testing.compare_hashed); "
             "suspect_gates = probe-bracketed noise attribution "
             "(bench._suspect_gates), rss_peak_mb = peak java RSS "
             "during the gate",

@@ -17,9 +17,7 @@ backstop that no gate — present or future — ships with:
 
 Streaming gates are excluded: calling them drains a real stream (the
 plan shapes of their stateful operators are pinned separately in
-test_streaming.py / test_plans.py).  Even dd5 — the declared-role
-exact O(n^2) verifier — passes this bar: its block-pair stage is a
-bucketed equi-join, never a CartesianProduct node.
+test_streaming.py / test_plans.py).
 """
 
 from __future__ import annotations
@@ -72,7 +70,6 @@ _SINGLE_PARTITION_OK = {
     "ev17_value_histogram",
     "ev19_decayed_engagement",  # 1-row data-derived NOW frame
     "ev20_growth_accounting",  # 1-row global max-day frame
-    "dd13_ensemble_agreement",  # 1-row agreement scalar
     "ev21_rolling_correlation",  # |days| rolling window, calendar-bounded
     "pk1_pack_chunks",
     "q15_top_supplier",
@@ -88,7 +85,6 @@ _SINGLE_PARTITION_OK = {
     "qa12_corr_profile",
     "qa13_benford_digits",
     "qa14_kmv_set_ops",
-    "qa15_lsh_recall",
     "qa16_mad_outliers",
     "qa19_ndv_profile",
     "qa1_null_profile",
