@@ -218,10 +218,6 @@ def main() -> None:
         calib = {k: min(calib[k], retry[k]) for k in calib}
     noisy_reasons = [f"start_{k}" for k in _over_band(calib, band)]
 
-    from python_sql_datawarehouse_project_spark.streaming.windows import (
-        LAST_DRAIN_SPLIT,
-    )
-
     # In-loop probe: one 0.1-0.2 s cpu-probe sample every PROBE_EVERY
     # gates.  The bracketing calibrations miss mid-run sick windows
     # (observed: a contiguous alphabetical span of gates 5-24x slow
@@ -258,14 +254,12 @@ def main() -> None:
             return 0
 
     total = 0.0
-    stream_split: dict[str, dict] = {}
     calib_timeline: list[list] = []  # [gate_name, probe_sec, gate_index]
     gate_steal: dict[str, int] = {}  # gate -> stolen ticks during it
     sorted_names = sorted(queries)
     for i, name in enumerate(sorted_names):
         if i % PROBE_EVERY == 0:
             calib_timeline.append([name, _probe(), i])
-        LAST_DRAIN_SPLIT.clear()
         s0 = _steal_ticks()
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -275,8 +269,6 @@ def main() -> None:
         steal = _steal_ticks() - s0
         if steal:
             gate_steal[name] = steal
-        if name.startswith("stream_") and LAST_DRAIN_SPLIT:
-            stream_split[name] = dict(LAST_DRAIN_SPLIT)
     # trailing sentinel: the last block needs a probe on BOTH sides
     calib_timeline.append(["__end__", _probe(), len(sorted_names)])
     suspect_gates = _suspect_gates(sorted_names, calib_timeline)
@@ -293,7 +285,6 @@ def main() -> None:
     # retry itself was clean.
     steal_retry: dict[str, dict] = {}
     for name in steal_suspects:
-        LAST_DRAIN_SPLIT.clear()
         s0 = _steal_ticks()
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode(
@@ -329,11 +320,6 @@ def main() -> None:
     _warn_regressions(timings)
     _record_history(timings, sf, calib, noisy_reasons, steal_retry)
 
-    # Each drained stream gate carries a fixed AvailableNow lifecycle
-    # cost (query start/stop, source listing, checkpoint init) that is
-    # NOT execution work; stream_setup_total_sec quantifies it so
-    # cross-round totals can compare execution (VERDICT r5 #8).
-    setup_total = round(sum(s["setup_s"] for s in stream_split.values()), 3)
     print(
         json.dumps(
             {
@@ -351,8 +337,6 @@ def main() -> None:
                 "gate_steal_ticks": gate_steal,
                 "steal_suspect_gates": steal_suspects,
                 "steal_retry": steal_retry,
-                "stream_setup_total_sec": setup_total,
-                "stream_split": stream_split,
             }
         )
     )

@@ -18,7 +18,7 @@ Layout:
               validation operators (V1-V5).
   plans/      Medallion pipeline (bronze->silver->gold), MV registry,
               run-log, dependency-gated execution.
-  streaming/  Structured Streaming ingestion + event-time windows.
+  streaming/  Streaming maintenance: file feed -> MVs, MERGE, SCD2.
 """
 
 __version__ = "0.1.0"

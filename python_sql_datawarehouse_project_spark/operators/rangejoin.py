@@ -31,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
-from .events import VALUE_DEC
+from ..catalog import VALUE_DEC, load_table
 
 WINDOW_SEC = 3600
 

@@ -30,9 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import VALUE_DEC, load_table
 from ..functions import hashing as H
-from .events import VALUE_DEC
 
 SALT_BUCKETS = 16
 

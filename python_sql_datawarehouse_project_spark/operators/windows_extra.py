@@ -115,7 +115,7 @@ W8_FRAME_ROWS = 5  # rolling frame: current row + 4 preceding
 def w8_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per user: EXACT rolling median of the event value over the
     last W8_FRAME_ROWS events — the robust de-noised signal a
-    mean-based rolling stat (ev8's shape) can't give on heavy-tailed
+    mean-based rolling stat can't give on heavy-tailed
     values.  The reference has no ordered-set aggregates at all
     (SURVEY.md §2.5 lists its full window surface); this extends the
     family with a holistic (non-mergeable) window aggregate, the one

@@ -6,6 +6,7 @@ the pre-registered views (region nation customer supplier part orders
 lineitem events documents embeddings) producing identical column
 names.  Keys present in queries() but absent from oracles() get a
 weaker rows-only check (reserved for non-SQL-expressible operators).
+Every gate is a batch query over operators/; streaming/ holds none.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from .operators import (
     asof,
     bpe,
     corpus,
-    events,
     layout,
     mix,
     multimodal,
@@ -40,14 +40,6 @@ from .operators import (
     windows,
     windows_extra,
 )
-from .streaming import bounded as stream_bounded
-from .streaming import dedup as stream_dedup
-from .streaming import enrich as stream_enrich
-from .streaming import extras as stream_extras
-from .streaming import joins as stream_joins
-from .streaming import stateful as stream_stateful
-from .streaming import tws as stream_tws
-from .streaming import windows as stream_windows
 
 # The seven warehouse-parity modules come first: their 50 gates are
 # the keys COVERAGE.md's parity tables map, so a check of the first 50
@@ -63,27 +55,18 @@ _MODULES = (
     rangejoin,
     skew,
     text,
-    stream_windows,
-    stream_stateful,
-    stream_joins,
-    stream_dedup,
     quality,
     corpus,
     layout,
-    events,
     asof,
     mix,
     multimodal,
     profiling,
-    stream_extras,
-    stream_enrich,
     windows_extra,
     udtfs,
-    stream_tws,
     retrieval,
     semijoin,
     bpe,
-    stream_bounded,
     approx,
 )
 
@@ -124,15 +107,7 @@ HASHED_AT_SCALE = frozenset({
     # expensive part.
     "aj1_asof_last_event",
     "ds3_filter_pipeline",
-    "ev3_session_windows",
     "mm4_phash_neardup",
-    "stream_coldstart_purchases",
-    "stream_dedup_events",
-    "stream_first_events",
-    "stream_sessions_bounded",
-    # ~1M sessions at sf1 / 9.5M at sf10 — output-bound like the other
-    # session gates; the oracle's window stack itself is cheap.
-    "stream_sessions_custom",
     "tx12_commonness",
     "tx16_bigram_novelty",
     "tx2_quality_score",
@@ -140,14 +115,12 @@ HASHED_AT_SCALE = frozenset({
     "tx5_tfidf_top_terms",
     "tx7_repetition",
     # pre-round-8 members
-    "ev11_gap_fill",
     "pd1_window_dedup",
     "q1_monthly_sales_product",
     "q43_recursive_sql",
     "q4_running_sales",
     "q9_delayed_orders_chain",
     "qa2_dup_keys",
-    "stream_session_windows",
     "tx13_chunk_udtf",
     "tx8_chunks",
     "ux2_sql_udf",

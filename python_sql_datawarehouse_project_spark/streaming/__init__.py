@@ -1,3 +1,3 @@
-"""Structured Streaming layer: file-source ingestion (S11 analogue)
-and event-time window operators with watermarks (SURVEY.md §2.9 —
-new capability beyond the strictly-batch reference)."""
+"""Structured Streaming maintenance of warehouse tables: `maintenance`
+drains a staged file feed into incremental MVs, MERGE and SCD2 (the S11
+analogue).  The reference is strictly batch (SURVEY.md §2.9)."""

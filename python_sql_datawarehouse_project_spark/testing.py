@@ -50,8 +50,8 @@ def _type_category(t) -> str:
     The driver's value hash distinguishes int from Decimal, so a
     DuckDB oracle that carries SUM(BIGINT) as HUGEINT (arrow
     decimal128(38,0)) hash-fails at the driver even when every value
-    is identical — the bug class that shipped in rounds 1 (ev4/mm1)
-    and 2 (ev8/qa5) because fetchall() converts HUGEINT to Python int
+    is identical — the bug class that shipped in rounds 1 (mm1) and
+    2 (qa5) because fetchall() converts HUGEINT to Python int
     and the old canonicalizer coerced Decimal to float.  Comparing
     categories (integral / floating / decimal) per column catches it
     locally before the driver does.
@@ -261,8 +261,8 @@ def _spark_row_hash(sdf: DataFrame):
             # Midnight renders as the bare date, mirroring the full
             # compare's _canon_value (timestamp@00:00 == date) so a
             # gate whose Spark side is date_trunc (timestamp) and
-            # whose oracle is DATE hashes equal — caught by
-            # stream_dedup_events' day column.
+            # whose oracle is DATE hashes equal — caught by a since-
+            # deleted streaming dedup gate's day column.
             full = F.date_format(col, "yyyy-MM-dd HH:mm:ss.SSSSSS")
             v = F.when(
                 F.date_format(col, "HH:mm:ss.SSSSSS")

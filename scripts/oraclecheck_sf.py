@@ -12,7 +12,7 @@ crash containment after the r9 JVM death took 31 gates as collateral):
     `suspect_gates` bracketing logic as bench.py (shared code —
     bench._suspect_gates, pinned by tests/test_bench_attribution.py
     and tests/test_sweep_telemetry.py), recorded in __meta__ so a
-    543 s stream gate can be attributed to the box or the code from
+    543 s gate can be attributed to the box or the code from
     the artifact alone.
   * memory telemetry: a sampling thread records the peak java RSS per
     gate (every record carries rss_peak_mb); optional --gc-log writes
@@ -25,10 +25,10 @@ crash containment after the r9 JVM death took 31 gates as collateral):
   * inter-gate hygiene: gc.collect() after every gate drops the
     py4j references that keep dead localCheckpoint blocks alive
     JVM-side; clearCache() every 10 gates bounds block-manager
-    accumulation across a 159-gate run (the r9 death's suspected
+    accumulation across a 127-gate run (the r9 death's suspected
     mechanism — heap pressure mounting across one long-lived JVM).
-  * --driver-mem sizes the sweep JVM for the SF (sf10 state-heavy
-    streaming gates need more than the 8g default).
+  * the sweep JVM's heap is SPARK_GRAFT_DRIVER_MEM (default 8g);
+    __meta__.driver_mem records it.
 
 Writes the ORACLECHECK_sf1_r*.json artifact shape: one record per
 gate plus a __meta__ block declaring exactly what was skipped and
@@ -208,15 +208,7 @@ def main() -> None:
         help="write a JVM unified GC trace here (-Xlog:gc*) and put "
         "its summary in __meta__.gc_summary",
     )
-    ap.add_argument(
-        "--driver-mem",
-        help="driver heap for the sweep JVM (e.g. 24g); sf10's "
-        "state-heavy streaming gates need more than the 8g default",
-    )
     args = ap.parse_args()
-
-    if args.driver_mem:
-        os.environ["SPARK_GRAFT_DRIVER_MEM"] = args.driver_mem
 
     from python_sql_datawarehouse_project_spark import registry
     from python_sql_datawarehouse_project_spark.session import build_session
@@ -341,8 +333,8 @@ def main() -> None:
             if not _jvm_alive(spark):
                 # crash containment: this gate killed the JVM — record
                 # it, relaunch, and keep the sweep alive (r9's death
-                # during stream_sessions_custom took the 30 gates after
-                # it as ConnectionRefusedError collateral)
+                # during a since-deleted streaming session gate took the
+                # 30 gates after it as ConnectionRefusedError collateral)
                 rec["jvm_died"] = True
                 jvm_rebuilds.append(name)
                 print(f"JVM DEATH during {name}; relaunching", flush=True)

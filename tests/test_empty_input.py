@@ -1,4 +1,4 @@
-"""Empty-input boundary sweep: every non-streaming gate runs against a
+"""Empty-input boundary sweep: every gate runs against a
 SCHEMA-ONLY (zero-row) copy of the test tables and must match its
 DuckDB oracle there too.
 
@@ -72,7 +72,7 @@ def one_row_sf_dir(sf_dir, tmp_path_factory):
     """One row per table — the degenerate-variance boundary (zero
     variance, zero histogram width, single-element windows, and a
     star join that comes up empty because the surviving keys don't
-    match).  Found ev17/qa12/qa20's unguarded divisions."""
+    match).  Found qa12/qa20's unguarded divisions."""
     out = str(tmp_path_factory.mktemp("sf1row"))
     con = duckdb.connect()
     for t in _TABLES:
@@ -89,7 +89,7 @@ def _sweep(spark, data_dir):
     qs, oracles = registry.queries(), registry.oracles()
     failures = []
     for name in sorted(qs):
-        if name.startswith("stream_") or name in _EMPTY_INPUT_DIVERGENT:
+        if name in _EMPTY_INPUT_DIVERGENT:
             continue
         try:
             r = compare(name, qs[name], oracles[name], spark, data_dir)

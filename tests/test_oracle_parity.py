@@ -56,8 +56,8 @@ def test_delayed_chain_matches_oracle_at_sf01(name, spark):
 def test_every_query_has_entry_or_documented_gap():
     missing = set(_QUERIES) - set(_ORACLES)
     # Only non-SQL-expressible operators may omit an oracle:
-    # streaming (stateful) and multimodal UDF stages (python decode).
-    allowed_gaps = {n for n in missing if n.startswith(("stream_", "mm2", "mm3"))}
+    # multimodal UDF stages (python decode).
+    allowed_gaps = {n for n in missing if n.startswith(("mm2", "mm3"))}
     assert missing == allowed_gaps, f"queries without oracle: {missing - allowed_gaps}"
 
 
@@ -99,7 +99,7 @@ def test_entry_smoke(spark):
 
 
 def test_harness_flags_hugeint_oracle(spark, sf_dir):
-    # The bug class that shipped in r1 (ev4/mm1) and r2 (ev8/qa5): a
+    # The bug class that shipped in r1 (mm1) and r2 (qa5): a
     # DuckDB oracle carrying SUM(integer) as HUGEINT hash-fails at the
     # driver even when all values are identical.  The harness must flag
     # it locally as a TYPE mismatch (VERDICT r2 #3) — reverting any of

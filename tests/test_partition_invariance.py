@@ -30,11 +30,8 @@ _FLOAT_GATES = (
     "qa20_grouped_regression",
     "qa21_ks_distance",
     "tx17_char_diversity",
-    "ev15_daily_anomaly",
-    "ev19_decayed_engagement",
     "w8_rolling_median",
     "q1_monthly_sales_product",  # DECIMAL money routing
-    "ev1_tumbling_hourly",  # DECIMAL value routing
     "tx2_quality_score",  # fixed per-row expression tree
     "ds1_training_mix",  # hash-gate membership
     "qa4_kmv_distinct",  # single-division estimate
@@ -65,19 +62,13 @@ def test_result_invariant_under_partition_count(name, spark, sf_dir):
 
 @pytest.mark.slow
 def test_every_float_gate_is_partition_invariant(spark, sf_dir):
-    """The systematic form of the suite above: EVERY non-streaming
-    gate whose result schema carries a float/double column re-runs at
+    """The systematic form of the suite above: EVERY gate whose
+    result schema carries a float/double column re-runs at
     shuffle.partitions=3 and must match the default-partition result
     bitwise.  (The named subset documents WHY each design is
     invariant; this loop guarantees no gate ships without being
-    checked at all.)  Streaming gates are excluded — calling them
-    drains a real stream and their determinism is pinned against
-    batch oracles in test_streaming.py."""
-    names = [
-        n
-        for n in _QUERIES
-        if not n.startswith("stream_") and n not in _FLOAT_GATES
-    ]
+    checked at all.)"""
+    names = [n for n in _QUERIES if n not in _FLOAT_GATES]
     failures = []
     old = spark.conf.get("spark.sql.shuffle.partitions")
     for name in names:

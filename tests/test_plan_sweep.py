@@ -14,10 +14,6 @@ backstop that no gate — present or future — ships with:
     (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas /
     BatchEvalPythonUDTF with arrow enabled) — the 10-100x rule from
     the module docstrings.
-
-Streaming gates are excluded: calling them drains a real stream (the
-plan shapes of their stateful operators are pinned separately in
-test_streaming.py / test_plans.py).
 """
 
 from __future__ import annotations
@@ -25,8 +21,6 @@ from __future__ import annotations
 import pytest
 
 from python_sql_datawarehouse_project_spark import registry
-
-_SKIP_PREFIXES = ("stream_",)  # drained streams execute on call
 
 
 def _plan_of(df) -> str:
@@ -36,11 +30,7 @@ def _plan_of(df) -> str:
     )
 
 
-_QUERIES = {
-    k: v
-    for k, v in registry.queries().items()
-    if not k.startswith(_SKIP_PREFIXES)
-}
+_QUERIES = registry.queries()
 
 
 # Gates whose plan legitimately contains an `Exchange SinglePartition`
@@ -49,10 +39,10 @@ _QUERIES = {
 #       a handful of) rows, so the last merge step is single-partition
 #       by definition (qa1, qa4, qa8, qa11-qa16, qa19, qa21
 #       totals, q15/q17/q19/q22/q29/q31/q34/q36/q44 scalar probes,
-#       ev17/ev19 data-derived bounds/NOW frames, tx5/tx9 corpus totals,
+#       tx5/tx9 corpus totals,
 #       ds2/ds7/pk1 budget cutoffs, zo1's min/max normalization frame);
 #   (b) a two-phase prefix sum's OFFSET pass over |buckets| rows —
-#       bounded by bucket count, never by data (ds8, ev16, qa21);
+#       bounded by bucket count, never by data (ds8, qa21);
 #   (c) a deliberately global window matching reference semantics on a
 #       dimension-sized input (w3 surrogate keys — SURVEY §2.5 W6;
 #       w4/w5 ntile/percent_rank over the customer dim).
@@ -66,11 +56,6 @@ _SINGLE_PARTITION_OK = {
     "ds9_priority_sample",  # rank/tau window over a (k+1)-row frame
     "ds12_temperature_mix",  # largest-remainder rank over |langs| rows
     "hh1_frequent_items",  # 1-row total-N support-threshold scalar
-    "ev16_cumulative_users",
-    "ev17_value_histogram",
-    "ev19_decayed_engagement",  # 1-row data-derived NOW frame
-    "ev20_growth_accounting",  # 1-row global max-day frame
-    "ev21_rolling_correlation",  # |days| rolling window, calendar-bounded
     "pk1_pack_chunks",
     "q15_top_supplier",
     "q17_small_quantity_revenue",
