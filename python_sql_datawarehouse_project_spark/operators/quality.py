@@ -556,8 +556,8 @@ def qa11_fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization fact; the violation count is the data-debt metric.
 
     Scale: one (X, Y)-distinct reduction (map-side combinable), one
-    grouped count over it, one global fold to a single row — a
-    two-level distinct-then-count shape, never a COUNT
+    grouped count over it, one global fold to a single row — the same
+    two-level distinct-then-count shape as ev9, never a COUNT
     DISTINCT Expand of the raw table."""
     orders = load_table(spark, sf_dir, "orders")
     per_key = (

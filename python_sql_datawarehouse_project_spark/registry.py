@@ -21,6 +21,7 @@ from .operators import (
     asof,
     bpe,
     corpus,
+    events,
     layout,
     mix,
     multimodal,
@@ -58,6 +59,7 @@ _MODULES = (
     quality,
     corpus,
     layout,
+    events,
     asof,
     mix,
     multimodal,

@@ -39,10 +39,10 @@ _QUERIES = registry.queries()
 #       a handful of) rows, so the last merge step is single-partition
 #       by definition (qa1, qa4, qa8, qa11-qa16, qa19, qa21
 #       totals, q15/q17/q19/q22/q29/q31/q34/q36/q44 scalar probes,
-#       tx5/tx9 corpus totals,
+#       ev19 data-derived NOW frame, tx5/tx9 corpus totals,
 #       ds2/ds7/pk1 budget cutoffs, zo1's min/max normalization frame);
 #   (b) a two-phase prefix sum's OFFSET pass over |buckets| rows —
-#       bounded by bucket count, never by data (ds8, qa21);
+#       bounded by bucket count, never by data (ds8, ev16, qa21);
 #   (c) a deliberately global window matching reference semantics on a
 #       dimension-sized input (w3 surrogate keys — SURVEY §2.5 W6;
 #       w4/w5 ntile/percent_rank over the customer dim).
@@ -56,6 +56,8 @@ _SINGLE_PARTITION_OK = {
     "ds9_priority_sample",  # rank/tau window over a (k+1)-row frame
     "ds12_temperature_mix",  # largest-remainder rank over |langs| rows
     "hh1_frequent_items",  # 1-row total-N support-threshold scalar
+    "ev16_cumulative_users",
+    "ev19_decayed_engagement",  # 1-row data-derived NOW frame
     "pk1_pack_chunks",
     "q15_top_supplier",
     "q17_small_quantity_revenue",

@@ -377,13 +377,18 @@ def test_qa9_cms_state_is_aggregated_before_join(spark, sf_dir):
     assert "HashAggregate" in p[join_pos:], p
 
 
-def test_qa11_distinct_then_count_no_expand(spark, sf_dir):
-    # Keyed COUNT DISTINCT must plan as distinct-then-count (two
-    # aggregates), never an Expand of the raw table.
+def test_ev9_and_qa11_distinct_then_count_no_expand(spark, sf_dir):
+    # Windowed/keyed COUNT DISTINCT must plan as distinct-then-count
+    # (two aggregates), never an Expand of the raw stream.
+    from python_sql_datawarehouse_project_spark.operators import events as evm
     from python_sql_datawarehouse_project_spark.operators import quality as qa
 
-    p = plan_of(qa.qa11_fd_profile(spark, sf_dir), mode="simple")
-    assert "Expand" not in p, p
+    for df in (
+        evm.ev9_hourly_active_users(spark, sf_dir),
+        qa.qa11_fd_profile(spark, sf_dir),
+    ):
+        p = plan_of(df, mode="simple")
+        assert "Expand" not in p, p
 
 
 def test_sk2_salted_join_spreads_key(spark, sf_dir):
@@ -658,6 +663,17 @@ def test_runtime_bloom_filter_prunes_big_side_of_selective_join(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
+def test_ev12_ohlc_is_one_aggregate_no_window(spark, sf_dir):
+    # OHLC via struct MIN/MAX must stay a single map-side-combinable
+    # aggregate: no Window (the ROW_NUMBER formulation sorts every
+    # bucket) and exactly one shuffle (the group-by exchange).
+    from python_sql_datawarehouse_project_spark.operators import events
+
+    p = plan_of(events.ev12_ohlc_hourly(spark, sf_dir), mode="simple")
+    assert "Window" not in p, p
+    assert p.count("Exchange") <= 1, p
+
+
 def test_qa14_sketch_branches_are_take_ordered(spark, sf_dir):
     # Each KMV sketch is a min-K: orderBy+limit must plan as
     # TakeOrderedAndProject (K rows per partition cross the wire),
@@ -688,6 +704,16 @@ def test_q16_grouping_sets_single_expand_single_shuffle(spark, sf_dir):
     assert p.count("Expand") == 1, p
     assert p.count("Exchange") <= 1, p
     assert "Join" not in p
+
+
+def test_ev13_variant_is_scan_speed_no_join(spark, sf_dir):
+    # VARIANT extraction is a per-row projection: no join, no window,
+    # one group-by exchange.
+    from python_sql_datawarehouse_project_spark.operators import events
+
+    p = plan_of(events.ev13_props_variant(spark, sf_dir), mode="simple")
+    assert "Join" not in p and "Window" not in p
+    assert p.count("Exchange") <= 1, p
 
 
 def test_ds6_contamination_probe_is_anti_join(spark, sf_dir):
@@ -974,6 +1000,21 @@ def test_ds8_prefix_sum_never_single_partitions_the_corpus(spark, sf_dir):
     # only the bucket-totals offset frame may be single-partitioned
     for ex in singles:
         assert "btot" in ex or " b#" in ex, ex
+
+
+def test_ev16_window_runs_over_days_not_events(spark, sf_dir):
+    # The distinct-to-date decorrelation: the only window is the
+    # running sum over the DAY-grain frame — no per-event or per-user
+    # window state, and no COUNT(DISTINCT) over a window.
+    import re
+
+    from python_sql_datawarehouse_project_spark.operators import events
+
+    p = plan_of(events.ev16_cumulative_users(spark, sf_dir))
+    win = re.search(r"^\(\d+\) Window\n(?:.*\n)*?\n", p, re.M)
+    assert win, p
+    assert "user_id" not in win.group(0), win.group(0)
+    assert "distinct" not in win.group(0).lower(), win.group(0)
 
 
 def test_sj1_semi_reduction_below_merge_join(spark, sf_dir):

@@ -9,6 +9,10 @@ one fixed dataset cannot cover):
     at the bucket of max(start_a, start_b) reproduces the brute-force
     pair count exactly, for ANY interval sets and bucket width —
     including spans longer than the bucket.
+  * ev19's fixed-tree portability: DuckDB parses and evaluates the
+    generated `c0*1.0 + c1*0.5 + ...` score expression exactly as the
+    Python left-fold (left-associative, one rounding per op) — the
+    assumption that lets the Spark tree and the oracle tree agree.
   * w8's interpolation law: DuckDB quantile_cont(0.5) over a frame is
     bitwise the two-middle-average Python median (what Spark's
     percentile(0.5) computes).
@@ -68,6 +72,25 @@ def test_rj2_banding_counts_each_overlap_exactly_once(ivs):
         if _overlap(ivs[i], ivs[j])
     )
     assert _banded_count(ivs) == brute
+
+
+# --------------------------------------------------------------- ev19
+counts = st.lists(
+    st.integers(min_value=0, max_value=10**12), min_size=1, max_size=31
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(counts)
+def test_ev19_score_tree_matches_duckdb_left_fold(cs):
+    expr = " + ".join(
+        f"CAST({c} AS DOUBLE) * {0.5**k!r}" for k, c in enumerate(cs)
+    )
+    [(ddb,)] = duckdb.sql(f"SELECT {expr}").fetchall()
+    py = float(cs[0]) * 1.0
+    for k, c in enumerate(cs[1:], start=1):
+        py = py + float(c) * 0.5**k
+    assert ddb == py
 
 
 # ----------------------------------------------------------------- w8
