@@ -1,6 +1,6 @@
 """Warehouse storage: batch-partitioned parquet tables with the
-reference's delete-then-insert idempotency, expressed as dynamic
-partition overwrite (SURVEY.md §1.5).
+reference's delete-then-insert idempotency, expressed as a staged write
+swapped into the batch's directory (SURVEY.md §1.5).
 
 Every bronze/silver/gold table is partitioned by dwh_batch_id; writing
 a batch replaces exactly that partition ("DELETE WHERE dwh_batch_id =
@@ -21,6 +21,7 @@ import json
 import os
 import shutil
 import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,30 +89,41 @@ class Warehouse:
         The table schema is recorded first, empty writes included, so
         a crash in between never hides a written column.
 
-        The count is observed during the write job itself (F.observe:
-        zero extra scans, exact number of rows that landed — the Spark
-        analogue of GET DIAGNOSTICS ROW_COUNT in the procs).  Dynamic
-        overwrite writes no partition files for an empty result, which
-        would leave the batch's old rows on disk; a zero count
-        therefore drops the partition, so an empty write leaves the
-        batch absent.
+        The frame is written whole into a hidden staging directory of
+        the table (Spark's file listing skips names starting with `.`,
+        and list_batches reads only partition names), then swapped in:
+        the old partition directory is renamed aside, the staging
+        directory renamed into its place, and the old one removed.  The
+        old rows stay readable until the swap, and a write that fails
+        leaves them in place.  The count is observed during the write
+        job itself (F.observe: zero extra scans, exact number of rows
+        that landed — the Spark analogue of GET DIAGNOSTICS ROW_COUNT
+        in the procs); a zero count drops the partition instead, so an
+        empty write leaves the batch absent.
         """
         from pyspark.sql import Observation
 
         self._record_schema(layer, name, df.schema)
+        target = self._batch_dir(layer, name, batch_id)
+        staging = os.path.join(
+            self.path(layer, name), f".staging-{batch_id}-{uuid.uuid4().hex}"
+        )
+        aside = f"{staging}.replaced"
         obs = Observation()
-        out = df.withColumn(BATCH_COL, F.lit(batch_id)).observe(
-            obs, F.count(F.lit(1)).alias("rows")
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BATCH_COL)
-            .parquet(self.path(layer, name))
-        )
-        n = int(obs.get["rows"])
-        if n == 0:
-            self.drop_batch(layer, name, batch_id)
+        out = df.drop(BATCH_COL).observe(obs, F.count(F.lit(1)).alias("rows"))
+        try:
+            # no _SUCCESS marker: the swap, not a marker file, publishes
+            out.write.option(
+                "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+            ).parquet(staging)
+            n = int(obs.get["rows"])
+            if os.path.isdir(target):
+                os.rename(target, aside)
+            if n:
+                os.rename(staging, target)
+        finally:
+            for d in (staging, aside):
+                shutil.rmtree(d, ignore_errors=True)
         return n
 
     def drop_batch(self, layer: str, name: str, batch_id: str) -> None:
@@ -172,8 +184,8 @@ class Warehouse:
         Scale: ONE pass computes the flag array (pure row
         expressions); the flagged frame is materialized once
         (localCheckpoint — the shared-subplan rule, it feeds the good
-        write, the quarantine write and the stats aggregate), and both
-        writes are partition-pruned dynamic overwrites.  If ``runlog``
+        write, the quarantine write and the stats aggregate), and each
+        write replaces only its table's batch partition.  If ``runlog``
         is given, a ``row_validation_log`` row records the counts."""
         flags = F.array(
             *[
@@ -332,8 +344,8 @@ class Warehouse:
         their files into the scan (pinned in test_storage_maintenance)
         — as-of reads cost what they scan, not what the table holds.
 
-        Semantics note: write_batch's dynamic overwrite REPLACES a
-        re-run batch in place, so as-of sees each batch's latest
+        Semantics note: write_batch REPLACES a re-run batch's
+        partition, so as-of sees each batch's latest
         content — this is "state after loads <= B", the idempotent-
         pipeline notion of time travel, not an MVCC snapshot log."""
         return self.read_table(layer, name).filter(
@@ -351,7 +363,7 @@ class Warehouse:
         Streaming/micro-batch ingestion leaves many tiny files per
         partition; at 100 TB the scan-planning and footer costs of
         millions of small files dominate before a byte is read.
-        Compaction is the same idempotent dynamic-overwrite as
+        Compaction is the same idempotent partition replace as
         write_batch (a replay rewrites the same partition), restricted
         to one partition so running it online races nothing outside
         that batch.  The rewrite preserves rows exactly — asserted in

@@ -9,10 +9,10 @@ Key choices (SURVEY.md §4):
   * AQE on: runtime join-strategy switching, skew-join splitting and
     post-shuffle partition coalescing replace hand-tuned partition
     counts when data volume varies by 1000x between test and prod.
-  * Dynamic partition overwrite: the reference's idempotency unit is
-    "DELETE WHERE dwh_batch_id = X; INSERT" (reference
-    scripts/load_to_bronze.py:590-604); with batch-partitioned tables
-    dynamic overwrite gives identical exactly-once re-run semantics.
+  * JVM case mapping: upper()/lower() use the JVM's mapping (Spark 3's),
+    not ICU's, whose tables cost seconds of CPU to build on a process's
+    first call; Postgres UPPER/LOWER follow the database's LC_CTYPE, so
+    neither mapping is closer to the reference.
   * Arrow enabled: every pandas_udf / applyInPandas extension operator
     moves data via Arrow batches, never row-at-a-time pickling.
 """
@@ -59,8 +59,8 @@ def build_session(
         # 128 MB input splits: a 100 TB table fans out to ~800k tasks,
         # which a 1000-executor cluster drains without straggler blowup.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # -- idempotent batch overwrite (reference delete+insert) ------
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # -- JVM case mapping: no ICU table build on the first lower() --
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         # -- Arrow for all pandas-UDF extension operators --------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- TIMESTAMP(NANOS) parquet reads as raw int64 nanos ---------

@@ -391,6 +391,20 @@ def test_dependency_gate_skips_fact_on_missing_dims(spark, tmp_path):
     assert missing  # gate would skip the fact
 
 
+def test_session_case_mapping_is_pinned(spark):
+    # The JVM and ICU case mappings agree on these; the session uses
+    # the JVM's, which needs no ICU table build on the first lower().
+    words = ["straße", "ΣΑΣ ΟΔΟΣ", "İstanbul", "ǅemal", "ﬁne", "ſ", "ı", "ŉ", "abc"]
+    df = spark.createDataFrame(list(enumerate(words)), "i int, w string")
+    rows = df.orderBy("i").select(F.upper("w"), F.lower("w")).collect()
+    assert [r[0] for r in rows] == [
+        "STRASSE", "ΣΑΣ ΟΔΟΣ", "İSTANBUL", "ǄEMAL", "FINE", "S", "I", "ʼN", "ABC"
+    ]
+    assert [r[1] for r in rows] == [
+        "straße", "σας οδος", "i̇stanbul", "ǆemal", "ﬁne", "ſ", "ı", "ŉ", "abc"
+    ]
+
+
 def test_next_batch_id():
     assert next_batch_id(None) == "BATCH000001"
     assert next_batch_id("BATCH000014") == "BATCH000015"

@@ -340,9 +340,9 @@ def test_run_mvs_incremental_mode_covers_all_nine(spark, tmp_path):
     bad = {n: e for n, (ok, e, _) in {**r1, **r2}.items() if not ok}
     assert not bad
     for name in mv.MVS:
-        # a zero-row MV (the chain has no delayed orders here) writes
-        # no partition files under dynamic overwrite — that's the
-        # documented empty-batch behavior, not a miss
+        # a zero-row MV (the chain has no delayed orders here) leaves
+        # no batch partition — that's the documented empty-batch
+        # behavior, not a miss
         if r2[name][2] > 0:
             assert wh.read_batch("mv", name, B2).count() == r2[name][2]
     modes = {

@@ -73,6 +73,40 @@ def test_table_with_only_empty_writes_reads_as_empty_frame(spark, wh):
     assert df.count() == 0
 
 
+def test_failed_rewrite_keeps_previous_rows_and_no_staging(spark, wh):
+    wh.write_batch(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"),
+        "bronze", "t", "B1",
+    )
+    before = _rows(wh.read_batch("bronze", "t", "B1"))
+    boom = spark.range(3).select(
+        F.when(F.col("id") < 2, F.col("id").cast("int"))
+        .otherwise(F.raise_error(F.lit("boom")).cast("int"))
+        .alias("id"),
+        F.lit("z").alias("v"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        wh.write_batch(boom, "bronze", "t", "B1")
+    assert _rows(wh.read_batch("bronze", "t", "B1")) == before
+    assert not [
+        d for d in os.listdir(wh.path("bronze", "t")) if d.startswith(".staging-")
+    ]
+
+
+def test_rewrite_leaves_only_batch_dirs_and_schema(spark, wh):
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    wh.write_batch(df, "bronze", "t", "B1")
+    wh.write_batch(df, "bronze", "t", "B2")
+    assert wh.write_batch(df.limit(1), "bronze", "t", "B1") == 1
+    table = wh.path("bronze", "t")
+    assert sorted(os.listdir(table)) == [
+        "_schema.json",
+        f"{BATCH_COL}=B1",
+        f"{BATCH_COL}=B2",
+    ]
+    assert "_SUCCESS" not in os.listdir(os.path.join(table, f"{BATCH_COL}=B1"))
+
+
 def test_compaction_bounds_files_and_preserves_rows(spark, wh):
     df = spark.range(0, 1000).select(
         F.col("id"), (F.col("id") % 7).alias("g")
@@ -532,9 +566,9 @@ def test_expectations_all_pass_writes_no_quarantine_rows(spark, wh):
 
 def test_expectations_rerun_with_changed_split_leaves_no_stale_rows(spark, wh):
     """A batch re-run whose pass/fail split CHANGED must not leave the
-    previous run's partition behind: dynamic overwrite writes no files
-    for an empty result, so the empty side's stale partition has to be
-    dropped explicitly (round-6 ADVICE fix).  Sweep all four
+    previous run's partition behind: an empty result writes no
+    partition, so the empty side's stale partition has to be dropped
+    explicitly (round-6 ADVICE fix).  Sweep all four
     transitions: mixed -> all-pass, all-pass -> all-fail, and back."""
     mixed = _exp_frame(spark)
     all_pass = spark.createDataFrame(

@@ -20,23 +20,12 @@ def test_registry_has_no_streaming_module():
 # --- streaming incremental MV maintenance ---------------------------
 
 
-def _seed_mv_stream(spark, tmp, n_batches=2):
+def _seed_mv_stream(spark, tmp):
     """Warehouse with per-batch dim snapshots + a staging dir holding
     one fact parquet file per arriving batch (facts tagged with their
     ingest batch id, the streaming arrival contract)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from python_sql_datawarehouse_project_spark.plans.warehouse import (
-        BATCH_COL,
-        Warehouse,
-    )
-    from tests.test_mv_incremental import (
-        B1,
-        B2,
-        _seed_gold,
-    )
+    from python_sql_datawarehouse_project_spark.plans.warehouse import Warehouse
+    from tests.test_mv_incremental import B1, B2, _seed_gold
 
     wh = Warehouse(spark, str(tmp / "wh"))
     _seed_gold(spark, wh)
@@ -51,7 +40,6 @@ def _seed_mv_stream(spark, tmp, n_batches=2):
 
 
 def test_streaming_mv_maintenance_equals_batch_path(spark, tmp_path):
-    from python_sql_datawarehouse_project_spark.plans import mv_incremental as mi
     from python_sql_datawarehouse_project_spark.streaming import maintenance
     from tests.test_mv_incremental import B1, B2, _rows
 
