@@ -44,7 +44,7 @@ def main(argv: list[str] | None = None) -> int:
         "the named batch (reference refresh_mode='FULL'); "
         "'incremental' folds the new gold batch into each "
         "maintainable MV's state (plans/mv_incremental.py — the "
-        "at-scale path), yielding refresh_mv(history=True) "
+        "at-scale path), yielding full-history refresh "
         "semantics: identical to 'full' on a single-batch "
         "warehouse, full-history once more batches exist "
         "(incremental == full-history recompute is pytest-pinned "

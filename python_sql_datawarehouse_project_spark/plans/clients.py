@@ -10,7 +10,8 @@ seven tools.* log tables) — so two clients can never read each other's
 batches, exactly like the per-client Postgres schemas.
 
 Registry state (client_id, client_schema, last_batch_id, versions)
-persists as a JSON file under <root>/tools/client_reference.json:
+persists as a JSON file under <root>/tools/client_reference.json,
+rewritten whole by atomic rename on every update:
 single-row driver-side control-plane metadata, same storage rationale
 as RunLog's JSONL (runlog.py docstring) — a Spark job per registry
 update would be the tail wagging the dog.
@@ -26,14 +27,14 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 
 from pyspark.sql import SparkSession
 
 from .ingest import FileResult, IngestPlan, ingest_directory
 from .pipeline import next_batch_id, run_batch
 from .runlog import RunLog
-from .warehouse import Warehouse
+from .warehouse import Warehouse, _replace_file
 
 
 @dataclass
@@ -80,9 +81,12 @@ class ClientRegistry:
                 for row in json.load(f):
                     self._clients[row["client_schema"]] = ClientRef(**row)
 
-    def _save(self) -> None:
-        with open(self._path, "w") as f:
-            json.dump([asdict(c) for c in self._clients.values()], f, indent=1)
+    def _save(self, clients: dict[str, ClientRef]) -> None:
+        """Write `clients` as the registry file: serialised first, then
+        swapped in whole, so a row json cannot encode raises with the
+        file as it was.  Callers change memory only after this returns."""
+        text = json.dumps([asdict(c) for c in clients.values()], indent=1)
+        _replace_file(self._path, text)
 
     def register(self, client_schema: str, **fields) -> ClientRef:
         """Idempotent insert; client_id mimics the reference's serial
@@ -94,8 +98,8 @@ class ClientRegistry:
             client_schema=client_schema,
             **fields,
         )
+        self._save({**self._clients, client_schema: ref})
         self._clients[client_schema] = ref
-        self._save()
         return ref
 
     def get(self, client_schema: str) -> ClientRef:
@@ -114,8 +118,11 @@ class ClientRegistry:
     def set_last_batch(self, client_schema: str, batch_id: str) -> None:
         """UPDATE tools.client_reference SET last_batch_id = ...
         (batch_processing.py:385)."""
-        self.get(client_schema).last_batch_id = batch_id
-        self._save()
+        ref = self.get(client_schema)
+        self._save(
+            {**self._clients, client_schema: replace(ref, last_batch_id=batch_id)}
+        )
+        ref.last_batch_id = batch_id
 
     # -- per-client resources -----------------------------------------
     def client_root(self, client_schema: str) -> str:
@@ -167,14 +174,9 @@ def process_client(
     log = registry.runlog(client_schema)
     ingested: list[FileResult] = []
     if sources is not None and mode != "reprocessing":
-        for source_system, incoming_dir in sorted(sources.incoming.items()):
-            if os.path.isdir(incoming_dir):
-                ingested.extend(
-                    ingest_directory(
-                        spark, wh, log, sources.plan,
-                        incoming_dir, source_system, batch_id,
-                    )
-                )
+        ingested = ingest_directory(
+            spark, wh, log, sources.plan, sources.incoming, batch_id
+        )
     # mv_mode="incremental" is the scale path (plans/pipeline.run_mvs);
     # each MV resolves its previous state snapshot from the state
     # layer's own completion markers, so restart/reprocessing replays

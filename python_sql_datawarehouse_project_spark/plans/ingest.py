@@ -17,11 +17,11 @@ the file_audit_log rows and the incoming/success/failed file moves):
                                  batch_processing.py:1209-1220)
 
 V3 reads the written bronze batches, not the landing files: one
-aggregation per ingest call counts every loaded file's rows, nulls and
-duplicate keys from parquet, after the last write.  A file whose table
-a later file of the same call also loads is counted just before that
-write replaces its partition.  The row_validation_log rows keep file
-order.
+aggregation per batch counts every loaded file's rows, nulls and
+duplicate keys from parquet, after the last write of the batch's
+incoming directories.  A file whose table a later file of the batch
+also loads is counted just before that write replaces its partition.
+The row_validation_log rows keep file order.
 
 Batch ids are the reference's BATCH + 6-digit counter.  Re-running a
 batch overwrites exactly its partitions (delete-then-insert
@@ -73,10 +73,14 @@ def ingest_directory(
     wh: Warehouse,
     log: RunLog,
     plan: IngestPlan,
-    incoming_dir: str,
-    source_system: str,
+    incoming: dict[str, str],
     batch_id: str,
 ) -> list[FileResult]:
+    """Ingest one batch's landing files: `incoming` maps each source
+    system to its incoming directory.  Systems go in sorted order and
+    files in name order within each; a directory that does not exist
+    is skipped.  V3 runs once for the whole batch (module docstring).
+    Returns one FileResult per file, in that order."""
     results: list[FileResult] = []
     # loaded files whose V3 counts are still owed: (file, table, required)
     pending: list[tuple[str, str, list[str]]] = []
@@ -97,8 +101,13 @@ def ingest_directory(
             )
         pending.clear()
 
-    for fname in sorted(os.listdir(incoming_dir)):
-        path = os.path.join(incoming_dir, fname)
+    files = [
+        (source_system, fname, os.path.join(d, fname))
+        for source_system, d in sorted(incoming.items())
+        if os.path.isdir(d)
+        for fname in sorted(os.listdir(d))
+    ]
+    for source_system, fname, path in files:
         if not os.path.isfile(path):
             continue
         cfg = match_config(fname, source_system, plan.configs)

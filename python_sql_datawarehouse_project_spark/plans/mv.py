@@ -4,11 +4,12 @@ function of the gold star frames (fact_sales, dim_customers,
 dim_products).
 
 Three callers run these same definitions:
-  * the pipeline's FULL refresh (`MVS`, `refresh_mv`) over the
-    warehouse's gold (`gold_frames`) — recompute, overwrite; reference
-    MV Refresh Template.sql:33, refresh_mode='FULL' at
-    materialized_view.sql:161-169.  Spark has no MV object, so refresh
-    is "run the query, overwrite the output table";
+  * the pipeline's FULL refresh (`refresh_mv`) over the warehouse's
+    gold (`gold_frames`, read once for all nine) — recompute,
+    overwrite; reference MV Refresh Template.sql:33,
+    refresh_mode='FULL' at materialized_view.sql:161-169.  Spark has
+    no MV object, so refresh is "run the query, overwrite the output
+    table";
   * the incremental refresh (plans/mv_incremental.py), which folds
     `INCREMENTAL[name].delta` over one new batch into stored state and
     re-publishes;
@@ -415,16 +416,21 @@ MVS: dict[str, Callable[..., DataFrame]] = {
 
 
 def refresh_mv(
-    wh: Warehouse, name: str, batch_id: str, history: bool = False
+    wh: Warehouse,
+    name: str,
+    batch_id: str,
+    frames: tuple[DataFrame, DataFrame, DataFrame],
 ) -> int:
-    """FULL refresh: recompute and overwrite the MV output table.
+    """FULL refresh: recompute MV `name` over `frames`, the gold star
+    as (fact_sales, dim_customers, dim_products), and overwrite its
+    `batch_id` partition.  Returns the MV's row count.
 
-    `history=False` recomputes over the named batch only (the
-    single-batch pipeline's default, where batch == history);
-    `history=True` recomputes over EVERY gold batch — the reference's
-    REFRESH MATERIALIZED VIEW semantics (MV Refresh Template.sql:33)
-    in a multi-batch warehouse, and the corpus-proportional cost the
-    incremental path (plans/mv_incremental.py) exists to avoid.
-    Returns the MV's row count."""
-    df = MVS[name](wh, None if history else batch_id)
-    return wh.write_batch(df, "mv", name, batch_id)
+    The caller reads the frames, once for every MV it refreshes:
+    `gold_frames(wh, batch_id)` recomputes over the named batch only
+    (the single-batch pipeline's default, where batch == history);
+    `gold_frames(wh)` recomputes over EVERY gold batch — the
+    reference's REFRESH MATERIALIZED VIEW semantics (MV Refresh
+    Template.sql:33) in a multi-batch warehouse, and the
+    corpus-proportional cost the incremental path
+    (plans/mv_incremental.py) exists to avoid."""
+    return wh.write_batch(SHAPES[name](*frames), "mv", name, batch_id)

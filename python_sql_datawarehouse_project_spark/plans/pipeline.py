@@ -7,10 +7,11 @@ Lifecycle per batch:
   run_gold    -> dims first, then facts gated on dim SUCCESS rows
                  (integration_dependencies semantics; SKIPPED rows are
                  logged exactly like gold_integration.py:276-290)
-  run_mvs     -> FULL refresh of each registered MV, mv_refresh_log
-                 (or mode="incremental": fold-the-batch state merge
-                 for the six maintainable MVs, history recompute for
-                 the three order-dependent ones)
+  run_mvs     -> FULL refresh of each registered MV over one shared
+                 gold read, mv_refresh_log (or mode="incremental":
+                 fold-the-batch state merge for the six maintainable
+                 MVs, history recompute for the three order-dependent
+                 ones)
 
 Every step runs through `_step`: the step returns its row count or
 raises, and `_step` logs one run-log row and returns the (ok, error,
@@ -26,9 +27,10 @@ Batch IDs follow the reference's "BATCH" + 6-digit counter
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import cache
 
 from .gold import DEPENDENCIES, INTEGRATIONS
-from .mv import MVS, refresh_mv
+from .mv import MVS, gold_frames, refresh_mv
 from .mv_incremental import INCREMENTAL, refresh_mv_incremental
 from .runlog import RunLog
 from .silver import TRANSFORMS
@@ -128,21 +130,30 @@ def run_mvs(
     with history, rebuilds correctly instead of silently restarting
     state from the current batch (ADVICE r9).
 
-    Semantics note: incremental mode produces `refresh_mv(...,
-    history=True)` semantics — each MV over FULL warehouse history as
-    of `batch_id`.  That matches mode="full" only while the warehouse
-    holds a single batch; with more batches loaded, mode="full"
-    (reference-faithful) computes each MV over the named batch alone,
-    so the two modes legitimately differ.  The parity pytest
-    (tests/test_mv_incremental.py) pins incremental == full-HISTORY
-    recompute bitwise, not == mode="full" output.
+    The stage reads gold once: every MV it recomputes shares one
+    `gold_frames` triple — the batch's frames in full mode, the
+    history frames of the three order-dependent MVs in incremental
+    mode.  The read happens inside the first such MV's step, so a
+    gold table that cannot be read fails each of those steps, one
+    log row each, as a per-MV read would.
+
+    Semantics note: incremental mode produces `refresh_mv(wh, name,
+    batch_id, gold_frames(wh))` semantics — each MV over FULL
+    warehouse history as of `batch_id`.  That matches mode="full" only
+    while the warehouse holds a single batch; with more batches
+    loaded, mode="full" (reference-faithful) computes each MV over
+    the named batch alone, so the two modes legitimately differ.  The
+    parity pytest (tests/test_mv_incremental.py) pins incremental ==
+    full-HISTORY recompute bitwise, not == mode="full" output.
     """
     incremental = mode == "incremental"
+    # an exception is not cached, so a failed read is retried per step
+    gold = cache(lambda: gold_frames(wh, None if incremental else batch_id))
 
     def refresh(name: str) -> int:
         if incremental and name in INCREMENTAL:
             return refresh_mv_incremental(wh, name, batch_id)[1]
-        return refresh_mv(wh, name, batch_id, history=incremental)
+        return refresh_mv(wh, name, batch_id, gold())
 
     return {
         name: _step(

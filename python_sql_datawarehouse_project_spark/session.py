@@ -13,6 +13,14 @@ Key choices (SURVEY.md §4):
     not ICU's, whose tables cost seconds of CPU to build on a process's
     first call; Postgres UPPER/LOWER follow the database's LC_CTYPE, so
     neither mapping is closer to the reference.
+  * No DataFrame call-site capture: PySpark 4 otherwise wraps every
+    Column and functions.* call in driver round trips (the active
+    session, a conf read, setting and clearing the JVM's call-site
+    origin) plus a stack walk, and its first call imports IPython.
+    Error text does not change: the captured call site only reaches
+    the query context of an ANSI runtime error, and ANSI is off
+    (below), so AnalysisException and raised-error messages read the
+    same with capture on or off.
   * Arrow enabled: every pandas_udf / applyInPandas extension operator
     moves data via Arrow batches, never row-at-a-time pickling.
 """
@@ -61,6 +69,8 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # -- JVM case mapping: no ICU table build on the first lower() --
         .config("spark.sql.icu.caseMappings.enabled", "false")
+        # -- no call-site capture around every Column / F.* call ------
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # -- Arrow for all pandas-UDF extension operators --------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- TIMESTAMP(NANOS) parquet reads as raw int64 nanos ---------

@@ -218,6 +218,77 @@ def test_registry_persists_across_instances(two_client_run):
     )
 
 
+def test_failed_register_leaves_registry_whole(tmp_path):
+    # A row json cannot encode must not tear the file (losing every
+    # client's last_batch_id) nor leave a half-registered client.
+    root = str(tmp_path / "reg")
+    reg = ClientRegistry(root)
+    reg.register("client1")
+    reg.set_last_batch("client1", "BATCH000003")
+    with pytest.raises(TypeError):
+        reg.register("client2", client_name=object())
+    for r in (reg, ClientRegistry(root)):
+        assert [c.client_schema for c in r.all()] == ["client1"]
+        assert r.get("client1").last_batch_id == "BATCH000003"
+    assert os.listdir(os.path.join(root, "tools")) == ["client_reference.json"]
+
+
+def test_one_row_validation_per_batch_across_systems(spark, tmp_path, monkeypatch):
+    # Files of two source systems land in one batch: V3 counts both
+    # in one aggregation, and each file keeps its own log row.
+    from python_sql_datawarehouse_project_spark.plans import ingest
+    from python_sql_datawarehouse_project_spark.plans.clients import ClientSources
+    from python_sql_datawarehouse_project_spark.sources.mapping import ColumnMapping
+    from python_sql_datawarehouse_project_spark.sources.validation import SourceConfig
+
+    raw = tmp_path / "raw"
+    for system, fname, text in [
+        ("crm", "cust_info_B1.csv", "cst_id,cst_key\n1,K1\n2,K2\n"),
+        ("erp", "LOC_A101_B1.csv", "cid,cntry\nA1,DE\nA1,US\n"),
+    ]:
+        (raw / system).mkdir(parents=True)
+        (raw / system / fname).write_text(text)
+    sources = ClientSources(
+        plan=ingest.IngestPlan(
+            configs=[
+                SourceConfig("crm", "csv", "cust_info", "crm_cust_info"),
+                SourceConfig("erp", "csv", "LOC_A101", "erp_loc_a101"),
+            ],
+            mappings={
+                "crm_cust_info": [
+                    ColumnMapping("cst_id", "cst_id", "integer"),
+                    ColumnMapping("cst_key", "cst_key", "string"),
+                ],
+                "erp_loc_a101": [
+                    ColumnMapping("cid", "cid"),
+                    ColumnMapping("cntry", "cntry"),
+                ],
+            },
+            required={"crm_cust_info": ["cst_id"], "erp_loc_a101": ["cid"]},
+        ),
+        incoming={s: str(raw / s) for s in ("crm", "erp", "missing")},
+    )
+    calls = []
+    validate_rows = ingest.validate_rows
+    monkeypatch.setattr(
+        ingest, "validate_rows", lambda frames: calls.append(len(frames))
+        or validate_rows(frames)
+    )
+    reg = ClientRegistry(str(tmp_path / "wh"))
+    reg.register("c5")
+    r = process_client(spark, reg, "c5", "start", sources)
+    assert [(f.file, f.status) for f in r.ingested] == [
+        ("cust_info_B1.csv", "LOADED"),
+        ("LOC_A101_B1.csv", "LOADED"),
+    ]
+    assert calls == [2]
+    rows = reg.runlog("c5").read("row_validation_log")
+    assert [(x["physical_file_name"], x["duplicate_rows"]) for x in rows] == [
+        ("cust_info_B1.csv", 0),
+        ("LOC_A101_B1.csv", 1),
+    ]
+
+
 @pytest.mark.slow
 def test_cli_dispatch_runs_single_client(spark, tmp_path, capsys):
     # The reference CLI contract (batch_processing.py:1276-1296):

@@ -65,6 +65,23 @@ def test_csv_reader_infers(spark, csv_file):
     assert df.count() == 4
 
 
+def test_building_a_bronze_frame_captures_no_call_site(spark, csv_file, monkeypatch):
+    # The session turns PySpark's DataFrame call-site capture off, so
+    # Column and functions.* calls make no capture round trips.
+    from pyspark.errors import utils
+
+    calls = []
+    capture = utils._capture_call_site
+    monkeypatch.setattr(
+        utils, "_capture_call_site", lambda depth: calls.append(depth) or capture(depth)
+    )
+    # re-read the setting from the session instead of a cached answer
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    df = apply_mapping(read_source(spark, csv_file, "csv"), MAPPINGS)
+    assert df.columns == ["cst_id", "cst_key", "cst_gndr", "amount"]
+    assert calls == []
+
+
 def test_json_reader_lines_and_whole_doc(spark, tmp_path):
     lines = tmp_path / "d.json"
     lines.write_text('{"a": 1}\n{"a": 2}\n')
@@ -164,7 +181,7 @@ def test_ingest_directory_end_to_end(spark, tmp_path, csv_file):
         required={"crm_cust_info": ["cst_id"]},
     )
     results = ingest_directory(
-        spark, wh, log, plan, str(incoming), "crm", "BATCH000007"
+        spark, wh, log, plan, {"crm": str(incoming)}, "BATCH000007"
     )
     by_file = {r.file: r for r in results}
     assert by_file["mystery_file.csv"].status == "CONFIG_FAILED"
@@ -208,7 +225,7 @@ def test_bronze_types_come_from_mapping_not_file(spark, tmp_path):
         incoming = tmp_path / bid
         incoming.mkdir()
         (incoming / f"CUST_AZ12_{bid}.csv").write_text(text)
-        [r] = ingest_directory(spark, wh, log, plan, str(incoming), "erp", bid)
+        [r] = ingest_directory(spark, wh, log, plan, {"erp": str(incoming)}, bid)
         assert r.status == "LOADED"
     table = wh.read_table("bronze", "erp_cust_az12")
     assert table.schema["cid"].dataType.simpleString() == "string"
@@ -500,7 +517,7 @@ def test_csv_header_matches_spark_inference(spark, tmp_path, case):
     )
     wh = Warehouse(spark, str(tmp_path / "wh"))
     [r] = ingest_directory(
-        spark, wh, RunLog(str(tmp_path / "wh")), plan, str(incoming), "crm", "B1"
+        spark, wh, RunLog(str(tmp_path / "wh")), plan, {"crm": str(incoming)}, "B1"
     )
     assert r.status == want_status
 
@@ -516,10 +533,10 @@ def test_csv_header_read_starts_no_spark_job(spark, csv_file, job_ids):
 
 # -- V3 over the batches one ingest call wrote -------------------------
 def test_row_validation_log_rows_per_file(spark, tmp_path, csv_file):
-    # Three files load crm_cust_info in one call, so each later write
+    # Three files load crm_cust_info in one batch, so each later write
     # replaces the partition the earlier file's counts are read from;
-    # a second table's file shares the aggregate; a MAPPING_FAILED file
-    # gets no V3 row.
+    # a second system's file shares the aggregate; a MAPPING_FAILED
+    # file gets no V3 row.
     incoming = tmp_path / "incoming"
     incoming.mkdir()
     os.link(csv_file, incoming / "cust_info_A.csv")  # 1 null id, 1 dup key
@@ -543,8 +560,8 @@ def test_row_validation_log_rows_per_file(spark, tmp_path, csv_file):
     )
     wh = Warehouse(spark, str(tmp_path / "wh"))
     log = RunLog(str(tmp_path / "wh"))
-    results = ingest_directory(spark, wh, log, plan, str(incoming), "crm", "B1")
-    results += ingest_directory(spark, wh, log, plan, str(incoming), "erp", "B1")
+    d = str(incoming)
+    results = ingest_directory(spark, wh, log, plan, {"crm": d, "erp": d}, "B1")
     assert [(r.file, r.status) for r in results] == [
         ("cust_info_A.csv", "LOADED"),
         ("cust_info_B.csv", "LOADED"),

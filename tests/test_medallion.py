@@ -362,6 +362,61 @@ def test_rerun_same_batch_identical_state(pipeline_run, spark):
     assert _warehouse_state(wh) == before
 
 
+def test_full_mv_stage_reads_gold_once(pipeline_run, monkeypatch):
+    # The nine MVs share one read of the batch's three gold tables and
+    # write what each one's own read of gold gives.
+    from python_sql_datawarehouse_project_spark.plans.mv import MVS
+    from python_sql_datawarehouse_project_spark.plans.pipeline import run_mvs
+
+    wh, log, _ = pipeline_run
+    before = _warehouse_state(wh)
+    reads = []
+    read_table = Warehouse.read_table
+    monkeypatch.setattr(
+        Warehouse,
+        "read_table",
+        lambda self, layer, name: reads.append((layer, name))
+        or read_table(self, layer, name),
+    )
+    results = run_mvs(wh, log, BATCH, "full")
+    monkeypatch.undo()
+    assert sorted(reads) == [
+        ("gold", "dim_customers"), ("gold", "dim_products"), ("gold", "fact_sales")
+    ]
+    assert all(ok for ok, *_ in results.values()), results
+    assert _warehouse_state(wh) == before
+    for name in MVS:
+        written = wh.read_batch("mv", name, BATCH).drop("dwh_batch_id").collect()
+        alone = MVS[name](wh, BATCH).collect()
+        assert sorted(map(repr, written)) == sorted(map(repr, alone)), name
+
+
+def test_failed_silver_step_logs_spark_error_class(spark, tmp_path):
+    from python_sql_datawarehouse_project_spark.plans.pipeline import run_silver
+
+    root = str(tmp_path / "wh")
+    wh, log = Warehouse(spark, root), RunLog(root)
+    # a bronze batch without cst_key: the silver select cannot resolve it
+    wh.write_batch(
+        spark.createDataFrame(
+            [(1, "Ann", dt.date(2024, 1, 1))],
+            "cst_id int, cst_firstname string, cst_create_date date",
+        ),
+        "bronze",
+        "crm_cust_info",
+        BATCH,
+    )
+    ok, err, _ = run_silver(wh, log, BATCH)["load_crm_cust_info"]
+    assert not ok
+    [row] = [
+        r for r in log.read("transformation_log")
+        if r["proc_name"] == "load_crm_cust_info"
+    ]
+    assert row["status"] == "FAILED" and row["message"] == err
+    assert err.startswith("[UNRESOLVED_COLUMN.")
+    assert "`cst_key`" in err and "SQLSTATE: 42703" in err
+
+
 def test_dependency_gate_skips_fact_on_missing_dims(spark, tmp_path):
     from python_sql_datawarehouse_project_spark.plans.pipeline import run_gold
 
