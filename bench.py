@@ -177,19 +177,6 @@ def main() -> None:
 
     for t in TABLES:
         load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    # Materialize the bucketed orders/lineitem layout (untimed, like
-    # any warehouse write-time layout decision): q9's order_shipments
-    # then plans its big-big join with zero Exchange.  Opt out with
-    # SPARK_GRAFT_NO_BUCKETIZE=1 to bench the plain-scan plan.
-    if not os.environ.get("SPARK_GRAFT_NO_BUCKETIZE"):
-        import tempfile
-
-        from python_sql_datawarehouse_project_spark.plans.bucketing import (
-            bucketize_star,
-        )
-
-        bucket_dir = tempfile.mkdtemp(prefix="spark-graft-buckets-")
-        bucketize_star(spark, sf_dir, bucket_dir)
     next(iter(queries.values()))(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()

@@ -3,8 +3,8 @@ exploratory_data_analysis.sql:148-169 — the WITH RECURSIVE query).
 
 q9 computes the fixpoint as a driver-side loop of join + filter +
 unionByName over a bounded number of levels (SURVEY.md §4.2) — the
-formulation that controls what is stored, bucketed scans and lineage
-depth explicitly.  The loop is the pipeline's own
+formulation that controls what is stored and lineage depth
+explicitly.  The loop is the pipeline's own
 mv_delayed_orders_chain definition (plans/mv.delayed_orders_chain);
 q9 feeds it order_shipments.  Spark 4 ALSO executes WITH RECURSIVE
 natively; q43_recursive_sql below runs the same query as pasted SQL
@@ -42,7 +42,9 @@ bound the plan (SURVEY.md §4.2).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..catalog import load_table
 from ..plans.mv import delayed_orders_chain
 from ..star import STAR_SQL_CTES
 
@@ -51,23 +53,21 @@ MAX_LEVEL = 3
 
 def order_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders |x| lineitem rolled up to order grain — the one genuinely
-    big-big join in the warehouse.  When the session has materialized
-    the bucketed layout (plans/bucketing.bucketize_star), both scans
-    resolve to their bucketed twins and the join + aggregate plan with
-    ZERO Exchange (plan-pinned in tests/test_plans.py); otherwise the
-    plain parquet scans shuffle once on the order key.  At 100 TB the
-    bucketed path is the difference between a per-run lineitem shuffle
-    and none."""
-    from ..catalog import load_table
-    from ..plans.bucketing import bucketed_scan, order_shipments_plan
-
-    orders = bucketed_scan(spark, sf_dir, "orders")
-    if orders is None:
-        orders = load_table(spark, sf_dir, "orders")
-    lineitem = bucketed_scan(spark, sf_dir, "lineitem")
-    if lineitem is None:
-        lineitem = load_table(spark, sf_dir, "lineitem")
-    return order_shipments_plan(orders, lineitem)
+    big-big join in the warehouse; the plain parquet scans shuffle once
+    on the order key."""
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    order_date = F.col("o_orderdate").cast("date")
+    return (
+        orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"], "inner")
+        .groupBy(
+            F.col("o_orderkey").alias("order_number"),
+            F.col("o_custkey").alias("customer_key"),
+            order_date.alias("order_date"),
+            F.date_add(order_date, 30).alias("due_date"),
+        )
+        .agg(F.max(F.col("l_shipdate").cast("date")).alias("shipping_date"))
+    )
 
 
 def q9_delayed_orders_chain(
@@ -153,8 +153,8 @@ def q43_recursive_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q9 remains the production path: the loop stores exactly one
     frame (a lazy checkpoint of order_shipments, computed once per
-    execution) and can scan the bucketed tables, where the native
-    operator manages its own working-table state.  MEASURED PENALTY
+    execution), while the native operator manages its own
+    working-table state.  MEASURED PENALTY
     (sf0.1, warm, median of 3 noop writes, shared 4-vCPU host): q43
     5.8 s wall / 9.9 CPU-s vs q9 3.3 s / 6.3 CPU-s — the native
     operator is ~1.7x slower than the driver loop on the same query
@@ -163,8 +163,6 @@ def q43_recursive_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURFACE (an analyst can paste the reference's query verbatim
     modulo table names) — the strongest §2.10 parity statement
     available."""
-    from ..catalog import load_table
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "sg_q43_orders"
     )

@@ -38,8 +38,8 @@ Scale notes (100 TB):
     of (returnflag, linestatus) groups — the shuffle carries only
     per-partition partials (bytes, not rows).  The shipdate predicate
     reaches the parquet scan (PushedFilters, pinned in test_plans).
-  * q14's lineitem|x|orders leg is the big-big join; the
-    plans/bucketing.py layout removes its Exchange when materialized.
+  * q14's lineitem|x|orders leg is the big-big join; it shuffles
+    once on the order key.
     The top-10 is orderBy+limit, which Spark plans as
     TakeOrderedAndProject — per-partition heaps + a 10-row driver
     merge, never a global sort (pinned in test_plans).
@@ -506,8 +506,7 @@ def q21_exclusive_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     "Late" adapts Q21 to this schema (no commitdate column): shipped
     more than Q21_LATE_DAYS after the order date.  The
-    lineitem |x| orders leg is the big-big join the bucketed layout
-    (plans/bucketing.py) removes the Exchange for."""
+    lineitem |x| orders leg is the big-big join."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     late = F.when(

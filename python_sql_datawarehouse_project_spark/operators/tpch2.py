@@ -39,8 +39,7 @@ Scale notes (100 TB):
     test_plans).  The EXISTS never materializes duplicate matches, so
     the probe side's output is bounded by orders, not lineitem.
   * q25/q26 broadcast nation (25 rows) and supplier (the smallest
-    fact-adjacent dim); the lineitem⋈orders leg is the big-big join
-    the bucketed layout (plans/bucketing.py) co-locates.
+    fact-adjacent dim); the lineitem⋈orders leg is the big-big join.
   * q27's top-20 is TakeOrderedAndProject: per-partition 20-row
     heaps, never a global sort of the per-customer aggregate.
   * q28/q29 are single-scan conditional aggregates — the shuffle

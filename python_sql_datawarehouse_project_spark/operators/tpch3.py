@@ -62,8 +62,7 @@ Scale notes (100 TB):
     filter pushed down) and supplier broadcast onto the result.
   * q33 broadcasts supplier/nation/region; the same-nation predicate
     rides the supplier broadcast join as an equi-condition, so the
-    big lineitem⋈orders leg stays the only real shuffle (the
-    bucketed layout in plans/bucketing.py co-locates it).
+    big lineitem⋈orders leg stays the only real shuffle.
   * q34 is the minimal scan: every predicate reaches parquet
     (PushedFilters pinned in test_plans), two aggregate cells move.
   * q36's scalar side is a 1-row broadcast; no second pass over

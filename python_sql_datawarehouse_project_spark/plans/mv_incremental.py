@@ -42,7 +42,7 @@ batches in this warehouse carry their own dim snapshots.
 from __future__ import annotations
 
 import os
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -131,21 +131,19 @@ def refresh_mv_incremental(
     wh: Warehouse,
     name: str,
     batch_id: str,
+    frames=None,
     **publish_kwargs,
 ) -> tuple[int, int]:
-    """Fold gold batch `batch_id` into MV `name`'s state and publish.
+    """Fold gold batch `batch_id` into MV `name`'s state and publish;
+    `frames(b)` gives batch b's gold frames (default gold_frames).
 
     The state snapshot to build on is resolved PER-MV from this MV's
     own completed-snapshot markers (resolve_prev_state).  Gold fact
-    batches strictly between that snapshot and `batch_id` that no
-    snapshot folded — a torn earlier run, or an MV newly added to
-    INCREMENTAL on a warehouse with history — are detected and their
-    deltas folded in (a rebuild-from-history degenerates to prev=None
-    + all prior batches), so "no snapshot but prior gold exists" can
-    never silently restart state from one batch (ADVICE r9).  Returns
-    (state rows, output rows).  Re-running the same batch rebuilds
-    both partitions identically — exactly-once semantics match
-    `refresh_mv`.
+    batches between that snapshot and `batch_id` that no snapshot
+    folded (a torn earlier run, or an MV new to INCREMENTAL) have their
+    deltas folded in, so prior gold never silently drops out of state
+    (ADVICE r9).  Returns (state rows, output rows).  Re-running the
+    same batch rebuilds both partitions identically, as `refresh_mv`.
 
     Raises KeyError for the order-dependent MVs, which have no state
     form; callers route those through `mv.refresh_mv`.
@@ -157,7 +155,8 @@ def refresh_mv_incremental(
         )
     spec = INCREMENTAL[name]
     prev_id, missing = resolve_prev_state(wh, name, batch_id)
-    parts = [spec.delta(*gold_frames(wh, b)) for b in [*missing, batch_id]]
+    frames = frames or partial(gold_frames, wh)
+    parts = [spec.delta(*frames(b)) for b in [*missing, batch_id]]
     # A completed snapshot with no partition on disk was EMPTY (markers
     # are written only after write_batch returns, and write_batch
     # leaves no partition for zero rows) — it contributes nothing.

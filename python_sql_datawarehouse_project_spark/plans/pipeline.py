@@ -27,7 +27,7 @@ Batch IDs follow the reference's "BATCH" + 6-digit counter
 from __future__ import annotations
 
 from collections.abc import Callable
-from functools import cache
+from functools import cache, partial
 
 from .gold import DEPENDENCIES, INTEGRATIONS
 from .mv import MVS, gold_frames, refresh_mv
@@ -130,12 +130,9 @@ def run_mvs(
     with history, rebuilds correctly instead of silently restarting
     state from the current batch (ADVICE r9).
 
-    The stage reads gold once: every MV it recomputes shares one
-    `gold_frames` triple — the batch's frames in full mode, the
-    history frames of the three order-dependent MVs in incremental
-    mode.  The read happens inside the first such MV's step, so a
-    gold table that cannot be read fails each of those steps, one
-    log row each, as a per-MV read would.
+    The stage reads each gold batch once: one `gold_frames` reader,
+    cached by batch id (None: history), serves every MV's step; a gold
+    table that cannot be read fails each step that needs it.
 
     Semantics note: incremental mode produces `refresh_mv(wh, name,
     batch_id, gold_frames(wh))` semantics — each MV over FULL
@@ -148,12 +145,14 @@ def run_mvs(
     """
     incremental = mode == "incremental"
     # an exception is not cached, so a failed read is retried per step
-    gold = cache(lambda: gold_frames(wh, None if incremental else batch_id))
+    frames = cache(partial(gold_frames, wh))
 
     def refresh(name: str) -> int:
         if incremental and name in INCREMENTAL:
-            return refresh_mv_incremental(wh, name, batch_id)[1]
-        return refresh_mv(wh, name, batch_id, gold())
+            return refresh_mv_incremental(wh, name, batch_id, frames)[1]
+        return refresh_mv(
+            wh, name, batch_id, frames(None if incremental else batch_id)
+        )
 
     return {
         name: _step(

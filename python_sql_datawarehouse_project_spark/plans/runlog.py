@@ -39,16 +39,26 @@ class RunLog:
         return os.path.join(self.root, f"{table}.jsonl")
 
     def append(self, table: str, **row) -> None:
+        """Append one row.  A last line with no newline is an append
+        that was killed mid-write; it is cut off first, so this row
+        starts a line of its own."""
         row.setdefault("logged_at", _dt.datetime.now(_dt.timezone.utc).isoformat())
-        with open(self._path(table), "a") as f:
-            f.write(json.dumps(row, default=str) + "\n")
+        with open(self._path(table), "a+b") as f:
+            if f.seek(0, os.SEEK_END):
+                f.seek(-1, os.SEEK_END)
+                if f.read(1) != b"\n":
+                    f.seek(0)
+                    f.truncate(f.read().rfind(b"\n") + 1)
+            f.write((json.dumps(row, default=str) + "\n").encode())
 
     def read(self, table: str) -> list[dict]:
+        """Every complete row; an unfinished last line is not a row."""
         p = self._path(table)
         if not os.path.exists(p):
             return []
         with open(p) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            lines = f.read().split("\n")[:-1]
+        return [json.loads(line) for line in lines if line.strip()]
 
     def successes(self, table: str, batch_id: str) -> set[str]:
         """Proc names with a SUCCESS row for this batch — the

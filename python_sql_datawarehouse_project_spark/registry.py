@@ -6,7 +6,7 @@ the pre-registered views (region nation customer supplier part orders
 lineitem events documents embeddings) producing identical column
 names.  Keys present in queries() but absent from oracles() get a
 weaker rows-only check (reserved for non-SQL-expressible operators).
-Every gate is a batch query over operators/; streaming/ holds none.
+Every gate is a batch query over operators/.
 """
 
 from __future__ import annotations

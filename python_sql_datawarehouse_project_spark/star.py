@@ -29,11 +29,10 @@ or parallelism.  Every query casts final aggregates to DOUBLE so the
 compared schemas agree.
 
 Scale note (100 TB): fact_sales is a big-big equi-join
-(lineitem |x| orders on orderkey) -> sort-merge with AQE; on a real
-cluster both tables should be bucketed by orderkey to make it
-shuffle-free.  nation/region are bounded (25/5 rows) and explicitly
-broadcast; part/customer are left to Catalyst's broadcast threshold +
-AQE runtime switching since their size scales with SF.
+(lineitem |x| orders on orderkey) -> sort-merge with AQE.  nation/region
+are bounded (25/5 rows) and explicitly broadcast; part/customer are left
+to Catalyst's broadcast threshold + AQE runtime switching since their
+size scales with SF.
 """
 
 from __future__ import annotations

@@ -5,7 +5,9 @@ Runs `python3 warehouse_bench/run.py --workload W --seed S --seconds N
 time, pair after pair: pair p uses seed --seed-start + p and runs the
 parent first when p is even, the change first when p is odd.  Each run
 records its end-to-end metrics, `failed`, `attempted`, wall seconds and
-the machine's /proc/stat steal share over the run.  The JSON file is
+the machine's /proc/stat steal share over the run; a run that printed
+no result line or reported `failed` > 0 also keeps the end of its
+stderr, where the benchmark prints its failed checks.  The JSON file is
 rewritten after every run, so an interrupted set keeps what it ran.
 
     python3 scripts/ab_pairs.py --parent ../parent --change . \\
@@ -71,6 +73,9 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     except (IndexError, json.JSONDecodeError):
         row["stderr_tail"] = proc.stderr[-2000:]
         return row
+    if result["failed"]:
+        # keep the `setup check:`, `op N check:` and `op N failed:` lines
+        row["stderr_tail"] = proc.stderr[-2000:]
     row["failed"] = result["failed"]
     row["attempted"] = result["attempted"]
     row.update({k: m["value"] for k, m in result["metrics"].items()})

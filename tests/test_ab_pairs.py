@@ -1,11 +1,14 @@
 """`scripts/ab_pairs.summarize` over synthetic run rows: a failed run
 must never read as a gain, and a crashed run is a lost pair, not a
-pair left out of the count.  No subprocess, no SparkSession."""
+pair left out of the count; `run_once` keeps the stderr of a run with
+failed operations.  No subprocess, no SparkSession."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import subprocess
 
 _SCRIPT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -72,3 +75,25 @@ def test_every_change_run_crashed():
     runs += [{"pair": p, "side": "change", "rc": 137} for p in range(10)]
     s = ab.summarize(runs, METRICS)
     assert s["rows_per_cpu_s"] == {"bound": 0.25, "verdict": "runs_failed"}
+
+
+def _fake_run(monkeypatch, stdout: str, stderr: str) -> None:
+    def run(cmd, **kw):
+        return subprocess.CompletedProcess(cmd, 0, stdout, stderr)
+
+    monkeypatch.setattr(ab.subprocess, "run", run)
+
+
+def test_run_once_keeps_stderr_of_failed_operations(monkeypatch):
+    result = {
+        "failed": 1, "attempted": 8,
+        "metrics": {"rows_per_cpu_s": {"value": 100.0}},
+    }
+    err = "op 3 check: mv rows differ\nop 5 failed:\nTraceback"
+    _fake_run(monkeypatch, json.dumps(result) + "\n", err)
+    row = ab.run_once(".", "batch_load", 1, 15)
+    assert row["failed"] == 1 and row["rows_per_cpu_s"] == 100.0
+    assert row["stderr_tail"] == err
+    # a clean run keeps no stderr
+    _fake_run(monkeypatch, json.dumps({**result, "failed": 0}) + "\n", err)
+    assert "stderr_tail" not in ab.run_once(".", "batch_load", 1, 15)

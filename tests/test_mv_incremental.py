@@ -322,6 +322,35 @@ def test_run_mvs_incremental_auto_resolves_prev_state(spark, tmp_path):
     assert got == {(100, 180.0), (101, 70.0), (102, 80.0)}
 
 
+def test_incremental_stage_reads_each_gold_table_twice(
+    spark, tmp_path, monkeypatch
+):
+    """run_mvs(mode="incremental") reads each gold table once for the
+    batch, shared by the six state MVs, and once for history, shared
+    by the three order-dependent MVs: 6 gold reads per batch."""
+    from python_sql_datawarehouse_project_spark.plans.pipeline import run_mvs
+    from python_sql_datawarehouse_project_spark.plans.runlog import RunLog
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _seed_gold(spark, wh)
+    log = RunLog(str(tmp_path / "log"))
+    reads = []
+    read_table = Warehouse.read_table
+
+    def counted(self, layer, name):
+        if layer == "gold":
+            reads.append(name)
+        return read_table(self, layer, name)
+
+    monkeypatch.setattr(Warehouse, "read_table", counted)
+    for b in (B1, B2):
+        reads.clear()
+        assert all(ok for ok, *_ in run_mvs(wh, log, b, "incremental").values())
+        assert sorted(reads) == sorted(
+            ["dim_customers", "dim_products", "fact_sales"] * 2
+        )
+
+
 @pytest.mark.slow
 def test_run_mvs_incremental_mode_covers_all_nine(spark, tmp_path):
     """Pipeline wiring: mode="incremental" refreshes every registered

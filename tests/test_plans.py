@@ -181,33 +181,6 @@ def test_recursion_releases_cached_levels(spark, sf_dir):
     assert n_persistent() - base <= 3
 
 
-def test_bucketed_join_has_zero_exchanges(spark, sf_dir, tmp_path):
-    # The big-big orders|x|lineitem join: bucketed+sorted layout must
-    # plan SortMergeJoin with NO Exchange (and no per-run Sort of the
-    # fact sides) — the 100 TB shuffle eliminated at write time.
-    from python_sql_datawarehouse_project_spark.plans import bucketing
-
-    # at test SF orders is broadcast-small, which would hide the
-    # bucketed layout; disable broadcasts to get the at-scale big-big
-    # join shape the layout exists for
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = bucketing.bucketed_order_shipments(spark, sf_dir, str(tmp_path))
-        df.collect()  # final adaptive plan
-        p = plan_of(df)
-        assert "Exchange" not in p, p
-        assert "SortMergeJoin" in p
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    # identical rows to the plain-scan definition
-    plain = bucketing.order_shipments_plan(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-    assert sorted(map(str, df.collect())) == sorted(map(str, plain.collect()))
-
-
 def test_batch_read_prunes_partitions(spark, sf_dir, tmp_path):
     # P4: the batch predicate must become a PartitionFilter on the
     # scan (partition pruning), not a post-scan Filter — at 100 TB
@@ -402,39 +375,6 @@ def test_sk2_salted_join_spreads_key(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p, p
     joins = [ln for ln in p.splitlines() if "Join" in ln and "salt#" in ln]
     assert joins, p
-
-
-def test_q9_order_shipments_uses_bucketed_layout(spark, sf_dir, tmp_path):
-    # VERDICT r2 #5: the bucketed layout must reach q9's actual bench
-    # path, not just the standalone bucketed_order_shipments exhibit.
-    # After bucketize_star, operators/recursive.order_shipments must
-    # resolve to the bucketed twins and plan its orders|x|lineitem leg
-    # with ZERO Exchange; with no layout registered it must still run
-    # on the plain scans (registry/parity path unchanged).
-    from python_sql_datawarehouse_project_spark.operators import recursive
-    from python_sql_datawarehouse_project_spark.plans import bucketing
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = recursive.order_shipments(spark, sf_dir)
-        plain_rows = sorted(map(str, plain.collect()))
-
-        bucketing.bucketize_star(spark, sf_dir, str(tmp_path))
-        try:
-            df = recursive.order_shipments(spark, sf_dir)
-            df.collect()  # final adaptive plan
-            p = plan_of(df)
-            assert "Exchange" not in p, p
-            assert "SortMergeJoin" in p
-            assert sorted(map(str, df.collect())) == plain_rows
-        finally:
-            for t in ("orders", "lineitem"):
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {bucketing.bucketed_name(sf_dir, t)}"
-                )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_eq1_quantize_zero_exchange_scan_speed(spark, sf_dir):
@@ -1096,3 +1036,14 @@ def test_tx19_matches_bruteforce(spark, sf_dir):
     for r in rows:
         assert r["n_occurrences"] == occ[r["pair"]]
         assert r["n_words"] == len(words[r["pair"]])
+
+
+def test_core_budget_defaults_to_cpu_affinity(monkeypatch):
+    import os
+
+    from python_sql_datawarehouse_project_spark.session import core_budget
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert core_budget() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert core_budget() == 3
