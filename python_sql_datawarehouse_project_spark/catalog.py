@@ -28,7 +28,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

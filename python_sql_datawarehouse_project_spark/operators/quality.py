@@ -801,7 +801,7 @@ def qa21_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation order anywhere (the qa12 sufficient-statistic rule).
 
     Scale: the naive formulation windows over ALL distinct values in
-    one partition (a global sort into a single task).  This is ds8's
+    one partition (a global sort into a single task).  This is a
     two-phase prefix sum instead: per-value counts bucket by value
     range, each bucket cumsums in parallel, and only the ~60
     bucket-level subtotals cross a SinglePartition exchange for the

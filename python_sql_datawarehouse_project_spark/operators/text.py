@@ -88,11 +88,8 @@ FROM documents
 
 
 # -- tx2: quality scoring --------------------------------------------
-def quality_scored(docs: DataFrame) -> DataFrame:
-    """tx2's per-document quality signals, keeping lang alongside so
-    downstream per-cohort consumers (mix.ds5) reuse the identical
-    expression tree (the doubles must agree bitwise with the shared
-    SQL_QUALITY_SCORED oracle fragment)."""
+def tx2_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
     n = F.length("text").cast("double")
     alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")).cast("double")
     punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9\\s]", "")).cast("double")
@@ -111,21 +108,11 @@ def quality_scored(docs: DataFrame) -> DataFrame:
     )
     return docs.select(
         "doc_id",
-        "lang",
-        # whitespace token count rides along so consumers that need
-        # score AND size (mix.ds2's budget fill) stay single-scan
-        # instead of joining a second documents projection
-        F.size(toks).alias("n_tokens"),
         alpha_ratio.alias("alpha_ratio"),
         punct_ratio.alias("punct_ratio"),
         stop_ratio.alias("stopword_ratio"),
         score.alias("quality_score"),
     )
-
-
-def tx2_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return quality_scored(docs).drop("lang", "n_tokens")
 
 
 TX2_ORACLE = f"""
@@ -152,30 +139,6 @@ SELECT
         + 0.3 * least(stopword_ratio * 5.0, 1.0) AS quality_score
 FROM ratios
 """
-
-# Shared oracle fragment: tx2's scoring with lang attached, as a
-# parenthesized subquery usable in any consumer's FROM clause (keeps
-# the formula single-sourced between tx2 and mix.ds5).
-SQL_QUALITY_SCORED = f"""(
-    SELECT doc_id, lang,
-           0.4 * (alpha / n) + 0.3 * (1.0 - punct / n)
-               + 0.3 * least((stop_hits / n_toks) * 5.0, 1.0)
-               AS quality_score
-    FROM (
-        SELECT doc_id, lang,
-               CAST(length(text) AS DOUBLE) AS n,
-               CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                    AS DOUBLE) AS alpha,
-               CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))
-                    AS DOUBLE) AS punct,
-               CAST(len(list_filter({_sql_tokens('text')},
-                    t -> list_contains({_sql_str_list(_ALL_STOP)}, t)))
-                    AS DOUBLE) AS stop_hits,
-               CAST(len({_sql_tokens('text')}) AS DOUBLE) AS n_toks
-        FROM documents
-    )
-)"""
-
 
 # -- tx3: language identification ------------------------------------
 def _hit_counter(ws: list[str]):

@@ -162,6 +162,13 @@ def process_client(
                     staging files (batch_processing.py:776-860);
                     bronze IS that staged layer here, so reprocessing
                     = transforms only over the landed bronze batch
+
+    The chosen batch id is persisted as `last_batch_id` before any
+    ingest or transform runs, as the reference increments and persists
+    BATCH###### before discovery.  So a run that dies mid-pipeline
+    leaves its own id as the last one: `restart` and `reprocessing`
+    re-enter that in-flight batch, never the completed one before it,
+    and a later `start` allocates the next id.
     """
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}")
@@ -170,6 +177,7 @@ def process_client(
         batch_id = ref.last_batch_id
     else:
         batch_id = next_batch_id(ref.last_batch_id)
+    registry.set_last_batch(client_schema, batch_id)
     wh = registry.warehouse(spark, client_schema)
     log = registry.runlog(client_schema)
     ingested: list[FileResult] = []
@@ -182,7 +190,6 @@ def process_client(
     # layer's own completion markers, so restart/reprocessing replays
     # stay exactly-once with no in-memory state
     results = run_batch(wh, log, batch_id, mv_mode=mv_mode)
-    registry.set_last_batch(client_schema, batch_id)
     return ClientRunResult(client_schema, batch_id, results, ingested)
 
 

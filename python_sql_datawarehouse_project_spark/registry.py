@@ -3,9 +3,9 @@
 Contract (driver): every key in queries() takes (spark, sf_dir) and
 returns a DataFrame; oracles() maps the same key to DuckDB SQL over
 the pre-registered views (region nation customer supplier part orders
-lineitem events documents embeddings) producing identical column
-names.  Keys present in queries() but absent from oracles() get a
-weaker rows-only check (reserved for non-SQL-expressible operators).
+lineitem events documents) producing identical column names.  Keys
+present in queries() but absent from oracles() get a weaker rows-only
+check (reserved for non-SQL-expressible operators).
 Every gate is a batch query over operators/.
 """
 
@@ -17,13 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .operators import (
     analytics,
-    approx,
     asof,
     bpe,
     corpus,
     events,
     layout,
-    mix,
     multimodal,
     profiling,
     quality,
@@ -61,7 +59,6 @@ _MODULES = (
     layout,
     events,
     asof,
-    mix,
     multimodal,
     profiling,
     windows_extra,
@@ -69,7 +66,6 @@ _MODULES = (
     retrieval,
     semijoin,
     bpe,
-    approx,
 )
 
 
@@ -103,12 +99,10 @@ HASHED_AT_SCALE = frozenset({
     # cost is row MATERIALIZATION (output scales with the table:
     # 0.2-10M rows at sf10), not engine compute, so the hashed path
     # brings them into the sf10 sweep.  The compute-bound exclusions
-    # (rj2's interval join, ds2/ds5/ds6/ds7's corpus quantiles,
-    # tx10's fixed-size-but-heavy oracle, q44's basket pairs) stay
-    # out — hashing cannot help an oracle whose WHERE/JOIN is the
-    # expensive part.
+    # (rj2's interval join, tx10's fixed-size-but-heavy oracle, q44's
+    # basket pairs) stay out — hashing cannot help an oracle whose
+    # WHERE/JOIN is the expensive part.
     "aj1_asof_last_event",
-    "ds3_filter_pipeline",
     "mm4_phash_neardup",
     "tx12_commonness",
     "tx16_bigram_novelty",
@@ -117,7 +111,6 @@ HASHED_AT_SCALE = frozenset({
     "tx5_tfidf_top_terms",
     "tx7_repetition",
     # pre-round-8 members
-    "pd1_window_dedup",
     "q1_monthly_sales_product",
     "q43_recursive_sql",
     "q4_running_sales",

@@ -3,10 +3,8 @@ replication with per-replica key offsets.
 
 Each replica keeps the source's intra-replica duplicate/near-dup
 structure while replicas decorrelate from one another (documents get
-a per-replica word suffix; embeddings get a per-replica dimension
-rotation, which leaves intra-replica dot products bit-identical), so
-per-key densities — and therefore measured scaling exponents — stay
-clean across the decade.  --replicas 10 regenerates `.scratch/sf1`
+a per-replica word suffix), so per-key densities — and therefore
+measured scaling exponents — stay clean across the decade.  --replicas 10 regenerates `.scratch/sf1`
 (the PERF.md round-6 scaling-study dataset); --replicas 100 produces
 an sf10-equivalent for timing-only runs (the DuckDB oracles are not
 expected to be tractable there).
@@ -29,12 +27,11 @@ ap.add_argument(
     default="all",
     help="comma list; 'all' or a subset of "
     "region,nation,part,supplier,customer,orders,lineitem,"
-    "events,documents,embeddings",
+    "events,documents",
 )
 args = ap.parse_args()
 
 SRC, DST, R = args.src, args.dst, args.replicas
-assert R < 512, "embedding rotation needs replicas < dim (512)"
 want = (
     None
     if args.tables == "all"
@@ -97,19 +94,8 @@ if wanted("documents"):
                        w -> w || 'q' || CAST(k AS VARCHAR)), ' ') END) AS BIGINT)
                  AS n_chars
       FROM {src('documents')}, {K}) TO '{DST}/documents.parquet' (FORMAT PARQUET)""")
-# embeddings: rotate dims by k -> replicas decorrelate, intra-replica
-# dot products invariant
-if wanted("embeddings"):
-    con.execute(f"""COPY (
-      SELECT vec_id + k*2000 AS vec_id,
-             CAST(CASE WHEN k = 0 THEN embedding
-                  ELSE embedding[k+1:] || embedding[1:k] END AS FLOAT[]) AS embedding,
-             label
-      FROM {src('embeddings')}, {K}) TO '{DST}/embeddings.parquet' (FORMAT PARQUET)""")
 
-for t in (
-    "customer", "orders", "lineitem", "events", "documents", "embeddings"
-):
+for t in ("customer", "orders", "lineitem", "events", "documents"):
     if wanted(t):
         n = con.execute(
             f"SELECT count(*) FROM read_parquet('{DST}/{t}.parquet')"

@@ -233,6 +233,34 @@ def test_failed_register_leaves_registry_whole(tmp_path):
     assert os.listdir(os.path.join(root, "tools")) == ["client_reference.json"]
 
 
+def test_start_that_dies_leaves_its_batch_in_flight(spark, tmp_path, monkeypatch):
+    # The batch id is persisted when it is allocated: a `start` that
+    # dies mid-pipeline must leave its own id as last_batch_id, so
+    # `restart` re-enters it instead of re-running the completed batch.
+    from python_sql_datawarehouse_project_spark.plans import clients
+
+    ran = []
+
+    def run_batch(wh, log, batch_id, mv_mode="full"):
+        ran.append(batch_id)
+        if len(ran) == 2:
+            raise RuntimeError("killed mid-pipeline")
+        return {}
+
+    monkeypatch.setattr(clients, "run_batch", run_batch)
+    root = str(tmp_path / "reg")
+    reg = ClientRegistry(root)
+    reg.register("c6")
+    assert process_client(spark, reg, "c6", "start").batch_id == "BATCH000001"
+    with pytest.raises(RuntimeError, match="killed"):
+        process_client(spark, reg, "c6", "start")
+    assert reg.get("c6").last_batch_id == "BATCH000002"
+    assert ClientRegistry(root).get("c6").last_batch_id == "BATCH000002"
+    assert process_client(spark, reg, "c6", "restart").batch_id == "BATCH000002"
+    assert process_client(spark, reg, "c6", "start").batch_id == "BATCH000003"
+    assert ran == ["BATCH000001", "BATCH000002", "BATCH000002", "BATCH000003"]
+
+
 def test_one_row_validation_per_batch_across_systems(spark, tmp_path, monkeypatch):
     # Files of two source systems land in one batch: V3 counts both
     # in one aggregation, and each file keeps its own log row.

@@ -49,7 +49,6 @@ _TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 

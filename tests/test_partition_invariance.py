@@ -35,7 +35,6 @@ _FLOAT_GATES = (
     "q1_monthly_sales_product",  # DECIMAL money routing
     "ev1_tumbling_hourly",  # DECIMAL value routing
     "tx2_quality_score",  # fixed per-row expression tree
-    "ds1_training_mix",  # hash-gate membership
     "qa4_kmv_distinct",  # single-division estimate
 )
 

@@ -40,9 +40,9 @@ _QUERIES = registry.queries()
 #       by definition (qa1, qa4, qa8, qa11-qa16, qa19, qa21
 #       totals, q15/q17/q19/q22/q29/q31/q34/q36/q44 scalar probes,
 #       ev19 data-derived NOW frame, tx5/tx9 corpus totals,
-#       ds2/ds7/pk1 budget cutoffs, zo1's min/max normalization frame);
+#       pk1 budget cutoff, zo1's min/max normalization frame);
 #   (b) a two-phase prefix sum's OFFSET pass over |buckets| rows —
-#       bounded by bucket count, never by data (ds8, ev16, qa21);
+#       bounded by bucket count, never by data (ev16, qa21);
 #   (c) a deliberately global window matching reference semantics on a
 #       dimension-sized input (w3 surrogate keys — SURVEY §2.5 W6;
 #       w4/w5 ntile/percent_rank over the customer dim).
@@ -50,12 +50,6 @@ _QUERIES = registry.queries()
 # plan: either justify it in this list or restructure the query
 # (bucket prefix sum / per-group windows / map-side-combinable aggs).
 _SINGLE_PARTITION_OK = {
-    "ds2_token_budget",
-    "ds7_epoch_schedule",
-    "ds8_sequence_packing",
-    "ds9_priority_sample",  # rank/tau window over a (k+1)-row frame
-    "ds12_temperature_mix",  # largest-remainder rank over |langs| rows
-    "hh1_frequent_items",  # 1-row total-N support-threshold scalar
     "ev16_cumulative_users",
     "ev19_decayed_engagement",  # 1-row data-derived NOW frame
     "pk1_pack_chunks",
@@ -76,7 +70,6 @@ _SINGLE_PARTITION_OK = {
     "qa19_ndv_profile",
     "qa1_null_profile",
     "qa21_ks_distance",
-    "qa22_hll_distinct",  # 1-row global exact-distinct exhibit branch
     "qa4_kmv_distinct",
     "qa8_chisq_drift",
     "tx18_bm25_scores",  # 4-int64 corpus-stats scalar (N, sum_dl, df_i)
@@ -87,6 +80,14 @@ _SINGLE_PARTITION_OK = {
     "w5_spend_percentile",
     "zo1_zorder_code",
 }
+
+
+def test_single_partition_allowlist_names_live_gates():
+    # A family deletion must take its keys out of this set too: a
+    # stale name fails nothing, and a later gate reusing it would
+    # inherit the exemption unaudited.
+    stale = _SINGLE_PARTITION_OK - set(_QUERIES)
+    assert not stale, f"_SINGLE_PARTITION_OK lists unknown keys: {sorted(stale)}"
 
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))

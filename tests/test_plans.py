@@ -264,16 +264,6 @@ def test_tx8_chunks_scan_speed_no_exchange(spark, sf_dir):
     assert "Exchange" not in p, p
 
 
-def test_ds3_filter_single_scan_no_exchange(spark, sf_dir):
-    # The composed filter pipeline is one projection over one scan:
-    # no shuffle, and exactly one parquet scan of documents.
-    from python_sql_datawarehouse_project_spark.operators import mix
-
-    p = plan_of(mix.ds3_filter_pipeline(spark, sf_dir), mode="simple")
-    assert "Exchange" not in p, p
-    assert p.count("FileScan parquet") == 1, p
-
-
 def test_tx9_unigram_join_broadcasts(spark, sf_dir):
     # The lift join attaches vocabulary-sized unigram counts: both
     # attach joins must broadcast (vocab << corpus), never sort-merge.
@@ -375,35 +365,6 @@ def test_sk2_salted_join_spreads_key(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p, p
     joins = [ln for ln in p.splitlines() if "Join" in ln and "salt#" in ln]
     assert joins, p
-
-
-def test_eq1_quantize_zero_exchange_scan_speed(spark, sf_dir):
-    # Stateless per-row column math: any Exchange here would be a
-    # scale bug (eq1 must stream through executors at scan speed).
-    from python_sql_datawarehouse_project_spark.operators import corpus
-
-    df = corpus.eq1_int8_quantize(spark, sf_dir)
-    p = plan_of(df)
-    assert "Exchange" not in p
-    assert "embedding" in p  # reads only what it needs
-    assert "label" not in p  # column pruning reaches the scan
-
-
-def test_pd1_window_dedup_exchanges_hashes_not_text(spark, sf_dir):
-    # The window stream must cross the wire as (doc_id, 60-bit hash)
-    # pairs: 3 exchanges (spread-by-doc_id, whash window, doc_id
-    # rollup) and the distinct must reuse the doc_id partitioning
-    # rather than add a fourth.  No exchange may carry window text.
-    import re
-
-    from python_sql_datawarehouse_project_spark.operators import corpus
-
-    df = corpus.pd1_window_dedup(spark, sf_dir)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Exchange") <= 3, p
-    fmt = plan_of(df)
-    for m in re.finditer(r"\(\d+\) Exchange\n(Input \[\d+\]: \[[^\]]*\])", fmt):
-        assert "win#" not in m.group(1), m.group(1)
 
 
 def test_pk1_packing_is_one_global_sort(spark, sf_dir):
@@ -656,17 +617,6 @@ def test_ev13_variant_is_scan_speed_no_join(spark, sf_dir):
     assert p.count("Exchange") <= 1, p
 
 
-def test_ds6_contamination_probe_is_anti_join(spark, sf_dir):
-    # The composed verdict must apply contamination as a LeftAnti
-    # against the bounded contaminated-id set — never recompute tx6
-    # per row, never cartesian.
-    from python_sql_datawarehouse_project_spark.operators import mix
-
-    p = plan_of(mix.ds6_clean_mix(spark, sf_dir))
-    assert "LeftAnti" in p, p
-    assert "CartesianProduct" not in p
-
-
 def test_q24_exists_is_semi_join_no_nested_loop(spark, sf_dir):
     # The EXISTS probe must plan as a LeftSemi with the equi key on
     # orderkey (the +80-day comparison riding as a join residual) —
@@ -917,29 +867,6 @@ def test_qa19_multi_distinct_is_one_expand_scan(spark, sf_dir):
     assert p.count("lineitem.parquet") == 1, p
     assert "Expand" in p, p
     assert "Join" not in p, p
-
-
-def test_ds8_prefix_sum_never_single_partitions_the_corpus(spark, sf_dir):
-    # The packing cumsum must be the two-phase form: per-bucket
-    # windows over a hash-partitioned exchange (parallel), with only
-    # the |buckets|-row offset table allowed through a SinglePartition
-    # exchange.  A global ORDER BY window over documents would show a
-    # rangepartitioning exchange on doc_id — the anti-pattern pinned
-    # away here.
-    import re
-
-    from python_sql_datawarehouse_project_spark.operators import mix
-
-    p = plan_of(mix.ds8_sequence_packing(spark, sf_dir))
-    assert "rangepartitioning(doc_id" not in p, p
-    singles = [
-        ex
-        for ex in re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?\n", p, re.M)
-        if "SinglePartition" in ex
-    ]
-    # only the bucket-totals offset frame may be single-partitioned
-    for ex in singles:
-        assert "btot" in ex or " b#" in ex, ex
 
 
 def test_ev16_window_runs_over_days_not_events(spark, sf_dir):
