@@ -90,27 +90,29 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--show", type=int, default=20, help="rows to print")
     args = ap.parse_args(argv)
 
-    if args.list_gates:
-        from . import registry
+    if args.list_gates or args.oracle_check or args.gate:
+        from . import registry  # no Spark session needed
 
-        for k in registry.queries():
-            print(k)
-        return 0
+        gates = registry.queries()
+        if args.list_gates:
+            for k in gates:
+                print(k)
+            return 0
+        if not args.sf_dir:
+            flag = "--oracle-check" if args.oracle_check else "--gate"
+            ap.error(f"{flag} requires --sf-dir")
+        if args.gate and args.gate not in gates:
+            ap.error(f"unknown gate {args.gate!r} (see --list-gates)")
 
     from .plans.clients import ClientRegistry, process_client, run_all_clients
     from .session import build_session
 
     spark = build_session(app_name="python_sql_datawarehouse_project_spark-cli")
     if args.oracle_check:
-        if not args.sf_dir:
-            ap.error("--oracle-check requires --sf-dir")
-        from . import registry
         from .testing import compare, compare_hashed
 
-        gates, oracles = registry.queries(), registry.oracles()
+        oracles = registry.oracles()
         names = [args.gate] if args.gate else sorted(gates)
-        if args.gate and args.gate not in gates:
-            ap.error(f"unknown gate {args.gate!r} (see --list-gates)")
         n_fail = 0
         records: dict[str, dict] = {}
         for name in names:
@@ -156,13 +158,6 @@ def main(argv: list[str] | None = None) -> int:
                 json.dump(records, f, indent=1)
         return 1 if n_fail else 0
     if args.gate:
-        if not args.sf_dir:
-            ap.error("--gate requires --sf-dir")
-        from . import registry
-
-        gates = registry.queries()
-        if args.gate not in gates:
-            ap.error(f"unknown gate {args.gate!r} (see --list-gates)")
         gates[args.gate](spark, args.sf_dir).show(args.show, truncate=False)
         return 0
     registry = ClientRegistry(args.root)

@@ -30,7 +30,6 @@ TABLES = (
     "documents",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 VALUE_DEC = "DECIMAL(18,6)"  # events.value, exact: its sums do not depend on order
 
 

@@ -21,23 +21,17 @@ from .operators import (
     bpe,
     corpus,
     events,
-    layout,
-    multimodal,
     profiling,
     quality,
     rangejoin,
     reconcile,
     recursive,
-    retrieval,
-    semijoin,
     skew,
     text,
     tpch,
     tpch2,
     tpch3,
-    udtfs,
     windows,
-    windows_extra,
 )
 
 # The seven warehouse-parity modules come first: their 50 gates are
@@ -56,15 +50,9 @@ _MODULES = (
     text,
     quality,
     corpus,
-    layout,
     events,
     asof,
-    multimodal,
     profiling,
-    windows_extra,
-    udtfs,
-    retrieval,
-    semijoin,
     bpe,
 )
 
@@ -103,7 +91,6 @@ HASHED_AT_SCALE = frozenset({
     # basket pairs) stay out — hashing cannot help an oracle whose
     # WHERE/JOIN is the expensive part.
     "aj1_asof_last_event",
-    "mm4_phash_neardup",
     "tx12_commonness",
     "tx16_bigram_novelty",
     "tx2_quality_score",
@@ -116,13 +103,6 @@ HASHED_AT_SCALE = frozenset({
     "q4_running_sales",
     "q9_delayed_orders_chain",
     "qa2_dup_keys",
-    "tx13_chunk_udtf",
     "tx8_chunks",
-    "ux2_sql_udf",
     "w2_lead_end_dating",
-    "w6_first_last_nth",
-    "w7_range_frame",
-    "w8_rolling_median",
-    "w9_running_distinct",
-    "zo1_zorder_code",
 })

@@ -21,8 +21,8 @@ Key choices (SURVEY.md §4):
     the query context of an ANSI runtime error, and ANSI is off
     (below), so AnalysisException and raised-error messages read the
     same with capture on or off.
-  * Arrow enabled: every pandas_udf / applyInPandas extension operator
-    moves data via Arrow batches, never row-at-a-time pickling.
+  * Arrow enabled: the Excel readers' createDataFrame(pandas) bridge
+    (sources/readers.py) ships Arrow batches, not pickled rows.
 """
 
 from __future__ import annotations
@@ -71,7 +71,7 @@ def build_session(
         .config("spark.sql.icu.caseMappings.enabled", "false")
         # -- no call-site capture around every Column / F.* call ------
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # -- Arrow for all pandas-UDF extension operators --------------
+        # -- Arrow for the Excel readers' createDataFrame(pandas) -----
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- TIMESTAMP(NANOS) parquet reads as raw int64 nanos ---------
         # Set once: the reader consults it when a frame executes, so it

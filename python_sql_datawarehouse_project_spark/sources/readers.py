@@ -33,8 +33,8 @@ lands snappy parquet anyway.
                 [validate_mapping.py:365-366]
   read_orc      interchange format beyond the reference surface
   read_text     raw line-corpus ingestion (one row per line)
-  read_binary   whole-file binary ingestion (the multimodal
-                payload path for operators/multimodal.py)
+  read_binary   whole-file binary ingestion (one row per file:
+                path, modificationTime, length, content)
 
 Scale: csv/json/parquet readers are distributed scans with pushdown;
 Excel is driver-side by design — in the reference's contract xlsx
@@ -219,10 +219,8 @@ def read_text(spark: SparkSession, path: str) -> DataFrame:
 
 def read_binary(spark: SparkSession, path: str) -> DataFrame:
     """Whole-file binary scan (`binaryFile`): path, modificationTime,
-    length, content columns — the ingestion path for the multimodal
-    payloads of operators/multimodal.py (image/audio blobs land as
-    files; this turns a directory of them into the binary-column table
-    mm1-mm5 consume).  Each file is one row; parallelism comes from
+    length, content columns — turns a directory of blobs into one
+    binary-column table.  Each file is one row; parallelism comes from
     many files, and `pathGlobFilter` scopes the listing."""
     return spark.read.format("binaryFile").load(path)
 

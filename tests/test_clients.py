@@ -377,3 +377,28 @@ def test_cli_oracle_check_single_gate(spark, sf_dir, capsys):
     out = capsys.readouterr().out
     assert "OK   qa20_grouped_regression" in out
     assert "oracle-check: 1/1 OK" in out
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["--oracle-check"],
+        ["--gate", "q1_monthly_sales_product"],
+        ["--gate", "no_such_gate", "--sf-dir", "x"],
+    ],
+)
+def test_cli_rejects_bad_gate_arguments_before_building_a_session(
+    monkeypatch, argv
+):
+    # A missing --sf-dir or an unknown gate is a usage error (exit 2)
+    # found without starting a JVM.
+    from python_sql_datawarehouse_project_spark import session
+    from python_sql_datawarehouse_project_spark.__main__ import main
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("built a Spark session")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main(argv)
+    assert exc.value.code == 2

@@ -457,7 +457,7 @@ def test_parquet_directory_sees_a_file_rewritten_inside_it(spark, tmp_path):
 
 def test_orc_text_binary_readers_roundtrip(spark, tmp_path):
     # S-family widening: ORC round-trip, line-text scan, whole-file
-    # binary ingestion (the multimodal payload path).
+    # binary ingestion.
     from python_sql_datawarehouse_project_spark.sources import readers
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "s"])

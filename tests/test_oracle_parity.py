@@ -55,10 +55,7 @@ def test_delayed_chain_matches_oracle_at_sf01(name, spark):
 
 def test_every_query_has_entry_or_documented_gap():
     missing = set(_QUERIES) - set(_ORACLES)
-    # Only non-SQL-expressible operators may omit an oracle:
-    # multimodal UDF stages (python decode).
-    allowed_gaps = {n for n in missing if n.startswith(("mm2", "mm3"))}
-    assert missing == allowed_gaps, f"queries without oracle: {missing - allowed_gaps}"
+    assert not missing, f"queries without oracle: {missing}"
 
 
 def test_named_gate_sets_name_live_gates():
@@ -160,12 +157,12 @@ def test_hashed_compare_detects_value_and_count_drift(spark, sf_dir):
     res = compare_hashed(name, _QUERIES[name], bad_rows, spark, sf_dir)
     assert not res.ok and res.spark_rows == res.oracle_rows + 1
     # double sensitivity: a last-bit perturbation must flip the hash
-    w8 = _ORACLES["w8_rolling_median"].replace(
-        "AS rolling_median",
-        "* (1.0 + 2.220446049250313e-16) AS rolling_median",
+    q4 = _ORACLES["q4_running_sales"].replace(
+        "AS DOUBLE) AS running_sales",
+        "AS DOUBLE) * (1.0 + 2.220446049250313e-16) AS running_sales",
     )
     assert not compare_hashed(
-        "w8_rolling_median", _QUERIES["w8_rolling_median"], w8, spark, sf_dir
+        "q4_running_sales", _QUERIES["q4_running_sales"], q4, spark, sf_dir
     ).ok
 
 

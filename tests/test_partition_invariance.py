@@ -31,7 +31,6 @@ _FLOAT_GATES = (
     "qa21_ks_distance",
     "tx17_char_diversity",
     "ev19_decayed_engagement",
-    "w8_rolling_median",
     "q1_monthly_sales_product",  # DECIMAL money routing
     "ev1_tumbling_hourly",  # DECIMAL value routing
     "tx2_quality_score",  # fixed per-row expression tree

@@ -11,12 +11,13 @@ backstop that no gate — present or future — ships with:
     aggregate probe pattern, e.g. q22's average-balance crossJoin.)
   * BatchEvalPython: a row-at-a-time (pickled) Python UDF in the
     plan.  All Python execution must go through Arrow
-    (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas /
-    BatchEvalPythonUDTF with arrow enabled) — the 10-100x rule from
-    the module docstrings.
+    (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) — the
+    10-100x rule from the module docstrings.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -40,7 +41,7 @@ _QUERIES = registry.queries()
 #       by definition (qa1, qa4, qa8, qa11-qa16, qa19, qa21
 #       totals, q15/q17/q19/q22/q29/q31/q34/q36/q44 scalar probes,
 #       ev19 data-derived NOW frame, tx5/tx9 corpus totals,
-#       pk1 budget cutoff, zo1's min/max normalization frame);
+#       pk1 budget cutoff);
 #   (b) a two-phase prefix sum's OFFSET pass over |buckets| rows —
 #       bounded by bucket count, never by data (ev16, qa21);
 #   (c) a deliberately global window matching reference semantics on a
@@ -72,13 +73,11 @@ _SINGLE_PARTITION_OK = {
     "qa21_ks_distance",
     "qa4_kmv_distinct",
     "qa8_chisq_drift",
-    "tx18_bm25_scores",  # 4-int64 corpus-stats scalar (N, sum_dl, df_i)
     "tx5_tfidf_top_terms",
     "tx9_bigram_lift",
     "w3_surrogate_keys",
     "w4_ntile_spend_quartiles",
     "w5_spend_percentile",
-    "zo1_zorder_code",
 }
 
 
@@ -110,13 +109,7 @@ def test_no_scale_antipatterns(name, spark, sf_dir):
     )
     p = _plan_of(df)
     assert "CartesianProduct" not in p, f"{name}: non-broadcast cross join"
-    # Row-at-a-time Python UDF: "BatchEvalPython" exactly (the UDTF
-    # node is BatchEvalPythonUDTF — allowed, it is the lateral seam
-    # and Spark has no arrow UDTF node name distinction here).
-    import re
-
-    row_udf = re.search(r"BatchEvalPython(?!UDTF)", p)
-    assert not row_udf, f"{name}: row-at-a-time Python UDF in plan"
+    assert "BatchEvalPython" not in p, f"{name}: row-at-a-time Python UDF in plan"
     if name not in _SINGLE_PARTITION_OK:
         # Catalyst's runtime bloom-filter join pushdown
         # (spark.sql.optimizer.runtimeFilter.*) injects its OWN

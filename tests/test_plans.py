@@ -313,20 +313,6 @@ def test_qa5_percentiles_window_runs_over_aggregated_counts(spark, sf_dir):
     assert p.rfind("HashAggregate") > win_pos, p
 
 
-def test_mm4_band_join_never_ships_payload(spark, sf_dir):
-    # The perceptual-hash band join must exchange (id, signature,
-    # band_key) longs only — the binary payload column must not
-    # appear in any Exchange input, and no nested loop may form.
-    from python_sql_datawarehouse_project_spark.operators import multimodal
-
-    p = plan_of(multimodal.mm4_phash_neardup(spark, sf_dir), mode="simple")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    for ln in p.splitlines():
-        if "Exchange" in ln:
-            assert "payload" not in ln, ln
-
-
 def test_qa9_cms_state_is_aggregated_before_join(spark, sf_dir):
     # The CMS update pass must reduce to (d, bucket) counters BEFORE
     # any join: the estimate join's build side is the D*W counter
@@ -389,85 +375,6 @@ def test_sq1_sequences_single_user_shuffle(spark, sf_dir):
     p = df._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") <= 2, p
     assert "Join" not in p
-
-
-def test_zorder_layout_prunes_2d_box_better_than_date_sort(
-    spark, sf_dir, tmp_path
-):
-    # The 100 TB rationale for operators/layout.py: a 2-D box
-    # predicate (customer range x date range) must touch materially
-    # fewer files on the Z-ordered layout than on the conventional
-    # date-sorted one, because each Z file owns a small
-    # hyper-rectangle instead of a full-width date stripe.  Files
-    # "touched" = files contributing matching rows (the proxy parquet
-    # min/max skipping acts on — tight per-file ranges are exactly
-    # what sortWithinPartitions buys).
-    from pyspark.sql import functions as F
-
-    from python_sql_datawarehouse_project_spark.catalog import load_table
-    from python_sql_datawarehouse_project_spark.operators import layout
-
-    zdir, ddir = str(tmp_path / "z"), str(tmp_path / "d")
-    layout.zorder_write(spark, sf_dir, zdir, n_files=64)
-    (
-        load_table(spark, sf_dir, "orders")
-        .repartitionByRange(64, "o_orderdate")
-        .sortWithinPartitions("o_orderdate")
-        .write.mode("overwrite")
-        .parquet(ddir)
-    )
-
-    # ~12% of each dimension, derived from the data (the custkey
-    # domain scales with SF).  Alignment with the Morton grid is not
-    # assumed — the strict assert is only that 2-D clustering beats
-    # the 1-D stripe layout by 2x on the same predicate.
-    b = (
-        load_table(spark, sf_dir, "orders")
-        .agg(
-            F.min("o_custkey").alias("ck_lo"),
-            F.max("o_custkey").alias("ck_hi"),
-            F.min("o_orderdate").alias("d_lo"),
-            F.max("o_orderdate").alias("d_hi"),
-        )
-        .first()
-    )
-    ck_cut = b.ck_lo + int((b.ck_hi - b.ck_lo) * 0.12)
-    d_cut = b.d_lo + (b.d_hi - b.d_lo) * 0.12
-    box = (
-        (F.col("o_custkey") >= b.ck_lo)
-        & (F.col("o_custkey") < ck_cut)
-        & (F.col("o_orderdate") >= F.lit(b.d_lo))
-        & (F.col("o_orderdate") < F.lit(d_cut))
-    )
-
-    def files_touched(path):
-        return (
-            spark.read.parquet(path)
-            .filter(box)
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    z, d = files_touched(zdir), files_touched(ddir)
-    # Same rows either way; the layouts only move them around.
-    assert (
-        spark.read.parquet(zdir).filter(box).count()
-        == spark.read.parquet(ddir).filter(box).count()
-    )
-    assert z * 2 <= d, f"z-order touched {z} files, date-sort {d}"
-
-
-def test_zo1_bounds_broadcast_single_pass(spark, sf_dir):
-    # The min/max normalization bounds come from a 1-row aggregate
-    # broadcast against the scan — no shuffle of the fact, no
-    # cartesian of anything bigger than that single row.
-    from python_sql_datawarehouse_project_spark.operators import layout
-
-    df = layout.zo1_zorder_code(spark, sf_dir)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in p  # 1-row bounds cross join
-    assert "hashpartitioning" not in p, p  # no fact shuffle
 
 
 def test_q12_date_filter_pushed_and_no_cartesian(spark, sf_dir):
@@ -882,36 +789,6 @@ def test_ev16_window_runs_over_days_not_events(spark, sf_dir):
     assert win, p
     assert "user_id" not in win.group(0), win.group(0)
     assert "distinct" not in win.group(0).lower(), win.group(0)
-
-
-def test_sj1_semi_reduction_below_merge_join(spark, sf_dir):
-    # The scale contract: the part-key reduction is a BROADCAST LeftSemi
-    # hash join applied to lineitem BEFORE the lineitem⋈orders exchange,
-    # and the big fact-fact join is the merge-hinted SortMergeJoin (the
-    # 100 TB plan, not the small-SF broadcast accident).
-    from python_sql_datawarehouse_project_spark.operators import semijoin
-
-    p = plan_of(semijoin.sj1_semijoin_reduced_join(spark, sf_dir), mode="simple")
-    assert "SortMergeJoin" in p, p
-    semi = p.find("BroadcastHashJoin")
-    smj = p.find("SortMergeJoin")
-    assert semi != -1 and "LeftSemi" in p, p
-    # In EXPLAIN's tree rendering children print BELOW their parent, so
-    # the reducing semi join must appear AFTER the SMJ line it feeds.
-    assert semi > smj, p
-
-
-def test_tx18_single_scan_broadcast_stats_no_explode(spark, sf_dir):
-    # BM25 is per-row arithmetic + one broadcast 1-row stats merge:
-    # the document table is scanned ONCE per side of the stats seam
-    # (tf reuse), tokens are never exploded, and the only join is the
-    # broadcast nested-loop against the 1-row corpus-stats aggregate.
-    from python_sql_datawarehouse_project_spark.operators import retrieval
-
-    p = plan_of(retrieval.tx18_bm25_scores(spark, sf_dir), mode="simple")
-    assert "Generate" not in p, p  # no explode
-    assert "BroadcastNestedLoopJoin" in p, p
-    assert "SortMergeJoin" not in p, p
 
 
 def test_tx19_two_hash_aggs_vocab_sized_shuffle(spark, sf_dir):

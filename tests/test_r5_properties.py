@@ -13,16 +13,11 @@ one fixed dataset cannot cover):
     generated `c0*1.0 + c1*0.5 + ...` score expression exactly as the
     Python left-fold (left-associative, one rounding per op) — the
     assumption that lets the Spark tree and the oracle tree agree.
-  * w8's interpolation law: DuckDB quantile_cont(0.5) over a frame is
-    bitwise the two-middle-average Python median (what Spark's
-    percentile(0.5) computes).
   * tx17's Gini form: the single-division 1 - Σc²/n² evaluates
     identically in DuckDB and Python for arbitrary count vectors.
 """
 
 from __future__ import annotations
-
-import statistics
 
 import duckdb
 from hypothesis import given, settings
@@ -91,50 +86,6 @@ def test_ev19_score_tree_matches_duckdb_left_fold(cs):
     for k, c in enumerate(cs[1:], start=1):
         py = py + float(c) * 0.5**k
     assert ddb == py
-
-
-# ----------------------------------------------------------------- w8
-frames = st.lists(
-    st.floats(
-        allow_nan=False, allow_infinity=False, min_value=-1e12, max_value=1e12
-    ),
-    min_size=1,
-    max_size=5,
-)
-
-
-@settings(max_examples=150, deadline=None)
-@given(frames)
-def test_w8_explicit_two_middle_median_is_portable(vals):
-    # HISTORY: the first w8 formulation compared Spark percentile(0.5)
-    # to DuckDB quantile_cont and this test's precursor FALSIFIED it —
-    # DuckDB interpolates lo*(1-f)+hi*f, Spark lo+(hi-lo)*f, and e.g.
-    # two denormals round differently through the two formulas.  The
-    # gate now averages the two middle order statistics explicitly;
-    # this probes that DuckDB's evaluation of that expression is
-    # bitwise the Python one for arbitrary doubles.  Floats are BOUND
-    # as a parameter: textual literals would parse as DECIMAL, whose
-    # ->DOUBLE conversion double-rounds (a parsing artifact the
-    # gate's parquet DOUBLE column never hits).
-    [(ddb,)] = duckdb.execute(
-        """
-        WITH s AS (
-            SELECT list_sort(list(x)) AS arr
-            FROM unnest(?::DOUBLE[]) AS t(x)
-        )
-        SELECT (arr[(len(arr) + 1) // 2] + arr[len(arr) // 2 + 1])
-               / CAST(2 AS DOUBLE)
-        FROM s
-        """,
-        [vals],
-    ).fetchall()
-    xs = sorted(vals)
-    n = len(xs)
-    py = (xs[(n + 1) // 2 - 1] + xs[n // 2]) / 2.0
-    assert ddb == py
-    # and the explicit form IS the median (statistics.median takes the
-    # same two-middle average for even n, the exact middle for odd)
-    assert py == statistics.median(vals)
 
 
 # ---------------------------------------------------------------- tx17
