@@ -30,8 +30,6 @@ TABLES = (
     "documents",
 )
 
-VALUE_DEC = "DECIMAL(18,6)"  # events.value, exact: its sums do not depend on order
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

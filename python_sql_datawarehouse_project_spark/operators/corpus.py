@@ -6,21 +6,14 @@ SURVEY.md §2.2 P4 / §2.5 W1).
   pk1_pack_chunks     concatenate-and-chunk sequence packing: map
                       every document onto its context-window chunk
                       span under a fixed token budget
-  sq1_event_sequences per-user ordered event-sequence assembly with
-                      a deterministic sequence fingerprint (the
-                      "build one training example per user session"
-                      step)
 
-Every query is oracle-checked bit-for-bit against DuckDB: integer
+The query is oracle-checked bit-for-bit against DuckDB: integer
 md5-slice hashing and integer window arithmetic only
 (functions/hashing.py portability contract).
 
-Scale design (100 TB):
-  * pk1's only wide dependency is a global running token count —
-    a range-partitioned sort at cluster scale; everything downstream
-    is per-row integer arithmetic.
-  * sq1 is one shuffle on user_id; per-user state is the user's own
-    event list (bounded by session length, the op's inherent floor).
+Scale design (100 TB): pk1's only wide dependency is a global
+running token count — a range-partitioned sort at cluster scale;
+everything downstream is per-row integer arithmetic.
 """
 
 from __future__ import annotations
@@ -97,46 +90,9 @@ FROM cum
 """
 
 
-# -- sq1: per-user ordered event-sequence assembly --------------------
-def sq1_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One training example per user: the user's event types in
-    (ts, event_id) order, fingerprinted with the portable 60-bit md5
-    slice.  collect_list is order-nondeterministic under shuffles, so
-    the struct array is sort_array'd on (ts, event_id) — a total
-    order (event_id is unique) — before the types are joined."""
-    events = load_table(spark, sf_dir, "events")
-    seq = F.array_join(
-        F.transform(
-            F.sort_array(
-                F.collect_list(F.struct("ts", "event_id", "event_type"))
-            ),
-            lambda x: x["event_type"],
-        ),
-        " ",
-    )
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("event_type").alias("n_types"),
-        H.md5_long(seq).alias("seq_hash"),
-    )
-
-
-SQ1_ORACLE = f"""
-SELECT user_id,
-       COUNT(*) AS n_events,
-       CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
-       {H.sql_md5_long("string_agg(event_type, ' ' ORDER BY ts, event_id)")}
-           AS seq_hash
-FROM events
-GROUP BY user_id
-"""
-
-
 QUERIES = {
     "pk1_pack_chunks": pk1_pack_chunks,
-    "sq1_event_sequences": sq1_event_sequences,
 }
 ORACLES = {
     "pk1_pack_chunks": PK1_ORACLE,
-    "sq1_event_sequences": SQ1_ORACLE,
 }

@@ -11,7 +11,9 @@ the file_audit_log rows and the incoming/success/failed file moves):
   V2 mapping validation         (mismatch -> MAPPING_FAILED, stop file)
   P1-P2 projection
   bronze write                  (idempotent batch-partition overwrite;
-                                 stamps the batch id, P3)
+                                 stamps the batch id, P3; a failure ->
+                                 READ_FAILED, as parquet data pages are
+                                 first read here)
   V3 row validation             (failures logged, NON-FATAL — the
                                  reference warns and proceeds,
                                  batch_processing.py:1209-1220)
@@ -101,6 +103,15 @@ def ingest_directory(
             )
         pending.clear()
 
+    def read_failed(fname: str, table: str, e: Exception) -> None:
+        results.append(FileResult(fname, "READ_FAILED", table, 0, str(e)))
+        log.append(
+            "load_error_log",
+            batch_id=batch_id,
+            physical_file_name=fname,
+            message=str(e),
+        )
+
     files = [
         (source_system, fname, os.path.join(d, fname))
         for source_system, d in sorted(incoming.items())
@@ -124,15 +135,7 @@ def ingest_directory(
         try:
             df = read_source(spark, path, cfg.extension)
         except Exception as e:
-            results.append(
-                FileResult(fname, "READ_FAILED", cfg.target_table, 0, str(e))
-            )
-            log.append(
-                "load_error_log",
-                batch_id=batch_id,
-                physical_file_name=fname,
-                message=str(e),
-            )
+            read_failed(fname, cfg.target_table, e)
             continue
 
         mv = validate_mapping(df, [m.source for m in mappings])
@@ -159,9 +162,13 @@ def ingest_directory(
         if any(t == cfg.target_table for _, t, _ in pending):
             # this write replaces the batch partition the owed counts read
             log_row_validation()
-        n = wh.write_batch(
-            apply_mapping(df, mappings), "bronze", cfg.target_table, batch_id
-        )
+        try:
+            n = wh.write_batch(
+                apply_mapping(df, mappings), "bronze", cfg.target_table, batch_id
+            )
+        except Exception as e:
+            read_failed(fname, cfg.target_table, e)
+            continue
         log.append(
             "file_audit_log",
             batch_id=batch_id,

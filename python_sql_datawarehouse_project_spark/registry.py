@@ -3,9 +3,9 @@
 Contract (driver): every key in queries() takes (spark, sf_dir) and
 returns a DataFrame; oracles() maps the same key to DuckDB SQL over
 the pre-registered views (region nation customer supplier part orders
-lineitem events documents) producing identical column names.  Keys
-present in queries() but absent from oracles() get a weaker rows-only
-check (reserved for non-SQL-expressible operators).
+lineitem events documents) producing identical column names.  Every
+key has an oracle: test_oracle_parity's
+test_every_query_has_entry_or_documented_gap pins it (no gap is allowed).
 Every gate is a batch query over operators/.
 """
 
@@ -17,16 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .operators import (
     analytics,
-    asof,
     bpe,
     corpus,
-    events,
     profiling,
     quality,
-    rangejoin,
     reconcile,
     recursive,
-    skew,
     text,
     tpch,
     tpch2,
@@ -45,13 +41,9 @@ _MODULES = (
     tpch,
     tpch2,
     tpch3,
-    rangejoin,
-    skew,
     text,
     quality,
     corpus,
-    events,
-    asof,
     profiling,
     bpe,
 )
@@ -87,10 +79,9 @@ HASHED_AT_SCALE = frozenset({
     # cost is row MATERIALIZATION (output scales with the table:
     # 0.2-10M rows at sf10), not engine compute, so the hashed path
     # brings them into the sf10 sweep.  The compute-bound exclusions
-    # (rj2's interval join, tx10's fixed-size-but-heavy oracle, q44's
-    # basket pairs) stay out — hashing cannot help an oracle whose
-    # WHERE/JOIN is the expensive part.
-    "aj1_asof_last_event",
+    # (tx10's fixed-size-but-heavy oracle, q44's basket pairs) stay
+    # out — hashing cannot help an oracle whose WHERE/JOIN is the
+    # expensive part.
     "tx12_commonness",
     "tx16_bigram_novelty",
     "tx2_quality_score",

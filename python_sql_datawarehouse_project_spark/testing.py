@@ -255,9 +255,9 @@ def _spark_row_hash(sdf: DataFrame):
         elif t in ("timestamp", "timestamp_ntz"):
             # NTZ included: a bare CAST AS STRING drops trailing-zero
             # fraction digits ('..:17' vs DuckDB strftime's
-            # '..:17.000000') — caught by aj1 when it joined the
-            # hashed cohort (its asof outputs are NTZ; the session
-            # runs UTC so date_format is wall-clock identical).
+            # '..:17.000000') — caught by a since-deleted gate with
+            # NTZ outputs when it joined the hashed cohort (the
+            # session runs UTC so date_format is wall-clock identical).
             # Midnight renders as the bare date, mirroring the full
             # compare's _canon_value (timestamp@00:00 == date) so a
             # gate whose Spark side is date_trunc (timestamp) and

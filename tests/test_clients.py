@@ -350,7 +350,7 @@ def test_cli_gate_and_list(spark, sf_dir, capsys):
 
     assert main(["--list-gates"]) == 0
     out = capsys.readouterr().out
-    assert "q34_forecast_revenue" in out and "rj2_interval_overlap" in out
+    assert "q34_forecast_revenue" in out and "qa2_dup_keys" in out
     assert main(["--gate", "q34_forecast_revenue", "--sf-dir", sf_dir]) == 0
     out = capsys.readouterr().out
     assert "forecast_revenue" in out

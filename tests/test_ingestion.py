@@ -241,6 +241,43 @@ def test_bronze_types_come_from_mapping_not_file(spark, tmp_path):
     assert sorted((r.dwh_batch_id, r.n_rows) for r in fp) == [("B1", 2), ("B2", 2)]
 
 
+def test_file_whose_data_pages_fail_to_read_is_read_failed(spark, tmp_path):
+    # A parquet read_source only touches the footer, so corrupt data
+    # pages first fail in the bronze write.  That file must end
+    # READ_FAILED with one load_error_log row, and the batch's later
+    # files still load.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    table = pa.table({
+        "cst_key": pa.array([f"K{i}" for i in range(5000)]),
+        "cst_id": pa.array(range(5000), pa.int64()),
+    })
+    bad = incoming / "cust_info_A.parquet"
+    pq.write_table(table, bad, compression="none", use_dictionary=False)
+    data = bytearray(bad.read_bytes())
+    data[100:400] = b"\xff" * 300  # cst_key's value lengths
+    bad.write_bytes(bytes(data))
+    pq.write_table(table.slice(0, 3), incoming / "cust_info_B.parquet")
+
+    plan = IngestPlan(
+        configs=[SourceConfig("crm", "parquet", "cust_info", "crm_cust_info")],
+        mappings={"crm_cust_info": MAPPINGS[:2]},
+    )
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    log = RunLog(str(tmp_path / "wh"))
+    results = ingest_directory(spark, wh, log, plan, {"crm": str(incoming)}, "B1")
+    assert [(r.file, r.status, r.rows) for r in results] == [
+        ("cust_info_A.parquet", "READ_FAILED", 0),
+        ("cust_info_B.parquet", "LOADED", 3),
+    ]
+    [err] = log.read("load_error_log")
+    assert err["physical_file_name"] == "cust_info_A.parquet"
+    assert wh.read_batch("bronze", "crm_cust_info", "B1").count() == 3
+
+
 def _write_minimal_xlsx(path: str) -> None:
     """Hand-rolled OOXML workbook (stdlib zipfile only): 4 columns,
     3 data rows, exercising shared strings, inline strings, booleans,

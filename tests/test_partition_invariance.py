@@ -30,9 +30,7 @@ _FLOAT_GATES = (
     "qa20_grouped_regression",
     "qa21_ks_distance",
     "tx17_char_diversity",
-    "ev19_decayed_engagement",
     "q1_monthly_sales_product",  # DECIMAL money routing
-    "ev1_tumbling_hourly",  # DECIMAL value routing
     "tx2_quality_score",  # fixed per-row expression tree
     "qa4_kmv_distinct",  # single-division estimate
 )

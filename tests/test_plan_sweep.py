@@ -40,10 +40,9 @@ _QUERIES = registry.queries()
 #       a handful of) rows, so the last merge step is single-partition
 #       by definition (qa1, qa4, qa8, qa11-qa16, qa19, qa21
 #       totals, q15/q17/q19/q22/q29/q31/q34/q36/q44 scalar probes,
-#       ev19 data-derived NOW frame, tx5/tx9 corpus totals,
-#       pk1 budget cutoff);
+#       tx5/tx9 corpus totals, pk1 budget cutoff);
 #   (b) a two-phase prefix sum's OFFSET pass over |buckets| rows —
-#       bounded by bucket count, never by data (ev16, qa21);
+#       bounded by bucket count, never by data (qa21);
 #   (c) a deliberately global window matching reference semantics on a
 #       dimension-sized input (w3 surrogate keys — SURVEY §2.5 W6;
 #       w4/w5 ntile/percent_rank over the customer dim).
@@ -51,8 +50,6 @@ _QUERIES = registry.queries()
 # plan: either justify it in this list or restructure the query
 # (bucket prefix sum / per-group windows / map-side-combinable aggs).
 _SINGLE_PARTITION_OK = {
-    "ev16_cumulative_users",
-    "ev19_decayed_engagement",  # 1-row data-derived NOW frame
     "pk1_pack_chunks",
     "q15_top_supplier",
     "q17_small_quantity_revenue",

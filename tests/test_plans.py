@@ -196,19 +196,6 @@ def test_batch_read_prunes_partitions(spark, sf_dir, tmp_path):
     assert "dwh_batch_id#" in p.split("PartitionFilters", 1)[1].split("]", 1)[0]
 
 
-def test_asof_join_is_single_exchange_no_join(spark, sf_dir):
-    # The merge as-of formulation must plan ONE hash exchange on the
-    # key and NO join operator at all (the naive range join expands
-    # |probes| x events-per-key rows); payload carry is a running
-    # window over the sorted union.
-    from python_sql_datawarehouse_project_spark.operators import asof
-
-    p = plan_of(asof.aj1_asof_last_event(spark, sf_dir), mode="simple")
-    assert p.count("Exchange") - p.count("ReusedExchange") == 1, p
-    assert "Join" not in p, p
-    assert "Window" in p
-
-
 def test_tx6_gram_join_carries_hashes_not_strings(spark, sf_dir):
     # The contamination join must exchange 8-byte gram hashes (column
     # h), never the gram strings, and must not plan a cartesian.
@@ -229,30 +216,6 @@ def test_qa4_sketch_reduces_per_partition(spark, sf_dir):
 
     p = plan_of(qa.qa4_kmv_distinct(spark, sf_dir))
     assert "TakeOrdered" in p, p
-
-
-def test_rj1_joins_on_bin_composite_key(spark, sf_dir):
-    # The range join must plan an EQUI-join whose key includes the
-    # time bin (skew-bounding composite key), never a cartesian or
-    # pure-theta nested loop.
-    from python_sql_datawarehouse_project_spark.operators import rangejoin
-
-    p = plan_of(rangejoin.rj1_preorder_attribution(spark, sf_dir), mode="simple")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    joins = [ln for ln in p.splitlines() if "Join" in ln and "bin#" in ln]
-    assert joins, p
-
-
-def test_sk1_salted_agg_two_stage(spark, sf_dir):
-    # The salted aggregation must plan TWO exchanges: one partitioned
-    # by (event_type, salt) — the hot-key spread — then one by
-    # event_type for the exact partial-state merge.
-    from python_sql_datawarehouse_project_spark.operators import skew
-
-    p = plan_of(skew.sk1_salted_hot_key_agg(spark, sf_dir), mode="simple")
-    assert p.count("Exchange") - p.count("ReusedExchange") == 2, p
-    assert "salt" in p, p
 
 
 def test_tx8_chunks_scan_speed_no_exchange(spark, sf_dir):
@@ -327,30 +290,13 @@ def test_qa9_cms_state_is_aggregated_before_join(spark, sf_dir):
 
 
 def test_ev9_and_qa11_distinct_then_count_no_expand(spark, sf_dir):
-    # Windowed/keyed COUNT DISTINCT must plan as distinct-then-count
-    # (two aggregates), never an Expand of the raw stream.
-    from python_sql_datawarehouse_project_spark.operators import events as evm
+    # Keyed COUNT DISTINCT must plan as distinct-then-count (two
+    # aggregates), never an Expand of the raw stream.  The ev9 gate is
+    # deleted; the test keeps its name so its id stays stable.
     from python_sql_datawarehouse_project_spark.operators import quality as qa
 
-    for df in (
-        evm.ev9_hourly_active_users(spark, sf_dir),
-        qa.qa11_fd_profile(spark, sf_dir),
-    ):
-        p = plan_of(df, mode="simple")
-        assert "Expand" not in p, p
-
-
-def test_sk2_salted_join_spreads_key(spark, sf_dir):
-    # The salted join must plan its equi-join on a key set that
-    # includes the salt column (the spread), never a plain single-key
-    # join or a nested loop.
-    from python_sql_datawarehouse_project_spark.operators import skew
-
-    p = plan_of(skew.sk2_salted_skew_join(spark, sf_dir), mode="simple")
-    assert "CartesianProduct" not in p, p
-    assert "BroadcastNestedLoopJoin" not in p, p
-    joins = [ln for ln in p.splitlines() if "Join" in ln and "salt#" in ln]
-    assert joins, p
+    p = plan_of(qa.qa11_fd_profile(spark, sf_dir), mode="simple")
+    assert "Expand" not in p, p
 
 
 def test_pk1_packing_is_one_global_sort(spark, sf_dir):
@@ -362,18 +308,6 @@ def test_pk1_packing_is_one_global_sort(spark, sf_dir):
     df = corpus.pk1_pack_chunks(spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") == 1, p
-    assert "Join" not in p
-
-
-def test_sq1_sequences_single_user_shuffle(spark, sf_dir):
-    # One hash shuffle on user_id; the distinct-type count rides the
-    # same grouping (partial agg on (user_id, event_type)), so at most
-    # two exchanges and no join.
-    from python_sql_datawarehouse_project_spark.operators import corpus
-
-    df = corpus.sq1_event_sequences(spark, sf_dir)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Exchange") <= 2, p
     assert "Join" not in p
 
 
@@ -471,17 +405,6 @@ def test_runtime_bloom_filter_prunes_big_side_of_selective_join(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_ev12_ohlc_is_one_aggregate_no_window(spark, sf_dir):
-    # OHLC via struct MIN/MAX must stay a single map-side-combinable
-    # aggregate: no Window (the ROW_NUMBER formulation sorts every
-    # bucket) and exactly one shuffle (the group-by exchange).
-    from python_sql_datawarehouse_project_spark.operators import events
-
-    p = plan_of(events.ev12_ohlc_hourly(spark, sf_dir), mode="simple")
-    assert "Window" not in p, p
-    assert p.count("Exchange") <= 1, p
-
-
 def test_qa14_sketch_branches_are_take_ordered(spark, sf_dir):
     # Each KMV sketch is a min-K: orderBy+limit must plan as
     # TakeOrderedAndProject (K rows per partition cross the wire),
@@ -512,16 +435,6 @@ def test_q16_grouping_sets_single_expand_single_shuffle(spark, sf_dir):
     assert p.count("Expand") == 1, p
     assert p.count("Exchange") <= 1, p
     assert "Join" not in p
-
-
-def test_ev13_variant_is_scan_speed_no_join(spark, sf_dir):
-    # VARIANT extraction is a per-row projection: no join, no window,
-    # one group-by exchange.
-    from python_sql_datawarehouse_project_spark.operators import events
-
-    p = plan_of(events.ev13_props_variant(spark, sf_dir), mode="simple")
-    assert "Join" not in p and "Window" not in p
-    assert p.count("Exchange") <= 1, p
 
 
 def test_q24_exists_is_semi_join_no_nested_loop(spark, sf_dir):
@@ -774,21 +687,6 @@ def test_qa19_multi_distinct_is_one_expand_scan(spark, sf_dir):
     assert p.count("lineitem.parquet") == 1, p
     assert "Expand" in p, p
     assert "Join" not in p, p
-
-
-def test_ev16_window_runs_over_days_not_events(spark, sf_dir):
-    # The distinct-to-date decorrelation: the only window is the
-    # running sum over the DAY-grain frame — no per-event or per-user
-    # window state, and no COUNT(DISTINCT) over a window.
-    import re
-
-    from python_sql_datawarehouse_project_spark.operators import events
-
-    p = plan_of(events.ev16_cumulative_users(spark, sf_dir))
-    win = re.search(r"^\(\d+\) Window\n(?:.*\n)*?\n", p, re.M)
-    assert win, p
-    assert "user_id" not in win.group(0), win.group(0)
-    assert "distinct" not in win.group(0).lower(), win.group(0)
 
 
 def test_tx19_two_hash_aggs_vocab_sized_shuffle(spark, sf_dir):
